@@ -236,13 +236,16 @@ class PushdownPlate(Plate[list]):
     ``required_paths``: nested key paths (e.g. ``{("meta", "lang")}``) —
     when given, they define the projection as a trie and unneeded subtrees
     are byte-skipped at ANY depth (the parser honors SKIP_COLUMN below top
-    level, core/json_parser.py:527; reference semantics
-    json/Parser.scala:764-794 — its demo plate is top-level-only). Arrays
-    are transparent to paths (a path applies to each struct element).
+    level; reference semantics json/Parser.scala:764-794 — its demo plate
+    is top-level-only). Arrays are transparent to paths (a path applies to
+    each struct element).
     ``tests``: {column: [conjunct tests]} from :func:`compile_filters`.
-    Rows that fail are byte-skipped (SKIP_ROW) when failure is detected
-    mid-row, or aborted at finish_row (absent filter column ⇒ null cell ⇒
-    conjunct fails unless the test passes None).
+    When a filter column's top-level scalar fails a test, that scalar
+    event answers SKIP_ROW: the parser emits no further events for the
+    row but one ``skipped(n)`` covering its remaining bytes, then
+    finish_row, which discards the row. A filter column that is absent
+    (null cell ⇒ the conjunct fails unless the test passes None) or holds
+    a container is decided only at finish_row, after the whole row.
     """
 
     def __init__(

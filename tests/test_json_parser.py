@@ -17,10 +17,10 @@ from tectonic_spark.core.json_parser import JsonParser, Mode
 from tectonic_spark.core.result import Complete, Failure
 
 
-def parse(data: str | bytes, mode: Mode = Mode.VALUE_STREAM, chunks=None):
-    """Parse input (optionally split into chunks), return (events, result)."""
-    plate = ReifiedPlate()
-    p = JsonParser(plate, mode)
+def parse(data: str | bytes, mode: Mode = Mode.VALUE_STREAM, chunks=None, plate=None):
+    """Parse input (optionally split into chunks), return (events, result).
+    ``plate`` must record into a ReifiedPlate (default: a bare one)."""
+    p = JsonParser(plate or ReifiedPlate(), mode)
     events = []
     if chunks is None:
         chunks = [data]
@@ -35,8 +35,8 @@ def parse(data: str | bytes, mode: Mode = Mode.VALUE_STREAM, chunks=None):
     return events, r
 
 
-def ok_events(data, mode=Mode.VALUE_STREAM, chunks=None):
-    events, r = parse(data, mode, chunks)
+def ok_events(data, mode=Mode.VALUE_STREAM, chunks=None, plate=None):
+    events, r = parse(data, mode, chunks, plate)
     assert isinstance(r, Complete), f"parse failed: {r}"
     return events
 
@@ -314,6 +314,129 @@ def test_skip_row_signal():
     assert len(rows) == 3  # SKIP_ROW still emits finish_row
     assert ("nest_map", "x") not in events
     assert ("num", "2", -1, -1) not in events
+
+
+class ScalarRowFilter(DelegatingPlate):
+    """Returns SKIP_ROW from the first scalar event of one kind (after
+    passing it on); later events pass through."""
+
+    def __init__(self, delegate, kind):
+        super().__init__(delegate)
+        self.kind = kind
+
+    def _sig(self, kind, sig):
+        if kind != self.kind:
+            return sig
+        self.kind = None
+        return Signal.SKIP_ROW
+
+    def str(self, s):
+        return self._sig("str", super().str(s))
+
+    def num(self, s, dec_idx, exp_idx):
+        return self._sig("num", super().num(s, dec_idx, exp_idx))
+
+    def tru(self):
+        return self._sig("tru", super().tru())
+
+    def fls(self):
+        return self._sig("fls", super().fls())
+
+    def nul(self):
+        return self._sig("nul", super().nul())
+
+    def map(self):
+        return self._sig("map", super().map())
+
+    def arr(self):
+        return self._sig("arr", super().arr())
+
+
+SCALAR_EVENTS = [
+    ('"x"', ("str", "x")),
+    ("7", ("num", "7", -1, -1)),
+    ("true", ("tru",)),
+    ("false", ("fls",)),
+    ("null", ("nul",)),
+    ("{}", ("map",)),
+    ("[]", ("arr",)),
+]
+
+
+@pytest.mark.parametrize(("lit", "event"), SCALAR_EVENTS)
+def test_scalar_skip_row_skips_rest_of_row(lit, event):
+    row = '{"a": %s, "b": [1, {"c": "}]"}], "d": {"e": 2}}' % lit
+    text = row + ' {"k": 0}'
+    plate = ScalarRowFilter(ReifiedPlate(), event[0])
+    p = JsonParser(plate, Mode.VALUE_STREAM)
+    events = p.absorb(text).value + p.finish().value
+    rest = len(row) - (row.index(lit) + len(lit))
+    assert events == [
+        ("nest_map", "a"), event, ("skipped", rest), ("finish_row",),
+        ("nest_map", "k"), ("num", "0", -1, -1), ("unnest",), ("finish_row",),
+    ]
+    assert p.skipped_bytes_total == rest
+    # single-pass (parse_complete) and byte-at-a-time absorbs agree
+    p1 = JsonParser(ScalarRowFilter(ReifiedPlate(), event[0]))
+    assert p1.parse_complete(text).value == events
+    plate = ScalarRowFilter(ReifiedPlate(), event[0])
+    assert ok_events(None, chunks=list(text), plate=plate) == events
+
+
+def test_scalar_skip_row_inside_array_element_row():
+    # UNWRAP_ARRAY: the row is the element; the skip stops at its end
+    events = ok_events(
+        '[{"a": [true, 1]}, {"a": [false]}]',
+        mode=Mode.UNWRAP_ARRAY,
+        plate=ScalarRowFilter(ReifiedPlate(), "tru"),
+    )
+    assert events == [
+        ("nest_map", "a"), ("nest_arr",), ("tru",), ("skipped", 5),
+        ("finish_row",),
+        ("nest_map", "a"), ("nest_arr",), ("fls",), ("unnest",), ("unnest",),
+        ("finish_row",),
+    ]
+
+
+@pytest.mark.parametrize(("lit", "event"), SCALAR_EVENTS)
+def test_scalar_skip_row_top_level_row_unaffected(lit, event):
+    events = ok_events(f"{lit} [2]", plate=ScalarRowFilter(ReifiedPlate(), event[0]))
+    assert events == [
+        event, ("finish_row",),
+        ("nest_arr",), ("num", "2", -1, -1), ("unnest",), ("finish_row",),
+    ]
+
+
+def test_filter_pushdown_skips_failing_rows():
+    """A ~2%-selective EqualTo on an early column skips nearly every byte of
+    the rows it rejects (a count, so independent of host load)."""
+    import random
+
+    from pyspark.sql.datasource import EqualTo
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from tectonic_spark.sources.pushdown import PushdownPlate, compile_filters
+
+    rng = random.Random(11)
+    rows = []
+    for i in range(1000):
+        row = {"id": i, "cat": f"k{rng.randrange(50):02d}"}
+        row.update({f"i{k:02d}": rng.randrange(10**6) for k in range(15)})
+        row.update({f"s{k:02d}": "w" * rng.randrange(1, 30) for k in range(10)})
+        row["meta"] = {"a": {"b": [rng.random(), {"c": "x]}"}]}, "z": None}
+        rows.append(row)
+    data = "".join(json.dumps(r) + "\n" for r in rows).encode()
+    schema = StructType([
+        StructField("id", LongType()), StructField("cat", StringType()),
+    ])
+    plate = PushdownPlate(tests=compile_filters([EqualTo(("cat",), "k03")], schema))
+    p = JsonParser(plate, Mode.VALUE_STREAM)
+    out = p.absorb(data).value + p.finish().value
+    expected = [r for r in rows if r["cat"] == "k03"]
+    assert 0 < len(expected) < 50
+    assert out == expected
+    assert plate.rows_skipped_total == len(rows) - len(expected)
+    assert p.skipped_bytes_total / len(data) >= 0.9
 
 
 # --- framing modes ----------------------------------------------------------

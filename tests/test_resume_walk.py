@@ -123,6 +123,110 @@ def test_skipped_subtree_buffers_nothing():
         assert maxbuf < 4096, maxbuf  # the 150 KB subtree never buffered
 
 
+class _Recorder(DelegatingPlate):
+    """Logs every event the parser sends, with the signal it got back."""
+
+    def __init__(self, delegate):
+        super().__init__(delegate)
+        self.log: list = []
+
+
+def _logged(name):
+    def method(self, *args):
+        sig = getattr(self.delegate, name)(*args)
+        self.log.append((name, *args, sig))
+        return sig
+
+    return method
+
+
+for _name in (
+    "nul", "fls", "tru", "map", "arr", "num", "str", "nest_map", "nest_arr",
+    "unnest", "finish_row", "skipped",
+):
+    setattr(_Recorder, _name, _logged(_name))
+
+
+def _merge_skips(log):
+    """Sum runs of adjacent ``skipped`` events (the walk splits a count at
+    chunk boundaries; the total per run is the same)."""
+    out: list = []
+    for e in log:
+        if e[0] == "skipped" and out and out[-1][0] == "skipped":
+            out[-1] = ("skipped", out[-1][1] + e[1], None)
+        else:
+            out.append(e)
+    return out
+
+
+def _wide_rows(n: int) -> bytes:
+    import random
+
+    rng = random.Random(5)
+    rows = []
+    for i in range(n):
+        row = {"id": i, "cat": f"k{rng.randrange(4)}"}
+        row.update({f"s{k}": 'a"b\\' * rng.randrange(1, 6) + "]}" for k in range(4)})
+        row["n"] = rng.randrange(100)
+        row["flag"] = rng.random() < 0.5
+        row["opt"] = None if rng.random() < 0.3 else [rng.random(), {"q": "[{"}]
+        row["meta"] = {"a": [1, {"b": "x" * rng.randrange(40)}], "c": None}
+        rows.append(row)
+    return "\n".join(json.dumps(r) for r in rows).encode()
+
+
+@pytest.mark.parametrize("filters,required", [
+    ([("EqualTo", "cat", "k1")], None),  # str
+    ([("GreaterThan", "n", 70)], None),  # num
+    ([("EqualTo", "flag", True)], None),  # tru / fls
+    ([("IsNotNull", "opt")], {"id", "meta"}),  # nul, with projection skips
+])
+@pytest.mark.parametrize("csize", [7, 64, 997])
+def test_filter_skip_row_walk_equals_whole_value(filters, required, csize):
+    """Scalar SKIP_ROW from a filtering PushdownPlate: the suspendable walk
+    (tiny resume window) matches the whole-value parse event for event."""
+    import pyspark.sql.datasource as ds
+    from pyspark.sql.types import (
+        ArrayType, BooleanType, DoubleType, LongType, StringType, StructField,
+        StructType,
+    )
+
+    from tectonic_spark.sources.pushdown import PushdownPlate, compile_filters
+
+    schema = StructType([
+        StructField("cat", StringType()), StructField("n", LongType()),
+        StructField("flag", BooleanType()),
+        StructField("opt", ArrayType(DoubleType())),
+    ])
+    tests = compile_filters(
+        [getattr(ds, f)((col,), *args) for f, col, *args in filters], schema
+    )
+    data = _wide_rows(60)
+
+    def run(chunks, window):
+        plate = PushdownPlate(required=required, tests=tests)
+        rec = _Recorder(plate)
+        p = JsonParser(rec, Mode.VALUE_STREAM, direct_values=False,
+                       resume_window_bytes=window)
+        rows = []
+        for ch in chunks:
+            r = p.absorb(ch)
+            assert isinstance(r, Complete), r
+            rows += r.value
+        r = p.finish()
+        assert isinstance(r, Complete), r
+        rows += r.value
+        return rows, rec.log, p.skipped_bytes_total, plate.rows_skipped_total
+
+    base_rows, base_log, base_sk, base_rs = run([data], None)
+    assert 0 < base_rs < 60
+    assert any(e[-1] is Signal.SKIP_ROW for e in base_log)
+    rows, log, sk, rs = run(_chunked(data, csize), 16)
+    assert rows == base_rows
+    assert _merge_skips(log) == _merge_skips(base_log)
+    assert (sk, rs) == (base_sk, base_rs)
+
+
 @pytest.mark.parametrize("bad", [
     b'{"a": 01}',
     b'{"a": 1..2}',
