@@ -25,32 +25,40 @@ _FIXTURE_ROOT = os.path.join(tempfile.gettempdir(), "tectonic_fixtures")
 _DOC_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
 
 
-def _stop_stream_quietly(q) -> None:
-    """Teardown for polling-loop streaming queries. ``q.stop()``
-    interrupts the stream execution thread, and with a PYTHON
-    micro-batch source the interrupt can land in an await Spark does
-    not classify as stop-induced — surfacing a spurious
-    STREAM_FAILED / InterruptedException AFTER the sink already reached
-    its verified state (observed once for s08 in an r8 172-query sweep
-    session; passes standalone). Teardown noise is swallowed here
-    because every caller validates correctness from the SINK contents
-    after this returns (row counts + commit counts + the driver's
-    oracle compare), so a genuinely failed stream still fails the
-    query — just with the real symptom, not the interrupt. The
-    swallowed exception is still logged (ADVICE r8) so a real
-    teardown-time failure leaves a trace even when sink checks pass."""
+def _run_stream(q) -> list[dict]:
+    """Run a started streaming query to completion, stop it, and return
+    its ``recentProgress`` (one dict per micro-batch, oldest first).
+
+    ``processAllAvailable()`` blocks until every offset the sources
+    report has been processed and committed, including the trailing
+    no-data batch that advances the watermark, and re-raises the
+    stream's own ``StreamingQueryException`` as soon as it dies. It
+    serves processingTime and availableNow triggers alike. Do not swap
+    a rate-limited tectonic source to availableNow: a Python
+    ``DataSourceStreamReader`` has no admission-control hook, so
+    availableNow stops at the first capped ``latestOffset``.
+
+    With a Python micro-batch source the ``stop()`` interrupt can land
+    in an await that Spark reports as a stream failure. After a full
+    drain no batch is in flight, so that exception is logged at WARNING
+    instead of raised."""
+    from pyspark.errors import StreamingQueryException
+
+    try:
+        q.processAllAvailable()
+    except BaseException:
+        q.stop()
+        raise
     try:
         q.stop()
-        q.awaitTermination(60)
-    except Exception as exc:  # noqa: BLE001 — teardown-only scope
+        q.awaitTermination()
+    except StreamingQueryException as exc:
         import logging
 
-        logging.getLogger(__name__).info(
-            "stream teardown raised after stop (sink already validated "
-            "by caller): %s: %s",
-            type(exc).__name__,
-            exc,
+        logging.getLogger(__name__).warning(
+            "stream %s raised at stop() after a full drain: %s", q.id, exc
         )
+    return q.recentProgress
 
 
 
@@ -590,9 +598,7 @@ def s01_stream_jsonl_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
+    _run_stream(q)
     return (
         spark.read.parquet(out)
         .groupBy("lang")
@@ -644,9 +650,7 @@ def s02_stream_csv_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
+    _run_stream(q)
     return (
         spark.read.parquet(out)
         .groupBy("lang")
@@ -674,7 +678,6 @@ def s02_stream_csv_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s03_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -715,30 +718,12 @@ def s03_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    try:
-        deadline = time.time() + 240
-        sink_rows = 0
-        while time.time() < deadline:
-            try:
-                sink_rows = spark.read.parquet(out).count()
-            except Exception:
-                sink_rows = 0
-            if sink_rows >= expected:
-                break
-            time.sleep(0.5)
-    finally:
-        _stop_stream_quietly(q)
-    offsets_dir = os.path.join(ck, "offsets")
-    commits_dir = os.path.join(ck, "commits")
-    n_commits = (
-        len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-        if os.path.isdir(commits_dir)
-        else 0
-    )
+    n_commits = len(_run_stream(q))
+    sink_rows = spark.read.parquet(out).count()
     if sink_rows < expected:
         raise RuntimeError(
             f"s03: sink has {sink_rows} rows, expected {expected} "
-            f"(offsets={os.listdir(offsets_dir) if os.path.isdir(offsets_dir) else []})"
+            f"after {n_commits} micro-batches"
         )
     if n_commits < 2:
         raise RuntimeError(
@@ -833,7 +818,6 @@ def _events_stream_src(sf_dir: str) -> tuple[str, int]:
 )
 def s04_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -876,25 +860,8 @@ def s04_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    try:
-        deadline = time.time() + 240
-        sink_rows = 0
-        while time.time() < deadline:
-            try:
-                sink_rows = spark.read.parquet(out).count()
-            except Exception:
-                sink_rows = 0
-            if sink_rows >= expected:
-                break
-            time.sleep(0.5)
-    finally:
-        _stop_stream_quietly(q)
-    commits_dir = os.path.join(ck, "commits")
-    n_commits = (
-        len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-        if os.path.isdir(commits_dir)
-        else 0
-    )
+    n_commits = len(_run_stream(q))
+    sink_rows = spark.read.parquet(out).count()
     if sink_rows < expected:
         raise RuntimeError(
             f"s04: sink has {sink_rows} finalized groups, expected {expected} — "
@@ -947,7 +914,6 @@ def s04_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s05_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     import duckdb
 
@@ -995,19 +961,8 @@ def s05_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    try:
-        deadline = time.time() + 240
-        sink_rows = 0
-        while time.time() < deadline:
-            try:
-                sink_rows = spark.read.parquet(out).count()
-            except Exception:
-                sink_rows = 0
-            if sink_rows >= expected:
-                break
-            time.sleep(0.5)
-    finally:
-        _stop_stream_quietly(q)
+    _run_stream(q)
+    sink_rows = spark.read.parquet(out).count()
     if sink_rows < expected:
         raise RuntimeError(
             f"s05: sink has {sink_rows} finalized sessions, expected "
@@ -1090,7 +1045,6 @@ def _events_dup_stream_src(sf_dir: str) -> tuple[str, int, int]:
 )
 def s06_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -1130,25 +1084,8 @@ def s06_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    try:
-        deadline = time.time() + 240
-        sink_rows, n_commits = 0, 0
-        commits_dir = os.path.join(ck, "commits")
-        while time.time() < deadline:
-            try:
-                sink_rows = spark.read.parquet(out).count()
-            except Exception:
-                sink_rows = 0
-            n_commits = (
-                len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-                if os.path.isdir(commits_dir)
-                else 0
-            )
-            if sink_rows >= n_distinct and n_commits >= 2:
-                break
-            time.sleep(0.5)
-    finally:
-        _stop_stream_quietly(q)
+    n_commits = len(_run_stream(q))
+    sink_rows = spark.read.parquet(out).count()
     if sink_rows < n_distinct:
         raise RuntimeError(
             f"s06: sink has {sink_rows} rows, expected {n_distinct}"
@@ -1198,7 +1135,6 @@ def s06_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -1241,25 +1177,8 @@ def s07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    try:
-        deadline = time.time() + 240
-        sink_rows, n_commits = 0, 0
-        commits_dir = os.path.join(ck, "commits")
-        while time.time() < deadline:
-            try:
-                sink_rows = spark.read.parquet(out).count()
-            except Exception:
-                sink_rows = 0
-            n_commits = (
-                len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-                if os.path.isdir(commits_dir)
-                else 0
-            )
-            if sink_rows >= expected and n_commits >= 2:
-                break
-            time.sleep(0.5)
-    finally:
-        _stop_stream_quietly(q)
+    n_commits = len(_run_stream(q))
+    sink_rows = spark.read.parquet(out).count()
     if sink_rows < expected:
         raise RuntimeError(
             f"s07: sink has {sink_rows} enriched rows, expected {expected}"
@@ -1309,7 +1228,6 @@ def s07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -1376,25 +1294,8 @@ def s08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    try:
-        deadline = time.time() + 240
-        sink_rows, n_commits = 0, 0
-        commits_dir = os.path.join(ck, "commits")
-        while time.time() < deadline:
-            try:
-                sink_rows = spark.read.parquet(out).count()
-            except Exception:
-                sink_rows = 0
-            n_commits = (
-                len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-                if os.path.isdir(commits_dir)
-                else 0
-            )
-            if sink_rows >= expected and n_commits >= 2:
-                break
-            time.sleep(0.5)
-    finally:
-        _stop_stream_quietly(q)
+    n_commits = len(_run_stream(q))
+    sink_rows = spark.read.parquet(out).count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s08: sink has {sink_rows} pairs, batch join says {expected}"
@@ -1499,7 +1400,6 @@ def _s09_sessionize(key, pdfs, state):
 )
 def s09_custom_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     import duckdb
 
@@ -1558,21 +1458,8 @@ def s09_custom_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    try:
-        deadline = time.time() + 240
-        sink_rows = 0
-        while time.time() < deadline:
-            try:
-                sink_rows = (
-                    spark.read.parquet(out).where(F.col("user_id") >= 0).count()
-                )
-            except Exception:
-                sink_rows = 0
-            if sink_rows >= expected:
-                break
-            time.sleep(0.5)
-    finally:
-        _stop_stream_quietly(q)
+    _run_stream(q)
+    sink_rows = spark.read.parquet(out).where(F.col("user_id") >= 0).count()
     if sink_rows < expected:
         raise RuntimeError(
             f"s09: sink has {sink_rows} closed sessions, expected {expected} "
@@ -1925,7 +1812,6 @@ def _docs_dup_stream_src(sf_dir: str) -> tuple[str, int, int]:
 )
 def s10_stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -1972,6 +1858,14 @@ def s10_stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("dr") >= S10_QUALITY_MIN)
     )
+    expected = (
+        spark.read.schema(
+            "doc_id long, text string, lang string, source string, n_chars long"
+        )
+        .json(src)
+        .select(F.countDistinct(F.when(dr >= S10_QUALITY_MIN, F.col("doc_id"))))
+        .first()[0]
+    )
     q = (
         curated.writeStream.format("parquet")
         .option("path", out)
@@ -1980,38 +1874,8 @@ def s10_stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    expected = None
-    try:
-        expected = (
-            spark.read.schema(
-                "doc_id long, text string, lang string, source string, n_chars long"
-            )
-            .json(src)
-            .select(
-                F.countDistinct(
-                    F.when(dr >= S10_QUALITY_MIN, F.col("doc_id"))
-                )
-            )
-            .first()[0]
-        )
-        deadline = time.time() + 240
-        sink_rows, n_commits = 0, 0
-        commits_dir = os.path.join(ck, "commits")
-        while time.time() < deadline:
-            try:
-                sink_rows = spark.read.parquet(out).count()
-            except Exception:
-                sink_rows = 0
-            n_commits = (
-                len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-                if os.path.isdir(commits_dir)
-                else 0
-            )
-            if sink_rows >= expected and n_commits >= 2:
-                break
-            time.sleep(0.5)
-    finally:
-        _stop_stream_quietly(q)
+    n_commits = len(_run_stream(q))
+    sink_rows = spark.read.parquet(out).count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s10: sink has {sink_rows} rows, expected exactly {expected} "
@@ -2425,7 +2289,6 @@ def a24_parquet_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s13_stream_mixed_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -2447,6 +2310,12 @@ def s13_stream_mixed_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") % 4 == 2)
     )
     decoded = mixed_media_kernel(stream)
+    expected = (
+        spark.read.schema("doc_id long")
+        .json(src)
+        .where(F.col("doc_id") % 4 == 2)
+        .count()
+    )
     q = (
         decoded.writeStream.format("parquet")
         .option("path", out)
@@ -2455,32 +2324,8 @@ def s13_stream_mixed_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    expected = None
-    sink_rows, n_commits = 0, 0
-    commits_dir = os.path.join(ck, "commits")
-    try:
-        expected = (
-            spark.read.schema("doc_id long")
-            .json(src)
-            .where(F.col("doc_id") % 4 == 2)
-            .count()
-        )
-        deadline = time.time() + 240
-        while time.time() < deadline:
-            try:
-                sink_rows = spark.read.parquet(out).count()
-            except Exception:
-                sink_rows = 0
-            n_commits = (
-                len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-                if os.path.isdir(commits_dir)
-                else 0
-            )
-            if sink_rows >= expected and n_commits >= 2:
-                break
-            time.sleep(0.5)
-    finally:
-        _stop_stream_quietly(q)
+    n_commits = len(_run_stream(q))
+    sink_rows = spark.read.parquet(out).count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s13: sink has {sink_rows} decoded rows, expected {expected}"
@@ -2520,7 +2365,6 @@ def s13_stream_mixed_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s14_stream_zstd_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -2531,6 +2375,7 @@ def s14_stream_zstd_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     for d in (out, ck):
         shutil.rmtree(d, ignore_errors=True)
     schema = "doc_id long, text string, lang string, source string, n_chars long"
+    expected = spark.read.schema(schema).json(os.path.join(src, "part-*")).count()
     q = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "2")
@@ -2543,29 +2388,8 @@ def s14_stream_zstd_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    expected = None
-    sink_rows, n_commits = 0, 0
-    commits_dir = os.path.join(ck, "commits")
-    try:
-        expected = (
-            spark.read.schema(schema).json(os.path.join(src, "part-*")).count()
-        )
-        deadline = time.time() + 240
-        while time.time() < deadline:
-            try:
-                sink_rows = spark.read.parquet(out).count()
-            except Exception:
-                sink_rows = 0
-            n_commits = (
-                len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-                if os.path.isdir(commits_dir)
-                else 0
-            )
-            if sink_rows >= expected and n_commits >= 2:
-                break
-            time.sleep(0.5)
-    finally:
-        _stop_stream_quietly(q)
+    n_commits = len(_run_stream(q))
+    sink_rows = spark.read.parquet(out).count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s14: sink has {sink_rows} rows, expected {expected}"
@@ -2725,56 +2549,9 @@ def s11_stream_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    import time
-
-    commits_dir = os.path.join(ck, "commits")
-    try:
-        deadline = time.time() + 240
-        total, n_commits = 0, 0
-        while time.time() < deadline:
-            try:
-                cur = rollup_state_path(state)
-                total = (
-                    spark.read.parquet(cur).agg(F.sum("n_events")).first()[0]
-                    or 0
-                ) if cur else 0
-            except Exception:
-                total = 0
-            n_commits = (
-                len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-                if os.path.isdir(commits_dir)
-                else 0
-            )
-            if total >= expected and n_commits >= 2:
-                break
-            time.sleep(0.5)
-    finally:
-        try:
-            q.stop()
-            if not q.awaitTermination(60):
-                q.awaitTermination(120)  # loaded host: final batch time
-        except Exception:
-            pass  # see _stop_stream_quietly — sink checks below govern
-    # re-read AFTER the stream stopped: the poll loop can break on a stale
-    # commit count while the final (sentinel-only) batch is mid-merge; the
-    # read retries because a concurrent merge GC can remove a superseded
-    # version dir between pointer read and parquet open
-    n_commits = (
-        len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-        if os.path.isdir(commits_dir)
-        else 0
-    )
-    total = 0
-    for _ in range(5):
-        try:
-            cur = rollup_state_path(state)
-            total = (
-                spark.read.parquet(cur).agg(F.sum("n_events")).first()[0]
-                or 0
-            ) if cur else 0
-            break
-        except Exception:
-            time.sleep(0.5)
+    n_commits = len(_run_stream(q))
+    cur = rollup_state_path(state)
+    total = spark.read.parquet(cur).agg(F.sum("n_events")).first()[0] if cur else 0
     if total != expected:
         raise RuntimeError(
             f"s11: maintained rollup holds {total} events, expected {expected}"
@@ -2784,11 +2561,7 @@ def s11_stream_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
             f"s11: only {n_commits} committed micro-batches — the rollup "
             "was not maintained incrementally"
         )
-    # q.stop() can abort a batch AFTER its merge committed the pointer but
-    # BEFORE the checkpoint commit file landed — allow that one-off; any
-    # larger gap (or a double merge, which the exact total above would also
-    # catch) still raises
-    if not (n_commits <= n_merges["n"] <= n_commits + 1):
+    if n_merges["n"] != n_commits:
         raise RuntimeError(
             f"s11: {n_merges['n']} merge invocations vs {n_commits} commits"
         )
@@ -2911,7 +2684,6 @@ def _docs_parts_stream_src(sf_dir: str) -> tuple[str, int]:
 )
 def s12_stream_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -2933,6 +2705,12 @@ def s12_stream_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") % 3 == 0)
     )
     decoded = m08_decode_kernel(stream)
+    expected = (
+        spark.read.schema("doc_id long")
+        .json(src)
+        .where(F.col("doc_id") % 3 == 0)
+        .count()
+    )
     q = (
         decoded.writeStream.format("parquet")
         .option("path", out)
@@ -2941,32 +2719,8 @@ def s12_stream_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    expected = None
-    sink_rows, n_commits = 0, 0
-    commits_dir = os.path.join(ck, "commits")
-    try:
-        expected = (
-            spark.read.schema("doc_id long")
-            .json(src)
-            .where(F.col("doc_id") % 3 == 0)
-            .count()
-        )
-        deadline = time.time() + 240
-        while time.time() < deadline:
-            try:
-                sink_rows = spark.read.parquet(out).count()
-            except Exception:
-                sink_rows = 0
-            n_commits = (
-                len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-                if os.path.isdir(commits_dir)
-                else 0
-            )
-            if sink_rows >= expected and n_commits >= 2:
-                break
-            time.sleep(0.5)
-    finally:
-        _stop_stream_quietly(q)
+    n_commits = len(_run_stream(q))
+    sink_rows = spark.read.parquet(out).count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s12: sink has {sink_rows} decoded rows, expected {expected}"
@@ -3394,7 +3148,6 @@ def warc_extract_kernel(files: DataFrame) -> DataFrame:
 )
 def s15_warc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -3429,26 +3182,8 @@ def s15_warc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     expected = len(_docs_rows(sf_dir))
-    sink_rows, n_commits = 0, 0
-    commits_dir = os.path.join(ck, "commits")
-    try:
-        # volume-aware deadline: a backlog-catch-up run is rate-bound
-        deadline = time.time() + 240 + expected // 1500
-        while time.time() < deadline:
-            try:
-                sink_rows = spark.read.parquet(out).count()
-            except Exception:
-                sink_rows = 0
-            n_commits = (
-                len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-                if os.path.isdir(commits_dir)
-                else 0
-            )
-            if sink_rows >= expected and n_commits >= 2:
-                break
-            time.sleep(0.5)
-    finally:
-        _stop_stream_quietly(q)
+    n_commits = len(_run_stream(q))
+    sink_rows = spark.read.parquet(out).count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s15: sink has {sink_rows} extracted docs, expected {expected}"
@@ -7076,9 +6811,7 @@ def s16_stream_brotli_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
+    _run_stream(q)
     return (
         spark.read.parquet(out)
         .groupBy("lang")
@@ -8965,10 +8698,7 @@ def s17_stream_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination(600)
-    finally:
-        _stop_stream_quietly(q)
+    _run_stream(q)
 
     docs = table(spark, sf_dir, "documents")
     n_docs, n_recap = docs.agg(
@@ -10115,10 +9845,7 @@ def s18_stream_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination(600)
-    finally:
-        _stop_stream_quietly(q)
+    _run_stream(q)
     run_retention(mid_stream=False)  # drain: catch the straggler tail
 
     docs = table(spark, sf_dir, "documents")
@@ -10890,7 +10617,6 @@ def attachment_text_kernel(files: DataFrame) -> DataFrame:
 )
 def s19_stream_attachments(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -10924,31 +10650,8 @@ def s19_stream_attachments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     expected = sum(1 for d, *_ in _docs_rows(sf_dir) if d % 107 == 63)
-    sink_rows, n_commits = 0, 0
-    commits_dir = os.path.join(ck, "commits")
-    try:
-        deadline = time.time() + 240 + expected // 50
-        while time.time() < deadline:
-            try:
-                sink_rows = spark.read.parquet(out).count()
-            except Exception:
-                sink_rows = 0
-            n_commits = (
-                len(
-                    [
-                        f
-                        for f in os.listdir(commits_dir)
-                        if not f.startswith(".")
-                    ]
-                )
-                if os.path.isdir(commits_dir)
-                else 0
-            )
-            if sink_rows >= expected and n_commits >= 2:
-                break
-            time.sleep(0.5)
-    finally:
-        _stop_stream_quietly(q)
+    n_commits = len(_run_stream(q))
+    sink_rows = spark.read.parquet(out).count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s19: sink has {sink_rows} attachments, expected {expected}"

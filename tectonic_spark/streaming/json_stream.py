@@ -76,15 +76,7 @@ class TectonicFileStreamReader(DataSourceStreamReader):
 
     # ---------------------------------------------------------------- offsets
 
-    def _dbg(self, *a) -> None:
-        import os as _os
-        p = _os.environ.get("TECTONIC_STREAM_DEBUG")
-        if p:
-            with open(p, "a") as f:
-                f.write(" ".join(str(x) for x in a) + "\n")
-
     def initialOffset(self) -> dict:  # noqa: N802 (Spark API name)
-        self._dbg("initialOffset")
         return {"files": {}}
 
     def latestOffset(self) -> dict:  # noqa: N802 (Spark API name)
@@ -110,11 +102,9 @@ class TectonicFileStreamReader(DataSourceStreamReader):
         snap = dict(self._known)
         snap.update({f: sizes[f] for f in new})
         self._known = snap
-        self._dbg("latestOffset ->", sorted(snap))
         return {"files": dict(snap)}
 
     def partitions(self, start: dict, end: dict) -> list[FileSplit]:
-        self._dbg("partitions start=", sorted(start.get("files", {})), "end=", sorted(end.get("files", {})))
         start_files = start.get("files", {})
         seen = set(start_files)
         end_files = end.get("files", {})
@@ -160,7 +150,6 @@ class TectonicFileStreamReader(DataSourceStreamReader):
                 yield tuple(row[n] for n in self._names)
 
     def commit(self, end: dict) -> None:
-        self._dbg("commit", sorted(end.get("files", {})))
         return None
 
 

@@ -40,3 +40,95 @@ def test_entry_runs(spark):
 
     rows = entrymod.entry(spark).collect()
     assert len(rows) >= 0
+
+
+def _poll_loop_problems(source: str, filename: str) -> list[str]:
+    """Lines of ``source`` that wait by ``time.sleep`` or start a stream
+    writer whose query never reaches ``_run_stream``. A started query
+    reaches it when the ``.start()`` call is its argument, or is assigned
+    to a name that the same function passes to it."""
+    import ast
+
+    tree = ast.parse(source, filename)
+    parents = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+
+    def is_run_stream(n) -> bool:
+        return (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Name)
+            and n.func.id == "_run_stream"
+        )
+
+    def on_stream_writer(n) -> bool:
+        while isinstance(n, (ast.Call, ast.Attribute)):
+            if isinstance(n, ast.Attribute) and n.attr == "writeStream":
+                return True
+            n = n.func if isinstance(n, ast.Call) else n.value
+        return False
+
+    problems = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "time":
+            if any(a.name == "sleep" for a in node.names):
+                problems.append(f"{filename}:{node.lineno}: imports time.sleep")
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        fn = node.func
+        if fn.attr == "sleep" and isinstance(fn.value, ast.Name) and fn.value.id == "time":
+            problems.append(f"{filename}:{node.lineno}: time.sleep")
+        if fn.attr != "start" or not on_stream_writer(fn.value):
+            continue
+        parent = parents[node]
+        if is_run_stream(parent):
+            continue
+        scope = parent
+        while not isinstance(scope, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Module)):
+            scope = parents[scope]
+        if (
+            isinstance(parent, ast.Assign)
+            and len(parent.targets) == 1
+            and isinstance(parent.targets[0], ast.Name)
+            and any(
+                is_run_stream(c)
+                and any(isinstance(a, ast.Name) and a.id == parent.targets[0].id for a in c.args)
+                for c in ast.walk(scope)
+            )
+        ):
+            continue
+        problems.append(f"{filename}:{node.lineno}: stream started outside _run_stream")
+    return problems
+
+
+def test_poll_loop_scan_flags_a_hand_written_loop():
+    bad = (
+        "import time\n"
+        "def s(df, out):\n"
+        "    q = df.writeStream.format('parquet').start(out)\n"
+        "    while q.isActive:\n"
+        "        time.sleep(0.5)\n"
+        "    df.writeStream.foreachBatch(print).start()\n"
+    )
+    good = (
+        "def s(df, out):\n"
+        "    q = df.writeStream.format('parquet').start(out)\n"
+        "    _run_stream(q)\n"
+        "    _run_stream(df.writeStream.foreachBatch(print).start())\n"
+        "    return re.match('a', out).start()\n"
+    )
+    assert sorted(_poll_loop_problems(bad, "bad.py")) == [
+        "bad.py:3: stream started outside _run_stream",
+        "bad.py:5: time.sleep",
+        "bad.py:6: stream started outside _run_stream",
+    ]
+    assert _poll_loop_problems(good, "good.py") == []
+
+
+def test_operators_run_streams_only_through_run_stream():
+    """Every streaming builder drives its query through the one
+    run-to-completion helper; hand-written poll loops stay gone."""
+    import pathlib
+
+    problems = []
+    for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
+        problems += _poll_loop_problems(path.read_text(), path.name)
+    assert problems == []

@@ -762,3 +762,37 @@ class TestRollupMergerProperty:
             for r in direct.collect()
         }
         assert got == want
+
+
+class TestRunStream:
+    def test_crashed_stream_raises_its_own_cause(self, spark, tmp_path):
+        """A stream that dies fails ``_run_stream`` at once with the
+        stream's own exception, not after a deadline with a row count."""
+        from pyspark.errors import StreamingQueryException
+
+        from tectonic_spark.operators.parser_ops import _run_stream
+
+        data = tmp_path / "in"
+        data.mkdir()
+        _write_events(data, 0, 10, "a.json")
+
+        @F.udf("long")
+        def reject(event_id):
+            raise ValueError(f"run-stream probe rejected event {event_id}")
+
+        q = (
+            spark.readStream.format("tectonic-json")
+            .schema("event_id long")
+            .load(str(data))
+            .select(reject("event_id").alias("x"))
+            .writeStream.format("parquet")
+            .option("path", str(tmp_path / "out"))
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(processingTime="50 milliseconds")
+            .start()
+        )
+        t0 = time.monotonic()
+        with pytest.raises(StreamingQueryException, match="run-stream probe rejected"):
+            _run_stream(q)
+        assert time.monotonic() - t0 < 60
+        assert not q.isActive
