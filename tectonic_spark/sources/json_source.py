@@ -56,7 +56,6 @@ _MODES = {
 _DEFAULT_SPLIT = 128 * 1024 * 1024
 _CHUNK = 4 * 1024 * 1024
 _DEFAULT_MAX_VALUE_BYTES = 1 << 30  # streaming event path: bound, don't OOM
-_DEFAULT_RESUME_WINDOW = 1 << 20  # mid-value resume window (reference: 1 MiB)
 _SAMPLE_BYTES = 8 * 1024 * 1024
 
 
@@ -458,14 +457,6 @@ class TectonicJsonReader(DataSourceReader):
         self.fast_path = str(options.get("fastpath", "true")).lower() != "false"
         mvb = options.get("maxvaluebytes")
         self.max_value_bytes = int(mvb) if mvb is not None else None
-        # constant-memory mid-value resume (reference BaseParser.scala's
-        # 1 MiB sliding window): values/array/single framings switch to the
-        # suspendable event walk once a value's buffered tail exceeds this;
-        # 0 disables (then maxValueBytes alone bounds the buffer)
-        rwb = options.get("resumewindowbytes")
-        self.resume_window_bytes: int | None = (
-            int(rwb) if rwb is not None else _DEFAULT_RESUME_WINDOW
-        ) or None
         self._tests: dict | None = None
         self._raw_filters: list | None = None
         # data schema = scan schema minus the corrupt-record column
@@ -577,7 +568,8 @@ class TectonicJsonReader(DataSourceReader):
                 [self._maybe_prune(r) for r in rows if self._row_passes(r)]
             )
             return
-        # incremental absorb keeps memory ~one pending value; a single value
+        # incremental absorb keeps memory ~one pending value on the direct
+        # path and ~one token on the event path; a pending value or token
         # larger than maxValueBytes (default 1 GiB — executor-memory scale)
         # fails with a clean ParseException instead of growing until OOM
         parser = JsonParser(
@@ -588,7 +580,6 @@ class TectonicJsonReader(DataSourceReader):
                 if self.max_value_bytes is not None
                 else _DEFAULT_MAX_VALUE_BYTES
             ),
-            resume_window_bytes=self.resume_window_bytes,
         )
         with open_input(split.file) as fh:
             while True:

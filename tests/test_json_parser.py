@@ -277,14 +277,14 @@ def test_structure_inside_skipped_strings():
 
 
 def test_suspend_within_skips():
-    # mid-skip chunk split; totals must match the unsplit parse
-    events = parse_with_mask(
-        None, chunks=['{ "a": 4', '2, "b": "hi" }'], key="b"
-    )
-    skipped_total = sum(e[1] for e in events if e[0] == "skipped")
-    rest = [e for e in events if e[0] != "skipped"]
-    assert skipped_total == 4
-    assert rest == [("nest_map", "b"), ("str", "hi"), ("unnest",), ("finish_row",)]
+    # mid-skip chunk split: one skipped(n), exactly as in the unsplit parse
+    text = '{ "a": 42, "b": "hi" }'
+    events = parse_with_mask(None, chunks=[text[:8], text[8:]], key="b")
+    assert events == parse_with_mask(text, key="b") == [
+        ("skipped", 4),
+        ("nest_map", "b"), ("str", "hi"), ("unnest",),
+        ("finish_row",),
+    ]
 
 
 def test_skip_hides_errors():
@@ -587,10 +587,9 @@ def test_chunked_equals_unchunked(value, n_cuts):
 
 
 class TestMaxValueBytes:
-    """A value larger than the bound fails with a clean ParseException at
-    absorb time (never an OOM); values under the bound stream normally.
-    Reference parity note: BaseParser.scala:159-171 solves this with a
-    1 MiB mid-value window; the extent-scan design bounds-and-errors."""
+    """A pending value (direct path) or token (event path) larger than the
+    bound fails with a clean ParseException at absorb time (never an OOM);
+    values under the bound stream normally."""
 
     def test_oversized_value_fails_cleanly(self):
         from tectonic_spark.core.result import Failure

@@ -1,12 +1,13 @@
-"""Constant-memory mid-value resume (json_parser._walk_step) — the analog
-of the reference's 1 MiB sliding window (BaseParser.scala:159-171).
+"""Constant-memory mid-value resume of the suspendable event walker
+(``json_parser._emit_value``) — the analog of the reference's 1 MiB sliding
+window (BaseParser.scala:159-171).
 
 Contract under test:
-* event streams are identical to the non-resumable path for every framing
-  mode, chunking, and window size (including ``skipped`` totals — only the
-  per-chunk split of skip counts may differ, documented);
-* memory stays bounded by window + one scalar token even when a single
-  value is arbitrarily large;
+* event streams are identical for every framing mode and chunking,
+  ``skipped`` counts included: each skipped region is one count, however
+  the input is cut;
+* memory stays bounded by one chunk + one scalar token even when a single
+  value is arbitrarily large, with no option set;
 * raw-skipped subtrees (pushdown) buffer ~nothing regardless of size;
 * malformed inputs fail with the same message and position.
 """
@@ -24,10 +25,10 @@ from tectonic_spark.core.json_parser import JsonParser, Mode
 from tectonic_spark.core.result import Complete, Failure
 
 
-def _run(data: bytes, mode, chunks, window, plate_wrap=None):
+def _run(data: bytes, mode, chunks, plate_wrap=None):
     rp = ReifiedPlate()
     plate = plate_wrap(rp) if plate_wrap else rp
-    p = JsonParser(plate, mode, direct_values=False, resume_window_bytes=window)
+    p = JsonParser(plate, mode, direct_values=False)
     events: list = []
     maxbuf = 0
     for ch in chunks:
@@ -46,10 +47,6 @@ def _chunked(b: bytes, size: int) -> list[bytes]:
     return [b[i : i + size] for i in range(0, len(b), size)]
 
 
-def _no_skips(events):
-    return [e for e in events if e[0] != "skipped"]
-
-
 BIG = {
     "nums": [1, -2.5, 1e10, 0.001] * 300,
     "strs": {f"k{i}": "v" * (i % 37) for i in range(200)},
@@ -64,31 +61,46 @@ BIG = {
     (Mode.UNWRAP_ARRAY, "[" + ",".join([json.dumps(BIG)] * 2) + ", 7]"),
     (Mode.SINGLE_VALUE, json.dumps(BIG)),
 ])
-@pytest.mark.parametrize("csize,window", [(1, 1), (13, 64), (211, 1), (4096, 256)])
-def test_event_parity_all_modes(mode, payload, csize, window):
+@pytest.mark.parametrize("csize,first", [(1, 1), (13, 64), (211, 1), (4096, 256)])
+def test_event_parity_all_modes(mode, payload, csize, first):
+    # ``first`` is the size of the first chunk: it shifts where the cuts land
     data = payload.encode()
-    base_ev, base_r, _, _ = _run(data, mode, [data], None)
+    base_ev, base_r, _, _ = _run(data, mode, [data])
     assert isinstance(base_r, Complete)
-    ev, r, _, _ = _run(data, mode, _chunked(data, csize), window)
+    chunks = [data[:first]] + _chunked(data[first:], csize)
+    ev, r, _, _ = _run(data, mode, chunks)
     assert isinstance(r, Complete), r
     assert ev == base_ev
 
 
+_BIG_VALUE = {"a": [[i, str(i)] for i in range(120_000)], "t": "x" * 500}
+
+
 def test_memory_bounded_by_window_plus_token():
-    # one 4 MB value fed in 8 KiB chunks through a 16 KiB window: buffer
-    # must stay ~window + largest token, nowhere near the value size
-    big = {"a": [[i, str(i)] for i in range(120_000)], "t": "x" * 500}
-    data = json.dumps(big).encode()
+    # one 2.3 MB value fed in 8 KiB chunks, with no option set: the buffer
+    # must stay ~one chunk + the largest token (the 502-byte "t" string),
+    # nowhere near the value size
+    from tectonic_spark.sources.pushdown import PushdownPlate
+
+    data = json.dumps(_BIG_VALUE).encode()
     assert len(data) > 2_000_000
-    ev, r, maxbuf, _ = _run(data, Mode.SINGLE_VALUE, _chunked(data, 8192), 16384)
+    bound = 8192 + 502 + 1024
+    ev, r, maxbuf, _ = _run(data, Mode.SINGLE_VALUE, _chunked(data, 8192))
     assert isinstance(r, Complete)
-    assert maxbuf < 16384 + 8192 + 600, maxbuf
-    base_ev, _, base_maxbuf, _ = _run(
-        data, Mode.SINGLE_VALUE, _chunked(data, 8192), None
-    )
+    assert maxbuf < bound, maxbuf
+    base_ev, _, _, _ = _run(data, Mode.SINGLE_VALUE, [data])
     assert ev == base_ev
-    # same chunking without the walk: the whole value accumulated
-    assert base_maxbuf >= len(data) - 8192
+    # the same through a projecting PushdownPlate, as a reader scan builds it
+    p = JsonParser(PushdownPlate(required={"a"}), Mode.SINGLE_VALUE)
+    rows, maxbuf = [], 0
+    for ch in _chunked(data, 8192):
+        r = p.absorb(ch)
+        assert isinstance(r, Complete), r
+        rows += r.value
+        maxbuf = max(maxbuf, len(p._buf))
+    rows += p.finish().value
+    assert rows == [{"a": _BIG_VALUE["a"]}]
+    assert maxbuf < bound, maxbuf
 
 
 class _SkipKeys(DelegatingPlate):
@@ -111,16 +123,43 @@ def test_skipped_subtree_buffers_nothing():
     data = json.dumps(giant).encode()
     assert len(data) > 150_000
     wrap = lambda rp: _SkipKeys(rp, {"drop"})
-    base_ev, base_r, _, base_sk = _run(data, Mode.VALUE_STREAM, [data], None, wrap)
+    base_ev, base_r, _, base_sk = _run(data, Mode.VALUE_STREAM, [data], wrap)
     assert isinstance(base_r, Complete)
     for csize in (7, 997):
-        ev, r, maxbuf, sk = _run(
-            data, Mode.VALUE_STREAM, _chunked(data, csize), 64, wrap
-        )
+        ev, r, maxbuf, sk = _run(data, Mode.VALUE_STREAM, _chunked(data, csize), wrap)
         assert isinstance(r, Complete)
-        assert _no_skips(ev) == _no_skips(base_ev)
-        assert sk == base_sk  # totals equal; per-chunk splits may differ
+        assert ev == base_ev  # one skipped(n) per region, whatever the cuts
+        assert sk == base_sk
         assert maxbuf < 4096, maxbuf  # the 150 KB subtree never buffered
+
+
+def test_huge_skipped_string_buffers_nothing():
+    """A >1 MB projected-away string of escaped quotes and even backslash
+    runs. Its 12-byte encoded unit is coprime to the 997-byte chunks, so
+    the cuts land at every offset: inside a plain run, between the two
+    bytes of an escape, inside an even backslash run and before an escaped
+    quote. A second feed also cuts inside the even run that ends the
+    string, and just before its closing quote."""
+    unit = 'q"\\"\\\\r'  # encodes as q, \", \\\", \\\\, r
+    assert len(json.dumps(unit)) - 2 == 12
+    text = unit * 100_000 + "\\\\"
+    row = {"keep": 1, "drop": text, "tail": "t"}
+    data = (json.dumps(row) + "\n" + json.dumps({"keep": 2})).encode()
+    assert len(data) > 1_000_000
+    wrap = lambda rp: _SkipKeys(rp, {"drop"})
+    base_ev, base_r, _, base_sk = _run(data, Mode.VALUE_STREAM, [data], wrap)
+    assert isinstance(base_r, Complete)
+    assert ("str", "t") in base_ev and ("num", "2", -1, -1) in base_ev
+    close = data.index(b'", "tail"')  # the closing quote of the string
+    for cuts in (
+        _chunked(data, 997),
+        [data[: close - 2], data[close - 2 : close]] + _chunked(data[close:], 997),
+    ):
+        ev, r, maxbuf, sk = _run(data, Mode.VALUE_STREAM, cuts, wrap)
+        assert isinstance(r, Complete), r
+        assert ev == base_ev
+        assert sk == base_sk
+        assert maxbuf < 4096, maxbuf
 
 
 class _Recorder(DelegatingPlate):
@@ -147,18 +186,6 @@ for _name in (
     setattr(_Recorder, _name, _logged(_name))
 
 
-def _merge_skips(log):
-    """Sum runs of adjacent ``skipped`` events (the walk splits a count at
-    chunk boundaries; the total per run is the same)."""
-    out: list = []
-    for e in log:
-        if e[0] == "skipped" and out and out[-1][0] == "skipped":
-            out[-1] = ("skipped", out[-1][1] + e[1], None)
-        else:
-            out.append(e)
-    return out
-
-
 def _wide_rows(n: int) -> bytes:
     import random
 
@@ -183,8 +210,8 @@ def _wide_rows(n: int) -> bytes:
 ])
 @pytest.mark.parametrize("csize", [7, 64, 997])
 def test_filter_skip_row_walk_equals_whole_value(filters, required, csize):
-    """Scalar SKIP_ROW from a filtering PushdownPlate: the suspendable walk
-    (tiny resume window) matches the whole-value parse event for event."""
+    """Scalar SKIP_ROW from a filtering PushdownPlate: a chunked parse
+    matches the one-chunk parse event for event."""
     import pyspark.sql.datasource as ds
     from pyspark.sql.types import (
         ArrayType, BooleanType, DoubleType, LongType, StringType, StructField,
@@ -203,11 +230,10 @@ def test_filter_skip_row_walk_equals_whole_value(filters, required, csize):
     )
     data = _wide_rows(60)
 
-    def run(chunks, window):
+    def run(chunks):
         plate = PushdownPlate(required=required, tests=tests)
         rec = _Recorder(plate)
-        p = JsonParser(rec, Mode.VALUE_STREAM, direct_values=False,
-                       resume_window_bytes=window)
+        p = JsonParser(rec, Mode.VALUE_STREAM, direct_values=False)
         rows = []
         for ch in chunks:
             r = p.absorb(ch)
@@ -218,12 +244,12 @@ def test_filter_skip_row_walk_equals_whole_value(filters, required, csize):
         rows += r.value
         return rows, rec.log, p.skipped_bytes_total, plate.rows_skipped_total
 
-    base_rows, base_log, base_sk, base_rs = run([data], None)
+    base_rows, base_log, base_sk, base_rs = run([data])
     assert 0 < base_rs < 60
     assert any(e[-1] is Signal.SKIP_ROW for e in base_log)
-    rows, log, sk, rs = run(_chunked(data, csize), 16)
+    rows, log, sk, rs = run(_chunked(data, csize))
     assert rows == base_rows
-    assert _merge_skips(log) == _merge_skips(base_log)
+    assert log == base_log
     assert (sk, rs) == (base_sk, base_rs)
 
 
@@ -236,8 +262,8 @@ def test_filter_skip_row_walk_equals_whole_value(filters, required, csize):
     b'{"a": "unterminated',
 ])
 def test_malformed_same_outcome(bad):
-    _, r0, _, _ = _run(bad, Mode.VALUE_STREAM, [bad], None)
-    _, r1, _, _ = _run(bad, Mode.VALUE_STREAM, _chunked(bad, 1), 1)
+    _, r0, _, _ = _run(bad, Mode.VALUE_STREAM, [bad])
+    _, r1, _, _ = _run(bad, Mode.VALUE_STREAM, _chunked(bad, 1))
     assert isinstance(r0, Failure) and isinstance(r1, Failure)
     assert r1.error.args == r0.error.args
 
@@ -263,20 +289,20 @@ _values = st.recursive(
 @given(
     vals=st.lists(_values, min_size=1, max_size=4),
     csize=st.integers(1, 40),
-    window=st.sampled_from([1, 8, 64]),
 )
-def test_property_walk_equals_extent_path(vals, csize, window):
+def test_property_walk_equals_extent_path(vals, csize):
+    """Chunked input walks to the same events as one chunk."""
     data = " ".join(json.dumps(v) for v in vals).encode()
-    base_ev, base_r, _, _ = _run(data, Mode.VALUE_STREAM, [data], None)
+    base_ev, base_r, _, _ = _run(data, Mode.VALUE_STREAM, [data])
     assert isinstance(base_r, Complete)
-    ev, r, _, _ = _run(data, Mode.VALUE_STREAM, _chunked(data, csize), window)
+    ev, r, _, _ = _run(data, Mode.VALUE_STREAM, _chunked(data, csize))
     assert isinstance(r, Complete), r
     assert ev == base_ev
 
 
 def test_reader_end_to_end_resume_window(tmp_path, spark):
-    """values-framing scan with a tiny resume window returns the same rows
-    as the default path (source-level plumbing of resumeWindowBytes)."""
+    """values-framing scan through the event walker (fastPath=false)
+    returns the same rows as the default path."""
     from tectonic_spark.sources.registration import register_tectonic_sources
 
     register_tectonic_sources(spark)
@@ -296,7 +322,6 @@ def test_reader_end_to_end_resume_window(tmp_path, spark):
         spark.read.format("tectonic-json")
         .schema(schema)
         .option("mode", "values")
-        .option("resumeWindowBytes", "16")
         .option("fastPath", "false")
         .load(str(f))
         .selectExpr("i", "deep.keep AS keep")

@@ -110,22 +110,34 @@ _SKIP_SCRIPT = textwrap.dedent(
         value = "[%s, %s]" % (json.dumps(text * n), ", ".join([item] * n))
         return ('{"keep": 1, "drop": %s, "tail": "t"}\\n' % value).encode()
 
-    def skip(data):
+    def skip(data, chunk=None):
         p = JsonParser(PushdownPlate(required={"keep", "tail"}), Mode.VALUE_STREAM)
+        chunk = chunk or len(data)
         t0 = time.perf_counter()
-        out = p.absorb(data).value + p.finish().value
+        out = []
+        for i in range(0, len(data), chunk):
+            out += p.absorb(data[i : i + chunk]).value
+        out += p.finish().value
         dt = time.perf_counter() - t0
         assert out == [{"keep": 1, "tail": "t"}], out
         return dt, p.skipped_bytes_total
 
+    def rss_mb():
+        return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+
     small, big = row(8), row(32)
     t_small = min(skip(small)[0] for _ in range(2))
-    rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+    rss0 = rss_mb()
     t_big, skipped = skip(big)
-    rss1 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+    rss1 = rss_mb()
+    # the same row fed in 4 MiB chunks: the skip scans on across each cut
+    t_chunked, skipped_chunked = skip(big, 4 << 20)
+    rss2 = rss_mb()
     print(json.dumps({
         "bytes": len(big), "skipped": skipped, "t_small": t_small,
-        "t_big": t_big, "rss_growth_mb": (rss1 - rss0) / 1024,
+        "t_big": t_big, "rss_growth_mb": rss1 - rss0,
+        "t_chunked": t_chunked, "skipped_chunked": skipped_chunked,
+        "rss_growth_chunked_mb": rss2 - rss0,
     }))
     """
 )
@@ -134,7 +146,8 @@ _SKIP_SCRIPT = textwrap.dedent(
 def test_skip_huge_value_linear_time_bounded_memory():
     """One ~32 MB projected-away value is skipped in linear time, and the
     skip allocates no memory in proportion to it (a backtracking regex
-    needs gigabytes here). Runs in a child so peak RSS is its own."""
+    needs gigabytes here), whether it arrives whole or in 4 MiB chunks.
+    Runs in a child so peak RSS is its own."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     res = subprocess.run(
         [sys.executable, "-c", _SKIP_SCRIPT],
@@ -148,3 +161,6 @@ def test_skip_huge_value_linear_time_bounded_memory():
     # 4x the bytes: linear is ~4x the time, quadratic 16x
     assert r["t_big"] < 8 * r["t_small"] + 0.5, r
     assert r["rss_growth_mb"] < 64, r
+    assert r["skipped_chunked"] == r["skipped"]
+    assert r["t_chunked"] < 8 * r["t_small"] + 0.5, r
+    assert r["rss_growth_chunked_mb"] < 64, r

@@ -109,6 +109,9 @@ def main() -> int:
             # (minhash, neardup, kmeans_scaled, pagerank, triangle, ...)
             # otherwise accumulate MEMORY_AND_DISK blocks across the
             # 244-query sweep until ContextCleaner happens to GC them.
+            # localCheckpoint RDD blocks (the connected-components and
+            # alpha-beta-core builders) are not cached tables: they
+            # survive clearCache().
             spark.catalog.clearCache()
         if q.oracle is None:
             print(f"ok*   {name}: rows-only ({len(sdf)} rows)")
