@@ -12,11 +12,29 @@ Layering (see SURVEY.md §7):
   L3  ``tectonic_spark.operators``  — Spark-delegated relational surface +
                                       LLM-pipeline extensions
       ``tectonic_spark.streaming``  — Structured Streaming operators
+
+Importing the package does not import pyspark: :func:`get_spark` is loaded
+on first use, so L1 stays Spark-free. On Python < 3.13 it installs
+:mod:`tectonic_spark.zipimport_cache`, which every Spark Python worker that
+unpickles a tectonic reader thereby picks up.
 """
 
-from tectonic_spark.session import get_spark
+import sys
+
+if sys.version_info < (3, 13):
+    from tectonic_spark import zipimport_cache
+
+    zipimport_cache.install()
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name == "get_spark":
+        from tectonic_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 def read_json(spark, path: str, schema=None, **options):

@@ -37,6 +37,7 @@ from collections.abc import Iterator
 from dataclasses import dataclass
 from typing import Any
 
+from pyspark.errors import PySparkTypeError
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -782,7 +783,7 @@ class TectonicJsonReader(DataSourceReader):
 
         try:
             arrow_schema = arrow_schema_for(self.schema)
-        except Exception:  # noqa: BLE001 - unconvertible type → python path
+        except PySparkTypeError:  # no Arrow type (e.g. intervals) → python path
             return None
         return arrow_schema if all(ok(f.type) for f in arrow_schema) else None
 

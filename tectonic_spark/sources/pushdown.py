@@ -170,33 +170,34 @@ def compile_filters(filters: list, schema: StructType) -> dict[str, list[Test]] 
         return mk
 
     for f in filters:
-        try:
-            if isinstance(f, EqualTo):
-                add(f.attribute, cmp_test(f.value, lambda a, b: a == b))
-            elif isinstance(f, EqualNullSafe):
-                add(f.attribute, ens_test(f.value))
-            elif isinstance(f, GreaterThan):
-                add(f.attribute, cmp_test(f.value, lambda a, b: a > b))
-            elif isinstance(f, GreaterThanOrEqual):
-                add(f.attribute, cmp_test(f.value, lambda a, b: a >= b))
-            elif isinstance(f, LessThan):
-                add(f.attribute, cmp_test(f.value, lambda a, b: a < b))
-            elif isinstance(f, LessThanOrEqual):
-                add(f.attribute, cmp_test(f.value, lambda a, b: a <= b))
-            elif isinstance(f, In):
-                add(f.attribute, cmp_test(set(f.value), lambda a, b: a in b))
-            elif isinstance(f, IsNotNull):
-                add(f.attribute, null_test(False))
-            elif isinstance(f, IsNull):
-                add(f.attribute, null_test(True))
-            elif isinstance(f, StringStartsWith):
-                add(f.attribute, cmp_test(f.value, lambda a, b: a.startswith(b)))
-            elif isinstance(f, StringEndsWith):
-                add(f.attribute, cmp_test(f.value, lambda a, b: a.endswith(b)))
-            elif isinstance(f, StringContains):
-                add(f.attribute, cmp_test(f.value, lambda a, b: b in a))
-        except Exception:  # pragma: no cover - malformed filter → ignore
-            continue
+        if isinstance(f, EqualTo):
+            add(f.attribute, cmp_test(f.value, lambda a, b: a == b))
+        elif isinstance(f, EqualNullSafe):
+            add(f.attribute, ens_test(f.value))
+        elif isinstance(f, GreaterThan):
+            add(f.attribute, cmp_test(f.value, lambda a, b: a > b))
+        elif isinstance(f, GreaterThanOrEqual):
+            add(f.attribute, cmp_test(f.value, lambda a, b: a >= b))
+        elif isinstance(f, LessThan):
+            add(f.attribute, cmp_test(f.value, lambda a, b: a < b))
+        elif isinstance(f, LessThanOrEqual):
+            add(f.attribute, cmp_test(f.value, lambda a, b: a <= b))
+        elif isinstance(f, In):
+            try:
+                values = set(f.value)
+            except TypeError:  # unhashable literals (arrays, maps) stay Spark-side
+                continue
+            add(f.attribute, cmp_test(values, lambda a, b: a in b))
+        elif isinstance(f, IsNotNull):
+            add(f.attribute, null_test(False))
+        elif isinstance(f, IsNull):
+            add(f.attribute, null_test(True))
+        elif isinstance(f, StringStartsWith):
+            add(f.attribute, cmp_test(f.value, lambda a, b: a.startswith(b)))
+        elif isinstance(f, StringEndsWith):
+            add(f.attribute, cmp_test(f.value, lambda a, b: a.endswith(b)))
+        elif isinstance(f, StringContains):
+            add(f.attribute, cmp_test(f.value, lambda a, b: b in a))
     return out or None
 
 

@@ -18,10 +18,9 @@ from pyspark.sql import SparkSession
 
 
 def _filter_pushdown_on(spark: SparkSession) -> bool:
-    try:
-        v = spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-    except Exception:
-        return False
+    # the lookup has a default, so no error is expected: a failing session
+    # surfaces here instead of silently losing pushdown
+    v = spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
     return str(v).lower() == "true"
 
 

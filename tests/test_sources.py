@@ -9,7 +9,7 @@ import os
 
 import duckdb
 import pytest
-from pyspark.sql.datasource import EqualTo, GreaterThan, IsNull, StringStartsWith
+from pyspark.sql.datasource import EqualTo, GreaterThan, In, IsNull, StringStartsWith
 
 from tectonic_spark.core.json_parser import JsonParser, Mode
 from tectonic_spark.sources.json_source import (
@@ -169,6 +169,21 @@ class TestPushdownPlate:
     def test_unsupported_filter_ignored(self):
         schema = infer_spark_schema([{"n": {"x": 1}}])
         assert compile_filters([EqualTo(("n", "x"), 1)], schema) is None
+
+    def test_in_with_unhashable_values_stays_spark_side(self):
+        schema = infer_spark_schema([{"a": [1], "b": 1}])
+        assert compile_filters([In(("a",), ([1], [2]))], schema) is None
+        tests = compile_filters([In(("a",), ([1],)), In(("b",), (1, 2))], schema)
+        assert list(tests) == ["b"]
+
+    def test_unrelated_filter_error_surfaces(self):
+        class _Values:
+            def __iter__(self):
+                raise RuntimeError("bad literal")
+
+        schema = infer_spark_schema([{"a": 1}])
+        with pytest.raises(RuntimeError, match="bad literal"):
+            compile_filters([In(("a",), _Values())], schema)
 
 
 def _run_nested(data: bytes, paths, tests=None, required=None):
@@ -729,6 +744,19 @@ class TestPushdownGating:
 
         assert _filter_pushdown_on(spark) is True
 
+    def test_registration_surfaces_conf_errors(self):
+        from tectonic_spark.sources.registration import register_tectonic_sources
+
+        class _BrokenConf:
+            def get(self, key, default=None):
+                raise RuntimeError("session is gone")
+
+        class _Spark:
+            conf = _BrokenConf()
+
+        with pytest.raises(RuntimeError, match="session is gone"):
+            register_tectonic_sources(_Spark())
+
     def test_reads_work_with_pushdown_option_off(self, spark, tmp_path):
         # a reader without pushFilters must produce identical results —
         # Catalyst just applies the filters above the scan
@@ -741,6 +769,39 @@ class TestPushdownGating:
         )
         got = sorted(r.a for r in base.filter("a >= 15 and b is not null").collect())
         assert got == [15, 16, 17, 18, 19]
+
+
+class TestArrowBlockSchema:
+    """The pyarrow fast path is declined only for schemas with no Arrow
+    type; any other error from the conversion surfaces."""
+
+    def _reader(self, tmp_path, schema):
+        from tectonic_spark.sources.json_source import TectonicJsonDataSource
+
+        p = tmp_path / "x.jsonl"
+        p.write_text('{"a": 1}\n')
+        return TectonicJsonDataSource(options={"path": str(p)}).reader(schema)
+
+    def test_unconvertible_type_takes_python_path(self, tmp_path):
+        from pyspark.sql.types import LongType, StructField, StructType, YearMonthIntervalType
+
+        plain = StructType([StructField("a", LongType())])
+        assert self._reader(tmp_path, plain)._arrow_block_schema() is not None
+        interval = StructType(plain.fields + [StructField("i", YearMonthIntervalType())])
+        assert self._reader(tmp_path, interval)._arrow_block_schema() is None
+
+    def test_unrelated_error_surfaces(self, tmp_path, monkeypatch):
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        from tectonic_spark.sources import arrow_batch
+
+        def broken(schema):
+            raise RuntimeError("arrow is broken")
+
+        monkeypatch.setattr(arrow_batch, "arrow_schema_for", broken)
+        reader = self._reader(tmp_path, StructType([StructField("a", LongType())]))
+        with pytest.raises(RuntimeError, match="arrow is broken"):
+            reader._arrow_block_schema()
 
 
 class TestValueColumnPushdown:
