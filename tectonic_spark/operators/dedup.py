@@ -583,7 +583,8 @@ def embedding_neardup_df(
         .select("vec_a", "vec_b", sim.alias("cos_sim"))
         .filter(F.col("cos_sim") >= 0.45)
     )
-    return out.distinct() if late_dedup else out
+    # a pair is unique by its key; cos_sim is a function of it
+    return out.dropDuplicates(["vec_a", "vec_b"]) if late_dedup else out
 
 
 # prefix-filtered candidates + exact verify (see _O_PREF_CAND: identical

@@ -116,10 +116,34 @@ def test_triangle_closure_probe_key_is_packed_long(spark, sf_dir):
     (a*2^32 + c — LongHashedRelation fast path), never on the two-column
     (a, c) key whose generic hashed-relation probe dominated the query
     (12-15 s vs 2.4-3.1 s for the sf1 closure)."""
-    plan = physical_plan(build(spark, sf_dir, "c06_triangle_count"))
+    df = build(spark, sf_dir, "c06_triangle_count")
+    plan = physical_plan(df)
     assert "4294967296" in plan  # the packing multiplier
     # the old composite condition printed as ((a#… = a2#…) AND (c#… = c2#…))
     assert "a2#" not in plan and "c2#" not in plan
+
+    def nodes(node):
+        yield node
+        if node.nodeName() == "AdaptiveSparkPlan":
+            yield from nodes(node.executedPlan())
+            return
+        children = node.children()
+        for i in range(children.size()):
+            yield from nodes(children.apply(i))
+
+    def keys(seq):
+        return [seq.apply(i) for i in range(seq.size())]
+
+    joins = [
+        n
+        for n in nodes(df._jdf.queryExecution().executedPlan())
+        if n.nodeName() in ("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin")
+        and any(k.toString().startswith("ac#") for k in keys(n.leftKeys()))
+    ]
+    assert len(joins) == 1, [j.toString() for j in joins]
+    for side in (joins[0].leftKeys(), joins[0].rightKeys()):
+        (key,) = keys(side)
+        assert key.dataType().typeName() == "long"
 
 
 def test_q07_broadcasts_all_dims(spark, sf_dir):

@@ -132,3 +132,114 @@ def test_operators_run_streams_only_through_run_stream():
     for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
         problems += _poll_loop_problems(path.read_text(), path.name)
     assert problems == []
+
+
+# calls that only build a path from their arguments; any other call (such
+# as parser_ops' ``_fixture_dir(sf_dir)``) names a directory of its own
+_PATH_BUILDERS = {"join", "format", "str", "fspath", "abspath", "Path"}
+
+
+def _uncached_table_reads(source: str, filename: str) -> list[str]:
+    """Lines of ``source`` that call ``<...>.read<...>.parquet(path)`` with a
+    path built from ``sf_dir``, directly or through local names, instead of
+    loading the table through ``tables.table`` (whose schema cache such a
+    read would bypass)."""
+    import ast
+
+    tree = ast.parse(source, filename)
+    parents = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+
+    def on_reader(n) -> bool:
+        while isinstance(n, (ast.Call, ast.Attribute)):
+            if isinstance(n, ast.Attribute) and n.attr == "read":
+                return True
+            n = n.func if isinstance(n, ast.Call) else n.value
+        return False
+
+    def from_sf_dir(n, assigned: dict, seen: frozenset = frozenset()) -> bool:
+        if isinstance(n, ast.Name):
+            if n.id == "sf_dir":
+                return True
+            if n.id in seen:
+                return False
+            return any(
+                from_sf_dir(v, assigned, seen | {n.id}) for v in assigned.get(n.id, ())
+            )
+        if isinstance(n, ast.Call):
+            fn = n.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if name not in _PATH_BUILDERS:
+                return False
+        return any(from_sf_dir(c, assigned, seen) for c in ast.iter_child_nodes(n))
+
+    problems = []
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and on_reader(node.func.value)
+        ):
+            continue
+        # names assigned in the enclosing functions (closures see them too)
+        assigned: dict[str, list] = {}
+        scope = parents.get(node)
+        while scope is not None:
+            if isinstance(scope, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for n in ast.walk(scope):
+                    if isinstance(n, ast.Assign):
+                        for t in n.targets:
+                            if isinstance(t, ast.Name):
+                                assigned.setdefault(t.id, []).append(n.value)
+            scope = parents.get(scope)
+        if any(from_sf_dir(a, assigned) for a in node.args):
+            problems.append(f"{filename}:{node.lineno}: parquet read of sf_dir")
+    return problems
+
+
+def test_table_read_scan_flags_a_bypassing_read():
+    bad = (
+        "def a(spark, sf_dir):\n"
+        "    return spark.read.parquet(os.path.join(sf_dir, 'orders.parquet'))\n"
+        "def b(spark, sf_dir):\n"
+        "    path = f'{sf_dir}/lineitem.parquet'\n"
+        "    p = path\n"
+        "    return spark.read.option('mergeSchema', 'true').parquet(p)\n"
+        "def c(spark, sf_dir):\n"
+        "    base = sf_dir\n"
+        "    def inner(df):\n"
+        "        return df.sparkSession.read.schema(s).parquet(base + '/part.parquet')\n"
+        "    return inner\n"
+    )
+    good = (
+        "def g(spark, sf_dir, df):\n"
+        "    out = os.path.join(_fixture_dir(sf_dir), 'sink')\n"
+        "    df.write.parquet(os.path.join(sf_dir, 'copy'))\n"
+        "    return spark.read.parquet(out)\n"
+        "def h(spark, sf_dir):\n"
+        "    return table(spark, sf_dir, 'orders')\n"
+        "def k(spark, sf_dir):\n"
+        "    path = os.path.join(sf_dir, 'orders.parquet')\n"
+        "    return duckdb.sql(f\"SELECT * FROM '{path}'\")\n"
+        "def m(spark, out):\n"
+        "    path = out\n"
+        "    return spark.read.parquet(path)\n"
+    )
+    assert _uncached_table_reads(bad, "bad.py") == [
+        "bad.py:2: parquet read of sf_dir",
+        "bad.py:6: parquet read of sf_dir",
+        "bad.py:10: parquet read of sf_dir",
+    ]
+    assert _uncached_table_reads(good, "good.py") == []
+
+
+def test_operators_read_tables_only_through_table():
+    """Every test table loads through ``tables.table``, so its schema comes
+    from the driver-side cache; parser_ops still reads back the sinks it
+    just wrote."""
+    import pathlib
+
+    problems = []
+    for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
+        problems += _uncached_table_reads(path.read_text(), path.name)
+    assert problems == []
