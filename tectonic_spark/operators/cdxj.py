@@ -39,19 +39,27 @@ from __future__ import annotations
 import base64
 import hashlib
 import json
+import os
 import zlib
+from collections.abc import Iterator
 
 __all__ = [
+    "block_extents",
     "build_cdxj",
     "build_cluster_idx",
+    "candidate_blocks",
     "cluster_entries_by_file",
     "compact_zipnum",
     "fetch_member",
     "file_block_keys",
     "incremental_zipnum_update",
+    "index_blocks",
+    "index_lines",
     "multi_zipnum_blocks",
     "parse_cdxj",
     "parse_cluster_idx",
+    "read_blocks",
+    "shard_members",
     "surt",
     "warc_timestamp",
     "write_warc_indexed",
@@ -301,6 +309,87 @@ def multi_zipnum_blocks(
     return out
 
 
+def candidate_blocks(
+    by_file: dict[str, list[dict]], keys
+) -> list[tuple[str, int, int]]:
+    """The distinct ``(filename, offset, length)`` blocks that can hold
+    any of ``keys``, sorted: ``multi_zipnum_blocks`` per key (<= 2 blocks
+    per file for point keys), with the first-key lists built once."""
+    keys_by_file = file_block_keys(by_file)
+    return sorted(
+        {
+            (e["filename"], e["offset"], e["length"])
+            for key in keys
+            for e in multi_zipnum_blocks(by_file, key, keys_by_file)
+        }
+    )
+
+
+# ---------------------------------------------------------------------------
+# the one read path: every reader of a zipnum index or of the WARC members
+# it locates goes through these, so ranged reads happen only in this module
+# ---------------------------------------------------------------------------
+
+
+def index_blocks(index_dir: str) -> dict[str, list[dict]]:
+    """The cluster.idx of the zipnum index at ``index_dir``, grouped per
+    block file (``cluster_entries_by_file``). A single-file index is a
+    one-entry map."""
+    with open(os.path.join(index_dir, "cluster.idx"), "rb") as f:
+        return cluster_entries_by_file(parse_cluster_idx(f.read()))
+
+
+def block_extents(by_file: dict[str, list[dict]]) -> list[tuple[str, int, int]]:
+    """Every block of ``by_file`` as ``(filename, offset, length)``: files
+    in map order, each file's blocks in offset order."""
+    return [
+        (fname, e["offset"], e["length"])
+        for fname, blocks in by_file.items()
+        for e in blocks
+    ]
+
+
+def read_blocks(index_dir: str, extents) -> Iterator[tuple[str, list[str]]]:
+    """Ranged-read and inflate each ``(filename, offset, length)`` block of
+    the zipnum index at ``index_dir``, in the given order, yielding
+    ``(filename, lines)`` per block. Each block file opens once."""
+    handles: dict = {}
+    try:
+        for fname, offset, length in extents:
+            f = handles.get(fname)
+            if f is None:
+                f = handles[fname] = open(os.path.join(index_dir, fname), "rb")
+            block = fetch_member(f, int(offset), int(length))
+            yield fname, block.decode("utf-8").splitlines()
+    finally:
+        for f in handles.values():
+            f.close()
+
+
+def index_lines(index_dir: str) -> list[str]:
+    """Every CDXJ line of the single- or multi-file zipnum index at
+    ``index_dir``: block files in the order cluster.idx first names them,
+    each file's blocks in offset order."""
+    extents = block_extents(index_blocks(index_dir))
+    return [ln for _f, lines in read_blocks(index_dir, extents) for ln in lines]
+
+
+def shard_members(rows, shard_path) -> Iterator[tuple[object, bytes]]:
+    """Ranged-read the WARC member each row locates (``filename``,
+    ``offset`` and ``length`` attributes, e.g. pandas ``itertuples``
+    rows), yielding ``(row, member)``. Rows are grouped by
+    ``shard_path(row)``; each shard opens once and is read in ascending
+    offset order."""
+    by_shard: dict[str, list] = {}
+    for r in rows:
+        by_shard.setdefault(shard_path(r), []).append(r)
+    for path, items in by_shard.items():
+        items.sort(key=lambda r: r.offset)
+        with open(path, "rb") as f:
+            for r in items:
+                yield r, fetch_member(f, int(r.offset), int(r.length))
+
+
 def incremental_zipnum_update(
     index_dir: str,
     delta_lines: list[str],
@@ -345,9 +434,6 @@ def incremental_zipnum_update(
     existing index; raises ``FileExistsError`` if this generation's
     delta file already exists (an update must be explicit, never an
     overwrite)."""
-    import json as _json
-    import os as _os
-
     if any(
         delta_lines[i] > delta_lines[i + 1]
         for i in range(len(delta_lines) - 1)
@@ -359,47 +445,34 @@ def incremental_zipnum_update(
         survivors = []
         for ln in delta_lines:
             key, ts, blob = ln.split(" ", 2)
-            if (key, ts, _json.loads(blob)["digest"]) in tombstones:
+            if (key, ts, json.loads(blob)["digest"]) in tombstones:
                 n_tombstoned += 1
             else:
                 survivors.append(ln)
         delta_lines = survivors
     delta_file = f"delta-{generation:03d}.zipnum.gz"
-    delta_path = _os.path.join(index_dir, delta_file)
-    if _os.path.exists(delta_path):
+    delta_path = os.path.join(index_dir, delta_file)
+    if os.path.exists(delta_path):
         raise FileExistsError(f"{delta_file} already exists in {index_dir}")
-    with open(_os.path.join(index_dir, "cluster.idx"), "rb") as f:
+    with open(os.path.join(index_dir, "cluster.idx"), "rb") as f:
         entries = parse_cluster_idx(f.read())
     by_file = cluster_entries_by_file(entries)
 
     # --- index-served dedup: ranged-read only candidate blocks ---
-    keys_by_file = file_block_keys(by_file)
-    needed: dict[tuple[str, int, int], None] = {}
-    for ln in delta_lines:
-        key = ln.split(" ", 1)[0]
-        for e in multi_zipnum_blocks(by_file, key, keys_by_file):
-            needed[(e["filename"], e["offset"], e["length"])] = None
+    needed = candidate_blocks(
+        by_file, (ln.split(" ", 1)[0] for ln in delta_lines)
+    )
     existing: set[tuple[str, str, str]] = set()
-    bytes_read = 0
-    handles: dict[str, object] = {}
-    try:
-        for fname, off, length in needed:
-            f = handles.get(fname)
-            if f is None:
-                f = handles[fname] = open(_os.path.join(index_dir, fname), "rb")
-            block = fetch_member(f, off, length)
-            bytes_read += length
-            for ln in block.decode("utf-8").splitlines():
-                key, ts, blob = ln.split(" ", 2)
-                existing.add((key, ts, _json.loads(blob)["digest"]))
-    finally:
-        for f in handles.values():
-            f.close()
+    for _fname, lines in read_blocks(index_dir, needed):
+        for ln in lines:
+            key, ts, blob = ln.split(" ", 2)
+            existing.add((key, ts, json.loads(blob)["digest"]))
+    bytes_read = sum(length for _f, _o, length in needed)
 
     kept: list[str] = []
     for ln in delta_lines:
         key, ts, blob = ln.split(" ", 2)
-        if (key, ts, _json.loads(blob)["digest"]) not in existing:
+        if (key, ts, json.loads(blob)["digest"]) not in existing:
             kept.append(ln)
 
     # --- new blocks + merged cluster.idx; existing files untouched ---
@@ -409,7 +482,7 @@ def incremental_zipnum_update(
         tmp = delta_path + ".tmp"
         with open(tmp, "wb") as f:
             f.write(zblob)
-        _os.rename(tmp, delta_path)
+        os.rename(tmp, delta_path)
         for e in zentries:
             new_entries.append(dict(e, filename=delta_file))
     merged = sorted(
@@ -423,10 +496,10 @@ def incremental_zipnum_update(
         )
         + "\n"
     ).encode("utf-8")
-    tmp = _os.path.join(index_dir, "cluster.idx.tmp")
+    tmp = os.path.join(index_dir, "cluster.idx.tmp")
     with open(tmp, "wb") as f:
         f.write(idx_blob)
-    _os.rename(tmp, _os.path.join(index_dir, "cluster.idx"))
+    os.rename(tmp, os.path.join(index_dir, "cluster.idx"))
     return {
         "delta_file": delta_file,
         "n_delta": n_raw,
@@ -455,36 +528,23 @@ def compact_zipnum(index_dir: str, *, block_lines: int = 64) -> dict:
 
     Returns ``{"n_lines", "n_files_before", "n_blocks_after",
     "bytes_before", "bytes_after"}``."""
-    import os as _os
-
-    with open(_os.path.join(index_dir, "cluster.idx"), "rb") as f:
-        entries = parse_cluster_idx(f.read())
-    by_file = cluster_entries_by_file(entries)
-    lines: list[str] = []
-    bytes_before = 0
-    for fname, blocks in by_file.items():
-        with open(_os.path.join(index_dir, fname), "rb") as f:
-            for e in blocks:
-                lines.extend(
-                    fetch_member(f, e["offset"], e["length"])
-                    .decode("utf-8")
-                    .splitlines()
-                )
-                bytes_before += e["length"]
+    by_file = index_blocks(index_dir)
+    lines = index_lines(index_dir)
+    bytes_before = sum(length for _f, _o, length in block_extents(by_file))
     n_before = len(lines)
     lines.sort()
     zblob, zentries = write_zipnum(lines, block_lines=block_lines)
-    tmp_z = _os.path.join(index_dir, "index.zipnum.gz.compact")
+    tmp_z = os.path.join(index_dir, "index.zipnum.gz.compact")
     with open(tmp_z, "wb") as f:
         f.write(zblob)
-    tmp_c = _os.path.join(index_dir, "cluster.idx.compact")
+    tmp_c = os.path.join(index_dir, "cluster.idx.compact")
     with open(tmp_c, "wb") as f:
         f.write(build_cluster_idx(zentries, "index.zipnum.gz"))
     old_files = [fn for fn in by_file if fn != "index.zipnum.gz"]
-    _os.rename(tmp_z, _os.path.join(index_dir, "index.zipnum.gz"))
-    _os.rename(tmp_c, _os.path.join(index_dir, "cluster.idx"))
+    os.rename(tmp_z, os.path.join(index_dir, "index.zipnum.gz"))
+    os.rename(tmp_c, os.path.join(index_dir, "cluster.idx"))
     for fn in old_files:
-        _os.remove(_os.path.join(index_dir, fn))
+        os.remove(os.path.join(index_dir, fn))
     return {
         "n_lines": n_before,
         "n_files_before": len(by_file),
@@ -525,23 +585,11 @@ def retain_zipnum(
     ``{"n_before", "n_expired", "n_retained", "n_files_before",
     "n_blocks_after", "expired_file"}``."""
     import gzip as _gzip
-    import os as _os
 
     if not (len(cutoff_ts) == 14 and cutoff_ts.isdigit()):
         raise ValueError(f"bad cutoff timestamp {cutoff_ts!r}")
-    with open(_os.path.join(index_dir, "cluster.idx"), "rb") as f:
-        entries = parse_cluster_idx(f.read())
-    by_file = cluster_entries_by_file(entries)
-    lines: list[str] = []
-    for fname, blocks in by_file.items():
-        with open(_os.path.join(index_dir, fname), "rb") as f:
-            for e in blocks:
-                lines.extend(
-                    fetch_member(f, e["offset"], e["length"])
-                    .decode("utf-8")
-                    .splitlines()
-                )
-    lines.sort()
+    by_file = index_blocks(index_dir)
+    lines = sorted(index_lines(index_dir))
     latest: dict[str, str] = {}
     for ln in lines:
         key, ts, _rest = ln.split(" ", 2)
@@ -556,23 +604,23 @@ def retain_zipnum(
         else:
             retained.append(ln)
     expired_file = "expired.cdxj.gz"
-    tmp_e = _os.path.join(index_dir, expired_file + ".retain")
+    tmp_e = os.path.join(index_dir, expired_file + ".retain")
     with open(tmp_e, "wb") as f:
         f.write(_gzip.compress(("\n".join(expired) + "\n").encode("utf-8")
                                if expired else b""))
     zblob, zentries = write_zipnum(retained, block_lines=block_lines)
-    tmp_z = _os.path.join(index_dir, "index.zipnum.gz.retain")
+    tmp_z = os.path.join(index_dir, "index.zipnum.gz.retain")
     with open(tmp_z, "wb") as f:
         f.write(zblob)
-    tmp_c = _os.path.join(index_dir, "cluster.idx.retain")
+    tmp_c = os.path.join(index_dir, "cluster.idx.retain")
     with open(tmp_c, "wb") as f:
         f.write(build_cluster_idx(zentries, "index.zipnum.gz"))
     old_files = [fn for fn in by_file if fn != "index.zipnum.gz"]
-    _os.rename(tmp_e, _os.path.join(index_dir, expired_file))
-    _os.rename(tmp_z, _os.path.join(index_dir, "index.zipnum.gz"))
-    _os.rename(tmp_c, _os.path.join(index_dir, "cluster.idx"))
+    os.rename(tmp_e, os.path.join(index_dir, expired_file))
+    os.rename(tmp_z, os.path.join(index_dir, "index.zipnum.gz"))
+    os.rename(tmp_c, os.path.join(index_dir, "cluster.idx"))
     for fn in old_files:
-        _os.remove(_os.path.join(index_dir, fn))
+        os.remove(os.path.join(index_dir, fn))
     return {
         "n_before": len(lines),
         "n_expired": len(expired),

@@ -11,6 +11,7 @@ concurrent builders converge on identical bytes.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import tempfile
@@ -4829,6 +4830,202 @@ def a37_capture_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# zipnum lookup kernels, shared by every index query (a36–a48, s17, s18).
+# A single-file index is a one-entry ``cluster_entries_by_file`` map; a
+# merged or incrementally-updated index spreads its blocks over several
+# files. Lookups run the a36 ladder once per file, candidate blocks are
+# ranged-read distributed, and members are fetched per shard in offset
+# order. Every ranged read goes through cdxj.py's read helpers.
+# ---------------------------------------------------------------------------
+
+_BLOCK_DDL = "src_file string, b_offset long, b_length long"
+_MEMBER_COLS = ["doc_id", "lang", "n_chars", "bytes_read"]
+_MEMBER_DDL = "doc_id long, lang string, n_chars long, bytes_read long"
+
+
+@contextlib.contextmanager
+def _persisting():
+    """Yield a ``persist(df)`` that persists and returns ``df``; every
+    DataFrame it persisted is unpersisted when the block exits, on the
+    failure paths too."""
+    cached: list = []
+
+    def persist(df):
+        cached.append(df)
+        return df.persist()
+
+    try:
+        yield persist
+    finally:
+        for df in cached:
+            df.unpersist()
+
+
+def _doc_key(path: str = "/doc/"):
+    """The SURT key of ``https://{source}.example{path}{doc_id}``, built
+    with JVM built-ins, as column ``key``."""
+    from pyspark.sql import functions as F
+
+    return F.concat(
+        F.lit("example,"), F.col("source"), F.lit(")" + path), F.col("doc_id")
+    ).alias("key")
+
+
+def _blocks_df(by_file: dict, probes):
+    """Probe keys -> distinct candidate ``(src_file, b_offset, b_length)``
+    rows via the per-file zipnum ladder (<= 2 blocks per file per key).
+    ``probes`` must carry a ``key`` column."""
+
+    def assign_blocks(batches):
+        import pandas as pd
+
+        from tectonic_spark.operators.cdxj import candidate_blocks
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                candidate_blocks(by_file, pdf["key"]),
+                columns=["src_file", "b_offset", "b_length"],
+            )
+
+    return probes.select("key").mapInPandas(assign_blocks, _BLOCK_DDL).distinct()
+
+
+def _all_blocks_df(spark, by_file: dict):
+    """Every block of ``by_file`` as a block-row DataFrame; its width
+    scales with the index (the a41 doctrine)."""
+    from tectonic_spark.operators.cdxj import block_extents
+
+    rows = block_extents(by_file)
+    return spark.createDataFrame(rows, _BLOCK_DDL).repartition(
+        max(8, len(rows) // 64)
+    )
+
+
+def _entries_df(idx_dir: str, blocks, prec: dict):
+    """Block rows -> one CDXJ entry row per line (``mime`` and ``source``
+    are null where a line lacks them), with a ``prec`` column: the
+    collection precedence of the block file that held the line, per the
+    ``prec`` map."""
+
+    def fetch_blocks(batches):
+        import json as _json
+
+        import pandas as pd
+
+        from tectonic_spark.operators.cdxj import read_blocks
+
+        for pdf in batches:
+            rows = []
+            for fname, lines in read_blocks(idx_dir, pdf.itertuples(index=False)):
+                p = prec[fname]
+                for ln in lines:
+                    key, ts, blob = ln.split(" ", 2)
+                    j = _json.loads(blob)
+                    rows.append(
+                        (key, ts, j["digest"], j.get("mime"), j.get("source"),
+                         p, j["filename"], j["offset"], j["length"])
+                    )
+            yield pd.DataFrame(
+                rows,
+                columns=["key", "ts", "digest", "mime", "source", "prec",
+                         "filename", "offset", "length"],
+            )
+
+    return blocks.mapInPandas(
+        fetch_blocks,
+        "key string, ts string, digest string, mime string, source string, "
+        "prec long, filename string, offset long, length long",
+    )
+
+
+def _count_lines(spark, idx_dir: str, by_file: dict) -> int:
+    """Total CDXJ lines across every block file — the closed-form union
+    pin, computed distributed."""
+    from pyspark.sql import functions as F
+
+    def count_lines(batches):
+        import pandas as pd
+
+        from tectonic_spark.operators.cdxj import read_blocks
+
+        for pdf in batches:
+            blocks = read_blocks(idx_dir, pdf.itertuples(index=False))
+            n = sum(len(lines) for _f, lines in blocks)
+            yield pd.DataFrame([n], columns=["n"])
+
+    return (
+        _all_blocks_df(spark, by_file)
+        .mapInPandas(count_lines, "n long")
+        .agg(F.sum("n"))
+        .collect()[0][0]
+    )
+
+
+def _latest_capture(entries, probes):
+    """Per probe: ``caps``, its number of entry rows, and the latest
+    capture's ``ts``, ``digest``, ``filename``, ``offset``, ``length``."""
+    from pyspark.sql import functions as F
+
+    cols = ["ts", "digest", "filename", "offset", "length"]
+    return (
+        entries.join(probes, "key", "inner")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("caps"),
+            F.max(F.struct(*cols)).alias("w"),
+        )
+        .select("doc_id", "caps", *(F.col(f"w.{c}").alias(c) for c in cols))
+    )
+
+
+def _routed_fetch(winners, warc_dirs: dict, *, carry: tuple = ()):
+    """Ranged-fetch + extract each winner row, routed by its ``prec``
+    (which collection's shards hold the member). Verifies the payload
+    digest, the doc id, and the temporal routing pin (February
+    captures must come from the non-base collection, January from the
+    base). ``carry`` columns are passed through."""
+
+    def fetch_docs(batches):
+        import os as _os
+
+        import pandas as pd
+
+        from tectonic_spark.operators.cdxj import payload_digest, shard_members
+        from tectonic_spark.operators.parser_ops import _extract_crawl_response
+        from tectonic_spark.operators.warc import parse_warc
+
+        for pdf in batches:
+            rows = []
+            members = shard_members(
+                pdf.itertuples(index=False),
+                lambda r: _os.path.join(warc_dirs[int(r.prec)], r.filename),
+            )
+            for r, member in members:
+                (rec,) = parse_warc(member)
+                if payload_digest(rec["payload"]) != r.digest:
+                    raise ValueError(f"{r.filename}@{r.offset}: digest mismatch")
+                d, text, lang, *_rest = _extract_crawl_response(rec)
+                if d != int(r.doc_id):
+                    raise ValueError(f"index said doc {r.doc_id}, member is {d}")
+                # routing pin: February winners come from the
+                # delta/new collection, January from the base
+                p, want = int(r.prec), 1 if r.ts.startswith("202402") else 0
+                if p != want:
+                    raise ValueError(
+                        f"doc {d} ts {r.ts} routed to collection "
+                        f"{p}, the index layout says {want}"
+                    )
+                rows.append(
+                    (d, lang, len(text), int(r.length))
+                    + tuple(int(getattr(r, c)) for c in carry)
+                )
+            yield pd.DataFrame(rows, columns=_MEMBER_COLS + list(carry))
+
+    ddl = _MEMBER_DDL + "".join(f", {c} long" for c in carry)
+    return winners.repartition(8, "prec", "filename").mapInPandas(fetch_docs, ddl)
+
+
 def _zipnum_src(sf_dir: str) -> tuple[str, str, int]:
     """The two-level compressed index over the a30 crawl (Common
     Crawl's cluster.idx shape): all per-shard CDXJ lines merge-sorted,
@@ -4899,184 +5096,77 @@ def _zipnum_src(sf_dir: str) -> tuple[str, str, int]:
 )
 def a36_zipnum_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
-    from tectonic_spark.operators.cdxj import parse_cluster_idx
+    from tectonic_spark.operators.cdxj import index_blocks
     from tectonic_spark.tables import table
 
-    idx_dir, warc_dir, n_blocks = _zipnum_src(sf_dir)
-    with open(os.path.join(idx_dir, "cluster.idx"), "rb") as f:
-        cluster = parse_cluster_idx(f.read())
-    block_keys = [e["key"] for e in cluster]
+    idx_dir, warc_dir, _n_blocks = _zipnum_src(sf_dir)
+    by_file = index_blocks(idx_dir)
 
     # probes: URL -> SURT key entirely with JVM built-ins
     probes = (
         table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 199 == 5)
-        .select(
-            "doc_id",
-            F.concat(
-                F.lit("example,"), F.col("source"), F.lit(")/doc/"),
-                F.col("doc_id"),
-            ).alias("key"),
-        )
+        .select("doc_id", _doc_key())
     )
-
-    bschema = StructType([StructField("block", LongType(), True)])
-
-    def assign_blocks(batches):
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import zipnum_block_range
-
-        for pdf in batches:
-            blocks = set()
-            for key in pdf["key"]:
-                lo, hi = zipnum_block_range(block_keys, key)
-                blocks.update(range(lo, hi))
-            yield pd.DataFrame(sorted(blocks), columns=["block"])
-
-    blocks = (
-        probes.select("key")
-        .mapInPandas(assign_blocks, bschema)
-        .distinct()
-    )
-
-    eschema = StructType(
-        [
-            StructField("key", StringType(), True),
-            StructField("url", StringType(), True),
-            StructField("filename", StringType(), True),
-            StructField("offset", LongType(), True),
-            StructField("length", LongType(), True),
-            StructField("digest", StringType(), True),
-            StructField("block_bytes", LongType(), True),
-        ]
-    )
-
-    zipnum_path = os.path.join(idx_dir, "index.zipnum.gz")
-
-    def fetch_blocks(batches):
-        import json as _json
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import fetch_member
-
-        for pdf in batches:
-            rows = []
-            with open(zipnum_path, "rb") as f:
-                for b in pdf["block"]:
-                    e = cluster[int(b)]
-                    block = fetch_member(f, e["offset"], e["length"])
-                    first = True
-                    for ln in block.decode("utf-8").splitlines():
-                        key, _ts, blob = ln.split(" ", 2)
-                        j = _json.loads(blob)
-                        rows.append(
-                            (
-                                key,
-                                j["url"],
-                                j["filename"],
-                                j["offset"],
-                                j["length"],
-                                j["digest"],
-                                e["length"] if first else 0,
-                            )
-                        )
-                        first = False
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "key", "url", "filename", "offset", "length", "digest",
-                    "block_bytes",
-                ],
-            )
-
-    entries = blocks.mapInPandas(fetch_blocks, eschema).persist()
-    matched = entries.join(probes, "key", "inner")
-
-    mschema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("lang", StringType(), True),
-            StructField("n_chars", LongType(), True),
-            StructField("bytes_read", LongType(), True),
-        ]
-    )
+    blocks = _blocks_df(by_file, probes)
 
     def fetch_docs(batches):
         import os as _os
 
         import pandas as pd
 
-        from tectonic_spark.operators.cdxj import fetch_member, payload_digest
+        from tectonic_spark.operators.cdxj import payload_digest, shard_members
         from tectonic_spark.operators.parser_ops import _extract_crawl_response
         from tectonic_spark.operators.warc import parse_warc
 
         for pdf in batches:
             rows = []
-            by_file: dict = {}
-            for r in pdf.itertuples(index=False):
-                by_file.setdefault(r.filename, []).append(r)
-            for fname, items in by_file.items():
-                items.sort(key=lambda r: r.offset)
-                with open(_os.path.join(warc_dir, fname), "rb") as f:
-                    for r in items:
-                        member = fetch_member(f, int(r.offset), int(r.length))
-                        (rec,) = parse_warc(member)
-                        if payload_digest(rec["payload"]) != r.digest:
-                            raise ValueError(
-                                f"{fname}@{r.offset}: digest mismatch"
-                            )
-                        d, text, lang, *_rest = _extract_crawl_response(rec)
-                        rows.append((d, lang, len(text), int(r.length)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "lang", "n_chars", "bytes_read"]
+            members = shard_members(
+                pdf.itertuples(index=False),
+                lambda r: _os.path.join(warc_dir, r.filename),
             )
+            for r, member in members:
+                (rec,) = parse_warc(member)
+                if payload_digest(rec["payload"]) != r.digest:
+                    raise ValueError(f"{r.filename}@{r.offset}: digest mismatch")
+                d, text, lang, *_rest = _extract_crawl_response(rec)
+                rows.append((d, lang, len(text), int(r.length)))
+            yield pd.DataFrame(rows, columns=_MEMBER_COLS)
 
-    fetched = (
-        matched.select("filename", "offset", "length", "digest")
-        .repartition(8, "filename")
-        .mapInPandas(fetch_docs, mschema)
-        .persist()
-    )
-    # both access bounds, asserted in code
-    n_probes = probes.count()
-    n_touched = blocks.count()
-    got = fetched.agg(
-        F.sum("bytes_read").alias("br"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    want_bytes = matched.agg(F.sum("length")).collect()[0][0]
-    if got["n"] != n_probes or got["br"] != want_bytes:
-        fetched.unpersist()
-        entries.unpersist()
-        raise RuntimeError(
-            f"a36: {got['n']} docs fetched for {n_probes} probes, "
-            f"{got['br']} member bytes vs indexed {want_bytes}"
+    with _persisting() as persist:
+        entries = persist(_entries_df(idx_dir, blocks, {"index.zipnum.gz": 0}))
+        matched = entries.join(probes, "key", "inner")
+        fetched = persist(
+            matched.select("filename", "offset", "length", "digest")
+            .repartition(8, "filename")
+            .mapInPandas(fetch_docs, _MEMBER_DDL)
         )
-    # the binary-search contract: <= 2 blocks per probe key (1 + the
-    # equal-key spill) — a ladder that degenerates to scanning the
-    # whole zipnum fails here regardless of corpus size
-    if n_touched > 2 * n_probes:
-        fetched.unpersist()
-        entries.unpersist()
-        raise RuntimeError(
-            f"a36: {n_touched} index blocks touched for {n_probes} "
-            "probes — the cluster ladder is not pruning"
+        # both access bounds, asserted in code
+        n_probes = probes.count()
+        n_touched = blocks.count()
+        got = fetched.agg(
+            F.sum("bytes_read").alias("br"), F.count(F.lit(1)).alias("n")
+        ).collect()[0]
+        want_bytes = matched.agg(F.sum("length")).collect()[0][0]
+        if got["n"] != n_probes or got["br"] != want_bytes:
+            raise RuntimeError(
+                f"a36: {got['n']} docs fetched for {n_probes} probes, "
+                f"{got['br']} member bytes vs indexed {want_bytes}"
+            )
+        # the binary-search contract: <= 2 blocks per probe key (1 + the
+        # equal-key spill) — a ladder that degenerates to scanning the
+        # whole zipnum fails here regardless of corpus size
+        if n_touched > 2 * n_probes:
+            raise RuntimeError(
+                f"a36: {n_touched} index blocks touched for {n_probes} "
+                "probes — the cluster ladder is not pruning"
+            )
+        agg = fetched.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("chars"),
         )
-    agg = fetched.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("chars"),
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
-    entries.unpersist()
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 
@@ -5602,12 +5692,6 @@ def a33_content_encoding_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a30_cdxj_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
     src, n_shards = _warc_cdxj_src(sf_dir)
     idx = spark.read.text(os.path.join(src, "*.cdxj"))
@@ -5625,81 +5709,67 @@ def a30_cdxj_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probe = meta.filter(F.col("doc_id") % 17 == 3)
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("lang", StringType(), True),
-            StructField("n_chars", LongType(), True),
-            StructField("bytes_read", LongType(), True),
-        ]
-    )
-
     def fetch(batches):
         import os as _os
 
         import pandas as pd
 
-        from tectonic_spark.operators.cdxj import fetch_member, payload_digest
+        from tectonic_spark.operators.cdxj import payload_digest, shard_members
         from tectonic_spark.operators.parser_ops import _extract_crawl_response
         from tectonic_spark.operators.warc import parse_warc
 
         for pdf in batches:
             rows = []
-            by_file: dict = {}
-            for r in pdf.itertuples(index=False):
-                by_file.setdefault(r.filename, []).append(r)
-            for fname, items in by_file.items():
-                items.sort(key=lambda r: r.offset)  # ascending seeks
-                with open(_os.path.join(src, fname), "rb") as f:
-                    for r in items:
-                        member = fetch_member(f, int(r.offset), int(r.length))
-                        recs = parse_warc(member)
-                        if len(recs) != 1:
-                            raise ValueError(
-                                f"{fname}@{r.offset}: {len(recs)} records in member"
-                            )
-                        rec = recs[0]
-                        if payload_digest(rec["payload"]) != r.digest:
-                            raise ValueError(
-                                f"{fname}@{r.offset}: payload digest mismatch"
-                            )
-                        d, text, lang, _src2, *_rest = _extract_crawl_response(rec)
-                        if d != int(r.doc_id):
-                            raise ValueError(
-                                f"index said doc {r.doc_id}, record is doc {d}"
-                            )
-                        rows.append((d, lang, len(text), int(r.length)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "lang", "n_chars", "bytes_read"]
+            members = shard_members(  # ascending seeks per shard
+                pdf.itertuples(index=False),
+                lambda r: _os.path.join(src, r.filename),
             )
+            for r, member in members:
+                recs = parse_warc(member)
+                if len(recs) != 1:
+                    raise ValueError(
+                        f"{r.filename}@{r.offset}: {len(recs)} records in member"
+                    )
+                rec = recs[0]
+                if payload_digest(rec["payload"]) != r.digest:
+                    raise ValueError(
+                        f"{r.filename}@{r.offset}: payload digest mismatch"
+                    )
+                d, text, lang, _src2, *_rest = _extract_crawl_response(rec)
+                if d != int(r.doc_id):
+                    raise ValueError(
+                        f"index said doc {r.doc_id}, record is doc {d}"
+                    )
+                rows.append((d, lang, len(text), int(r.length)))
+            yield pd.DataFrame(rows, columns=_MEMBER_COLS)
 
     sel = probe.select("filename", "offset", "length", "digest", "doc_id")
-    fetched = sel.repartition(n_shards, "filename").mapInPandas(fetch, schema)
-    fetched = fetched.persist()
-    # bounded-byte contract, asserted in code: bytes actually read ==
-    # the indexed lengths of the selection, and strictly a fraction of
-    # the archive — a fetch path that secretly full-scans fails here
-    got = fetched.agg(
-        F.sum("bytes_read").alias("br"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    want_bytes = probe.agg(F.sum("length")).collect()[0][0]
-    total_bytes = sum(
-        e.stat().st_size
-        for e in os.scandir(src)
-        if e.name.endswith(".warc.gz")
-    )
-    if got["br"] != want_bytes or got["br"] * 3 >= total_bytes:
-        fetched.unpersist()
-        raise RuntimeError(
-            f"a30: read {got['br']} bytes, index planned {want_bytes}, "
-            f"archive holds {total_bytes}"
+    with _persisting() as persist:
+        fetched = persist(
+            sel.repartition(n_shards, "filename").mapInPandas(fetch, _MEMBER_DDL)
         )
-    agg = fetched.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("chars"),
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
+        # bounded-byte contract, asserted in code: bytes actually read ==
+        # the indexed lengths of the selection, and strictly a fraction of
+        # the archive — a fetch path that secretly full-scans fails here
+        got = fetched.agg(
+            F.sum("bytes_read").alias("br"), F.count(F.lit(1)).alias("n")
+        ).collect()[0]
+        want_bytes = probe.agg(F.sum("length")).collect()[0][0]
+        total_bytes = sum(
+            e.stat().st_size
+            for e in os.scandir(src)
+            if e.name.endswith(".warc.gz")
+        )
+        if got["br"] != want_bytes or got["br"] * 3 >= total_bytes:
+            raise RuntimeError(
+                f"a30: read {got['br']} bytes, index planned {want_bytes}, "
+                f"archive holds {total_bytes}"
+            )
+        agg = fetched.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("chars"),
+        )
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 
@@ -5971,124 +6041,12 @@ def _timeline_index_src(sf_dir: str) -> tuple[str, int]:
 )
 def a38_temporal_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
-    from tectonic_spark.operators.cdxj import parse_cluster_idx
+    from tectonic_spark.operators.cdxj import index_blocks
     from tectonic_spark.tables import table
 
     src, _n = _timeline_index_src(sf_dir)
-    with open(os.path.join(src, "cluster.idx"), "rb") as f:
-        cluster = parse_cluster_idx(f.read())
-    block_keys = [e["key"] for e in cluster]
-
-    probes = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 13 == 2)
-        .select(
-            "doc_id",
-            F.concat(
-                F.lit("example,"), F.col("source"), F.lit(")/doc/"),
-                F.col("doc_id"),
-            ).alias("key"),
-        )
-        .persist()
-    )
-
-    bschema = StructType([StructField("block", LongType(), True)])
-
-    def assign_blocks(batches):
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import zipnum_block_range
-
-        for pdf in batches:
-            blocks = set()
-            for key in pdf["key"]:
-                lo, hi = zipnum_block_range(block_keys, key)
-                blocks.update(range(lo, hi))
-            yield pd.DataFrame(sorted(blocks), columns=["block"])
-
-    blocks = probes.select("key").mapInPandas(assign_blocks, bschema).distinct()
-
-    eschema = StructType(
-        [
-            StructField("key", StringType(), True),
-            StructField("ts", StringType(), True),
-            StructField("digest", StringType(), True),
-            StructField("filename", StringType(), True),
-            StructField("offset", LongType(), True),
-            StructField("length", LongType(), True),
-        ]
-    )
-    zipnum_path = os.path.join(src, "index.zipnum.gz")
-
-    def fetch_blocks(batches):
-        import json as _json
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import fetch_member
-
-        for pdf in batches:
-            rows = []
-            with open(zipnum_path, "rb") as f:
-                for b in pdf["block"]:
-                    e = cluster[int(b)]
-                    block = fetch_member(f, e["offset"], e["length"])
-                    for ln in block.decode("utf-8").splitlines():
-                        key, ts, blob = ln.split(" ", 2)
-                        j = _json.loads(blob)
-                        rows.append(
-                            (key, ts, j["digest"], j["filename"],
-                             j["offset"], j["length"])
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["key", "ts", "digest", "filename", "offset",
-                         "length"],
-            )
-
-    entries = blocks.mapInPandas(fetch_blocks, eschema)
-    # the INDEX answer: every temporal field from CDXJ lines alone
-    latest_struct = F.max(
-        F.struct("ts", "digest", "filename", "offset", "length")
-    ).alias("latest")
-    index_ans = (
-        entries.join(probes, "key", "inner")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("i_caps"),
-            F.min("ts").alias("i_first_ts"),
-            F.countDistinct("digest").alias("i_digests"),
-            latest_struct,
-        )
-        .select(
-            "doc_id", "i_caps", "i_first_ts", "i_digests",
-            F.col("latest.ts").alias("i_latest_ts"),
-            F.col("latest.digest").alias("i_latest_digest"),
-            F.col("latest.filename").alias("filename"),
-            F.col("latest.offset").alias("offset"),
-            F.col("latest.length").alias("length"),
-        )
-        .persist()
-    )
-
-    # the WALK answer: the a37 kernel over the shards (the audit)
-    files = spark.read.format("binaryFile").load(os.path.join(src, "*.warc.gz"))
-    wschema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("lang", StringType(), True),
-            StructField("ts", StringType(), True),
-            StructField("digest", StringType(), True),
-            StructField("n_chars", LongType(), True),
-        ]
-    )
+    by_file = index_blocks(src)
 
     def walk(batches):
         import pandas as pd
@@ -6112,154 +6070,161 @@ def a38_temporal_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows, columns=["doc_id", "lang", "ts", "digest", "n_chars"]
             )
 
-    walk_ans = (
-        files.select("content")
-        .mapInPandas(walk, wschema)
-        .join(probes.select("doc_id"), "doc_id", "inner")
-        .groupBy("doc_id")
-        .agg(
-            F.first("lang").alias("lang"),
-            F.count(F.lit(1)).alias("w_caps"),
-            F.min("ts").alias("w_first_ts"),
-            F.countDistinct("digest").alias("w_digests"),
-            F.max(F.struct("ts", "digest", "n_chars")).alias("wl"),
-        )
-        .select(
-            "doc_id", "lang", "w_caps", "w_first_ts", "w_digests",
-            F.col("wl.ts").alias("w_latest_ts"),
-            F.col("wl.digest").alias("w_latest_digest"),
-            F.col("wl.n_chars").alias("w_latest_chars"),
-        )
-        .persist()
-    )
-
-    # index-vs-walk agreement, asserted for EVERY probe
-    cmp = index_ans.join(walk_ans, "doc_id", "full")
-    n_probes = probes.count()
-    n_idx = index_ans.count()
-    n_walk = walk_ans.count()
-    n_mismatch = cmp.filter(
-        (F.col("i_caps") != F.col("w_caps"))
-        | (F.col("i_first_ts") != F.col("w_first_ts"))
-        | (F.col("i_digests") != F.col("w_digests"))
-        | (F.col("i_latest_ts") != F.col("w_latest_ts"))
-        | (F.col("i_latest_digest") != F.col("w_latest_digest"))
-        | F.col("i_caps").isNull()
-        | F.col("w_caps").isNull()
-    ).count()
-    n_touched = blocks.count()
-    if n_idx != n_probes or n_walk != n_probes or n_mismatch:
-        index_ans.unpersist()
-        walk_ans.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a38: {n_probes} probes, index answered {n_idx}, walk "
-            f"answered {n_walk}, {n_mismatch} disagreements"
-        )
-    if n_touched > 2 * n_probes:
-        index_ans.unpersist()
-        walk_ans.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a38: {n_touched} index blocks for {n_probes} probes — "
-            "the cluster ladder is not pruning"
-        )
-
-    # ranged-fetch the LATEST member of every CHANGED probe
-    changed = index_ans.filter(F.col("i_digests") > 1).select(
-        "doc_id", "filename", "offset", "length",
-        F.col("i_latest_digest").alias("digest"),
-    )
-    mschema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("f_chars", LongType(), True),
-            StructField("bytes_read", LongType(), True),
-        ]
-    )
-
     def fetch_docs(batches):
         import os as _os
 
         import pandas as pd
 
-        from tectonic_spark.operators.cdxj import fetch_member, payload_digest
+        from tectonic_spark.operators.cdxj import payload_digest, shard_members
         from tectonic_spark.operators.parser_ops import _extract_crawl_response
         from tectonic_spark.operators.warc import parse_warc
 
         for pdf in batches:
             rows = []
-            by_file: dict = {}
-            for r in pdf.itertuples(index=False):
-                by_file.setdefault(r.filename, []).append(r)
-            for fname, items in by_file.items():
-                items.sort(key=lambda r: r.offset)
-                with open(_os.path.join(src, fname), "rb") as f:
-                    for r in items:
-                        member = fetch_member(f, int(r.offset), int(r.length))
-                        (rec,) = parse_warc(member)
-                        if payload_digest(rec["payload"]) != r.digest:
-                            raise ValueError(
-                                f"{fname}@{r.offset}: digest mismatch"
-                            )
-                        d, text, _lang, *_rest = _extract_crawl_response(rec)
-                        if d != int(r.doc_id):
-                            raise ValueError(
-                                f"index said doc {r.doc_id}, member is {d}"
-                            )
-                        rows.append((d, len(text), int(r.length)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "f_chars", "bytes_read"]
+            members = shard_members(
+                pdf.itertuples(index=False),
+                lambda r: _os.path.join(src, r.filename),
+            )
+            for r, member in members:
+                (rec,) = parse_warc(member)
+                if payload_digest(rec["payload"]) != r.digest:
+                    raise ValueError(f"{r.filename}@{r.offset}: digest mismatch")
+                d, text, _lang, *_rest = _extract_crawl_response(rec)
+                if d != int(r.doc_id):
+                    raise ValueError(f"index said doc {r.doc_id}, member is {d}")
+                rows.append((d, len(text), int(r.length)))
+            yield pd.DataFrame(rows, columns=["doc_id", "f_chars", "bytes_read"])
+
+    with _persisting() as persist:
+        probes = persist(
+            table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 13 == 2)
+            .select("doc_id", _doc_key())
+        )
+        blocks = _blocks_df(by_file, probes)
+        entries = _entries_df(src, blocks, {"index.zipnum.gz": 0})
+        # the INDEX answer: every temporal field from CDXJ lines alone
+        latest_struct = F.max(
+            F.struct("ts", "digest", "filename", "offset", "length")
+        ).alias("latest")
+        index_ans = persist(
+            entries.join(probes, "key", "inner")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("i_caps"),
+                F.min("ts").alias("i_first_ts"),
+                F.countDistinct("digest").alias("i_digests"),
+                latest_struct,
+            )
+            .select(
+                "doc_id", "i_caps", "i_first_ts", "i_digests",
+                F.col("latest.ts").alias("i_latest_ts"),
+                F.col("latest.digest").alias("i_latest_digest"),
+                F.col("latest.filename").alias("filename"),
+                F.col("latest.offset").alias("offset"),
+                F.col("latest.length").alias("length"),
+            )
+        )
+
+        # the WALK answer: the a37 kernel over the shards (the audit)
+        files = spark.read.format("binaryFile").load(
+            os.path.join(src, "*.warc.gz")
+        )
+        walk_ans = persist(
+            files.select("content")
+            .mapInPandas(
+                walk,
+                "doc_id long, lang string, ts string, digest string, "
+                "n_chars long",
+            )
+            .join(probes.select("doc_id"), "doc_id", "inner")
+            .groupBy("doc_id")
+            .agg(
+                F.first("lang").alias("lang"),
+                F.count(F.lit(1)).alias("w_caps"),
+                F.min("ts").alias("w_first_ts"),
+                F.countDistinct("digest").alias("w_digests"),
+                F.max(F.struct("ts", "digest", "n_chars")).alias("wl"),
+            )
+            .select(
+                "doc_id", "lang", "w_caps", "w_first_ts", "w_digests",
+                F.col("wl.ts").alias("w_latest_ts"),
+                F.col("wl.digest").alias("w_latest_digest"),
+                F.col("wl.n_chars").alias("w_latest_chars"),
+            )
+        )
+
+        # index-vs-walk agreement, asserted for EVERY probe
+        cmp = index_ans.join(walk_ans, "doc_id", "full")
+        n_probes = probes.count()
+        n_idx = index_ans.count()
+        n_walk = walk_ans.count()
+        n_mismatch = cmp.filter(
+            (F.col("i_caps") != F.col("w_caps"))
+            | (F.col("i_first_ts") != F.col("w_first_ts"))
+            | (F.col("i_digests") != F.col("w_digests"))
+            | (F.col("i_latest_ts") != F.col("w_latest_ts"))
+            | (F.col("i_latest_digest") != F.col("w_latest_digest"))
+            | F.col("i_caps").isNull()
+            | F.col("w_caps").isNull()
+        ).count()
+        n_touched = blocks.count()
+        if n_idx != n_probes or n_walk != n_probes or n_mismatch:
+            raise RuntimeError(
+                f"a38: {n_probes} probes, index answered {n_idx}, walk "
+                f"answered {n_walk}, {n_mismatch} disagreements"
+            )
+        if n_touched > 2 * n_probes:
+            raise RuntimeError(
+                f"a38: {n_touched} index blocks for {n_probes} probes — "
+                "the cluster ladder is not pruning"
             )
 
-    fetched = (
-        changed.repartition(8, "filename")
-        .mapInPandas(fetch_docs, mschema)
-        .persist()
-    )
-    got = fetched.agg(
-        F.sum("bytes_read").alias("br"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    want = changed.agg(
-        F.sum("length").alias("b"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    bad_len = (
-        fetched.join(walk_ans, "doc_id")
-        .filter(F.col("f_chars") != F.col("w_latest_chars"))
-        .count()
-    )
-    if got["n"] != want["n"] or got["br"] != want["b"] or bad_len:
-        fetched.unpersist()
-        index_ans.unpersist()
-        walk_ans.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a38: fetched {got['n']}/{want['n']} changed members, "
-            f"{got['br']} bytes vs indexed {want['b']}, {bad_len} "
-            "length disagreements vs the walk"
+        # ranged-fetch the LATEST member of every CHANGED probe
+        changed = index_ans.filter(F.col("i_digests") > 1).select(
+            "doc_id", "filename", "offset", "length",
+            F.col("i_latest_digest").alias("digest"),
         )
+        fetched = persist(
+            changed.repartition(8, "filename").mapInPandas(
+                fetch_docs, "doc_id long, f_chars long, bytes_read long"
+            )
+        )
+        got = fetched.agg(
+            F.sum("bytes_read").alias("br"), F.count(F.lit(1)).alias("n")
+        ).collect()[0]
+        want = changed.agg(
+            F.sum("length").alias("b"), F.count(F.lit(1)).alias("n")
+        ).collect()[0]
+        bad_len = (
+            fetched.join(walk_ans, "doc_id")
+            .filter(F.col("f_chars") != F.col("w_latest_chars"))
+            .count()
+        )
+        if got["n"] != want["n"] or got["br"] != want["b"] or bad_len:
+            raise RuntimeError(
+                f"a38: fetched {got['n']}/{want['n']} changed members, "
+                f"{got['br']} bytes vs indexed {want['b']}, {bad_len} "
+                "length disagreements vs the walk"
+            )
 
-    agg = (
-        walk_ans.join(fetched.select("doc_id", "f_chars"), "doc_id", "left")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(F.col("w_caps") > 1, 1).otherwise(0)).alias(
-                "n_multi"
-            ),
-            F.sum(F.when(F.col("w_digests") > 1, 1).otherwise(0)).alias(
-                "n_changed"
-            ),
-            F.sum(F.coalesce("f_chars", F.lit(0))).alias(
-                "chars_latest_changed"
-            ),
+        agg = (
+            walk_ans.join(fetched.select("doc_id", "f_chars"), "doc_id", "left")
+            .groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum(F.when(F.col("w_caps") > 1, 1).otherwise(0)).alias(
+                    "n_multi"
+                ),
+                F.sum(F.when(F.col("w_digests") > 1, 1).otherwise(0)).alias(
+                    "n_changed"
+                ),
+                F.sum(F.coalesce("f_chars", F.lit(0))).alias(
+                    "chars_latest_changed"
+                ),
+            )
         )
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
-    index_ans.unpersist()
-    walk_ans.unpersist()
-    probes.unpersist()
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 
@@ -6398,265 +6363,164 @@ def _revisit_index_src(sf_dir: str) -> tuple[str, int]:
 )
 def a39_revisit_index_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
-    from tectonic_spark.operators.cdxj import parse_cluster_idx
+    from tectonic_spark.operators.cdxj import index_blocks
     from tectonic_spark.tables import table
 
     src, _n = _revisit_index_src(sf_dir)
-    with open(os.path.join(src, "cluster.idx"), "rb") as f:
-        cluster = parse_cluster_idx(f.read())
-    block_keys = [e["key"] for e in cluster]
-    zipnum_path = os.path.join(src, "index.zipnum.gz")
-
-    probes = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 35 == 0)
-        .select(
-            "doc_id",
-            F.concat(
-                F.lit("example,"), F.col("source"), F.lit(")/recrawl/"),
-                F.col("doc_id"),
-            ).alias("key"),
-        )
-        .persist()
-    )
-
-    bschema = StructType([StructField("block", LongType(), True)])
-
-    def assign_blocks(batches):
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import zipnum_block_range
-
-        for pdf in batches:
-            blocks = set()
-            for key in pdf["key"]:
-                lo, hi = zipnum_block_range(block_keys, key)
-                blocks.update(range(lo, hi))
-            yield pd.DataFrame(sorted(blocks), columns=["block"])
-
-    eschema = StructType(
-        [
-            StructField("key", StringType(), True),
-            StructField("ts", StringType(), True),
-            StructField("digest", StringType(), True),
-            StructField("mime", StringType(), True),
-            StructField("filename", StringType(), True),
-            StructField("offset", LongType(), True),
-            StructField("length", LongType(), True),
-        ]
-    )
-
-    def fetch_blocks(batches):
-        import json as _json
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import fetch_member
-
-        for pdf in batches:
-            rows = []
-            with open(zipnum_path, "rb") as f:
-                for b in pdf["block"]:
-                    e = cluster[int(b)]
-                    block = fetch_member(f, e["offset"], e["length"])
-                    for ln in block.decode("utf-8").splitlines():
-                        key, ts, blob = ln.split(" ", 2)
-                        j = _json.loads(blob)
-                        rows.append(
-                            (key, ts, j["digest"], j["mime"],
-                             j["filename"], j["offset"], j["length"])
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["key", "ts", "digest", "mime", "filename",
-                         "offset", "length"],
-            )
+    by_file = index_blocks(src)
 
     def ladder(keys_df):
         """SURT keys → matched CDXJ entries (one zipnum pass), plus the
         touched-block count for the access-bound assertion."""
-        blocks = (
-            keys_df.select("key").mapInPandas(assign_blocks, bschema).distinct()
-        )
-        entries = blocks.mapInPandas(fetch_blocks, eschema)
+        blocks = _blocks_df(by_file, keys_df)
+        entries = _entries_df(src, blocks, {"index.zipnum.gz": 0})
         return entries.join(keys_df, "key", "inner"), blocks
-
-    # ---- hop 1: revisit entries → revisit records → referred URL ----
-    hop1, blocks1 = ladder(probes)
-    r1schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("ref_uri", StringType(), True),
-            StructField("ref_key", StringType(), True),
-            StructField("claimed_digest", StringType(), True),
-            StructField("line_digest", StringType(), True),
-            StructField("bytes_read", LongType(), True),
-        ]
-    )
 
     def fetch_revisits(batches):
         import os as _os
 
         import pandas as pd
 
-        from tectonic_spark.operators.cdxj import fetch_member, surt
+        from tectonic_spark.operators.cdxj import shard_members, surt
         from tectonic_spark.operators.warc import parse_warc
 
         for pdf in batches:
             rows = []
-            by_file: dict = {}
-            for r in pdf.itertuples(index=False):
-                by_file.setdefault(r.filename, []).append(r)
-            for fname, items in by_file.items():
-                items.sort(key=lambda r: r.offset)
-                with open(_os.path.join(src, fname), "rb") as f:
-                    for r in items:
-                        if r.mime != "warc/revisit":
-                            raise ValueError(
-                                f"probe {r.key}: expected a revisit "
-                                f"entry, index says {r.mime!r}"
-                            )
-                        member = fetch_member(f, int(r.offset), int(r.length))
-                        (rec,) = parse_warc(member)
-                        if rec["type"] != "revisit":
-                            raise ValueError(
-                                f"{fname}@{r.offset}: not a revisit record"
-                            )
-                        fields = {k.lower(): v for k, v in rec["fields"]}
-                        if "identical-payload-digest" not in fields.get(
-                            "warc-profile", ""
-                        ):
-                            raise ValueError("unsupported revisit profile")
-                        ref = fields["warc-refers-to-target-uri"]
-                        rows.append(
-                            (
-                                int(r.doc_id),
-                                ref,
-                                surt(ref),
-                                fields["warc-payload-digest"],
-                                r.digest,
-                                int(r.length),
-                            )
-                        )
+            members = shard_members(
+                pdf.itertuples(index=False),
+                lambda r: _os.path.join(src, r.filename),
+            )
+            for r, member in members:
+                if r.mime != "warc/revisit":
+                    raise ValueError(
+                        f"probe {r.key}: expected a revisit "
+                        f"entry, index says {r.mime!r}"
+                    )
+                (rec,) = parse_warc(member)
+                if rec["type"] != "revisit":
+                    raise ValueError(
+                        f"{r.filename}@{r.offset}: not a revisit record"
+                    )
+                fields = {k.lower(): v for k, v in rec["fields"]}
+                if "identical-payload-digest" not in fields.get(
+                    "warc-profile", ""
+                ):
+                    raise ValueError("unsupported revisit profile")
+                ref = fields["warc-refers-to-target-uri"]
+                rows.append(
+                    (
+                        int(r.doc_id),
+                        ref,
+                        surt(ref),
+                        fields["warc-payload-digest"],
+                        r.digest,
+                        int(r.length),
+                    )
+                )
             yield pd.DataFrame(
                 rows,
                 columns=["doc_id", "ref_uri", "ref_key", "claimed_digest",
                          "line_digest", "bytes_read"],
             )
 
-    resolved = (
-        hop1.repartition(8, "filename")
-        .mapInPandas(fetch_revisits, r1schema)
-        .persist()
-    )
-    n_probes = probes.count()
-    got1 = resolved.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
-    ).collect()[0]
-    want1 = hop1.agg(F.sum("length")).collect()[0][0]
-    n_blocks1 = blocks1.count()
-    # pywb's line digest must equal the record's claimed digest
-    bad_line = resolved.filter(
-        F.col("claimed_digest") != F.col("line_digest")
-    ).count()
-    if (
-        got1["n"] != n_probes
-        or got1["br"] != want1
-        or bad_line
-        or n_blocks1 > 2 * n_probes
-    ):
-        resolved.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a39 hop1: {got1['n']}/{n_probes} revisits resolved, "
-            f"{got1['br']} bytes vs indexed {want1}, {bad_line} digest "
-            f"skews, {n_blocks1} blocks touched"
-        )
-
-    # ---- hop 2: referred URLs → original members → extraction ----
-    hop2, blocks2 = ladder(
-        resolved.select(
-            F.col("ref_key").alias("key"), "doc_id", "claimed_digest"
-        )
-    )
-    originals = hop2.filter(F.col("mime") == "text/html")
-    r2schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("lang", StringType(), True),
-            StructField("n_chars", LongType(), True),
-            StructField("bytes_read", LongType(), True),
-        ]
-    )
-
     def fetch_originals(batches):
         import os as _os
 
         import pandas as pd
 
-        from tectonic_spark.operators.cdxj import fetch_member, payload_digest
+        from tectonic_spark.operators.cdxj import payload_digest, shard_members
         from tectonic_spark.operators.parser_ops import _extract_crawl_response
         from tectonic_spark.operators.warc import parse_warc
 
         for pdf in batches:
             rows = []
-            by_file: dict = {}
-            for r in pdf.itertuples(index=False):
-                by_file.setdefault(r.filename, []).append(r)
-            for fname, items in by_file.items():
-                items.sort(key=lambda r: r.offset)
-                with open(_os.path.join(src, fname), "rb") as f:
-                    for r in items:
-                        member = fetch_member(f, int(r.offset), int(r.length))
-                        (rec,) = parse_warc(member)
-                        got = payload_digest(rec["payload"])
-                        if got != r.claimed_digest or got != r.digest:
-                            raise ValueError(
-                                f"{fname}@{r.offset}: original digest "
-                                f"{got} != revisit claim "
-                                f"{r.claimed_digest} / line {r.digest}"
-                            )
-                        d, text, lang, *_rest = _extract_crawl_response(rec)
-                        rows.append(
-                            (int(r.doc_id), lang, len(text), int(r.length))
-                        )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "lang", "n_chars", "bytes_read"]
+            members = shard_members(
+                pdf.itertuples(index=False),
+                lambda r: _os.path.join(src, r.filename),
+            )
+            for r, member in members:
+                (rec,) = parse_warc(member)
+                got = payload_digest(rec["payload"])
+                if got != r.claimed_digest or got != r.digest:
+                    raise ValueError(
+                        f"{r.filename}@{r.offset}: original digest "
+                        f"{got} != revisit claim "
+                        f"{r.claimed_digest} / line {r.digest}"
+                    )
+                d, text, lang, *_rest = _extract_crawl_response(rec)
+                rows.append((int(r.doc_id), lang, len(text), int(r.length)))
+            yield pd.DataFrame(rows, columns=_MEMBER_COLS)
+
+    with _persisting() as persist:
+        probes = persist(
+            table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 35 == 0)
+            .select("doc_id", _doc_key("/recrawl/"))
+        )
+
+        # ---- hop 1: revisit entries → revisit records → referred URL ----
+        hop1, blocks1 = ladder(probes)
+        resolved = persist(
+            hop1.repartition(8, "filename").mapInPandas(
+                fetch_revisits,
+                "doc_id long, ref_uri string, ref_key string, "
+                "claimed_digest string, line_digest string, bytes_read long",
+            )
+        )
+        n_probes = probes.count()
+        got1 = resolved.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
+        ).collect()[0]
+        want1 = hop1.agg(F.sum("length")).collect()[0][0]
+        n_blocks1 = blocks1.count()
+        # pywb's line digest must equal the record's claimed digest
+        bad_line = resolved.filter(
+            F.col("claimed_digest") != F.col("line_digest")
+        ).count()
+        if (
+            got1["n"] != n_probes
+            or got1["br"] != want1
+            or bad_line
+            or n_blocks1 > 2 * n_probes
+        ):
+            raise RuntimeError(
+                f"a39 hop1: {got1['n']}/{n_probes} revisits resolved, "
+                f"{got1['br']} bytes vs indexed {want1}, {bad_line} digest "
+                f"skews, {n_blocks1} blocks touched"
             )
 
-    fetched = (
-        originals.repartition(8, "filename")
-        .mapInPandas(fetch_originals, r2schema)
-        .persist()
-    )
-    got2 = fetched.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
-    ).collect()[0]
-    want2 = originals.agg(F.sum("length")).collect()[0][0]
-    n_blocks2 = blocks2.count()
-    if got2["n"] != n_probes or got2["br"] != want2 or n_blocks2 > 2 * n_probes:
-        fetched.unpersist()
-        resolved.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a39 hop2: {got2['n']}/{n_probes} originals fetched, "
-            f"{got2['br']} bytes vs indexed {want2}, {n_blocks2} blocks"
+        # ---- hop 2: referred URLs → original members → extraction ----
+        hop2, blocks2 = ladder(
+            resolved.select(
+                F.col("ref_key").alias("key"), "doc_id", "claimed_digest"
+            )
         )
-    agg = fetched.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_revisits"),
-        F.sum("n_chars").alias("chars"),
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
-    resolved.unpersist()
-    probes.unpersist()
+        originals = hop2.filter(F.col("mime") == "text/html")
+        fetched = persist(
+            originals.repartition(8, "filename").mapInPandas(
+                fetch_originals, _MEMBER_DDL
+            )
+        )
+        got2 = fetched.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
+        ).collect()[0]
+        want2 = originals.agg(F.sum("length")).collect()[0][0]
+        n_blocks2 = blocks2.count()
+        if (
+            got2["n"] != n_probes
+            or got2["br"] != want2
+            or n_blocks2 > 2 * n_probes
+        ):
+            raise RuntimeError(
+                f"a39 hop2: {got2['n']}/{n_probes} originals fetched, "
+                f"{got2['br']} bytes vs indexed {want2}, {n_blocks2} blocks"
+            )
+        agg = fetched.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n_revisits"),
+            F.sum("n_chars").alias("chars"),
+        )
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 
@@ -6850,15 +6714,13 @@ def s16_stream_brotli_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cluster.idx stays the only resident piece.",
 )
 def a41_surt_prefix_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    import bisect
+    import functools
+    import operator
 
-    from tectonic_spark.operators.cdxj import parse_cluster_idx
+    from pyspark.sql import functions as F
+
+    from tectonic_spark.operators.cdxj import index_blocks
     from tectonic_spark.tables import table
 
     idx_dir, warc_dir, _n_blocks = _zipnum_src(sf_dir)
@@ -6866,8 +6728,8 @@ def a41_surt_prefix_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # matched set is ~a quarter of the corpus by construction, so a
     # fixed width would cap the range scan at 100x (VERDICT r12)
     _src, n_shards = _warc_cdxj_src(sf_dir)
-    with open(os.path.join(idx_dir, "cluster.idx"), "rb") as f:
-        cluster = parse_cluster_idx(f.read())
+    by_file = index_blocks(idx_dir)
+    cluster = by_file["index.zipnum.gz"]
     block_keys = [e["key"] for e in cluster]
 
     # probe hosts: a bounded collect of the tiny distinct-source set
@@ -6882,8 +6744,6 @@ def a41_surt_prefix_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefixes = sorted(f"example,{h})/" for h in hosts)
 
     # contiguous block cover per prefix, from the resident cluster.idx
-    import bisect
-
     block_ids: set[int] = set()
     for pfx in prefixes:
         lo = max(0, bisect.bisect_right(block_keys, pfx) - 1)
@@ -6891,58 +6751,16 @@ def a41_surt_prefix_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         block_ids.update(range(lo, min(hi + 1, len(cluster))))
     n_touched = len(block_ids)
     blocks = spark.createDataFrame(
-        [(b,) for b in sorted(block_ids)], "block long"
+        [
+            ("index.zipnum.gz", cluster[b]["offset"], cluster[b]["length"])
+            for b in sorted(block_ids)
+        ],
+        _BLOCK_DDL,
     ).repartition(8)
-
-    eschema = StructType(
-        [
-            StructField("key", StringType(), True),
-            StructField("filename", StringType(), True),
-            StructField("offset", LongType(), True),
-            StructField("length", LongType(), True),
-            StructField("digest", StringType(), True),
-        ]
-    )
-    zipnum_path = os.path.join(idx_dir, "index.zipnum.gz")
-    pfx_tuple = tuple(prefixes)
-
-    def fetch_blocks(batches):
-        import json as _json
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import fetch_member
-
-        for pdf in batches:
-            rows = []
-            with open(zipnum_path, "rb") as f:
-                for b in pdf["block"]:
-                    e = cluster[int(b)]
-                    block = fetch_member(f, e["offset"], e["length"])
-                    for ln in block.decode("utf-8").splitlines():
-                        key, _ts, blob = ln.split(" ", 2)
-                        if not key.startswith(pfx_tuple):
-                            continue
-                        j = _json.loads(blob)
-                        rows.append(
-                            (key, j["filename"], j["offset"], j["length"],
-                             j["digest"])
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["key", "filename", "offset", "length", "digest"],
-            )
-
-    matched = blocks.mapInPandas(fetch_blocks, eschema).persist()
-
-    mschema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("lang", StringType(), True),
-            StructField("source", StringType(), True),
-            StructField("n_chars", LongType(), True),
-            StructField("bytes_read", LongType(), True),
-        ]
+    under_prefix = functools.reduce(
+        operator.or_,
+        (F.col("key").startswith(p) for p in prefixes),
+        F.lit(False),
     )
 
     def fetch_docs(batches):
@@ -6950,78 +6768,73 @@ def a41_surt_prefix_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         import pandas as pd
 
-        from tectonic_spark.operators.cdxj import fetch_member, payload_digest
+        from tectonic_spark.operators.cdxj import payload_digest, shard_members
         from tectonic_spark.operators.parser_ops import _extract_crawl_response
         from tectonic_spark.operators.warc import parse_warc
 
         for pdf in batches:
             rows = []
-            by_file: dict = {}
-            for r in pdf.itertuples(index=False):
-                by_file.setdefault(r.filename, []).append(r)
-            for fname, items in by_file.items():
-                items.sort(key=lambda r: r.offset)
-                with open(_os.path.join(warc_dir, fname), "rb") as f:
-                    for r in items:
-                        member = fetch_member(f, int(r.offset), int(r.length))
-                        (rec,) = parse_warc(member)
-                        if payload_digest(rec["payload"]) != r.digest:
-                            raise ValueError(
-                                f"{fname}@{r.offset}: digest mismatch"
-                            )
-                        d, text, lang, src_host, *_rest = (
-                            _extract_crawl_response(rec)
-                        )
-                        rows.append(
-                            (d, lang, src_host, len(text), int(r.length))
-                        )
+            members = shard_members(
+                pdf.itertuples(index=False),
+                lambda r: _os.path.join(warc_dir, r.filename),
+            )
+            for r, member in members:
+                (rec,) = parse_warc(member)
+                if payload_digest(rec["payload"]) != r.digest:
+                    raise ValueError(f"{r.filename}@{r.offset}: digest mismatch")
+                d, text, lang, src_host, *_rest = _extract_crawl_response(rec)
+                rows.append((d, lang, src_host, len(text), int(r.length)))
             yield pd.DataFrame(
                 rows,
                 columns=["doc_id", "lang", "source", "n_chars", "bytes_read"],
             )
 
-    fetched = (
-        matched.select("filename", "offset", "length", "digest")
-        .repartition(n_shards, "filename")
-        .mapInPandas(fetch_docs, mschema)
-        .persist()
-    )
-
-    n_matched = matched.count()
-    got = fetched.agg(
-        F.sum("bytes_read").alias("br"),
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.when(
-                F.substring("source", 4, 10).cast("int") % 4 != 1, 1
-            ).otherwise(0)
-        ).alias("off_probe"),
-    ).collect()[0]
-    want_bytes = matched.agg(F.sum("length")).collect()[0][0]
-    # the contiguity bound: a sorted index serves each prefix from a
-    # minimal covering run of blocks (+2 edge blocks per prefix)
-    max_blocks = n_matched // 64 + 2 * len(prefixes)
-    if (
-        got["n"] != n_matched
-        or got["br"] != want_bytes
-        or got["off_probe"]
-        or n_touched > max_blocks
-    ):
-        fetched.unpersist()
-        matched.unpersist()
-        raise RuntimeError(
-            f"a41: {got['n']} fetched of {n_matched} matched, "
-            f"{got['br']} bytes vs indexed {want_bytes}, "
-            f"{got['off_probe']} off-probe docs, {n_touched} blocks "
-            f"touched (bound {max_blocks})"
+    with _persisting() as persist:
+        matched = persist(
+            _entries_df(idx_dir, blocks, {"index.zipnum.gz": 0})
+            .filter(under_prefix)
+            .select("filename", "offset", "length", "digest")
         )
-    agg = fetched.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("chars"),
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
-    matched.unpersist()
+        fetched = persist(
+            matched.repartition(n_shards, "filename")
+            .mapInPandas(
+                fetch_docs,
+                "doc_id long, lang string, source string, n_chars long, "
+                "bytes_read long",
+            )
+        )
+
+        n_matched = matched.count()
+        got = fetched.agg(
+            F.sum("bytes_read").alias("br"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                F.when(
+                    F.substring("source", 4, 10).cast("int") % 4 != 1, 1
+                ).otherwise(0)
+            ).alias("off_probe"),
+        ).collect()[0]
+        want_bytes = matched.agg(F.sum("length")).collect()[0][0]
+        # the contiguity bound: a sorted index serves each prefix from a
+        # minimal covering run of blocks (+2 edge blocks per prefix)
+        max_blocks = n_matched // 64 + 2 * len(prefixes)
+        if (
+            got["n"] != n_matched
+            or got["br"] != want_bytes
+            or got["off_probe"]
+            or n_touched > max_blocks
+        ):
+            raise RuntimeError(
+                f"a41: {got['n']} fetched of {n_matched} matched, "
+                f"{got['br']} bytes vs indexed {want_bytes}, "
+                f"{got['off_probe']} off-probe docs, {n_touched} blocks "
+                f"touched (bound {max_blocks})"
+            )
+        agg = fetched.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("chars"),
+        )
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 
@@ -7057,223 +6870,130 @@ def a41_surt_prefix_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a42_wayback_closest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
-    from tectonic_spark.operators.cdxj import parse_cluster_idx
+    from tectonic_spark.operators.cdxj import index_blocks
     from tectonic_spark.tables import table
 
     src, _n = _timeline_index_src(sf_dir)
-    with open(os.path.join(src, "cluster.idx"), "rb") as f:
-        cluster = parse_cluster_idx(f.read())
-    block_keys = [e["key"] for e in cluster]
-
-    probes = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 9 == 4)
-        .select(
-            "doc_id",
-            "lang",
-            F.concat(
-                F.lit("example,"), F.col("source"), F.lit(")/doc/"),
-                F.col("doc_id"),
-            ).alias("key"),
-            # the requested instant: before-first / between / after-last
-            F.element_at(
-                F.array(
-                    F.lit("20231215000000"),
-                    F.lit("20240120000000"),
-                    F.lit("20240301000000"),
-                ),
-                (F.col("doc_id") % 3 + 1).cast("int"),
-            ).alias("req_ts"),
-        )
-        .persist()
-    )
-
-    bschema = StructType([StructField("block", LongType(), True)])
-
-    def assign_blocks(batches):
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import zipnum_block_range
-
-        for pdf in batches:
-            blocks = set()
-            for key in pdf["key"]:
-                lo, hi = zipnum_block_range(block_keys, key)
-                blocks.update(range(lo, hi))
-            yield pd.DataFrame(sorted(blocks), columns=["block"])
-
-    blocks = probes.select("key").mapInPandas(assign_blocks, bschema).distinct()
-
-    eschema = StructType(
-        [
-            StructField("key", StringType(), True),
-            StructField("ts", StringType(), True),
-            StructField("digest", StringType(), True),
-            StructField("filename", StringType(), True),
-            StructField("offset", LongType(), True),
-            StructField("length", LongType(), True),
-        ]
-    )
-    zipnum_path = os.path.join(src, "index.zipnum.gz")
-
-    def fetch_blocks(batches):
-        import json as _json
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import fetch_member
-
-        for pdf in batches:
-            rows = []
-            with open(zipnum_path, "rb") as f:
-                for b in pdf["block"]:
-                    e = cluster[int(b)]
-                    block = fetch_member(f, e["offset"], e["length"])
-                    for ln in block.decode("utf-8").splitlines():
-                        key, ts, blob = ln.split(" ", 2)
-                        j = _json.loads(blob)
-                        rows.append(
-                            (key, ts, j["digest"], j["filename"],
-                             j["offset"], j["length"])
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["key", "ts", "digest", "filename", "offset",
-                         "length"],
-            )
-
-    entries = blocks.mapInPandas(fetch_blocks, eschema)
-    # nearest capture per probe, from the index alone: absolute-second
-    # distance with a larger-ts tie-break, all JVM arithmetic
-    cand = entries.join(probes, "key", "inner").withColumn(
-        "dist",
-        F.abs(
-            F.unix_timestamp(F.to_timestamp("ts", "yyyyMMddHHmmss"))
-            - F.unix_timestamp(F.to_timestamp("req_ts", "yyyyMMddHHmmss"))
-        ),
-    )
-    winners = (
-        cand.groupBy("doc_id", "lang", "req_ts")
-        .agg(
-            F.count(F.lit(1)).alias("n_caps"),
-            F.min(
-                F.struct(
-                    "dist",
-                    (F.lit(99999999999999) - F.col("ts").cast("long")).alias(
-                        "ts_inv"
-                    ),
-                    "ts", "digest", "filename", "offset", "length",
-                )
-            ).alias("w"),
-        )
-        .select(
-            "doc_id", "lang",
-            F.col("w.ts").alias("ts"),
-            F.col("w.digest").alias("digest"),
-            F.col("w.filename").alias("filename"),
-            F.col("w.offset").alias("offset"),
-            F.col("w.length").alias("length"),
-        )
-        .persist()
-    )
-
-    mschema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("lang", StringType(), True),
-            StructField("n_chars", LongType(), True),
-            StructField("is_feb", LongType(), True),
-            StructField("bytes_read", LongType(), True),
-        ]
-    )
+    by_file = index_blocks(src)
 
     def fetch_docs(batches):
         import os as _os
 
         import pandas as pd
 
-        from tectonic_spark.operators.cdxj import fetch_member, payload_digest
+        from tectonic_spark.operators.cdxj import payload_digest, shard_members
         from tectonic_spark.operators.parser_ops import _extract_crawl_response
         from tectonic_spark.operators.warc import parse_warc
 
         for pdf in batches:
             rows = []
-            by_file: dict = {}
-            for r in pdf.itertuples(index=False):
-                by_file.setdefault(r.filename, []).append(r)
-            for fname, items in by_file.items():
-                items.sort(key=lambda r: r.offset)
-                with open(_os.path.join(src, fname), "rb") as f:
-                    for r in items:
-                        member = fetch_member(f, int(r.offset), int(r.length))
-                        (rec,) = parse_warc(member)
-                        if payload_digest(rec["payload"]) != r.digest:
-                            raise ValueError(
-                                f"{fname}@{r.offset}: digest mismatch"
-                            )
-                        d, text, lang, *_rest = _extract_crawl_response(rec)
-                        if d != int(r.doc_id):
-                            raise ValueError(
-                                f"index said doc {r.doc_id}, member is {d}"
-                            )
-                        rows.append(
-                            (
-                                d,
-                                lang,
-                                len(text),
-                                1 if r.ts.startswith("202402") else 0,
-                                int(r.length),
-                            )
-                        )
+            members = shard_members(
+                pdf.itertuples(index=False),
+                lambda r: _os.path.join(src, r.filename),
+            )
+            for r, member in members:
+                (rec,) = parse_warc(member)
+                if payload_digest(rec["payload"]) != r.digest:
+                    raise ValueError(f"{r.filename}@{r.offset}: digest mismatch")
+                d, text, lang, *_rest = _extract_crawl_response(rec)
+                if d != int(r.doc_id):
+                    raise ValueError(f"index said doc {r.doc_id}, member is {d}")
+                is_feb = 1 if r.ts.startswith("202402") else 0
+                rows.append((d, lang, len(text), is_feb, int(r.length)))
             yield pd.DataFrame(
                 rows,
                 columns=["doc_id", "lang", "n_chars", "is_feb", "bytes_read"],
             )
 
-    fetched = (
-        winners.select("doc_id", "filename", "offset", "length", "digest",
-                       "ts")
-        .repartition(8, "filename")
-        .mapInPandas(fetch_docs, mschema)
-        .persist()
-    )
-    n_probes = probes.count()
-    n_win = winners.count()
-    n_touched = blocks.count()
-    got = fetched.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
-    ).collect()[0]
-    want_bytes = winners.agg(F.sum("length")).collect()[0][0]
-    if (
-        n_win != n_probes
-        or got["n"] != n_probes
-        or got["br"] != want_bytes
-        or n_touched > 2 * n_probes
-    ):
-        fetched.unpersist()
-        winners.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a42: {n_probes} probes, {n_win} winners, {got['n']} "
-            f"fetched, {got['br']} bytes vs indexed {want_bytes}, "
-            f"{n_touched} blocks"
+    with _persisting() as persist:
+        probes = persist(
+            table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 9 == 4)
+            .select(
+                "doc_id",
+                "lang",
+                _doc_key(),
+                # the requested instant: before-first / between / after-last
+                F.element_at(
+                    F.array(
+                        F.lit("20231215000000"),
+                        F.lit("20240120000000"),
+                        F.lit("20240301000000"),
+                    ),
+                    (F.col("doc_id") % 3 + 1).cast("int"),
+                ).alias("req_ts"),
+            )
         )
-    agg = fetched.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_probes"),
-        F.sum("is_feb").alias("n_feb"),
-        F.sum("n_chars").alias("chars_closest"),
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
-    winners.unpersist()
-    probes.unpersist()
+        blocks = _blocks_df(by_file, probes)
+        entries = _entries_df(src, blocks, {"index.zipnum.gz": 0})
+        # nearest capture per probe, from the index alone: absolute-second
+        # distance with a larger-ts tie-break, all JVM arithmetic
+        cand = entries.join(probes, "key", "inner").withColumn(
+            "dist",
+            F.abs(
+                F.unix_timestamp(F.to_timestamp("ts", "yyyyMMddHHmmss"))
+                - F.unix_timestamp(F.to_timestamp("req_ts", "yyyyMMddHHmmss"))
+            ),
+        )
+        winners = persist(
+            cand.groupBy("doc_id", "lang", "req_ts")
+            .agg(
+                F.count(F.lit(1)).alias("n_caps"),
+                F.min(
+                    F.struct(
+                        "dist",
+                        (
+                            F.lit(99999999999999) - F.col("ts").cast("long")
+                        ).alias("ts_inv"),
+                        "ts", "digest", "filename", "offset", "length",
+                    )
+                ).alias("w"),
+            )
+            .select(
+                "doc_id", "lang",
+                F.col("w.ts").alias("ts"),
+                F.col("w.digest").alias("digest"),
+                F.col("w.filename").alias("filename"),
+                F.col("w.offset").alias("offset"),
+                F.col("w.length").alias("length"),
+            )
+        )
+        fetched = persist(
+            winners.select(
+                "doc_id", "filename", "offset", "length", "digest", "ts"
+            )
+            .repartition(8, "filename")
+            .mapInPandas(
+                fetch_docs,
+                "doc_id long, lang string, n_chars long, is_feb long, "
+                "bytes_read long",
+            )
+        )
+        n_probes = probes.count()
+        n_win = winners.count()
+        n_touched = blocks.count()
+        got = fetched.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
+        ).collect()[0]
+        want_bytes = winners.agg(F.sum("length")).collect()[0][0]
+        if (
+            n_win != n_probes
+            or got["n"] != n_probes
+            or got["br"] != want_bytes
+            or n_touched > 2 * n_probes
+        ):
+            raise RuntimeError(
+                f"a42: {n_probes} probes, {n_win} winners, {got['n']} "
+                f"fetched, {got['br']} bytes vs indexed {want_bytes}, "
+                f"{n_touched} blocks"
+            )
+        agg = fetched.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n_probes"),
+            F.sum("is_feb").alias("n_feb"),
+            F.sum("n_chars").alias("chars_closest"),
+        )
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 
@@ -7292,8 +7012,7 @@ def _merged_index_src(sf_dir: str) -> tuple[str, str, str]:
 
     from tectonic_spark.operators.cdxj import (
         build_cluster_idx,
-        fetch_member,
-        parse_cluster_idx,
+        index_lines,
         write_zipnum,
     )
 
@@ -7330,12 +7049,7 @@ def _merged_index_src(sf_dir: str) -> tuple[str, str, str]:
         if entry.name.endswith(".cdxj"):
             with open(entry.path, encoding="utf-8") as f:
                 lines.extend(tagged_lines(f.read().splitlines(), "A"))
-    with open(os.path.join(b_dir, "cluster.idx"), "rb") as f:
-        b_cluster = parse_cluster_idx(f.read())
-    with open(os.path.join(b_dir, "index.zipnum.gz"), "rb") as f:
-        for e in b_cluster:
-            block = fetch_member(f, e["offset"], e["length"])
-            lines.extend(tagged_lines(block.decode("utf-8").splitlines(), "B"))
+    lines.extend(tagged_lines(index_lines(b_dir), "B"))
     # merge-sort + keep-first dedup on (key, ts, digest): collection A
     # precedes B, and sorted() is stable, so sorting on the identity
     # triple while tagging preserves precedence within each group
@@ -7395,20 +7109,12 @@ def _merged_index_src(sf_dir: str) -> tuple[str, str, str]:
 )
 def a43_collection_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
-    from tectonic_spark.operators.cdxj import parse_cluster_idx
+    from tectonic_spark.operators.cdxj import index_blocks, index_lines
     from tectonic_spark.tables import table
 
     idx_dir, a_dir, b_dir = _merged_index_src(sf_dir)
-    with open(os.path.join(idx_dir, "cluster.idx"), "rb") as f:
-        cluster = parse_cluster_idx(f.read())
-    block_keys = [e["key"] for e in cluster]
+    by_file = index_blocks(idx_dir)
     coll_dirs = {"A": a_dir, "B": b_dir}
 
     docs = table(spark, sf_dir, "documents")
@@ -7417,203 +7123,108 @@ def a43_collection_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)),
         F.sum(F.when(F.col("doc_id") % 5 == 0, 1).otherwise(0)),
     ).collect()[0]
-    total_lines = 0
-    with open(os.path.join(idx_dir, "index.zipnum.gz"), "rb") as f:
-        from tectonic_spark.operators.cdxj import fetch_member
-
-        for e in cluster:
-            total_lines += len(
-                fetch_member(f, e["offset"], e["length"]).splitlines()
-            )
+    total_lines = len(index_lines(idx_dir))
     if total_lines != n_docs + n_recap:
         raise RuntimeError(
             f"a43: merged index has {total_lines} lines, the union is "
             f"{n_docs} docs + {n_recap} recaptures"
         )
 
-    probes = (
-        docs.filter(F.col("doc_id") % 21 == 6)
-        .select(
-            "doc_id",
-            F.concat(
-                F.lit("example,"), F.col("source"), F.lit(")/doc/"),
-                F.col("doc_id"),
-            ).alias("key"),
-        )
-        .persist()
-    )
-
-    bschema = StructType([StructField("block", LongType(), True)])
-
-    def assign_blocks(batches):
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import zipnum_block_range
-
-        for pdf in batches:
-            blocks = set()
-            for key in pdf["key"]:
-                lo, hi = zipnum_block_range(block_keys, key)
-                blocks.update(range(lo, hi))
-            yield pd.DataFrame(sorted(blocks), columns=["block"])
-
-    blocks = probes.select("key").mapInPandas(assign_blocks, bschema).distinct()
-
-    eschema = StructType(
-        [
-            StructField("key", StringType(), True),
-            StructField("ts", StringType(), True),
-            StructField("digest", StringType(), True),
-            StructField("coll", StringType(), True),
-            StructField("filename", StringType(), True),
-            StructField("offset", LongType(), True),
-            StructField("length", LongType(), True),
-        ]
-    )
-    zipnum_path = os.path.join(idx_dir, "index.zipnum.gz")
-
-    def fetch_blocks(batches):
-        import json as _json
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import fetch_member
-
-        for pdf in batches:
-            rows = []
-            with open(zipnum_path, "rb") as f:
-                for b in pdf["block"]:
-                    e = cluster[int(b)]
-                    block = fetch_member(f, e["offset"], e["length"])
-                    for ln in block.decode("utf-8").splitlines():
-                        key, ts, blob = ln.split(" ", 2)
-                        j = _json.loads(blob)
-                        rows.append(
-                            (key, ts, j["digest"], j["source"],
-                             j["filename"], j["offset"], j["length"])
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["key", "ts", "digest", "coll", "filename",
-                         "offset", "length"],
-            )
-
-    entries = blocks.mapInPandas(fetch_blocks, eschema)
-    # latest capture per probe from the MERGED index
-    winners = (
-        entries.join(probes, "key", "inner")
-        .groupBy("doc_id")
-        .agg(
-            F.max(
-                F.struct("ts", "digest", "coll", "filename", "offset",
-                         "length")
-            ).alias("w")
-        )
-        .select(
-            "doc_id",
-            F.col("w.ts").alias("ts"),
-            F.col("w.digest").alias("digest"),
-            F.col("w.coll").alias("coll"),
-            F.col("w.filename").alias("filename"),
-            F.col("w.offset").alias("offset"),
-            F.col("w.length").alias("length"),
-        )
-        .persist()
-    )
-
-    mschema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("lang", StringType(), True),
-            StructField("n_chars", LongType(), True),
-            StructField("from_b", LongType(), True),
-            StructField("bytes_read", LongType(), True),
-        ]
-    )
-
     def fetch_docs(batches):
         import os as _os
 
         import pandas as pd
 
-        from tectonic_spark.operators.cdxj import fetch_member, payload_digest
+        from tectonic_spark.operators.cdxj import payload_digest, shard_members
         from tectonic_spark.operators.parser_ops import _extract_crawl_response
         from tectonic_spark.operators.warc import parse_warc
 
         for pdf in batches:
             rows = []
-            by_file: dict = {}
-            for r in pdf.itertuples(index=False):
-                by_file.setdefault((r.coll, r.filename), []).append(r)
-            for (coll, fname), items in by_file.items():
-                items.sort(key=lambda r: r.offset)
-                with open(_os.path.join(coll_dirs[coll], fname), "rb") as f:
-                    for r in items:
-                        member = fetch_member(f, int(r.offset), int(r.length))
-                        (rec,) = parse_warc(member)
-                        if payload_digest(rec["payload"]) != r.digest:
-                            raise ValueError(
-                                f"{coll}/{fname}@{r.offset}: digest mismatch"
-                            )
-                        d, text, lang, *_rest = _extract_crawl_response(rec)
-                        if d != int(r.doc_id):
-                            raise ValueError(
-                                f"index said doc {r.doc_id}, member is {d}"
-                            )
-                        # routing pin: January winners come from A (the
-                        # precedence collection), February from B
-                        want = "B" if r.ts.startswith("202402") else "A"
-                        if coll != want:
-                            raise ValueError(
-                                f"doc {d} ts {r.ts} routed to {coll}, "
-                                f"precedence says {want}"
-                            )
-                        rows.append(
-                            (
-                                d,
-                                lang,
-                                len(text),
-                                1 if coll == "B" else 0,
-                                int(r.length),
-                            )
-                        )
+            members = shard_members(
+                pdf.itertuples(index=False),
+                lambda r: _os.path.join(coll_dirs[r.coll], r.filename),
+            )
+            for r, member in members:
+                coll = r.coll
+                (rec,) = parse_warc(member)
+                if payload_digest(rec["payload"]) != r.digest:
+                    raise ValueError(
+                        f"{coll}/{r.filename}@{r.offset}: digest mismatch"
+                    )
+                d, text, lang, *_rest = _extract_crawl_response(rec)
+                if d != int(r.doc_id):
+                    raise ValueError(f"index said doc {r.doc_id}, member is {d}")
+                # routing pin: January winners come from A (the
+                # precedence collection), February from B
+                want = "B" if r.ts.startswith("202402") else "A"
+                if coll != want:
+                    raise ValueError(
+                        f"doc {d} ts {r.ts} routed to {coll}, "
+                        f"precedence says {want}"
+                    )
+                from_b = 1 if coll == "B" else 0
+                rows.append((d, lang, len(text), from_b, int(r.length)))
             yield pd.DataFrame(
                 rows,
                 columns=["doc_id", "lang", "n_chars", "from_b", "bytes_read"],
             )
 
-    fetched = (
-        winners.repartition(8, "filename")
-        .mapInPandas(fetch_docs, mschema)
-        .persist()
-    )
-    n_probes = probes.count()
-    n_touched = blocks.count()
-    got = fetched.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
-    ).collect()[0]
-    want_bytes = winners.agg(F.sum("length")).collect()[0][0]
-    if (
-        got["n"] != n_probes
-        or got["br"] != want_bytes
-        or n_touched > 2 * n_probes
-    ):
-        fetched.unpersist()
-        winners.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a43: {got['n']}/{n_probes} fetched, {got['br']} bytes vs "
-            f"indexed {want_bytes}, {n_touched} blocks"
+    with _persisting() as persist:
+        probes = persist(
+            docs.filter(F.col("doc_id") % 21 == 6).select("doc_id", _doc_key())
         )
-    agg = fetched.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_probes"),
-        F.sum("from_b").alias("n_from_b"),
-        F.sum("n_chars").alias("chars_latest"),
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
-    winners.unpersist()
-    probes.unpersist()
+        blocks = _blocks_df(by_file, probes)
+        entries = _entries_df(idx_dir, blocks, {"index.zipnum.gz": 0})
+        # latest capture per probe from the MERGED index; the line's
+        # ``source`` tag names its collection
+        winners = persist(
+            entries.join(probes, "key", "inner")
+            .groupBy("doc_id")
+            .agg(
+                F.max(
+                    F.struct("ts", "digest", F.col("source").alias("coll"),
+                             "filename", "offset", "length")
+                ).alias("w")
+            )
+            .select(
+                "doc_id",
+                F.col("w.ts").alias("ts"),
+                F.col("w.digest").alias("digest"),
+                F.col("w.coll").alias("coll"),
+                F.col("w.filename").alias("filename"),
+                F.col("w.offset").alias("offset"),
+                F.col("w.length").alias("length"),
+            )
+        )
+        fetched = persist(
+            winners.repartition(8, "filename").mapInPandas(
+                fetch_docs,
+                "doc_id long, lang string, n_chars long, from_b long, "
+                "bytes_read long",
+            )
+        )
+        n_probes = probes.count()
+        n_touched = blocks.count()
+        got = fetched.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
+        ).collect()[0]
+        want_bytes = winners.agg(F.sum("length")).collect()[0][0]
+        if (
+            got["n"] != n_probes
+            or got["br"] != want_bytes
+            or n_touched > 2 * n_probes
+        ):
+            raise RuntimeError(
+                f"a43: {got['n']}/{n_probes} fetched, {got['br']} bytes vs "
+                f"indexed {want_bytes}, {n_touched} blocks"
+            )
+        agg = fetched.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n_probes"),
+            F.sum("from_b").alias("n_from_b"),
+            F.sum("n_chars").alias("chars_latest"),
+        )
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 
@@ -7632,9 +7243,8 @@ def _incremental_index_src(sf_dir: str) -> tuple[str, str, str]:
     import json as _json
 
     from tectonic_spark.operators.cdxj import (
-        fetch_member,
         incremental_zipnum_update,
-        parse_cluster_idx,
+        index_lines,
     )
 
     a_idx_dir, a_warc_dir, _nb = _zipnum_src(sf_dir)
@@ -7657,17 +7267,7 @@ def _incremental_index_src(sf_dir: str) -> tuple[str, str, str]:
         base_sha = hashlib.sha256(f.read()).hexdigest()
 
     # the delta export: EVERY line of collection B, dupes included
-    delta_lines: list[str] = []
-    with open(os.path.join(b_dir, "cluster.idx"), "rb") as f:
-        b_cluster = parse_cluster_idx(f.read())
-    with open(os.path.join(b_dir, "index.zipnum.gz"), "rb") as f:
-        for e in b_cluster:
-            delta_lines.extend(
-                fetch_member(f, e["offset"], e["length"])
-                .decode("utf-8")
-                .splitlines()
-            )
-    stats = incremental_zipnum_update(tmp, sorted(delta_lines))
+    stats = incremental_zipnum_update(tmp, sorted(index_lines(b_dir)))
     with open(os.path.join(tmp, "index.zipnum.gz"), "rb") as f:
         after_sha = hashlib.sha256(f.read()).hexdigest()
     if after_sha != base_sha:
@@ -7683,231 +7283,6 @@ def _incremental_index_src(sf_dir: str) -> tuple[str, str, str]:
     except OSError:
         shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
     return src, a_warc_dir, b_dir
-
-
-
-
-# ---------------------------------------------------------------------------
-# multi-file zipnum lookup kernels (shared by a44 / s17 / a46): a
-# merged or incrementally-updated index spreads its blocks over
-# several files; lookups run the a36 ladder once per file, candidate
-# blocks are ranged-read distributed, and winners are fetched with
-# routing derived from WHICH file answered
-# ---------------------------------------------------------------------------
-
-
-def _mi_blocks_df(spark, by_file: dict, probes):
-    """Probe keys -> distinct candidate (src_file, b_offset, b_length)
-    rows via the per-file zipnum ladder (<= 2 blocks per file per
-    key). ``probes`` must carry a ``key`` column."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    bschema = StructType(
-        [
-            StructField("src_file", StringType(), True),
-            StructField("b_offset", LongType(), True),
-            StructField("b_length", LongType(), True),
-        ]
-    )
-
-    def assign_blocks(batches):
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import (
-            file_block_keys,
-            multi_zipnum_blocks,
-        )
-
-        keys_by_file = file_block_keys(by_file)
-        for pdf in batches:
-            blocks = set()
-            for key in pdf["key"]:
-                for e in multi_zipnum_blocks(by_file, key, keys_by_file):
-                    blocks.add((e["filename"], e["offset"], e["length"]))
-            yield pd.DataFrame(
-                sorted(blocks),
-                columns=["src_file", "b_offset", "b_length"],
-            )
-
-    return probes.select("key").mapInPandas(assign_blocks, bschema).distinct()
-
-
-def _mi_entries_df(spark, idx_dir: str, blocks, prec: dict):
-    """Candidate-block rows -> CDXJ entry rows with a ``prec`` column
-    (the collection precedence of the block file that held the line,
-    per the ``prec`` map)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    eschema = StructType(
-        [
-            StructField("key", StringType(), True),
-            StructField("ts", StringType(), True),
-            StructField("digest", StringType(), True),
-            StructField("prec", LongType(), True),
-            StructField("filename", StringType(), True),
-            StructField("offset", LongType(), True),
-            StructField("length", LongType(), True),
-        ]
-    )
-
-    def fetch_blocks(batches):
-        import json as _json
-        import os as _os
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import fetch_member
-
-        for pdf in batches:
-            rows = []
-            handles: dict = {}
-            try:
-                for r in pdf.itertuples(index=False):
-                    f = handles.get(r.src_file)
-                    if f is None:
-                        f = handles[r.src_file] = open(
-                            _os.path.join(idx_dir, r.src_file), "rb"
-                        )
-                    block = fetch_member(f, int(r.b_offset), int(r.b_length))
-                    p = prec[r.src_file]
-                    for ln in block.decode("utf-8").splitlines():
-                        key, ts, blob = ln.split(" ", 2)
-                        j = _json.loads(blob)
-                        rows.append(
-                            (key, ts, j["digest"], p, j["filename"],
-                             j["offset"], j["length"])
-                        )
-            finally:
-                for f in handles.values():
-                    f.close()
-            yield pd.DataFrame(
-                rows,
-                columns=["key", "ts", "digest", "prec", "filename",
-                         "offset", "length"],
-            )
-
-    return blocks.mapInPandas(fetch_blocks, eschema)
-
-
-def _mi_count_lines(spark, idx_dir: str, by_file: dict) -> int:
-    """Total CDXJ lines across every block file — the closed-form
-    union pin, computed distributed."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    uschema = StructType([StructField("n", LongType(), True)])
-
-    def count_lines(batches):
-        import os as _os
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import fetch_member
-
-        for pdf in batches:
-            n = 0
-            handles: dict = {}
-            try:
-                for r in pdf.itertuples(index=False):
-                    f = handles.get(r.src_file)
-                    if f is None:
-                        f = handles[r.src_file] = open(
-                            _os.path.join(idx_dir, r.src_file), "rb"
-                        )
-                    n += len(
-                        fetch_member(f, int(r.b_offset), int(r.b_length))
-                        .splitlines()
-                    )
-            finally:
-                for f in handles.values():
-                    f.close()
-            yield pd.DataFrame([n], columns=["n"])
-
-    rows = [
-        (fname, e["offset"], e["length"])
-        for fname, blist in by_file.items()
-        for e in blist
-    ]
-    # width scales with the index (the a41 doctrine): a fixed 8 would
-    # cap this full-index pass regardless of cluster size
-    all_blocks = spark.createDataFrame(
-        rows, "src_file string, b_offset long, b_length long"
-    ).repartition(max(8, len(rows) // 64))
-    return (
-        all_blocks.mapInPandas(count_lines, uschema)
-        .agg(F.sum("n"))
-        .collect()[0][0]
-    )
-
-
-def _mi_routed_fetch(winners, warc_dirs: dict, *, carry: tuple = ()):
-    """Ranged-fetch + extract each winner row, routed by its ``prec``
-    (which collection's shards hold the member). Verifies the payload
-    digest, the doc id, and the temporal routing pin (February
-    captures must come from the non-base collection, January from the
-    base). ``carry`` columns are passed through."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    mschema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("lang", StringType(), True),
-            StructField("n_chars", LongType(), True),
-            StructField("bytes_read", LongType(), True),
-        ]
-        + [StructField(c, LongType(), True) for c in carry]
-    )
-
-    def fetch_docs(batches):
-        import os as _os
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import fetch_member, payload_digest
-        from tectonic_spark.operators.parser_ops import _extract_crawl_response
-        from tectonic_spark.operators.warc import parse_warc
-
-        for pdf in batches:
-            rows = []
-            by_loc: dict = {}
-            for r in pdf.itertuples(index=False):
-                by_loc.setdefault((int(r.prec), r.filename), []).append(r)
-            for (p, fname), items in by_loc.items():
-                items.sort(key=lambda r: r.offset)
-                with open(_os.path.join(warc_dirs[p], fname), "rb") as f:
-                    for r in items:
-                        member = fetch_member(f, int(r.offset), int(r.length))
-                        (rec,) = parse_warc(member)
-                        if payload_digest(rec["payload"]) != r.digest:
-                            raise ValueError(
-                                f"{fname}@{r.offset}: digest mismatch"
-                            )
-                        d, text, lang, *_rest = _extract_crawl_response(rec)
-                        if d != int(r.doc_id):
-                            raise ValueError(
-                                f"index said doc {r.doc_id}, member is {d}"
-                            )
-                        # routing pin: February winners come from the
-                        # delta/new collection, January from the base
-                        want = 1 if r.ts.startswith("202402") else 0
-                        if p != want:
-                            raise ValueError(
-                                f"doc {d} ts {r.ts} routed to collection "
-                                f"{p}, the index layout says {want}"
-                            )
-                        rows.append(
-                            (d, lang, len(text), int(r.length))
-                            + tuple(int(getattr(r, c)) for c in carry)
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "lang", "n_chars", "bytes_read"]
-                + list(carry),
-            )
-
-    return winners.repartition(8, "prec", "filename").mapInPandas(
-        fetch_docs, mschema
-    )
 
 
 @register(
@@ -7952,17 +7327,8 @@ def a44_incremental_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
 
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
-    from tectonic_spark.operators.cdxj import (
-        cluster_entries_by_file,
-        parse_cluster_idx,
-    )
+    from tectonic_spark.operators.cdxj import index_blocks
     from tectonic_spark.tables import table
 
     idx_dir, a_warc, b_warc = _incremental_index_src(sf_dir)
@@ -7972,9 +7338,7 @@ def a44_incremental_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(os.path.join(idx_dir, "index.zipnum.gz"), "rb") as f:
         if hashlib.sha256(f.read()).hexdigest() != meta["base_sha256"]:
             raise RuntimeError("a44: base index.zipnum.gz was rewritten")
-    with open(os.path.join(idx_dir, "cluster.idx"), "rb") as f:
-        cluster = parse_cluster_idx(f.read())
-    by_file = cluster_entries_by_file(cluster)
+    by_file = index_blocks(idx_dir)
     if set(by_file) != {"index.zipnum.gz", "delta-001.zipnum.gz"}:
         raise RuntimeError(f"a44: unexpected block files {sorted(by_file)}")
     # collection precedence by block file: the original archive wins
@@ -7982,221 +7346,149 @@ def a44_incremental_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     warc_dirs = {0: a_warc, 1: b_warc}
 
     docs = table(spark, sf_dir, "documents")
-    probes = (
-        docs.filter(F.col("doc_id") % 19 == 7)
-        .select(
-            "doc_id",
-            F.concat(
-                F.lit("example,"), F.col("source"), F.lit(")/doc/"),
-                F.col("doc_id"),
-            ).alias("key"),
+    with _persisting() as persist:
+        probes = persist(
+            docs.filter(F.col("doc_id") % 19 == 7).select("doc_id", _doc_key())
         )
-        .persist()
-    )
-
-    blocks = _mi_blocks_df(spark, by_file, probes)
-    entries = _mi_entries_df(spark, idx_dir, blocks, prec)
-    latest = F.max(
-        F.struct("ts", "digest", "prec", "filename", "offset", "length")
-    ).alias("l")
-    index_ans = (
-        entries.join(probes, "key", "inner")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("i_caps"),
-            F.min("ts").alias("i_first_ts"),
-            F.countDistinct("digest").alias("i_digests"),
-            latest,
-        )
-        .select(
-            "doc_id", "i_caps", "i_first_ts", "i_digests",
-            F.col("l.ts").alias("ts"),
-            F.col("l.digest").alias("digest"),
-            F.col("l.prec").alias("prec"),
-            F.col("l.filename").alias("filename"),
-            F.col("l.offset").alias("offset"),
-            F.col("l.length").alias("length"),
-        )
-        .persist()
-    )
-
-    # --- the FULL REBUILD audit: base lines + the complete delta
-    # export (dupes included), deduped keep-first, distributed ---
-    a_blocks = [
-        ("A", e["offset"], e["length"]) for e in by_file["index.zipnum.gz"]
-    ]
-    with open(os.path.join(b_warc, "cluster.idx"), "rb") as f:
-        b_cluster = parse_cluster_idx(f.read())
-    b_blocks = [("B", e["offset"], e["length"]) for e in b_cluster]
-    paths = {"A": os.path.join(idx_dir, "index.zipnum.gz"),
-             "B": os.path.join(b_warc, "index.zipnum.gz")}
-    manifest = spark.createDataFrame(
-        a_blocks + b_blocks, "coll string, b_offset long, b_length long"
-    ).repartition(max(8, (len(a_blocks) + len(b_blocks)) // 16))
-
-    rschema = StructType(
-        [
-            StructField("key", StringType(), True),
-            StructField("ts", StringType(), True),
-            StructField("digest", StringType(), True),
-            StructField("prec", LongType(), True),
-            StructField("filename", StringType(), True),
-            StructField("offset", LongType(), True),
-            StructField("length", LongType(), True),
-        ]
-    )
-
-    def scan_all(batches):
-        import json as _json2
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import fetch_member
-
-        for pdf in batches:
-            rows = []
-            handles: dict = {}
-            try:
-                for r in pdf.itertuples(index=False):
-                    f = handles.get(r.coll)
-                    if f is None:
-                        f = handles[r.coll] = open(paths[r.coll], "rb")
-                    block = fetch_member(
-                        f, int(r.b_offset), int(r.b_length)
-                    )
-                    p = 0 if r.coll == "A" else 1
-                    for ln in block.decode("utf-8").splitlines():
-                        key, ts, blob = ln.split(" ", 2)
-                        j = _json2.loads(blob)
-                        rows.append(
-                            (key, ts, j["digest"], p, j["filename"],
-                             j["offset"], j["length"])
-                        )
-            finally:
-                for f in handles.values():
-                    f.close()
-            yield pd.DataFrame(
-                rows,
-                columns=["key", "ts", "digest", "prec", "filename",
-                         "offset", "length"],
+        blocks = _blocks_df(by_file, probes)
+        entries = _entries_df(idx_dir, blocks, prec)
+        latest = F.max(
+            F.struct("ts", "digest", "prec", "filename", "offset", "length")
+        ).alias("l")
+        index_ans = persist(
+            entries.join(probes, "key", "inner")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("i_caps"),
+                F.min("ts").alias("i_first_ts"),
+                F.countDistinct("digest").alias("i_digests"),
+                latest,
             )
-
-    union = manifest.mapInPandas(scan_all, rschema)
-    rebuilt = (
-        union.groupBy("key", "ts", "digest")
-        .agg(
-            F.min(F.struct("prec", "filename", "offset", "length")).alias(
-                "w"
+            .select(
+                "doc_id", "i_caps", "i_first_ts", "i_digests",
+                F.col("l.ts").alias("ts"),
+                F.col("l.digest").alias("digest"),
+                F.col("l.prec").alias("prec"),
+                F.col("l.filename").alias("filename"),
+                F.col("l.offset").alias("offset"),
+                F.col("l.length").alias("length"),
             )
         )
-        .select(
-            "key", "ts", "digest",
-            F.col("w.prec").alias("prec"),
-            F.col("w.filename").alias("filename"),
-            F.col("w.offset").alias("offset"),
-            F.col("w.length").alias("length"),
-        )
-        .persist()
-    )
-    # line-count pin: the updated index holds exactly the deduped union
-    n_rebuilt = rebuilt.count()
-    n_updated = _mi_count_lines(spark, idx_dir, by_file)
-    if n_updated != n_rebuilt:
-        rebuilt.unpersist()
-        index_ans.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a44: updated index holds {n_updated} lines, the rebuilt "
-            f"union has {n_rebuilt}"
-        )
 
-    # field-for-field agreement for EVERY probe
-    audit_ans = (
-        rebuilt.join(probes, "key", "inner")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("r_caps"),
-            F.min("ts").alias("r_first_ts"),
-            F.countDistinct("digest").alias("r_digests"),
-            F.max(
-                F.struct("ts", "digest", "prec", "filename", "offset",
-                         "length")
-            ).alias("rl"),
+        # --- the FULL REBUILD audit: base lines + the complete delta
+        # export (dupes included), deduped keep-first, distributed ---
+        base_file = {"index.zipnum.gz": by_file["index.zipnum.gz"]}
+        union = _entries_df(
+            idx_dir, _all_blocks_df(spark, base_file), {"index.zipnum.gz": 0}
+        ).unionByName(
+            _entries_df(
+                b_warc,
+                _all_blocks_df(spark, index_blocks(b_warc)),
+                {"index.zipnum.gz": 1},
+            )
         )
-        .select(
-            "doc_id", "r_caps", "r_first_ts", "r_digests",
-            F.col("rl.ts").alias("r_ts"),
-            F.col("rl.digest").alias("r_digest"),
-            F.col("rl.prec").alias("r_prec"),
-            F.col("rl.filename").alias("r_filename"),
-            F.col("rl.offset").alias("r_offset"),
+        rebuilt = persist(
+            union.groupBy("key", "ts", "digest")
+            .agg(
+                F.min(F.struct("prec", "filename", "offset", "length")).alias(
+                    "w"
+                )
+            )
+            .select(
+                "key", "ts", "digest",
+                F.col("w.prec").alias("prec"),
+                F.col("w.filename").alias("filename"),
+                F.col("w.offset").alias("offset"),
+                F.col("w.length").alias("length"),
+            )
         )
-    )
-    n_probes = probes.count()
-    cmp = index_ans.join(audit_ans, "doc_id", "full")
-    n_mismatch = cmp.filter(
-        (F.col("i_caps") != F.col("r_caps"))
-        | (F.col("i_first_ts") != F.col("r_first_ts"))
-        | (F.col("i_digests") != F.col("r_digests"))
-        | (F.col("ts") != F.col("r_ts"))
-        | (F.col("digest") != F.col("r_digest"))
-        | (F.col("prec") != F.col("r_prec"))
-        | (F.col("filename") != F.col("r_filename"))
-        | (F.col("offset") != F.col("r_offset"))
-        | F.col("i_caps").isNull()
-        | F.col("r_caps").isNull()
-    ).count()
-    n_touched = blocks.count()
-    if n_mismatch or index_ans.count() != n_probes:
-        rebuilt.unpersist()
-        index_ans.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a44: {n_mismatch} probe disagreements between the updated "
-            "index and the full rebuild"
-        )
-    if n_touched > 2 * len(by_file) * n_probes:
-        rebuilt.unpersist()
-        index_ans.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a44: {n_touched} blocks for {n_probes} probes across "
-            f"{len(by_file)} files — the per-file ladder is not pruning"
-        )
-    rebuilt.unpersist()
+        # line-count pin: the updated index holds exactly the deduped union
+        n_rebuilt = rebuilt.count()
+        n_updated = _count_lines(spark, idx_dir, by_file)
+        if n_updated != n_rebuilt:
+            raise RuntimeError(
+                f"a44: updated index holds {n_updated} lines, the rebuilt "
+                f"union has {n_rebuilt}"
+            )
 
-    # ranged-fetch every probe's LATEST member, routed by which block
-    # file answered (prec 0 -> original archive, 1 -> delta collection)
-    fetched = _mi_routed_fetch(
-        index_ans.select(
-            "doc_id", "ts", "digest", "prec", "filename", "offset",
-            "length", F.col("i_caps").alias("caps"),
-        ),
-        warc_dirs,
-        carry=("caps",),
-    ).persist()
-    got = fetched.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
-    ).collect()[0]
-    want_bytes = index_ans.agg(F.sum("length")).collect()[0][0]
-    if got["n"] != n_probes or got["br"] != want_bytes:
-        fetched.unpersist()
-        index_ans.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a44: fetched {got['n']}/{n_probes} members, {got['br']} "
-            f"bytes vs indexed {want_bytes}"
+        # field-for-field agreement for EVERY probe
+        audit_ans = (
+            rebuilt.join(probes, "key", "inner")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("r_caps"),
+                F.min("ts").alias("r_first_ts"),
+                F.countDistinct("digest").alias("r_digests"),
+                F.max(
+                    F.struct("ts", "digest", "prec", "filename", "offset",
+                             "length")
+                ).alias("rl"),
+            )
+            .select(
+                "doc_id", "r_caps", "r_first_ts", "r_digests",
+                F.col("rl.ts").alias("r_ts"),
+                F.col("rl.digest").alias("r_digest"),
+                F.col("rl.prec").alias("r_prec"),
+                F.col("rl.filename").alias("r_filename"),
+                F.col("rl.offset").alias("r_offset"),
+            )
         )
-    agg = fetched.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col("caps") > 1, 1).otherwise(0)).alias(
-            "n_recaptured"
-        ),
-        F.sum("n_chars").alias("chars_latest"),
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
-    index_ans.unpersist()
-    probes.unpersist()
+        n_probes = probes.count()
+        cmp = index_ans.join(audit_ans, "doc_id", "full")
+        n_mismatch = cmp.filter(
+            (F.col("i_caps") != F.col("r_caps"))
+            | (F.col("i_first_ts") != F.col("r_first_ts"))
+            | (F.col("i_digests") != F.col("r_digests"))
+            | (F.col("ts") != F.col("r_ts"))
+            | (F.col("digest") != F.col("r_digest"))
+            | (F.col("prec") != F.col("r_prec"))
+            | (F.col("filename") != F.col("r_filename"))
+            | (F.col("offset") != F.col("r_offset"))
+            | F.col("i_caps").isNull()
+            | F.col("r_caps").isNull()
+        ).count()
+        n_touched = blocks.count()
+        if n_mismatch or index_ans.count() != n_probes:
+            raise RuntimeError(
+                f"a44: {n_mismatch} probe disagreements between the updated "
+                "index and the full rebuild"
+            )
+        if n_touched > 2 * len(by_file) * n_probes:
+            raise RuntimeError(
+                f"a44: {n_touched} blocks for {n_probes} probes across "
+                f"{len(by_file)} files — the per-file ladder is not pruning"
+            )
+        rebuilt.unpersist()
+
+        # ranged-fetch every probe's LATEST member, routed by which block
+        # file answered (prec 0 -> original archive, 1 -> delta collection)
+        fetched = persist(
+            _routed_fetch(
+                index_ans.select(
+                    "doc_id", "ts", "digest", "prec", "filename", "offset",
+                    "length", F.col("i_caps").alias("caps"),
+                ),
+                warc_dirs,
+                carry=("caps",),
+            )
+        )
+        got = fetched.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
+        ).collect()[0]
+        want_bytes = index_ans.agg(F.sum("length")).collect()[0][0]
+        if got["n"] != n_probes or got["br"] != want_bytes:
+            raise RuntimeError(
+                f"a44: fetched {got['n']}/{n_probes} members, {got['br']} "
+                f"bytes vs indexed {want_bytes}"
+            )
+        agg = fetched.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.when(F.col("caps") > 1, 1).otherwise(0)).alias(
+                "n_recaptured"
+            ),
+            F.sum("n_chars").alias("chars_latest"),
+        )
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 
@@ -8342,226 +7634,136 @@ def a45_conflict_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
 
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
-    from tectonic_spark.operators.cdxj import (
-        cluster_entries_by_file,
-        parse_cluster_idx,
-    )
+    from tectonic_spark.operators.cdxj import index_blocks
 
     idx_dir, a_warc, c_warc = _conflict_index_src(sf_dir)
     with open(os.path.join(idx_dir, "update.json"), "rb") as f:
         meta = _json.loads(f.read())
-    with open(os.path.join(idx_dir, "cluster.idx"), "rb") as f:
-        cluster = parse_cluster_idx(f.read())
-    by_file = cluster_entries_by_file(cluster)
+    by_file = index_blocks(idx_dir)
     prec = {"index.zipnum.gz": 0, "delta-001.zipnum.gz": 1}
     warc_dirs = {0: a_warc, 1: c_warc}
     _src, n_shards = _warc_cdxj_src(sf_dir)
-
-    # one distributed pass over ALL index blocks
-    manifest = spark.createDataFrame(
-        [
-            (fname, e["offset"], e["length"])
-            for fname, blist in by_file.items()
-            for e in blist
-        ],
-        "src_file string, b_offset long, b_length long",
-    ).repartition(max(8, len(cluster) // 16))
-
-    eschema = StructType(
-        [
-            StructField("key", StringType(), True),
-            StructField("ts", StringType(), True),
-            StructField("digest", StringType(), True),
-            StructField("prec", LongType(), True),
-            StructField("filename", StringType(), True),
-            StructField("offset", LongType(), True),
-            StructField("length", LongType(), True),
-        ]
-    )
-
-    def scan_blocks(batches):
-        import json as _json2
-        import os as _os
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import fetch_member
-
-        for pdf in batches:
-            rows = []
-            handles: dict = {}
-            try:
-                for r in pdf.itertuples(index=False):
-                    f = handles.get(r.src_file)
-                    if f is None:
-                        f = handles[r.src_file] = open(
-                            _os.path.join(idx_dir, r.src_file), "rb"
-                        )
-                    block = fetch_member(
-                        f, int(r.b_offset), int(r.b_length)
-                    )
-                    p = prec[r.src_file]
-                    for ln in block.decode("utf-8").splitlines():
-                        key, ts, blob = ln.split(" ", 2)
-                        j = _json2.loads(blob)
-                        rows.append(
-                            (key, ts, j["digest"], p, j["filename"],
-                             j["offset"], j["length"])
-                        )
-            finally:
-                for f in handles.values():
-                    f.close()
-            yield pd.DataFrame(
-                rows,
-                columns=["key", "ts", "digest", "prec", "filename",
-                         "offset", "length"],
-            )
-
-    lines = manifest.mapInPandas(scan_blocks, eschema)
-    grouped = (
-        lines.groupBy("key", "ts")
-        .agg(
-            F.countDistinct("digest").alias("n_digests"),
-            F.count(F.lit(1)).alias("n_lines"),
-            F.collect_list(
-                F.struct("prec", "digest", "filename", "offset", "length")
-            ).alias("sides"),
-        )
-        .persist()
-    )
-    conflicts = grouped.filter(F.col("n_digests") > 1).persist()
-    # structural pins: a conflict has exactly two sides, one per
-    # collection; non-conflict keys have exactly one line (the update
-    # deduped exact re-submits — none survive as same-digest pairs)
-    bad_shape = conflicts.filter(
-        (F.col("n_lines") != 2)
-        | (F.size(F.filter("sides", lambda s: s["prec"] == 0)) != 1)
-        | (F.size(F.filter("sides", lambda s: s["prec"] == 1)) != 1)
-    ).count()
-    dup_lines = grouped.filter(
-        (F.col("n_digests") == 1) & (F.col("n_lines") > 1)
-    ).count()
-    n_conflicts = conflicts.count()
-    if bad_shape or dup_lines or n_conflicts != meta["n_appended"]:
-        grouped.unpersist()
-        conflicts.unpersist()
-        raise RuntimeError(
-            f"a45: {n_conflicts} conflicts (update appended "
-            f"{meta['n_appended']}), {bad_shape} mis-shaped, "
-            f"{dup_lines} surviving same-digest duplicates"
-        )
-    grouped.unpersist()
-
-    # fetch BOTH sides of every conflict, routed by precedence
-    sides = conflicts.select(
-        "key", "ts", F.explode("sides").alias("s")
-    ).select(
-        "key", "ts",
-        F.col("s.prec").alias("prec"),
-        F.col("s.digest").alias("digest"),
-        F.col("s.filename").alias("filename"),
-        F.col("s.offset").alias("offset"),
-        F.col("s.length").alias("length"),
-    )
-
-    mschema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("lang", StringType(), True),
-            StructField("prec", LongType(), True),
-            StructField("n_chars", LongType(), True),
-            StructField("bytes_read", LongType(), True),
-        ]
-    )
 
     def fetch_sides(batches):
         import os as _os
 
         import pandas as pd
 
-        from tectonic_spark.operators.cdxj import fetch_member, payload_digest
+        from tectonic_spark.operators.cdxj import payload_digest, shard_members
         from tectonic_spark.operators.parser_ops import _extract_crawl_response
         from tectonic_spark.operators.warc import parse_warc
 
         for pdf in batches:
             rows = []
-            by_loc: dict = {}
-            for r in pdf.itertuples(index=False):
-                by_loc.setdefault((int(r.prec), r.filename), []).append(r)
-            for (p, fname), items in by_loc.items():
-                items.sort(key=lambda r: r.offset)
-                with open(_os.path.join(warc_dirs[p], fname), "rb") as f:
-                    for r in items:
-                        member = fetch_member(f, int(r.offset), int(r.length))
-                        (rec,) = parse_warc(member)
-                        if payload_digest(rec["payload"]) != r.digest:
-                            raise ValueError(
-                                f"{fname}@{r.offset}: digest mismatch"
-                            )
-                        d, text, lang, *_rest = _extract_crawl_response(rec)
-                        rows.append((d, lang, p, len(text), int(r.length)))
+            members = shard_members(
+                pdf.itertuples(index=False),
+                lambda r: _os.path.join(warc_dirs[int(r.prec)], r.filename),
+            )
+            for r, member in members:
+                (rec,) = parse_warc(member)
+                if payload_digest(rec["payload"]) != r.digest:
+                    raise ValueError(f"{r.filename}@{r.offset}: digest mismatch")
+                d, text, lang, *_rest = _extract_crawl_response(rec)
+                rows.append((d, lang, int(r.prec), len(text), int(r.length)))
             yield pd.DataFrame(
                 rows,
                 columns=["doc_id", "lang", "prec", "n_chars", "bytes_read"],
             )
 
-    fetched = (
-        sides.repartition(n_shards, "prec", "filename")
-        .mapInPandas(fetch_sides, mschema)
-        .persist()
-    )
-    got = fetched.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
-    ).collect()[0]
-    want = sides.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("length").alias("b")
-    ).collect()[0]
-    # the conflict is REAL: the loser's extracted text is longer than
-    # the winner's for every conflict pair (the ' alt' suffix)
-    pair_bad = (
-        fetched.groupBy("doc_id")
-        .agg(
-            F.max(F.when(F.col("prec") == 0, F.col("n_chars"))).alias("wc"),
-            F.max(F.when(F.col("prec") == 1, F.col("n_chars"))).alias("lc"),
+    with _persisting() as persist:
+        # one distributed pass over ALL index blocks
+        lines = _entries_df(idx_dir, _all_blocks_df(spark, by_file), prec)
+        grouped = persist(
+            lines.groupBy("key", "ts")
+            .agg(
+                F.countDistinct("digest").alias("n_digests"),
+                F.count(F.lit(1)).alias("n_lines"),
+                F.collect_list(
+                    F.struct("prec", "digest", "filename", "offset", "length")
+                ).alias("sides"),
+            )
         )
-        .filter(
-            F.col("wc").isNull()
-            | F.col("lc").isNull()
-            | (F.col("lc") != F.col("wc") + 4)
+        conflicts = persist(grouped.filter(F.col("n_digests") > 1))
+        # structural pins: a conflict has exactly two sides, one per
+        # collection; non-conflict keys have exactly one line (the update
+        # deduped exact re-submits — none survive as same-digest pairs)
+        bad_shape = conflicts.filter(
+            (F.col("n_lines") != 2)
+            | (F.size(F.filter("sides", lambda s: s["prec"] == 0)) != 1)
+            | (F.size(F.filter("sides", lambda s: s["prec"] == 1)) != 1)
+        ).count()
+        dup_lines = grouped.filter(
+            (F.col("n_digests") == 1) & (F.col("n_lines") > 1)
+        ).count()
+        n_conflicts = conflicts.count()
+        if bad_shape or dup_lines or n_conflicts != meta["n_appended"]:
+            raise RuntimeError(
+                f"a45: {n_conflicts} conflicts (update appended "
+                f"{meta['n_appended']}), {bad_shape} mis-shaped, "
+                f"{dup_lines} surviving same-digest duplicates"
+            )
+        grouped.unpersist()
+
+        # fetch BOTH sides of every conflict, routed by precedence
+        sides = conflicts.select(
+            "key", "ts", F.explode("sides").alias("s")
+        ).select(
+            "key", "ts",
+            F.col("s.prec").alias("prec"),
+            F.col("s.digest").alias("digest"),
+            F.col("s.filename").alias("filename"),
+            F.col("s.offset").alias("offset"),
+            F.col("s.length").alias("length"),
         )
-        .count()
-    )
-    if got["n"] != want["n"] or got["br"] != want["b"] or pair_bad:
-        fetched.unpersist()
-        conflicts.unpersist()
-        raise RuntimeError(
-            f"a45: fetched {got['n']}/{want['n']} sides, {got['br']} "
-            f"bytes vs indexed {want['b']}, {pair_bad} pairs whose "
-            "sides do not differ by the conflict suffix"
+        fetched = persist(
+            sides.repartition(n_shards, "prec", "filename").mapInPandas(
+                fetch_sides,
+                "doc_id long, lang string, prec long, n_chars long, "
+                "bytes_read long",
+            )
         )
-    agg = (
-        fetched.groupBy("doc_id", "lang")
-        .agg(
-            F.max(F.when(F.col("prec") == 0, F.col("n_chars"))).alias("wc"),
-            F.max(F.when(F.col("prec") == 1, F.col("n_chars"))).alias("lc"),
+        got = fetched.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
+        ).collect()[0]
+        want = sides.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("length").alias("b")
+        ).collect()[0]
+        # the conflict is REAL: the loser's extracted text is longer than
+        # the winner's for every conflict pair (the ' alt' suffix)
+        pair_bad = (
+            fetched.groupBy("doc_id")
+            .agg(
+                F.max(F.when(F.col("prec") == 0, F.col("n_chars"))).alias("wc"),
+                F.max(F.when(F.col("prec") == 1, F.col("n_chars"))).alias("lc"),
+            )
+            .filter(
+                F.col("wc").isNull()
+                | F.col("lc").isNull()
+                | (F.col("lc") != F.col("wc") + 4)
+            )
+            .count()
         )
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_conflicts"),
-            F.sum("wc").alias("chars_winner"),
-            F.sum("lc").alias("chars_loser"),
+        if got["n"] != want["n"] or got["br"] != want["b"] or pair_bad:
+            raise RuntimeError(
+                f"a45: fetched {got['n']}/{want['n']} sides, {got['br']} "
+                f"bytes vs indexed {want['b']}, {pair_bad} pairs whose "
+                "sides do not differ by the conflict suffix"
+            )
+        agg = (
+            fetched.groupBy("doc_id", "lang")
+            .agg(
+                F.max(F.when(F.col("prec") == 0, F.col("n_chars"))).alias("wc"),
+                F.max(F.when(F.col("prec") == 1, F.col("n_chars"))).alias("lc"),
+            )
+            .groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).alias("n_conflicts"),
+                F.sum("wc").alias("chars_winner"),
+                F.sum("lc").alias("chars_loser"),
+            )
         )
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
-    conflicts.unpersist()
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 
@@ -8571,7 +7773,7 @@ def _index_export_src(sf_dir: str) -> tuple[str, str, str]:
     carries both January duplicates and February recaptures) — the
     arrival shape of a live archive's per-crawl index exports. Returns
     (exports_dir, a_idx_dir, b_dir)."""
-    from tectonic_spark.operators.cdxj import fetch_member, parse_cluster_idx
+    from tectonic_spark.operators.cdxj import index_lines
 
     a_idx_dir, _a_warc, _nb = _zipnum_src(sf_dir)
     b_dir, _nb2 = _timeline_index_src(sf_dir)
@@ -8585,17 +7787,7 @@ def _index_export_src(sf_dir: str) -> tuple[str, str, str]:
     tmp = f"{src}.tmp-{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp, exist_ok=True)
-    lines: list[str] = []
-    with open(os.path.join(b_dir, "cluster.idx"), "rb") as f:
-        b_cluster = parse_cluster_idx(f.read())
-    with open(os.path.join(b_dir, "index.zipnum.gz"), "rb") as f:
-        for e in b_cluster:
-            lines.extend(
-                fetch_member(f, e["offset"], e["length"])
-                .decode("utf-8")
-                .splitlines()
-            )
-    lines.sort()
+    lines = sorted(index_lines(b_dir))
     for g in range(3):
         part = sorted(lines[g::3])
         _write_atomic(
@@ -8649,15 +7841,13 @@ def s17_stream_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from tectonic_spark.operators.cdxj import (
-        cluster_entries_by_file,
         incremental_zipnum_update,
-        parse_cluster_idx,
+        index_blocks,
     )
     from tectonic_spark.tables import table
 
     exports_dir, a_idx_dir, b_dir = _index_export_src(sf_dir)
-    _src, _n = _warc_cdxj_src(sf_dir)
-    a_warc = _src
+    a_warc, _n = _warc_cdxj_src(sf_dir)
     base = _fixture_dir(sf_dir)
     live = os.path.join(base, "s17_live")
     ck = os.path.join(base, "s17_ck")
@@ -8715,9 +7905,7 @@ def s17_stream_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{totals['appended']} (want {n_recap}), dropped "
             f"{totals['dropped']} (want {n_docs})"
         )
-    with open(os.path.join(live, "cluster.idx"), "rb") as f:
-        cluster = parse_cluster_idx(f.read())
-    by_file = cluster_entries_by_file(cluster)
+    by_file = index_blocks(live)
     if len(by_file) != 1 + totals["generations"]:
         raise RuntimeError(
             f"s17: cluster.idx covers {len(by_file)} files, want base + "
@@ -8725,89 +7913,71 @@ def s17_stream_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # closed-form union pin on the final index
-    n_lines = _mi_count_lines(spark, live, by_file)
+    n_lines = _count_lines(spark, live, by_file)
     if n_lines != n_docs + n_recap:
         raise RuntimeError(
             f"s17: final index holds {n_lines} lines, the union is "
             f"{n_docs} + {n_recap}"
         )
 
-    probes = (
-        docs.filter(F.col("doc_id") % 29 == 11)
-        .select(
-            "doc_id",
-            F.concat(
-                F.lit("example,"), F.col("source"), F.lit(")/doc/"),
-                F.col("doc_id"),
-            ).alias("key"),
-        )
-        .persist()
-    )
     # precedence by block file: the base archive is 0, every streamed
     # generation routes to the new crawl's shards
     prec = {f: (0 if f == "index.zipnum.gz" else 1) for f in by_file}
-    blocks = _mi_blocks_df(spark, by_file, probes)
-    entries = _mi_entries_df(spark, live, blocks, prec)
-    winners = (
-        entries.join(probes, "key", "inner")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("caps"),
-            F.max(
-                F.struct("ts", "digest", "prec", "filename",
-                         "offset", "length")
-            ).alias("w"),
+    with _persisting() as persist:
+        probes = persist(
+            docs.filter(F.col("doc_id") % 29 == 11).select("doc_id", _doc_key())
         )
-        .select(
-            "doc_id", "caps",
-            F.col("w.ts").alias("ts"),
-            F.col("w.digest").alias("digest"),
-            F.col("w.prec").alias("prec"),
-            F.col("w.filename").alias("filename"),
-            F.col("w.offset").alias("offset"),
-            F.col("w.length").alias("length"),
+        blocks = _blocks_df(by_file, probes)
+        entries = _entries_df(live, blocks, prec)
+        winners = persist(
+            entries.join(probes, "key", "inner")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("caps"),
+                F.max(
+                    F.struct("ts", "digest", "prec", "filename",
+                             "offset", "length")
+                ).alias("w"),
+            )
+            .select(
+                "doc_id", "caps",
+                F.col("w.ts").alias("ts"),
+                F.col("w.digest").alias("digest"),
+                F.col("w.prec").alias("prec"),
+                F.col("w.filename").alias("filename"),
+                F.col("w.offset").alias("offset"),
+                F.col("w.length").alias("length"),
+            )
         )
-        .persist()
-    )
-    n_probes = probes.count()
-    n_touched = blocks.count()
-    if winners.count() != n_probes:
-        winners.unpersist()
-        probes.unpersist()
-        raise RuntimeError("s17: a probe found no index answer")
-    if n_touched > 2 * len(by_file) * n_probes:
-        winners.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"s17: {n_touched} blocks for {n_probes} probes across "
-            f"{len(by_file)} files — the per-file ladder is not pruning"
-        )
+        n_probes = probes.count()
+        n_touched = blocks.count()
+        if winners.count() != n_probes:
+            raise RuntimeError("s17: a probe found no index answer")
+        if n_touched > 2 * len(by_file) * n_probes:
+            raise RuntimeError(
+                f"s17: {n_touched} blocks for {n_probes} probes across "
+                f"{len(by_file)} files — the per-file ladder is not pruning"
+            )
 
-    warc_dirs = {0: a_warc, 1: b_dir}
-    fetched = _mi_routed_fetch(winners, warc_dirs, carry=("caps",)).persist()
-    got = fetched.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
-    ).collect()[0]
-    want_bytes = winners.agg(F.sum("length")).collect()[0][0]
-    if got["n"] != n_probes or got["br"] != want_bytes:
-        fetched.unpersist()
-        winners.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"s17: fetched {got['n']}/{n_probes} members, {got['br']} "
-            f"bytes vs indexed {want_bytes}"
+        warc_dirs = {0: a_warc, 1: b_dir}
+        fetched = persist(_routed_fetch(winners, warc_dirs, carry=("caps",)))
+        got = fetched.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
+        ).collect()[0]
+        want_bytes = winners.agg(F.sum("length")).collect()[0][0]
+        if got["n"] != n_probes or got["br"] != want_bytes:
+            raise RuntimeError(
+                f"s17: fetched {got['n']}/{n_probes} members, {got['br']} "
+                f"bytes vs indexed {want_bytes}"
+            )
+        agg = fetched.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.when(F.col("caps") > 1, 1).otherwise(0)).alias(
+                "n_recaptured"
+            ),
+            F.sum("n_chars").alias("chars_latest"),
         )
-    agg = fetched.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col("caps") > 1, 1).otherwise(0)).alias(
-            "n_recaptured"
-        ),
-        F.sum("n_chars").alias("chars_latest"),
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
-    winners.unpersist()
-    probes.unpersist()
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 
@@ -8850,11 +8020,10 @@ def a46_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from tectonic_spark.operators.cdxj import (
-        cluster_entries_by_file,
         compact_zipnum,
-        fetch_member,
         incremental_zipnum_update,
-        parse_cluster_idx,
+        index_blocks,
+        index_lines,
     )
     from tectonic_spark.tables import table
 
@@ -8869,158 +8038,108 @@ def a46_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(a_idx_dir, fname), os.path.join(live, fname)
         )
     # ingest the a38 export (Jan dupes drop, Feb recaptures append)
-    delta_lines: list[str] = []
-    with open(os.path.join(b_dir, "cluster.idx"), "rb") as f:
-        b_cluster = parse_cluster_idx(f.read())
-    with open(os.path.join(b_dir, "index.zipnum.gz"), "rb") as f:
-        for e in b_cluster:
-            delta_lines.extend(
-                fetch_member(f, e["offset"], e["length"])
-                .decode("utf-8")
-                .splitlines()
-            )
-    up = incremental_zipnum_update(live, sorted(delta_lines))
+    up = incremental_zipnum_update(live, sorted(index_lines(b_dir)))
 
     docs = table(spark, sf_dir, "documents")
-    probes = (
-        docs.filter(F.col("doc_id") % 31 == 13)
-        .select(
-            "doc_id",
-            F.concat(
-                F.lit("example,"), F.col("source"), F.lit(")/doc/"),
-                F.col("doc_id"),
-            ).alias("key"),
-        )
-        .persist()
-    )
 
-    def answers(by_file):
+    def answers(by_file, probes):
         prec = {f: (0 if f == "index.zipnum.gz" else 1) for f in by_file}
-        blocks = _mi_blocks_df(spark, by_file, probes)
-        entries = _mi_entries_df(spark, live, blocks, prec)
-        return blocks, (
-            entries.join(probes, "key", "inner")
-            .groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("caps"),
-                F.max(
-                    F.struct("ts", "digest", "filename", "offset", "length")
-                ).alias("w"),
+        blocks = _blocks_df(by_file, probes)
+        return blocks, _latest_capture(_entries_df(live, blocks, prec), probes)
+
+    with _persisting() as persist:
+        probes = persist(
+            docs.filter(F.col("doc_id") % 31 == 13).select("doc_id", _doc_key())
+        )
+        by_file_pre = index_blocks(live)
+        if len(by_file_pre) != 2:
+            raise RuntimeError(
+                f"a46: pre-compaction index has {len(by_file_pre)} files"
             )
-            .select(
-                "doc_id", "caps",
-                F.col("w.ts").alias("ts"),
-                F.col("w.digest").alias("digest"),
-                F.col("w.filename").alias("filename"),
-                F.col("w.offset").alias("offset"),
-                F.col("w.length").alias("length"),
+        _pre_blocks, pre_ans = answers(by_file_pre, probes)
+        pre_rows = {r["doc_id"]: r for r in pre_ans.collect()}
+
+        # --- compact ---
+        stats = compact_zipnum(live)
+        if stats["n_files_before"] != 2:
+            raise RuntimeError("a46: compaction saw an unexpected file set")
+        by_file_post = index_blocks(live)
+        if set(by_file_post) != {"index.zipnum.gz"}:
+            raise RuntimeError(
+                f"a46: compaction left {sorted(by_file_post)} on disk"
             )
-        )
+        if os.path.exists(os.path.join(live, up["delta_file"])):
+            raise RuntimeError("a46: the delta generation was not removed")
+        # line-count preservation pin, distributed
+        n_docs, n_recap = docs.agg(
+            F.count(F.lit(1)),
+            F.sum(F.when(F.col("doc_id") % 5 == 0, 1).otherwise(0)),
+        ).collect()[0]
+        n_post = _count_lines(spark, live, by_file_post)
+        if n_post != stats["n_lines"] or n_post != n_docs + n_recap:
+            raise RuntimeError(
+                f"a46: compacted index holds {n_post} lines, compactor read "
+                f"{stats['n_lines']}, union is {n_docs} + {n_recap}"
+            )
 
-    with open(os.path.join(live, "cluster.idx"), "rb") as f:
-        by_file_pre = cluster_entries_by_file(parse_cluster_idx(f.read()))
-    if len(by_file_pre) != 2:
-        raise RuntimeError(
-            f"a46: pre-compaction index has {len(by_file_pre)} files"
-        )
-    _pre_blocks, pre_ans = answers(by_file_pre)
-    pre_rows = {
-        r["doc_id"]: r
-        for r in pre_ans.collect()
-    }
+        post_blocks, post_ans = answers(by_file_post, probes)
+        post = persist(post_ans)
+        n_probes = probes.count()
+        n_touched = post_blocks.count()
+        if n_touched > 2 * n_probes:
+            raise RuntimeError(
+                f"a46: {n_touched} blocks for {n_probes} probes after "
+                "compaction — the single-file ladder bound regressed"
+            )
+        # field-for-field: every probe answers identically before/after
+        # (caps, latest ts, digest, member location — lines moved between
+        # block files, members never moved)
+        mismatches = 0
+        post_rows = {r["doc_id"]: r for r in post.collect()}
+        if set(post_rows) != set(pre_rows):
+            mismatches = -1
+        else:
+            for d, r in post_rows.items():
+                pr = pre_rows[d]
+                if any(
+                    r[c] != pr[c]
+                    for c in ("caps", "ts", "digest", "filename", "offset",
+                              "length")
+                ):
+                    mismatches += 1
+        if mismatches:
+            raise RuntimeError(
+                f"a46: {mismatches} probe answers changed across compaction"
+            )
 
-    # --- compact ---
-    stats = compact_zipnum(live)
-    if stats["n_files_before"] != 2:
-        raise RuntimeError("a46: compaction saw an unexpected file set")
-    with open(os.path.join(live, "cluster.idx"), "rb") as f:
-        by_file_post = cluster_entries_by_file(parse_cluster_idx(f.read()))
-    if set(by_file_post) != {"index.zipnum.gz"}:
-        raise RuntimeError(
-            f"a46: compaction left {sorted(by_file_post)} on disk"
+        # fetch through the COMPACTED index: routing derives from the
+        # line's timestamp (Feb -> the new crawl's shards, Jan -> base)
+        winners = post.select(
+            "doc_id", "caps", "ts", "digest",
+            F.when(F.col("ts").startswith("202402"), F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("prec"),
+            "filename", "offset", "length",
         )
-    if os.path.exists(os.path.join(live, up["delta_file"])):
-        raise RuntimeError("a46: the delta generation was not removed")
-    # line-count preservation pin, distributed
-    n_docs, n_recap = docs.agg(
-        F.count(F.lit(1)),
-        F.sum(F.when(F.col("doc_id") % 5 == 0, 1).otherwise(0)),
-    ).collect()[0]
-    n_post = _mi_count_lines(spark, live, by_file_post)
-    if n_post != stats["n_lines"] or n_post != n_docs + n_recap:
-        raise RuntimeError(
-            f"a46: compacted index holds {n_post} lines, compactor read "
-            f"{stats['n_lines']}, union is {n_docs} + {n_recap}"
+        warc_dirs = {0: a_warc, 1: b_dir}
+        fetched = persist(_routed_fetch(winners, warc_dirs, carry=("caps",)))
+        got = fetched.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
+        ).collect()[0]
+        want_bytes = post.agg(F.sum("length")).collect()[0][0]
+        if got["n"] != n_probes or got["br"] != want_bytes:
+            raise RuntimeError(
+                f"a46: fetched {got['n']}/{n_probes} members, {got['br']} "
+                f"bytes vs indexed {want_bytes}"
+            )
+        agg = fetched.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.when(F.col("caps") > 1, 1).otherwise(0)).alias(
+                "n_recaptured"
+            ),
+            F.sum("n_chars").alias("chars_latest"),
         )
-
-    post_blocks, post_ans = answers(by_file_post)
-    post = post_ans.persist()
-    n_probes = probes.count()
-    n_touched = post_blocks.count()
-    if n_touched > 2 * n_probes:
-        post.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a46: {n_touched} blocks for {n_probes} probes after "
-            "compaction — the single-file ladder bound regressed"
-        )
-    # field-for-field: every probe answers identically before/after
-    # (caps, latest ts, digest, member location — lines moved between
-    # block files, members never moved)
-    mismatches = 0
-    post_rows = {r["doc_id"]: r for r in post.collect()}
-    if set(post_rows) != set(pre_rows):
-        mismatches = -1
-    else:
-        for d, r in post_rows.items():
-            pr = pre_rows[d]
-            if any(
-                r[c] != pr[c]
-                for c in ("caps", "ts", "digest", "filename", "offset",
-                          "length")
-            ):
-                mismatches += 1
-    if mismatches:
-        post.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a46: {mismatches} probe answers changed across compaction"
-        )
-
-    # fetch through the COMPACTED index: routing derives from the
-    # line's timestamp (Feb -> the new crawl's shards, Jan -> base)
-    winners = post.select(
-        "doc_id", "caps", "ts", "digest",
-        F.when(F.col("ts").startswith("202402"), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("prec"),
-        "filename", "offset", "length",
-    )
-    warc_dirs = {0: a_warc, 1: b_dir}
-    fetched = _mi_routed_fetch(winners, warc_dirs, carry=("caps",)).persist()
-    got = fetched.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
-    ).collect()[0]
-    want_bytes = post.agg(F.sum("length")).collect()[0][0]
-    if got["n"] != n_probes or got["br"] != want_bytes:
-        fetched.unpersist()
-        post.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a46: fetched {got['n']}/{n_probes} members, {got['br']} "
-            f"bytes vs indexed {want_bytes}"
-        )
-    agg = fetched.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col("caps") > 1, 1).otherwise(0)).alias(
-            "n_recaptured"
-        ),
-        F.sum("n_chars").alias("chars_latest"),
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
-    post.unpersist()
-    probes.unpersist()
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 
@@ -9257,10 +8376,9 @@ def a47_retention_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from tectonic_spark.operators.cdxj import (
-        cluster_entries_by_file,
-        fetch_member,
         incremental_zipnum_update,
-        parse_cluster_idx,
+        index_blocks,
+        index_lines,
         retain_zipnum,
     )
     from tectonic_spark.tables import table
@@ -9275,181 +8393,134 @@ def a47_retention_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.copyfile(
             os.path.join(a_idx_dir, fname), os.path.join(live, fname)
         )
-    delta_lines: list[str] = []
-    with open(os.path.join(b_dir, "cluster.idx"), "rb") as f:
-        b_cluster = parse_cluster_idx(f.read())
-    with open(os.path.join(b_dir, "index.zipnum.gz"), "rb") as f:
-        for e in b_cluster:
-            delta_lines.extend(
-                fetch_member(f, e["offset"], e["length"])
-                .decode("utf-8")
-                .splitlines()
-            )
-    incremental_zipnum_update(live, sorted(delta_lines))
+    incremental_zipnum_update(live, sorted(index_lines(b_dir)))
 
     docs = table(spark, sf_dir, "documents")
-    probes = (
-        docs.filter(F.col("doc_id") % 37 == 17)
-        .select(
-            "doc_id",
-            F.concat(
-                F.lit("example,"), F.col("source"), F.lit(")/doc/"),
-                F.col("doc_id"),
-            ).alias("key"),
-        )
-        .persist()
-    )
 
-    def answers(by_file):
+    def answers(by_file, probes):
         prec = {f: (0 if f == "index.zipnum.gz" else 1) for f in by_file}
-        blocks = _mi_blocks_df(spark, by_file, probes)
-        entries = _mi_entries_df(spark, live, blocks, prec)
-        return (
-            entries.join(probes, "key", "inner")
-            .groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("caps"),
-                F.max(
-                    F.struct("ts", "digest", "filename", "offset", "length")
-                ).alias("w"),
+        entries = _entries_df(live, _blocks_df(by_file, probes), prec)
+        return _latest_capture(entries, probes)
+
+    with _persisting() as persist:
+        probes = persist(
+            docs.filter(F.col("doc_id") % 37 == 17).select("doc_id", _doc_key())
+        )
+        by_file_pre = index_blocks(live)
+        if len(by_file_pre) != 2:
+            raise RuntimeError(
+                f"a47: pre-retention index has {len(by_file_pre)} files"
             )
-            .select(
-                "doc_id", "caps",
-                F.col("w.ts").alias("ts"),
-                F.col("w.digest").alias("digest"),
-                F.col("w.filename").alias("filename"),
-                F.col("w.offset").alias("offset"),
-                F.col("w.length").alias("length"),
+        pre_rows = {
+            r["doc_id"]: r for r in answers(by_file_pre, probes).collect()
+        }
+
+        # --- retention: Feb-1 cutoff expires superseded Jan captures ---
+        stats = retain_zipnum(live, cutoff_ts="20240201000000")
+        n_docs_total, n_recap_total = docs.agg(
+            F.count(F.lit(1)),
+            F.sum(F.when(F.col("doc_id") % 5 == 0, 1).otherwise(0)),
+        ).collect()[0]
+        if (
+            stats["n_before"] != n_docs_total + n_recap_total
+            or stats["n_expired"] != n_recap_total
+            or stats["n_retained"] != n_docs_total
+        ):
+            raise RuntimeError(
+                f"a47: retention stats {stats} vs corpus "
+                f"({n_docs_total} docs, {n_recap_total} recaptures)"
+            )
+        by_file_post = index_blocks(live)
+        if set(by_file_post) != {"index.zipnum.gz"}:
+            raise RuntimeError(
+                f"a47: retention left {sorted(by_file_post)} on disk"
+            )
+        n_post = _count_lines(spark, live, by_file_post)
+        if n_post != n_docs_total:
+            raise RuntimeError(
+                f"a47: retained index holds {n_post} lines, want "
+                f"{n_docs_total}"
+            )
+
+        # the audit sidecar, read back DISTRIBUTED: every expired line is
+        # a January capture of a d%5==0 key, exactly one per recaptured doc
+        expired = (
+            spark.read.text(os.path.join(live, stats["expired_file"]))
+            .withColumn("key", F.split(F.col("value"), " ").getItem(0))
+            .withColumn("ets", F.split(F.col("value"), " ").getItem(1))
+            .withColumn(
+                "doc_id",
+                F.regexp_extract(F.col("key"), r"/doc/(\d+)$", 1).cast("long"),
             )
         )
+        bad_expired = expired.filter(
+            (F.col("doc_id") % 5 != 0) | ~F.col("ets").startswith("202401")
+        ).count()
+        n_expired_lines, n_expired_keys = expired.agg(
+            F.count(F.lit(1)), F.countDistinct("doc_id")
+        ).collect()[0]
+        if bad_expired or n_expired_lines != n_recap_total or (
+            n_expired_keys != n_recap_total
+        ):
+            raise RuntimeError(
+                f"a47: audit sidecar carries {n_expired_lines} lines / "
+                f"{n_expired_keys} keys ({bad_expired} policy violations), "
+                f"want {n_recap_total}"
+            )
 
-    with open(os.path.join(live, "cluster.idx"), "rb") as f:
-        by_file_pre = cluster_entries_by_file(parse_cluster_idx(f.read()))
-    if len(by_file_pre) != 2:
-        raise RuntimeError(
-            f"a47: pre-retention index has {len(by_file_pre)} files"
-        )
-    pre_rows = {r["doc_id"]: r for r in answers(by_file_pre).collect()}
+        post = persist(answers(by_file_post, probes))
+        n_probes = probes.count()
+        # post-retention: every probe answers once, with the SAME latest
+        # capture it had before retention (expiry never changes winners)
+        post_rows = {r["doc_id"]: r for r in post.collect()}
+        mismatches = 0
+        if set(post_rows) != set(pre_rows):
+            mismatches = -1
+        else:
+            for d, r in post_rows.items():
+                pr = pre_rows[d]
+                want_caps = 2 if d % 5 == 0 else 1
+                if (
+                    pr["caps"] != want_caps
+                    or r["caps"] != 1
+                    or any(
+                        r[c] != pr[c]
+                        for c in ("ts", "digest", "filename", "offset",
+                                  "length")
+                    )
+                ):
+                    mismatches += 1
+        if mismatches:
+            raise RuntimeError(
+                f"a47: {mismatches} probe answers drifted across retention"
+            )
 
-    # --- retention: Feb-1 cutoff expires superseded Jan captures ---
-    stats = retain_zipnum(live, cutoff_ts="20240201000000")
-    n_docs_total, n_recap_total = docs.agg(
-        F.count(F.lit(1)),
-        F.sum(F.when(F.col("doc_id") % 5 == 0, 1).otherwise(0)),
-    ).collect()[0]
-    if (
-        stats["n_before"] != n_docs_total + n_recap_total
-        or stats["n_expired"] != n_recap_total
-        or stats["n_retained"] != n_docs_total
-    ):
-        raise RuntimeError(
-            f"a47: retention stats {stats} vs corpus "
-            f"({n_docs_total} docs, {n_recap_total} recaptures)"
+        feb = F.when(F.col("ts").startswith("202402"), F.lit(1)).otherwise(
+            F.lit(0)
         )
-    with open(os.path.join(live, "cluster.idx"), "rb") as f:
-        by_file_post = cluster_entries_by_file(parse_cluster_idx(f.read()))
-    if set(by_file_post) != {"index.zipnum.gz"}:
-        raise RuntimeError(
-            f"a47: retention left {sorted(by_file_post)} on disk"
+        winners = post.select(
+            "doc_id", feb.alias("expired_one"), "ts", "digest",
+            feb.alias("prec"), "filename", "offset", "length",
         )
-    n_post = _mi_count_lines(spark, live, by_file_post)
-    if n_post != n_docs_total:
-        raise RuntimeError(
-            f"a47: retained index holds {n_post} lines, want "
-            f"{n_docs_total}"
+        warc_dirs = {0: a_warc, 1: b_dir}
+        fetched = persist(
+            _routed_fetch(winners, warc_dirs, carry=("expired_one",))
         )
-
-    # the audit sidecar, read back DISTRIBUTED: every expired line is
-    # a January capture of a d%5==0 key, exactly one per recaptured doc
-    expired = (
-        spark.read.text(os.path.join(live, stats["expired_file"]))
-        .withColumn("key", F.split(F.col("value"), " ").getItem(0))
-        .withColumn("ets", F.split(F.col("value"), " ").getItem(1))
-        .withColumn(
-            "doc_id",
-            F.regexp_extract(F.col("key"), r"/doc/(\d+)$", 1).cast("long"),
+        got = fetched.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
+        ).collect()[0]
+        want_bytes = post.agg(F.sum("length")).collect()[0][0]
+        if got["n"] != n_probes or got["br"] != want_bytes:
+            raise RuntimeError(
+                f"a47: fetched {got['n']}/{n_probes} members, {got['br']} "
+                f"bytes vs indexed {want_bytes}"
+            )
+        agg = fetched.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("expired_one").alias("n_expired"),
+            F.sum("n_chars").alias("chars_latest"),
         )
-    )
-    bad_expired = expired.filter(
-        (F.col("doc_id") % 5 != 0) | ~F.col("ets").startswith("202401")
-    ).count()
-    n_expired_lines, n_expired_keys = expired.agg(
-        F.count(F.lit(1)), F.countDistinct("doc_id")
-    ).collect()[0]
-    if bad_expired or n_expired_lines != n_recap_total or (
-        n_expired_keys != n_recap_total
-    ):
-        raise RuntimeError(
-            f"a47: audit sidecar carries {n_expired_lines} lines / "
-            f"{n_expired_keys} keys ({bad_expired} policy violations), "
-            f"want {n_recap_total}"
-        )
-
-    post = answers(by_file_post).persist()
-    n_probes = probes.count()
-    # post-retention: every probe answers once, with the SAME latest
-    # capture it had before retention (expiry never changes winners)
-    post_rows = {r["doc_id"]: r for r in post.collect()}
-    mismatches = 0
-    if set(post_rows) != set(pre_rows):
-        mismatches = -1
-    else:
-        for d, r in post_rows.items():
-            pr = pre_rows[d]
-            want_caps = 2 if d % 5 == 0 else 1
-            if (
-                pr["caps"] != want_caps
-                or r["caps"] != 1
-                or any(
-                    r[c] != pr[c]
-                    for c in ("ts", "digest", "filename", "offset",
-                              "length")
-                )
-            ):
-                mismatches += 1
-    if mismatches:
-        post.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a47: {mismatches} probe answers drifted across retention"
-        )
-
-    winners = post.select(
-        "doc_id",
-        F.when(F.col("ts").startswith("202402"), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("expired_one"),
-        "ts", "digest",
-        F.when(F.col("ts").startswith("202402"), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("prec"),
-        "filename", "offset", "length",
-    )
-    warc_dirs = {0: a_warc, 1: b_dir}
-    fetched = _mi_routed_fetch(
-        winners, warc_dirs, carry=("expired_one",)
-    ).persist()
-    got = fetched.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
-    ).collect()[0]
-    want_bytes = post.agg(F.sum("length")).collect()[0][0]
-    if got["n"] != n_probes or got["br"] != want_bytes:
-        fetched.unpersist()
-        post.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a47: fetched {got['n']}/{n_probes} members, {got['br']} "
-            f"bytes vs indexed {want_bytes}"
-        )
-    agg = fetched.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("expired_one").alias("n_expired"),
-        F.sum("n_chars").alias("chars_latest"),
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
-    post.unpersist()
-    probes.unpersist()
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 
@@ -9486,17 +8557,8 @@ def a48_cdx_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
-    from tectonic_spark.operators.cdxj import (
-        cluster_entries_by_file,
-        parse_cluster_idx,
-    )
+    from tectonic_spark.operators.cdxj import block_extents, index_blocks
     from tectonic_spark.tables import table
 
     idx_dir, warc_dir, _nb = _zipnum_src(sf_dir)
@@ -9504,31 +8566,13 @@ def a48_cdx_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
 
-    with open(os.path.join(idx_dir, "cluster.idx"), "rb") as f:
-        by_file = cluster_entries_by_file(parse_cluster_idx(f.read()))
-    n_lines_idx = _mi_count_lines(spark, idx_dir, by_file)
-    blocks = [
-        (fname, e["offset"], e["length"])
-        for fname, es in by_file.items()
-        for e in es
-    ]
+    by_file = index_blocks(idx_dir)
+    n_lines_idx = _count_lines(spark, idx_dir, by_file)
     n_rows = len(_docs_rows(sf_dir))
     n_shards = max(4, n_rows // 15000)
-    bschema = StructType(
-        [
-            StructField("filename", StringType(), True),
-            StructField("offset", LongType(), True),
-            StructField("length", LongType(), True),
-        ]
-    )
-    bdf = spark.createDataFrame(blocks, bschema).repartition(n_shards)
-
-    eschema = StructType(
-        [
-            StructField("shard", StringType(), True),
-            StructField("n_lines", LongType(), True),
-        ]
-    )
+    bdf = spark.createDataFrame(
+        block_extents(by_file), "filename string, offset long, length long"
+    ).repartition(n_shards)
 
     def export(batches):
         import os as _os
@@ -9537,27 +8581,13 @@ def a48_cdx_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         import pandas as pd
 
-        from tectonic_spark.operators.cdxj import (
-            cdxj_to_cdx11,
-            fetch_member,
-        )
+        from tectonic_spark.operators.cdxj import cdxj_to_cdx11, read_blocks
 
         lines: list[str] = []
         for pdf in batches:
-            by_f: dict = {}
-            for r in pdf.itertuples(index=False):
-                by_f.setdefault(r.filename, []).append(
-                    (int(r.offset), int(r.length))
-                )
-            for fname, extents in by_f.items():
-                extents.sort()
-                with open(_os.path.join(idx_dir, fname), "rb") as f:
-                    for off, length in extents:
-                        lines.extend(
-                            fetch_member(f, off, length)
-                            .decode("utf-8")
-                            .splitlines()
-                        )
+            extents = sorted(pdf.itertuples(index=False, name=None))
+            for _fname, block in read_blocks(idx_dir, extents):
+                lines.extend(block)
         if not lines:
             yield pd.DataFrame([], columns=["shard", "n_lines"])
             return
@@ -9569,7 +8599,7 @@ def a48_cdx_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
         _os.replace(tmp, _os.path.join(out, name))
         yield pd.DataFrame([(name, len(lines))], columns=["shard", "n_lines"])
 
-    exp = bdf.mapInPandas(export, eschema).agg(
+    exp = bdf.mapInPandas(export, "shard string, n_lines long").agg(
         F.count(F.lit(1)).alias("n_shards"),
         F.sum("n_lines").alias("n_lines"),
     ).collect()[0]
@@ -9581,8 +8611,6 @@ def a48_cdx_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # read back: every shard is a VALID CDX file (header + 11 fields),
     # parsed distributed
-    lschema = StructType([StructField("line", StringType(), True)])
-
     def parse_back(batches):
         import pandas as pd
 
@@ -9594,122 +8622,74 @@ def a48_cdx_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.extend(cdx11_to_cdxj(text))
             yield pd.DataFrame({"line": rows})
 
-    shards = spark.read.text(out, wholetext=True)
-    parsed = shards.mapInPandas(parse_back, lschema)
-
     # original lines, distributed, for the bidirectional byte pin
     def read_lines(batches):
-        import os as _os
-
         import pandas as pd
 
-        from tectonic_spark.operators.cdxj import fetch_member
+        from tectonic_spark.operators.cdxj import read_blocks
 
         for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(_os.path.join(idx_dir, r.filename), "rb") as f:
-                    rows.extend(
-                        fetch_member(f, int(r.offset), int(r.length))
-                        .decode("utf-8")
-                        .splitlines()
-                    )
-            yield pd.DataFrame({"line": rows})
+            blocks = read_blocks(idx_dir, pdf.itertuples(index=False))
+            yield pd.DataFrame({"line": [ln for _f, b in blocks for ln in b]})
 
-    orig = bdf.mapInPandas(read_lines, lschema)
-    parsed = parsed.persist()
-    d1 = parsed.exceptAll(orig).count()
-    d2 = orig.exceptAll(parsed).count()
-    if d1 or d2:
-        parsed.unpersist()
-        raise RuntimeError(
-            f"a48: round trip drifted ({d1} lines not in original, "
-            f"{d2} lines lost)"
-        )
+    with _persisting() as persist:
+        shards = spark.read.text(out, wholetext=True)
+        parsed = persist(shards.mapInPandas(parse_back, "line string"))
+        orig = bdf.mapInPandas(read_lines, "line string")
+        d1 = parsed.exceptAll(orig).count()
+        d2 = orig.exceptAll(parsed).count()
+        if d1 or d2:
+            raise RuntimeError(
+                f"a48: round trip drifted ({d1} lines not in original, "
+                f"{d2} lines lost)"
+            )
 
-    # probe lookups against the PARSED-BACK entries, JVM-side fields
-    docs = table(spark, sf_dir, "documents")
-    probes = (
-        docs.filter(F.col("doc_id") % 41 == 19)
-        .select(
-            "doc_id",
-            F.concat(
-                F.lit("example,"), F.col("source"), F.lit(")/doc/"),
-                F.col("doc_id"),
-            ).alias("key"),
+        # probe lookups against the PARSED-BACK entries, JVM-side fields
+        docs = table(spark, sf_dir, "documents")
+        probes = persist(
+            docs.filter(F.col("doc_id") % 41 == 19).select("doc_id", _doc_key())
         )
-        .persist()
-    )
-    entries = parsed.select(
-        F.split(F.col("line"), " ").getItem(0).alias("key"),
-        F.split(F.col("line"), " ").getItem(1).alias("ts"),
-        F.regexp_extract(F.col("line"), r"^\S+ \S+ (.*)$", 1).alias("blob"),
-    ).select(
-        "key", "ts",
-        F.get_json_object("blob", "$.digest").alias("digest"),
-        F.get_json_object("blob", "$.filename").alias("filename"),
-        F.get_json_object("blob", "$.offset").cast("long").alias("offset"),
-        F.get_json_object("blob", "$.length").cast("long").alias("length"),
-    )
-    matched = (
-        entries.join(probes, "key", "inner")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("caps"),
-            F.max(
-                F.struct("ts", "digest", "filename", "offset", "length")
-            ).alias("w"),
+        entries = parsed.select(
+            F.split(F.col("line"), " ").getItem(0).alias("key"),
+            F.split(F.col("line"), " ").getItem(1).alias("ts"),
+            F.regexp_extract(F.col("line"), r"^\S+ \S+ (.*)$", 1).alias("blob"),
+        ).select(
+            "key", "ts",
+            F.get_json_object("blob", "$.digest").alias("digest"),
+            F.get_json_object("blob", "$.filename").alias("filename"),
+            F.get_json_object("blob", "$.offset").cast("long").alias("offset"),
+            F.get_json_object("blob", "$.length").cast("long").alias("length"),
         )
-        .select(
-            "doc_id", "caps",
-            F.col("w.ts").alias("ts"),
-            F.col("w.digest").alias("digest"),
-            F.col("w.filename").alias("filename"),
-            F.col("w.offset").alias("offset"),
-            F.col("w.length").alias("length"),
+        matched = persist(_latest_capture(entries, probes))
+        n_probes = probes.count()
+        n_matched, n_multi = matched.agg(
+            F.count(F.lit(1)),
+            F.sum(F.when(F.col("caps") != 1, 1).otherwise(0)),
+        ).collect()[0]
+        if n_matched != n_probes or n_multi:
+            raise RuntimeError(
+                f"a48: {n_matched}/{n_probes} probes matched, {n_multi} "
+                "with duplicate captures"
+            )
+        winners = matched.select(
+            "doc_id", "caps", "ts", "digest",
+            F.lit(0).alias("prec"), "filename", "offset", "length",
         )
-        .persist()
-    )
-    n_probes = probes.count()
-    n_matched, n_multi = matched.agg(
-        F.count(F.lit(1)),
-        F.sum(F.when(F.col("caps") != 1, 1).otherwise(0)),
-    ).collect()[0]
-    if n_matched != n_probes or n_multi:
-        matched.unpersist()
-        parsed.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a48: {n_matched}/{n_probes} probes matched, {n_multi} "
-            "with duplicate captures"
+        fetched = persist(_routed_fetch(winners, {0: warc_dir}))
+        got = fetched.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
+        ).collect()[0]
+        want_bytes = matched.agg(F.sum("length")).collect()[0][0]
+        if got["n"] != n_probes or got["br"] != want_bytes:
+            raise RuntimeError(
+                f"a48: fetched {got['n']}/{n_probes} members, {got['br']} "
+                f"bytes vs indexed {want_bytes}"
+            )
+        agg = fetched.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("chars"),
         )
-    winners = matched.select(
-        "doc_id", "caps", "ts", "digest",
-        F.lit(0).alias("prec"), "filename", "offset", "length",
-    )
-    fetched = _mi_routed_fetch(winners, {0: warc_dir}).persist()
-    got = fetched.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
-    ).collect()[0]
-    want_bytes = matched.agg(F.sum("length")).collect()[0][0]
-    if got["n"] != n_probes or got["br"] != want_bytes:
-        fetched.unpersist()
-        matched.unpersist()
-        parsed.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"a48: fetched {got['n']}/{n_probes} members, {got['br']} "
-            f"bytes vs indexed {want_bytes}"
-        )
-    agg = fetched.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("chars"),
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
-    matched.unpersist()
-    parsed.unpersist()
-    probes.unpersist()
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 
@@ -9756,9 +8736,8 @@ def s18_stream_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from tectonic_spark.operators.cdxj import (
-        cluster_entries_by_file,
         incremental_zipnum_update,
-        parse_cluster_idx,
+        index_blocks,
         retain_zipnum,
     )
     from tectonic_spark.tables import table
@@ -9783,10 +8762,6 @@ def s18_stream_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     tombstones: set[tuple[str, str, str]] = set()
 
-    def n_index_files() -> int:
-        with open(os.path.join(live, "cluster.idx"), "rb") as f:
-            return len(cluster_entries_by_file(parse_cluster_idx(f.read())))
-
     def run_retention(mid_stream: bool) -> None:
         import gzip as _gzip
 
@@ -9795,7 +8770,7 @@ def s18_stream_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         totals["expired"] += stats["n_expired"]
         if mid_stream:
             totals["mid_stream_runs"] += 1
-        if n_index_files() != 1:
+        if len(index_blocks(live)) != 1:
             raise RuntimeError(
                 "s18: retention left a multi-file index behind"
             )
@@ -9830,7 +8805,7 @@ def s18_stream_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         totals["dropped"] += stats["n_dropped"]
         totals["tombstoned"] += stats["n_tombstoned"]
         # maintenance policy: two live delta generations -> retain
-        if n_index_files() >= 3:
+        if len(index_blocks(live)) >= 3:
             run_retention(mid_stream=True)
 
     stream = (
@@ -9862,11 +8837,10 @@ def s18_stream_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         raise RuntimeError(f"s18: stream totals drifted: {totals}")
 
-    with open(os.path.join(live, "cluster.idx"), "rb") as f:
-        by_file = cluster_entries_by_file(parse_cluster_idx(f.read()))
+    by_file = index_blocks(live)
     if set(by_file) != {"index.zipnum.gz"}:
         raise RuntimeError(f"s18: final index files {sorted(by_file)}")
-    n_lines = _mi_count_lines(spark, live, by_file)
+    n_lines = _count_lines(spark, live, by_file)
     if n_lines != n_docs:
         raise RuntimeError(
             f"s18: retained index holds {n_lines} lines, want {n_docs}"
@@ -9900,83 +8874,45 @@ def s18_stream_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"keys ({bad} policy violations), want {n_recap}"
         )
 
-    probes = (
-        docs.filter(F.col("doc_id") % 53 == 29)
-        .select(
-            "doc_id",
-            F.concat(
-                F.lit("example,"), F.col("source"), F.lit(")/doc/"),
-                F.col("doc_id"),
-            ).alias("key"),
+    feb = F.when(F.col("ts").startswith("202402"), F.lit(1)).otherwise(F.lit(0))
+    with _persisting() as persist:
+        probes = persist(
+            docs.filter(F.col("doc_id") % 53 == 29).select("doc_id", _doc_key())
         )
-        .persist()
-    )
-    prec = {f: 0 for f in by_file}
-    blocks = _mi_blocks_df(spark, by_file, probes)
-    entries = _mi_entries_df(spark, live, blocks, prec)
-    winners = (
-        entries.join(probes, "key", "inner")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("caps"),
-            F.max(
-                F.struct("ts", "digest", "filename", "offset", "length")
-            ).alias("w"),
+        entries = _entries_df(
+            live, _blocks_df(by_file, probes), {f: 0 for f in by_file}
         )
-        .select(
-            "doc_id", "caps",
-            F.col("w.ts").alias("ts"),
-            F.col("w.digest").alias("digest"),
-            F.col("w.filename").alias("filename"),
-            F.col("w.offset").alias("offset"),
-            F.col("w.length").alias("length"),
+        winners = persist(_latest_capture(entries, probes))
+        n_probes = probes.count()
+        n_bad_caps = winners.filter(F.col("caps") != 1).count()
+        if winners.count() != n_probes or n_bad_caps:
+            raise RuntimeError(
+                f"s18: {n_bad_caps} probes answered with history that "
+                "retention should have pruned"
+            )
+        routed = winners.select(
+            "doc_id", "caps", "ts", "digest", feb.alias("expired_one"),
+            feb.alias("prec"), "filename", "offset", "length",
         )
-        .persist()
-    )
-    n_probes = probes.count()
-    n_bad_caps = winners.filter(F.col("caps") != 1).count()
-    if winners.count() != n_probes or n_bad_caps:
-        winners.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"s18: {n_bad_caps} probes answered with history that "
-            "retention should have pruned"
+        warc_dirs = {0: a_warc, 1: b_dir}
+        fetched = persist(
+            _routed_fetch(routed, warc_dirs, carry=("expired_one",))
         )
-    routed = winners.select(
-        "doc_id", "caps", "ts", "digest",
-        F.when(F.col("ts").startswith("202402"), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("expired_one"),
-        F.when(F.col("ts").startswith("202402"), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("prec"),
-        "filename", "offset", "length",
-    )
-    warc_dirs = {0: a_warc, 1: b_dir}
-    fetched = _mi_routed_fetch(
-        routed, warc_dirs, carry=("expired_one",)
-    ).persist()
-    got = fetched.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
-    ).collect()[0]
-    want_bytes = winners.agg(F.sum("length")).collect()[0][0]
-    if got["n"] != n_probes or got["br"] != want_bytes:
-        fetched.unpersist()
-        winners.unpersist()
-        probes.unpersist()
-        raise RuntimeError(
-            f"s18: fetched {got['n']}/{n_probes} members, {got['br']} "
-            f"bytes vs indexed {want_bytes}"
+        got = fetched.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("bytes_read").alias("br")
+        ).collect()[0]
+        want_bytes = winners.agg(F.sum("length")).collect()[0][0]
+        if got["n"] != n_probes or got["br"] != want_bytes:
+            raise RuntimeError(
+                f"s18: fetched {got['n']}/{n_probes} members, {got['br']} "
+                f"bytes vs indexed {want_bytes}"
+            )
+        agg = fetched.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("expired_one").alias("n_expired"),
+            F.sum("n_chars").alias("chars_latest"),
         )
-    agg = fetched.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("expired_one").alias("n_expired"),
-        F.sum("n_chars").alias("chars_latest"),
-    )
-    agg_rows = agg.collect()
-    fetched.unpersist()
-    winners.unpersist()
-    probes.unpersist()
+        agg_rows = agg.collect()
     return spark.createDataFrame(agg_rows, agg.schema)
 
 

@@ -281,6 +281,7 @@ class TestIncrementalUpdate:
             cluster_entries_by_file,
             fetch_member,
             incremental_zipnum_update,
+            index_lines,
             multi_zipnum_blocks,
             parse_cluster_idx,
         )
@@ -313,6 +314,14 @@ class TestIncrementalUpdate:
         entries = parse_cluster_idx((tmp_path / "cluster.idx").read_bytes())
         by_file = cluster_entries_by_file(entries)
         assert set(by_file) == {"index.zipnum.gz", "delta-001.zipnum.gz"}
+        # reading the whole updated index returns the base lines and the
+        # surviving delta lines, each once: block files in the order
+        # cluster.idx first names them, each file's blocks in offset order
+        per_file = {"index.zipnum.gz": base, "delta-001.zipnum.gz": sorted(feb)}
+        file_order = list(dict.fromkeys(e["filename"] for e in entries))
+        assert index_lines(str(tmp_path)) == [
+            ln for f in file_order for ln in per_file[f]
+        ]
         all_lines = set(base) | set(feb)
         found = []
         handles = {

@@ -26,6 +26,21 @@ FAST_SUBSET = [
     "c03_lang_id",
     "c03_chunking",
     "c03_redaction",
+    # the CDXJ / ZipNum web-archive index family
+    "a30_cdxj_fetch",
+    "a36_zipnum_lookup",
+    "a38_temporal_index_lookup",
+    "a39_revisit_index_fetch",
+    "a41_surt_prefix_scan",
+    "a42_wayback_closest",
+    "a43_collection_merge",
+    "a44_incremental_index_update",
+    "a45_conflict_census",
+    "a46_index_compaction",
+    "a47_retention_expiry",
+    "a48_cdx_interchange",
+    "s17_stream_index_update",
+    "s18_stream_retention",
 ]
 
 
@@ -76,3 +91,21 @@ def test_chunking_covers_every_token(spark, sf_dir):
         .count()
     )
     assert bad == 0
+
+
+def test_index_query_failure_leaves_nothing_cached(spark, sf_dir, monkeypatch):
+    """A builder that raises after persisting still unpersists: a46 fails its
+    compaction check once ``probes`` and its pre-compaction answers exist."""
+    from tectonic_spark.operators import cdxj
+
+    real = cdxj.compact_zipnum
+
+    def wrong_file_count(index_dir, **kw):
+        return dict(real(index_dir, **kw), n_files_before=3)
+
+    monkeypatch.setattr(cdxj, "compact_zipnum", wrong_file_count)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    with pytest.raises(RuntimeError, match="compaction saw an unexpected file set"):
+        ops.REGISTRY["a46_index_compaction"].builder(spark, sf_dir)
+    assert cache.isEmpty()

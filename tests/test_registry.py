@@ -243,3 +243,64 @@ def test_operators_read_tables_only_through_table():
     for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
         problems += _uncached_table_reads(path.read_text(), path.name)
     assert problems == []
+
+
+# the ranged-read primitives of the zipnum format; operators read an index
+# or its members through cdxj.py's helpers (read_blocks, index_lines,
+# candidate_blocks, shard_members), never by calling these directly
+_ZIPNUM_PRIMITIVES = {"fetch_member", "zipnum_block_range", "multi_zipnum_blocks"}
+
+
+def _zipnum_primitive_calls(source: str, filename: str) -> list[str]:
+    """Lines of ``source`` that call a zipnum ranged-read primitive, by bare
+    name or as an attribute, at any nesting depth (closures included)."""
+    import ast
+
+    problems = []
+    for node in ast.walk(ast.parse(source, filename)):
+        if not isinstance(node, ast.Call):
+            continue
+        fn = node.func
+        name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+        if name in _ZIPNUM_PRIMITIVES:
+            problems.append((node.lineno, f"{filename}:{node.lineno}: {name}"))
+    return [p for _line, p in sorted(problems)]
+
+
+def test_zipnum_primitive_scan_flags_a_direct_call():
+    bad = (
+        "def q(spark, idx):\n"
+        "    def fetch_blocks(batches):\n"
+        "        from tectonic_spark.operators.cdxj import fetch_member\n"
+        "        for pdf in batches:\n"
+        "            yield fetch_member(f, 0, 10)\n"
+        "    lo, hi = cdxj.zipnum_block_range(keys, 'k')\n"
+        "    return multi_zipnum_blocks(by_file, 'k')\n"
+    )
+    good = (
+        "from tectonic_spark.operators.cdxj import fetch_member\n"
+        "def q(spark, idx):\n"
+        "    def fetch_blocks(batches):\n"
+        "        from tectonic_spark.operators.cdxj import read_blocks\n"
+        "        for pdf in batches:\n"
+        "            yield read_blocks(idx, pdf.itertuples(index=False))\n"
+        "    return candidate_blocks(by_file, ['fetch_member'])\n"
+    )
+    assert _zipnum_primitive_calls(bad, "bad.py") == [
+        "bad.py:5: fetch_member",
+        "bad.py:6: zipnum_block_range",
+        "bad.py:7: multi_zipnum_blocks",
+    ]
+    assert _zipnum_primitive_calls(good, "good.py") == []
+
+
+def test_operators_read_zipnum_only_through_cdxj():
+    """One ZipNum read path: outside cdxj.py no operator module ranged-reads
+    an index block or WARC member, or runs the block ladder, itself."""
+    import pathlib
+
+    problems = []
+    for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
+        if path.name != "cdxj.py":
+            problems += _zipnum_primitive_calls(path.read_text(), path.name)
+    assert problems == []
