@@ -15,8 +15,10 @@ Layering (see SURVEY.md §7):
 
 Importing the package does not import pyspark: :func:`get_spark` is loaded
 on first use, so L1 stays Spark-free. On Python < 3.13 it installs
-:mod:`tectonic_spark.zipimport_cache`, which every Spark Python worker that
-unpickles a tectonic reader thereby picks up.
+:mod:`tectonic_spark.zipimport_cache`. Sessions built by :func:`get_spark`
+start their Python workers from :mod:`tectonic_spark.worker_daemon`, which
+imports the package before it forks, so every worker picks the cache up,
+whatever kernel it runs.
 """
 
 import sys

@@ -606,8 +606,9 @@ def retain_zipnum(
     expired_file = "expired.cdxj.gz"
     tmp_e = os.path.join(index_dir, expired_file + ".retain")
     with open(tmp_e, "wb") as f:
+        # mtime=0: the sidecar's bytes depend on its lines alone
         f.write(_gzip.compress(("\n".join(expired) + "\n").encode("utf-8")
-                               if expired else b""))
+                               if expired else b"", mtime=0))
     zblob, zentries = write_zipnum(retained, block_lines=block_lines)
     tmp_z = os.path.join(index_dir, "index.zipnum.gz.retain")
     with open(tmp_z, "wb") as f:

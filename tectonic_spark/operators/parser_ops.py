@@ -1972,7 +1972,8 @@ def _docs_gz_mixed_src(sf_dir: str) -> str:
                 _write_atomic(os.path.join(src, f"part-{i}.jsonl"), body)
             else:
                 _write_atomic(
-                    os.path.join(src, f"part-{i}.jsonl.gz"), gzip.compress(body)
+                    os.path.join(src, f"part-{i}.jsonl.gz"),
+                    gzip.compress(body, mtime=0),
                 )
         _write_atomic(done, b"ok")
     return src
@@ -2100,7 +2101,7 @@ def _docs_zst_mixed_src(spark: SparkSession, sf_dir: str) -> str:
     )
     _write_atomic(
         os.path.join(tmp, "part-1.json.gz"),
-        gzip.compress(("\n".join(lines[half:]) + "\n").encode()),
+        gzip.compress(("\n".join(lines[half:]) + "\n").encode(), mtime=0),
     )
     # odd doc_ids ship as .zst, compressed task-side by the JVM writer
     from pyspark.sql import functions as F
@@ -6567,7 +6568,7 @@ def _docs_br_mixed_src(sf_dir: str) -> str:
             elif form == 2:
                 _write_atomic(
                     os.path.join(src, f"part-{i:03d}.jsonl.gz"),
-                    gzip.compress(body),
+                    gzip.compress(body, mtime=0),
                 )
             else:
                 _write_atomic(

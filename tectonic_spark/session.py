@@ -8,13 +8,41 @@ configuration is what we would set cluster-side, minus ``master``:
   1000-executor cluster this would be 2-3x total cores (AQE coalesces down).
 * Arrow enabled so Pandas-UDF exchange is vectorized, not pickled rows.
 * UTC session timezone so timestamp semantics match the DuckDB oracle.
+* Python workers fork from :mod:`tectonic_spark.worker_daemon`, which
+  freezes the daemon's heap before it forks, and reach the JVM over Unix
+  domain sockets where the socket path fits (:func:`python_worker_conf`).
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
+
+# Spark names each socket "<dir>/.<uuid4>.sock", and an AF_UNIX path holds
+# at most 107 bytes
+_SOCKET_NAME_BYTES = len("/.") + 36 + len(".sock")
+_SUN_PATH_MAX = 107
+
+
+def python_worker_conf() -> dict[str, str]:
+    """The confs that start Python workers from the frozen daemon and put
+    their sockets in ``tempfile.gettempdir()``.
+
+    Spark sets no ``TCP_NODELAY`` on its Python sockets, so over TCP a
+    task's first Arrow read can wait out the 40 ms delayed-ACK minimum; a
+    Unix socket has no such wait. Unix sockets are turned on only when the
+    temp directory is short enough for the socket path; otherwise workers
+    use TCP as before.
+    """
+    sock_dir = tempfile.gettempdir()
+    fits = len(os.fsencode(sock_dir)) + _SOCKET_NAME_BYTES <= _SUN_PATH_MAX
+    return {
+        "spark.python.daemon.module": "tectonic_spark.worker_daemon",
+        "spark.python.unix.domain.socket.dir": sock_dir,
+        "spark.python.unix.domain.socket.enabled": str(fits).lower(),
+    }
 
 
 def get_spark(
@@ -24,7 +52,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the SparkSession used by tests, bench, and the driver.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (falls back to ``*``).
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (falls back to ``*``);
+    ``extra_conf`` overrides any conf set here.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
     n_shuffle = os.environ.get("TECTONIC_SHUFFLE_PARTITIONS", "32")
@@ -49,7 +78,7 @@ def get_spark(
             os.environ.get("TECTONIC_FILTER_PUSHDOWN", "true"),
         )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**python_worker_conf(), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -18,6 +18,11 @@ nanosecond mtime), and a deleted one still empties the importer, exactly as
 the stdlib does. Python 3.13 only drops the cache
 there, so the package installs this on older versions only. This module
 imports nothing but the stdlib.
+
+``import tectonic_spark`` installs it, and :mod:`tectonic_spark.worker_daemon`
+imports the package before it forks any worker, so in a session built by
+``get_spark`` every Python worker has it, including workers that only run
+kernels pickled by value.
 """
 
 from __future__ import annotations

@@ -521,6 +521,24 @@ class TestRetention(TestIncrementalUpdate):
                 ).decode().splitlines()
         assert set(post) <= set(pre)  # never edits a surviving line
 
+    def test_expired_sidecar_is_reproducible(self, tmp_path, monkeypatch):
+        # two runs over the same input, a minute apart, write the same bytes:
+        # the gzip header carries no timestamp
+        import time
+
+        from tectonic_spark.operators.cdxj import retain_zipnum
+
+        sidecars = []
+        for run, clock in enumerate((1_700_000_000.0, 1_700_000_060.0)):
+            index_dir = tmp_path / f"run{run}"
+            index_dir.mkdir()
+            self._live(index_dir)
+            monkeypatch.setattr(time, "time", lambda clock=clock: clock)
+            retain_zipnum(str(index_dir), cutoff_ts="20240201000000", block_lines=32)
+            monkeypatch.undo()
+            sidecars.append((index_dir / "expired.cdxj.gz").read_bytes())
+        assert sidecars[0] == sidecars[1]
+
     def test_bad_cutoff_rejected(self, tmp_path):
         from tectonic_spark.operators.cdxj import retain_zipnum
 

@@ -304,3 +304,69 @@ def test_operators_read_zipnum_only_through_cdxj():
         if path.name != "cdxj.py":
             problems += _zipnum_primitive_calls(path.read_text(), path.name)
     assert problems == []
+
+
+def _session_builders(source: str, filename: str) -> list[str]:
+    """Lines of ``source`` that reach ``SparkSession.builder``, directly, as
+    ``pyspark.sql.SparkSession.builder`` or through an imported alias."""
+    import ast
+
+    tree = ast.parse(source, filename)
+    names = {"SparkSession"} | {
+        a.asname
+        for n in ast.walk(tree)
+        if isinstance(n, ast.ImportFrom)
+        for a in n.names
+        if a.name == "SparkSession" and a.asname
+    }
+    problems = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr == "builder":
+            v = node.value
+            name = v.attr if isinstance(v, ast.Attribute) else getattr(v, "id", None)
+            if name in names:
+                problems.append((node.lineno, f"{filename}:{node.lineno}: {name}.builder"))
+    return [p for _line, p in sorted(problems)]
+
+
+def test_session_builder_scan_flags_a_direct_builder():
+    bad = (
+        "from pyspark.sql import SparkSession\n"
+        "from pyspark.sql import SparkSession as SS\n"
+        "import pyspark\n"
+        "def main():\n"
+        "    spark = SparkSession.builder.master('local[2]').getOrCreate()\n"
+        "    b = SS.builder\n"
+        "    return pyspark.sql.SparkSession.builder.getOrCreate()\n"
+    )
+    good = (
+        "from tectonic_spark import get_spark\n"
+        "def main(spark):\n"
+        "    df = REGISTRY['b01_project_compute'].builder(spark, sf_dir)\n"
+        "    return get_spark(app_name='x', extra_conf={'k': 'v'})\n"
+    )
+    assert _session_builders(bad, "bad.py") == [
+        "bad.py:5: SparkSession.builder",
+        "bad.py:6: SS.builder",
+        "bad.py:7: SparkSession.builder",
+    ]
+    assert _session_builders(good, "good.py") == []
+
+
+def test_sessions_start_only_through_get_spark():
+    """Every session the package, its tools and bench.py start comes from
+    ``session.get_spark``, so each one gets the frozen worker daemon and the
+    Unix-socket conf."""
+    import pathlib
+
+    root = pathlib.Path(ops.__file__).parents[2]
+    paths = [
+        *(root / "tectonic_spark").rglob("*.py"),
+        *(root / "tools").glob("*.py"),
+        root / "bench.py",
+    ]
+    problems = []
+    for path in sorted(paths):
+        if path != root / "tectonic_spark" / "session.py":
+            problems += _session_builders(path.read_text(), str(path.relative_to(root)))
+    assert problems == []

@@ -3,7 +3,9 @@ re-reads a zip archive's directory only when the archive changed, and a
 changed or deleted archive behaves exactly as with the stdlib method. Also
 pins that importing the package (and L1) does not import pyspark, and that
 a real Spark executor worker, which imports pyspark from ``pyspark.zip``,
-stops re-reading it once it has imported the package."""
+stops re-reading it once it has imported the package, and that a worker
+forked by ``tectonic_spark.worker_daemon`` has the cache and a frozen heap
+even when its kernel, pickled by value, never imports the package."""
 
 from __future__ import annotations
 
@@ -94,15 +96,21 @@ def test_core_import_is_spark_free():
     subprocess.run([sys.executable, "-c", code], check=True)
 
 
-def test_executor_worker_stops_rereading_pyspark_zip(spark):
-    def reads_on_second_call(batches):
+def _worker_state(import_package: bool):
+    """A ``mapInArrow`` kernel, pickled by value (it is a closure), that
+    reports the worker's zip importers, the ``_read_directory`` calls of its
+    second ``importlib.invalidate_caches()``, and its gc state."""
+
+    def kernel(batches):
+        import gc
         import importlib
         import sys
         import zipimport
 
         import pyarrow as pa
 
-        import tectonic_spark  # noqa: F401 - installs the cache before 3.13
+        if import_package:
+            import tectonic_spark  # noqa: F401 - installs the cache before 3.13
 
         for _ in batches:
             pass
@@ -125,14 +133,55 @@ def test_executor_worker_stops_rereading_pyspark_zip(spark):
             isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
         )
         yield pa.RecordBatch.from_pydict(
-            {"zip_importers": [zip_importers], "second": [second]}
+            {
+                "zip_importers": [zip_importers],
+                "second": [second],
+                "frozen": [gc.get_freeze_count()],
+                "tracked": [len(gc.get_objects())],
+                # gc.get_objects() leaves out the frozen generation: a
+                # package module it does not list was imported before the
+                # daemon froze its heap and forked, whatever ran since in
+                # this reused worker
+                "package_frozen": [
+                    "tectonic_spark" in sys.modules
+                    and all(o is not sys.modules["tectonic_spark"] for o in gc.get_objects())
+                ],
+            }
         )
 
-    row = (
+    return kernel
+
+
+def _run_worker_state(spark, import_package: bool):
+    return (
         spark.range(1, numPartitions=1)
-        .mapInArrow(reads_on_second_call, "zip_importers long, second long")
+        .mapInArrow(
+            _worker_state(import_package),
+            "zip_importers long, second long, frozen long, tracked long, package_frozen boolean",
+        )
         .collect()[0]
     )
+
+
+def test_executor_worker_stops_rereading_pyspark_zip(spark):
+    row = _run_worker_state(spark, import_package=True)
+    if row.zip_importers == 0:
+        pytest.skip("executor workers do not import pyspark from a zip here")
+    assert row.second == 0
+
+
+def test_by_value_kernel_runs_in_a_frozen_worker(spark):
+    """A kernel pickled by value that never imports the package still finds
+    the zip cache installed, because the worker daemon imported the package
+    before it forked; and it runs from a frozen heap: the daemon's pre-fork
+    objects (~72k) sit in gc's permanent generation, so the full collection
+    a reused worker runs after every task no longer walks them."""
+    row = _run_worker_state(spark, import_package=False)
+    assert row.package_frozen
+    assert row.frozen > 0
+    # a worker's own objects: a few hundred after its first task, more once
+    # earlier tasks in the same worker imported operator modules
+    assert row.tracked < row.frozen // 2
     if row.zip_importers == 0:
         pytest.skip("executor workers do not import pyspark from a zip here")
     assert row.second == 0
