@@ -5,8 +5,10 @@ under the driver's DuckDB-oracle gate.
 Input fixtures are derived *deterministically* from the sf_dir's
 ``documents`` parquet (sorted by doc_id, fixed formatting), so the oracle
 can be phrased against the pre-registered ``documents`` view. Fixtures are
-cached under /tmp keyed by sf_dir and written atomically (os.replace), so
-concurrent builders converge on identical bytes.
+cached under ``$TMPDIR/tectonic_fixtures`` keyed by sf_dir. Every fixture
+directory is published through ``_published``: it is built in a private
+temporary directory and renamed into place once complete, so readers never
+see a partial fixture and concurrent builders converge on identical bytes.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ import contextlib
 import json
 import os
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -102,6 +105,46 @@ def _write_atomic(path: str, data: bytes) -> None:
         raise
 
 
+def _published(src: str, build: Callable[[str], None]) -> str:
+    """Publish the fixture directory ``src`` once and return it.
+
+    A ``src`` holding ``_DONE`` is returned at once. Otherwise
+    ``build(tmp)`` writes the fixture's files into a fresh private
+    ``src.tmp-<pid>``, which gets ``_DONE`` and is renamed to ``src``.
+    The temporary directory is removed on every exit, a failed build
+    included. A failed rename is accepted only when ``src/_DONE`` now
+    exists (a concurrent builder won). A ``src`` without ``_DONE`` is
+    left from an interrupted build: it is moved aside and the rename
+    retried once. Any other error propagates."""
+    import shutil
+
+    done = os.path.join(src, "_DONE")
+    if os.path.exists(done):
+        return src
+    tmp = f"{src}.tmp-{os.getpid()}"
+    stale = f"{tmp}-stale"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    try:
+        build(tmp)
+        _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
+        for attempt in range(2):
+            try:
+                os.rename(tmp, src)
+                break
+            except OSError:
+                if os.path.exists(done):
+                    break  # a concurrent builder won
+                if attempt or not os.path.isdir(src):
+                    raise
+                with contextlib.suppress(FileNotFoundError):
+                    os.rename(src, stale)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(stale, ignore_errors=True)
+    return src
+
+
 def documents_jsonl(sf_dir: str, corrupt_every: int = 0) -> str:
     """documents as JSONL; ``corrupt_every``>0 replaces rows whose
     doc_id %% corrupt_every == 0 with a malformed line (a6 fixture)."""
@@ -153,10 +196,8 @@ def documents_heterotype_dir(sf_dir: str) -> str:
     doc_id %% 3). Inference must sample beyond the first file (the spread
     sampler always includes first + last) and widen long→double→string to
     STRING, then coerce every file's cells to canonical JSON text."""
-    out = os.path.join(_fixture_dir(sf_dir), "documents_heterotype")
-    marker = os.path.join(out, "_DONE")
-    if not os.path.exists(marker):
-        os.makedirs(out, exist_ok=True)
+
+    def build(tmp: str) -> None:
         parts: list[list[str]] = [[], [], []]
         for doc_id, _text, lang, _source, n_chars in _docs_rows(sf_dir):
             k = doc_id % 3
@@ -174,11 +215,11 @@ def documents_heterotype_dir(sf_dir: str) -> str:
             )
         for k, lines in enumerate(parts):
             _write_atomic(
-                os.path.join(out, f"part-{k}.jsonl"),
+                os.path.join(tmp, f"part-{k}.jsonl"),
                 ("\n".join(lines) + "\n").encode(),
             )
-        _write_atomic(marker, b"ok\n")
-    return out
+
+    return _published(os.path.join(_fixture_dir(sf_dir), "documents_heterotype"), build)
 
 
 def documents_wide_jsonl(sf_dir: str, n_extra: int = 19) -> str:
@@ -687,17 +728,14 @@ def s03_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # fixture: documents JSONL split round-robin-free (contiguous quarters)
     # into 4 part files so maxFilesPerTrigger=2 forces exactly 2 data batches
-    src = os.path.join(base, "s03_src")
-    done = os.path.join(src, "_DONE")
-    if not os.path.exists(done):
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src, exist_ok=True)
+    def build(tmp: str) -> None:
         lines = open(documents_jsonl(sf_dir), "rb").read().splitlines(keepends=True)
         quarter = (len(lines) + 3) // 4
         for i in range(4):
             part = b"".join(lines[i * quarter : (i + 1) * quarter])
-            _write_atomic(os.path.join(src, f"in-{i}.jsonl"), part)
-        _write_atomic(done, b"")
+            _write_atomic(os.path.join(tmp, f"in-{i}.jsonl"), part)
+
+    src = _published(os.path.join(base, "s03_src"), build)
 
     out = os.path.join(base, "s03_sink")
     ck = os.path.join(base, "s03_ck")
@@ -749,18 +787,13 @@ def _events_stream_src(sf_dir: str) -> tuple[str, int]:
     import duckdb
 
     base = _fixture_dir(sf_dir)
-    src = os.path.join(base, "s04_src2")
-    done = os.path.join(src, "_DONE")
     path = os.path.join(sf_dir, "events.parquet")
     expected = duckdb.sql(
         f"SELECT COUNT(*) FROM (SELECT DISTINCT time_bucket(INTERVAL '1 hour', ts), "
         f"event_type FROM '{path}')"
     ).fetchone()[0]
-    if not os.path.exists(done):
-        import shutil
 
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src, exist_ok=True)
+    def build(tmp: str) -> None:
         rows = duckdb.sql(
             f"SELECT event_id, CAST(epoch_us(ts) AS BIGINT) AS ts_us, user_id, "
             f"event_type, value FROM '{path}' ORDER BY ts, event_id"
@@ -779,7 +812,7 @@ def _events_stream_src(sf_dir: str) -> tuple[str, int]:
                 )
                 for e, t, u, et, v in rows[i * quarter : (i + 1) * quarter]
             )
-            _write_atomic(os.path.join(src, f"in-{i}.jsonl"), (part + "\n").encode())
+            _write_atomic(os.path.join(tmp, f"in-{i}.jsonl"), (part + "\n").encode())
         max_ts = max(t for _e, t, _u, _et, _v in rows)
         sentinel = json.dumps(
             {
@@ -790,9 +823,9 @@ def _events_stream_src(sf_dir: str) -> tuple[str, int]:
                 "value": 0.0,
             }
         )
-        _write_atomic(os.path.join(src, "z-flush.jsonl"), (sentinel + "\n").encode())
-        _write_atomic(done, b"")
-    return src, expected
+        _write_atomic(os.path.join(tmp, "z-flush.jsonl"), (sentinel + "\n").encode())
+
+    return _published(os.path.join(base, "s04_src2"), build), expected
 
 
 @register(
@@ -972,6 +1005,33 @@ def s05_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out).where(F.col("user_id") >= 0)
 
 
+_DUP_CARRIED = 50  # a quarter's last lines, repeated at the head of the next
+_DUP_IN_FILE = 25  # a quarter's first lines, repeated at its own tail
+
+
+def _dup_quarters(lines: list) -> list[list]:
+    """``lines`` cut into 4 contiguous quarters with INJECTED duplicates:
+    cross-micro-batch copies (the previous quarter's last lines) and
+    in-file copies (the quarter's own first lines)."""
+    quarter = (len(lines) + 3) // 4
+    bodies: list[list] = []
+    carried: list = []
+    for i in range(4):
+        part = lines[i * quarter : (i + 1) * quarter]
+        bodies.append(carried + part + part[:_DUP_IN_FILE])
+        carried = part[-_DUP_CARRIED:]
+    return bodies
+
+
+def _n_dups(n: int) -> int:
+    """Duplicates ``_dup_quarters`` injects into ``n`` distinct lines."""
+    quarter = (n + 3) // 4
+    parts = [max(0, min(quarter, n - i * quarter)) for i in range(4)]
+    return sum(min(_DUP_IN_FILE, p) for p in parts) + sum(
+        min(_DUP_CARRIED, p) for p in parts[:3]
+    )
+
+
 def _events_dup_stream_src(sf_dir: str) -> tuple[str, int, int]:
     """Events as 4 ts-quartered JSONL files with INJECTED duplicates: the
     last 50 rows of each quarter are repeated verbatim at the head of the
@@ -980,16 +1040,11 @@ def _events_dup_stream_src(sf_dir: str) -> tuple[str, int, int]:
     are repeated inside their own file (the easy case). Returns
     (src_dir, n_distinct_events, n_injected_dups)."""
     import duckdb
-    import shutil
 
-    base = _fixture_dir(sf_dir)
-    src = os.path.join(base, "s06_src")
-    done = os.path.join(src, "_DONE")
     path = os.path.join(sf_dir, "events.parquet")
     n_distinct = duckdb.sql(f"SELECT COUNT(*) FROM '{path}'").fetchone()[0]
-    if not os.path.exists(done):
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src, exist_ok=True)
+
+    def build(tmp: str) -> None:
         rows = duckdb.sql(
             f"SELECT event_id, CAST(epoch_us(ts) AS BIGINT) AS ts_us, user_id, "
             f"event_type, value FROM '{path}' ORDER BY ts, event_id"
@@ -1006,21 +1061,14 @@ def _events_dup_stream_src(sf_dir: str) -> tuple[str, int, int]:
             )
             for e, t, u, et, v in rows
         ]
-        quarter = (len(lines) + 3) // 4
-        n_dups = 0
-        carried: list[str] = []
-        for i in range(4):
-            part = lines[i * quarter : (i + 1) * quarter]
-            body = carried + part + part[:25]  # in-file dups
-            n_dups += len(carried) + min(25, len(part))
-            carried = part[-50:]  # cross-batch dups for the NEXT file
+        for i, body in enumerate(_dup_quarters(lines)):
             _write_atomic(
-                os.path.join(src, f"in-{i}.jsonl"),
+                os.path.join(tmp, f"in-{i}.jsonl"),
                 ("\n".join(body) + "\n").encode(),
             )
-        _write_atomic(done, json.dumps({"n_dups": n_dups}).encode())
-    n_dups = json.loads(open(done).read())["n_dups"]
-    return src, n_distinct, n_dups
+
+    src = _published(os.path.join(_fixture_dir(sf_dir), "s06_src"), build)
+    return src, n_distinct, _n_dups(n_distinct)
 
 
 @register(
@@ -1746,15 +1794,9 @@ def _docs_dup_stream_src(sf_dir: str) -> tuple[str, int, int]:
     next file (cross-micro-batch — needs streaming state) and the first
     25 rows of each quarter repeat inside their own file. Returns
     (src_dir, n_docs, n_injected_dups)."""
-    import shutil
-
-    base = _fixture_dir(sf_dir)
-    src = os.path.join(base, "s10_src")
-    done = os.path.join(src, "_DONE")
     rows = _docs_rows(sf_dir)
-    if not os.path.exists(done):
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src, exist_ok=True)
+
+    def build(tmp: str) -> None:
         lines = [
             json.dumps(
                 {
@@ -1767,21 +1809,14 @@ def _docs_dup_stream_src(sf_dir: str) -> tuple[str, int, int]:
             )
             for d, t, lg, s, n in rows
         ]
-        quarter = (len(lines) + 3) // 4
-        n_dups = 0
-        carried: list[str] = []
-        for i in range(4):
-            part = lines[i * quarter : (i + 1) * quarter]
-            body = carried + part + part[:25]
-            n_dups += len(carried) + min(25, len(part))
-            carried = part[-50:]
+        for i, body in enumerate(_dup_quarters(lines)):
             _write_atomic(
-                os.path.join(src, f"in-{i}.jsonl"),
+                os.path.join(tmp, f"in-{i}.jsonl"),
                 ("\n".join(body) + "\n").encode(),
             )
-        _write_atomic(done, json.dumps({"n_dups": n_dups}).encode())
-    n_dups = json.loads(open(done).read())["n_dups"]
-    return src, len(rows), n_dups
+
+    src = _published(os.path.join(_fixture_dir(sf_dir), "s10_src"), build)
+    return src, len(rows), _n_dups(len(rows))
 
 
 @register(
@@ -1950,14 +1985,7 @@ def _docs_gz_mixed_src(sf_dir: str) -> str:
     the mixed layout of a real crawl drop."""
     import gzip
 
-    base = _fixture_dir(sf_dir)
-    src = os.path.join(base, "a20_src")
-    done = os.path.join(src, "_DONE")
-    if not os.path.exists(done):
-        import shutil
-
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src, exist_ok=True)
+    def build(tmp: str) -> None:
         rows = _docs_rows(sf_dir)
         lines = [
             json.dumps(
@@ -1969,14 +1997,14 @@ def _docs_gz_mixed_src(sf_dir: str) -> str:
         for i in range(4):
             body = ("\n".join(lines[i * quarter : (i + 1) * quarter]) + "\n").encode()
             if i % 2 == 0:
-                _write_atomic(os.path.join(src, f"part-{i}.jsonl"), body)
+                _write_atomic(os.path.join(tmp, f"part-{i}.jsonl"), body)
             else:
                 _write_atomic(
-                    os.path.join(src, f"part-{i}.jsonl.gz"),
+                    os.path.join(tmp, f"part-{i}.jsonl.gz"),
                     gzip.compress(body, mtime=0),
                 )
-        _write_atomic(done, b"ok")
-    return src
+
+    return _published(os.path.join(_fixture_dir(sf_dir), "a20_src"), build)
 
 
 @register(
@@ -2075,65 +2103,54 @@ def _docs_zst_mixed_src(spark: SparkSession, sf_dir: str) -> str:
     .zst shards are written by Spark's OWN json writer through the
     aircompressor pure-Java zstd codec (bundled with Spark for ORC), so
     both compress and decompress run in the JVM scan path — no Python
-    in the loop, which is also why this fixture needs a live session.
-    Built under a pid-tagged tmp dir and atomically renamed so
-    concurrent builders converge."""
+    in the loop, which is also why this fixture needs a live session."""
     import gzip
+    import shutil
 
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, "a23_src")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    rows = [r for r in _docs_rows(sf_dir) if r[0] % 2 == 0]
-    lines = [
-        json.dumps({"doc_id": d, "text": t, "lang": lg, "source": s, "n_chars": n})
-        for d, t, lg, s, n in rows
-    ]
-    half = (len(lines) + 1) // 2
-    _write_atomic(
-        os.path.join(tmp, "part-0.json"), ("\n".join(lines[:half]) + "\n").encode()
-    )
-    _write_atomic(
-        os.path.join(tmp, "part-1.json.gz"),
-        gzip.compress(("\n".join(lines[half:]) + "\n").encode(), mtime=0),
-    )
-    # odd doc_ids ship as .zst, compressed task-side by the JVM writer
-    from pyspark.sql import functions as F
-
-    from tectonic_spark.tables import table
-
-    zdir = os.path.join(tmp, "zst_out")
-    (
-        table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 2 == 1)
-        .select(
-            F.to_json(
-                F.struct("doc_id", "text", "lang", "source", "n_chars")
-            ).alias("value")
+    def build(tmp: str) -> None:
+        rows = [r for r in _docs_rows(sf_dir) if r[0] % 2 == 0]
+        lines = [
+            json.dumps({"doc_id": d, "text": t, "lang": lg, "source": s, "n_chars": n})
+            for d, t, lg, s, n in rows
+        ]
+        half = (len(lines) + 1) // 2
+        _write_atomic(
+            os.path.join(tmp, "part-0.json"), ("\n".join(lines[:half]) + "\n").encode()
         )
-        .repartition(2)
-        .write.mode("overwrite")
-        .option("compression", _ZSTD_CODEC)
-        .text(zdir)
-    )
-    zparts = sorted(f for f in os.listdir(zdir) if f.startswith("part-"))
-    if not zparts or not all(f.endswith(".txt.zst") or f.endswith(".zst") for f in zparts):
-        raise RuntimeError(f"a23: zstd writer produced {zparts}")
-    for i, f in enumerate(zparts):
-        os.replace(os.path.join(zdir, f), os.path.join(tmp, f"part-z{i}.json.zst"))
-    shutil.rmtree(zdir)
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src
+        _write_atomic(
+            os.path.join(tmp, "part-1.json.gz"),
+            gzip.compress(("\n".join(lines[half:]) + "\n").encode(), mtime=0),
+        )
+        # odd doc_ids ship as .zst, compressed task-side by the JVM writer
+        from pyspark.sql import functions as F
+
+        from tectonic_spark.tables import table
+
+        zdir = os.path.join(tmp, "zst_out")
+        (
+            table(spark, sf_dir, "documents")
+            .where(F.col("doc_id") % 2 == 1)
+            .select(
+                F.to_json(
+                    F.struct("doc_id", "text", "lang", "source", "n_chars")
+                ).alias("value")
+            )
+            .repartition(2)
+            .write.mode("overwrite")
+            .option("compression", _ZSTD_CODEC)
+            .text(zdir)
+        )
+        zparts = sorted(f for f in os.listdir(zdir) if f.startswith("part-"))
+        if not zparts or not all(f.endswith(".txt.zst") or f.endswith(".zst") for f in zparts):
+            raise RuntimeError(f"a23: zstd writer produced {zparts}")
+        for i, f in enumerate(zparts):
+            os.replace(os.path.join(zdir, f), os.path.join(tmp, f"part-z{i}.json.zst"))
+        shutil.rmtree(zdir)
+
+    return _published(src, build)
 
 
 @register(
@@ -2628,26 +2645,20 @@ def a22_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
 def _docs_parts_stream_src(sf_dir: str) -> tuple[str, int]:
     """Documents' doc_ids as 4 plain JSONL part files (no injected dups) —
     the media-ingestion arrival stream. Returns (src_dir, n_docs)."""
-    import shutil
-
-    base = _fixture_dir(sf_dir)
-    src = os.path.join(base, "s12_src")
-    done = os.path.join(src, "_DONE")
     rows = _docs_rows(sf_dir)
-    if not os.path.exists(done):
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src, exist_ok=True)
+
+    def build(tmp: str) -> None:
         lines = [json.dumps({"doc_id": d}) for d, *_ in rows]
         quarter = (len(lines) + 3) // 4
         for i in range(4):
             part = lines[i * quarter : (i + 1) * quarter]
             if part:
                 _write_atomic(
-                    os.path.join(src, f"in-{i}.jsonl"),
+                    os.path.join(tmp, f"in-{i}.jsonl"),
                     ("\n".join(part) + "\n").encode(),
                 )
-        _write_atomic(done, b"{}")
-    return src, len(rows)
+
+    return _published(os.path.join(_fixture_dir(sf_dir), "s12_src"), build), len(rows)
 
 
 @register(
@@ -2871,42 +2882,32 @@ def _warc_shards_src(sf_dir: str) -> tuple[str, int]:
     # v2: charset + content-encoding matrix (name bump invalidates any
     # cached v1 fixture dir)
     src = os.path.join(base, f"a25_src2_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    for i in range(n_shards):
-        recs = [
-            build_warc_record(
-                "warcinfo",
-                f"software: tectonic-spark fixture\r\nformat: WARC/1.0 shard {i}\r\n".encode(),
-                content_type="application/warc-fields",
-            )
-        ]
-        for d, text, lang, source, _n in rows:
-            if d % n_shards != i:
-                continue
-            uri = f"https://{source}.example/doc/{d}"
-            recs.append(
+    def build(tmp: str) -> None:
+        for i in range(n_shards):
+            recs = [
                 build_warc_record(
-                    "request",
-                    f"GET /doc/{d} HTTP/1.1\r\nHost: {source}.example\r\n\r\n".encode(),
-                    uri=uri,
-                    content_type="application/http; msgtype=request",
+                    "warcinfo",
+                    f"software: tectonic-spark fixture\r\nformat: WARC/1.0 shard {i}\r\n".encode(),
+                    content_type="application/warc-fields",
                 )
-            )
-            recs.append(_render_response_record(d, text, lang, source)[0])
-        _write_atomic(os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), write_warc(recs))
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+            ]
+            for d, text, lang, source, _n in rows:
+                if d % n_shards != i:
+                    continue
+                uri = f"https://{source}.example/doc/{d}"
+                recs.append(
+                    build_warc_record(
+                        "request",
+                        f"GET /doc/{d} HTTP/1.1\r\nHost: {source}.example\r\n\r\n".encode(),
+                        uri=uri,
+                        content_type="application/http; msgtype=request",
+                    )
+                )
+                recs.append(_render_response_record(d, text, lang, source)[0])
+            _write_atomic(os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), write_warc(recs))
+
+    return _published(src, build), n_shards
 
 
 @register(
@@ -3217,42 +3218,32 @@ def _docs_zip_src(sf_dir: str) -> str:
     # v2: even bundles are forced-ZIP64 (r11 — the >4 GiB structures
     # parse without >4 GiB fixtures); name bump invalidates v1 caches
     src = os.path.join(base, f"a26_src2_{n_zips}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    n_members = 4 * n_zips
-    for z in range(n_zips):
-        members = []
-        for i in range(z * 4, z * 4 + 4):
-            lines = [
-                json.dumps(
-                    {"doc_id": d, "text": t, "lang": lg, "source": s, "n_chars": n}
+    def build(tmp: str) -> None:
+        n_members = 4 * n_zips
+        for z in range(n_zips):
+            members = []
+            for i in range(z * 4, z * 4 + 4):
+                lines = [
+                    json.dumps(
+                        {"doc_id": d, "text": t, "lang": lg, "source": s, "n_chars": n}
+                    )
+                    for d, t, lg, s, n in rows
+                    if d % n_members == i
+                ]
+                members.append(
+                    (
+                        f"shard-{i}.jsonl",
+                        ("\n".join(lines) + "\n").encode(),
+                        "stored" if i % 2 == 0 else "deflate",
+                    )
                 )
-                for d, t, lg, s, n in rows
-                if d % n_members == i
-            ]
-            members.append(
-                (
-                    f"shard-{i}.jsonl",
-                    ("\n".join(lines) + "\n").encode(),
-                    "stored" if i % 2 == 0 else "deflate",
-                )
+            _write_atomic(
+                os.path.join(tmp, f"corpus-{z:03d}.zip"),
+                build_zip(members, zip64=(z % 2 == 0)),
             )
-        _write_atomic(
-            os.path.join(tmp, f"corpus-{z:03d}.zip"),
-            build_zip(members, zip64=(z % 2 == 0)),
-        )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src
+
+    return _published(src, build)
 
 
 @register(
@@ -3355,60 +3346,50 @@ def _wet_wat_src(sf_dir: str) -> tuple[str, int]:
     n_shards = max(2, len(rows) // 25000)
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, f"a27_src_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    for i in range(n_shards):
-        wet, wat = [], []
-        for d, text, lang, source, n in rows:
-            if d % n_shards != i:
-                continue
-            uri = f"https://{source}.example/doc/{d}"
-            wet.append(
-                build_warc_record(
-                    "conversion",
-                    text.encode("utf-8"),
-                    uri=uri,
-                    content_type="text/plain",
+    def build(tmp: str) -> None:
+        for i in range(n_shards):
+            wet, wat = [], []
+            for d, text, lang, source, n in rows:
+                if d % n_shards != i:
+                    continue
+                uri = f"https://{source}.example/doc/{d}"
+                wet.append(
+                    build_warc_record(
+                        "conversion",
+                        text.encode("utf-8"),
+                        uri=uri,
+                        content_type="text/plain",
+                    )
                 )
-            )
-            wat.append(
-                build_warc_record(
-                    "metadata",
-                    json.dumps(
-                        {
-                            "Envelope": {
-                                "WARC-Header-Metadata": {
-                                    "WARC-Target-URI": uri,
-                                    "WARC-Type": "response",
-                                },
-                                "Payload-Metadata": {
-                                    "Actual-Content-Length": n,
-                                    "HTTP-Response-Metadata": {
-                                        "Headers": {"Content-Language": lang},
-                                        "Response-Message": {"Status": 200},
+                wat.append(
+                    build_warc_record(
+                        "metadata",
+                        json.dumps(
+                            {
+                                "Envelope": {
+                                    "WARC-Header-Metadata": {
+                                        "WARC-Target-URI": uri,
+                                        "WARC-Type": "response",
                                     },
-                                },
+                                    "Payload-Metadata": {
+                                        "Actual-Content-Length": n,
+                                        "HTTP-Response-Metadata": {
+                                            "Headers": {"Content-Language": lang},
+                                            "Response-Message": {"Status": 200},
+                                        },
+                                    },
+                                }
                             }
-                        }
-                    ).encode(),
-                    uri=uri,
-                    content_type="application/json",
+                        ).encode(),
+                        uri=uri,
+                        content_type="application/json",
+                    )
                 )
-            )
-        _write_atomic(os.path.join(tmp, f"wet-{i:03d}.warc.wet.gz"), write_warc(wet))
-        _write_atomic(os.path.join(tmp, f"wat-{i:03d}.warc.wat.gz"), write_warc(wat))
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+            _write_atomic(os.path.join(tmp, f"wet-{i:03d}.warc.wet.gz"), write_warc(wet))
+            _write_atomic(os.path.join(tmp, f"wat-{i:03d}.warc.wat.gz"), write_warc(wat))
+
+    return _published(src, build), n_shards
 
 
 @register(
@@ -3553,43 +3534,33 @@ def _sitemap_src(sf_dir: str) -> str:
 
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, "c03_sitemaps")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    per_source: dict[str, list] = {}
-    for d, _t, _lg, source, _n in _docs_rows(sf_dir):
-        if d % 17 == 6:
-            per_source.setdefault(source, []).append(d)
-    for source, ids in per_source.items():
-        leaves = []
-        for k in range(0, len(ids), 200):
-            chunk = ids[k : k + 200]
-            urls = [
-                {
-                    "loc": f"https://{source}.example/doc/{d}",
-                    "lastmod": f"2024-{1 + d % 12:02d}-01",
-                    "priority": f"0.{d % 10}",
-                }
-                for d in chunk
-            ]
-            leaf = f"sm-{source}-{k // 200:03d}.xml"
-            _write_atomic(os.path.join(tmp, leaf), build_sitemap(urls))
-            leaves.append(f"https://{source}.example/{leaf}")
-        _write_atomic(
-            os.path.join(tmp, f"index-{source}.xml"),
-            build_sitemap_index(leaves),
-        )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src
+    def build(tmp: str) -> None:
+        per_source: dict[str, list] = {}
+        for d, _t, _lg, source, _n in _docs_rows(sf_dir):
+            if d % 17 == 6:
+                per_source.setdefault(source, []).append(d)
+        for source, ids in per_source.items():
+            leaves = []
+            for k in range(0, len(ids), 200):
+                chunk = ids[k : k + 200]
+                urls = [
+                    {
+                        "loc": f"https://{source}.example/doc/{d}",
+                        "lastmod": f"2024-{1 + d % 12:02d}-01",
+                        "priority": f"0.{d % 10}",
+                    }
+                    for d in chunk
+                ]
+                leaf = f"sm-{source}-{k // 200:03d}.xml"
+                _write_atomic(os.path.join(tmp, leaf), build_sitemap(urls))
+                leaves.append(f"https://{source}.example/{leaf}")
+            _write_atomic(
+                os.path.join(tmp, f"index-{source}.xml"),
+                build_sitemap_index(leaves),
+            )
+
+    return _published(src, build)
 
 
 @register(
@@ -3848,53 +3819,43 @@ def _feeds_src(sf_dir: str) -> str:
 
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, "c03_feeds")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    per_source: dict[str, list] = {}
-    for d, _t, _lg, source, _n in _docs_rows(sf_dir):
-        if d % 19 == 8:
-            per_source.setdefault(source, []).append(d)
-    for source, ids in per_source.items():
-        k = int(source[3:])
-        if k % 2 == 0:
-            payload = build_rss(
-                f"{source} news & updates",
-                [
-                    {
-                        "title": f"post {d}",
-                        "link": f"https://{source}.example/doc/{d}",
-                        "guid": f"urn:doc:{d}",
-                        "pubDate": f"2024-{1 + d % 12:02d}-02",
-                    }
-                    for d in ids
-                ],
-            )
-        else:
-            payload = build_atom(
-                f"{source} feed",
-                [
-                    {
-                        "title": f"post {d}",
-                        "link": f"https://{source}.example/doc/{d}",
-                        "id": f"urn:doc:{d}",
-                        "updated": f"2024-{1 + d % 12:02d}-02T00:00:00Z",
-                    }
-                    for d in ids
-                ],
-            )
-        _write_atomic(os.path.join(tmp, f"feed-{source}.xml"), payload)
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src
+    def build(tmp: str) -> None:
+        per_source: dict[str, list] = {}
+        for d, _t, _lg, source, _n in _docs_rows(sf_dir):
+            if d % 19 == 8:
+                per_source.setdefault(source, []).append(d)
+        for source, ids in per_source.items():
+            k = int(source[3:])
+            if k % 2 == 0:
+                payload = build_rss(
+                    f"{source} news & updates",
+                    [
+                        {
+                            "title": f"post {d}",
+                            "link": f"https://{source}.example/doc/{d}",
+                            "guid": f"urn:doc:{d}",
+                            "pubDate": f"2024-{1 + d % 12:02d}-02",
+                        }
+                        for d in ids
+                    ],
+                )
+            else:
+                payload = build_atom(
+                    f"{source} feed",
+                    [
+                        {
+                            "title": f"post {d}",
+                            "link": f"https://{source}.example/doc/{d}",
+                            "id": f"urn:doc:{d}",
+                            "updated": f"2024-{1 + d % 12:02d}-02T00:00:00Z",
+                        }
+                        for d in ids
+                    ],
+                )
+            _write_atomic(os.path.join(tmp, f"feed-{source}.xml"), payload)
+
+    return _published(src, build)
 
 
 @register(
@@ -4113,55 +4074,45 @@ def _warc_cdxj_src(sf_dir: str) -> tuple[str, int]:
     n_shards = max(4, len(rows) // 15000)
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, f"a30_src_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    ts = warc_timestamp(_WARC_DATE)
-    for i in range(n_shards):
-        fname = f"crawl-{i:03d}.warc.gz"
-        recs: list[tuple[bytes, dict | None]] = [
-            (
-                build_warc_record(
-                    "warcinfo",
-                    f"software: tectonic-spark fixture\r\nformat: WARC/1.0 shard {i}\r\n".encode(),
-                    content_type="application/warc-fields",
-                ),
-                None,  # written, not indexed
-            )
-        ]
-        for d, text, lang, source, _n in rows:
-            if d % n_shards != i:
-                continue
-            rec, http = _render_response_record(d, text, lang, source)
-            recs.append(
+    def build(tmp: str) -> None:
+        ts = warc_timestamp(_WARC_DATE)
+        for i in range(n_shards):
+            fname = f"crawl-{i:03d}.warc.gz"
+            recs: list[tuple[bytes, dict | None]] = [
                 (
-                    rec,
-                    {
-                        "url": f"https://{source}.example/doc/{d}",
-                        "ts": ts,
-                        "digest": payload_digest(http),
-                        "mime": "text/html",
-                        "status": 200,
-                        "filename": fname,
-                    },
+                    build_warc_record(
+                        "warcinfo",
+                        f"software: tectonic-spark fixture\r\nformat: WARC/1.0 shard {i}\r\n".encode(),
+                        content_type="application/warc-fields",
+                    ),
+                    None,  # written, not indexed
                 )
+            ]
+            for d, text, lang, source, _n in rows:
+                if d % n_shards != i:
+                    continue
+                rec, http = _render_response_record(d, text, lang, source)
+                recs.append(
+                    (
+                        rec,
+                        {
+                            "url": f"https://{source}.example/doc/{d}",
+                            "ts": ts,
+                            "digest": payload_digest(http),
+                            "mime": "text/html",
+                            "status": 200,
+                            "filename": fname,
+                        },
+                    )
+                )
+            blob, entries = write_warc_indexed(recs)
+            _write_atomic(os.path.join(tmp, fname), blob)
+            _write_atomic(
+                os.path.join(tmp, f"crawl-{i:03d}.cdxj"), build_cdxj(entries)
             )
-        blob, entries = write_warc_indexed(recs)
-        _write_atomic(os.path.join(tmp, fname), blob)
-        _write_atomic(
-            os.path.join(tmp, f"crawl-{i:03d}.cdxj"), build_cdxj(entries)
-        )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+
+    return _published(src, build), n_shards
 
 
 def _warc_revisit_src(sf_dir: str) -> tuple[str, int]:
@@ -4184,49 +4135,39 @@ def _warc_revisit_src(sf_dir: str) -> tuple[str, int]:
     n_shards = max(4, len(rows) // 15000)
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, f"a31_src_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    shards: list[list[bytes]] = [[] for _ in range(n_shards)]
-    for d, text, lang, source, _n in rows:
-        rec, http = _render_response_record(d, text, lang, source)
-        shards[d % n_shards].append(rec)
-        if d % 5 == 0:
-            uri = f"https://{source}.example/doc/{d}"
-            # the original's default record id (warc.py derivation)
-            orig_id = "<urn:uuid:%s>" % hashlib.sha256(
-                repr(("response", uri, _WARC_DATE)).encode()
-            ).hexdigest()[:32]
-            revisit = build_warc_record(
-                "revisit",
-                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n",
-                uri=f"https://{source}.example/recrawl/{d}",
-                date=_WARC_DATE,
-                content_type="application/http; msgtype=response",
-                extra={
-                    "WARC-Profile": "http://netpreserve.org/warc/1.1/"
-                    "revisit/identical-payload-digest",
-                    "WARC-Refers-To": orig_id,
-                    "WARC-Refers-To-Target-URI": uri,
-                    "WARC-Payload-Digest": payload_digest(http),
-                },
+    def build(tmp: str) -> None:
+        shards: list[list[bytes]] = [[] for _ in range(n_shards)]
+        for d, text, lang, source, _n in rows:
+            rec, http = _render_response_record(d, text, lang, source)
+            shards[d % n_shards].append(rec)
+            if d % 5 == 0:
+                uri = f"https://{source}.example/doc/{d}"
+                # the original's default record id (warc.py derivation)
+                orig_id = "<urn:uuid:%s>" % hashlib.sha256(
+                    repr(("response", uri, _WARC_DATE)).encode()
+                ).hexdigest()[:32]
+                revisit = build_warc_record(
+                    "revisit",
+                    b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n",
+                    uri=f"https://{source}.example/recrawl/{d}",
+                    date=_WARC_DATE,
+                    content_type="application/http; msgtype=response",
+                    extra={
+                        "WARC-Profile": "http://netpreserve.org/warc/1.1/"
+                        "revisit/identical-payload-digest",
+                        "WARC-Refers-To": orig_id,
+                        "WARC-Refers-To-Target-URI": uri,
+                        "WARC-Payload-Digest": payload_digest(http),
+                    },
+                )
+                shards[(d + 1) % n_shards].append(revisit)
+        for i, recs in enumerate(shards):
+            _write_atomic(
+                os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), write_warc(recs)
             )
-            shards[(d + 1) % n_shards].append(revisit)
-    for i, recs in enumerate(shards):
-        _write_atomic(
-            os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), write_warc(recs)
-        )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+
+    return _published(src, build), n_shards
 
 
 @register(
@@ -4407,54 +4348,44 @@ def _warc_redirect_src(sf_dir: str) -> tuple[str, int]:
     n_shards = max(4, len(rows) // 15000)
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, f"a32_src_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    shards: list[list[bytes]] = [[] for _ in range(n_shards)]
+    def build(tmp: str) -> None:
+        shards: list[list[bytes]] = [[] for _ in range(n_shards)]
 
-    def _redirect(from_path: str, to_path: str, source: str) -> bytes:
-        host = f"{source}.example"
-        return build_warc_record(
-            "response",
-            build_http_response(
-                b"",
-                status=301,
-                reason="Moved Permanently",
-                content_type="text/html",
-                headers={"Location": f"https://{host}{to_path}"},
-            ),
-            uri=f"https://{host}{from_path}",
-            date=_WARC_DATE,
-            content_type="application/http; msgtype=response",
-        )
-
-    for d, text, lang, source, _n in rows:
-        shards[d % n_shards].append(
-            _render_response_record(d, text, lang, source)[0]
-        )
-        if d % 7 == 0:
-            shards[(d + 2) % n_shards].append(
-                _redirect(f"/alias/{d}", f"/doc/{d}", source)
+        def _redirect(from_path: str, to_path: str, source: str) -> bytes:
+            host = f"{source}.example"
+            return build_warc_record(
+                "response",
+                build_http_response(
+                    b"",
+                    status=301,
+                    reason="Moved Permanently",
+                    content_type="text/html",
+                    headers={"Location": f"https://{host}{to_path}"},
+                ),
+                uri=f"https://{host}{from_path}",
+                date=_WARC_DATE,
+                content_type="application/http; msgtype=response",
             )
-        if d % 14 == 0:
-            shards[(d + 3) % n_shards].append(
-                _redirect(f"/alias2/{d}", f"/alias/{d}", source)
+
+        for d, text, lang, source, _n in rows:
+            shards[d % n_shards].append(
+                _render_response_record(d, text, lang, source)[0]
             )
-    for i, recs in enumerate(shards):
-        _write_atomic(
-            os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), write_warc(recs)
-        )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+            if d % 7 == 0:
+                shards[(d + 2) % n_shards].append(
+                    _redirect(f"/alias/{d}", f"/doc/{d}", source)
+                )
+            if d % 14 == 0:
+                shards[(d + 3) % n_shards].append(
+                    _redirect(f"/alias2/{d}", f"/alias/{d}", source)
+                )
+        for i, recs in enumerate(shards):
+            _write_atomic(
+                os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), write_warc(recs)
+            )
+
+    return _published(src, build), n_shards
 
 
 @register(
@@ -4699,35 +4630,25 @@ def _warc_timeline_src(sf_dir: str) -> tuple[str, int]:
     base = _fixture_dir(sf_dir)
     # v2: recapture shard is (d+1)%n — (d+4)%n was a no-op at n=4
     src = os.path.join(base, f"a37_src2_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    shards: list[list[bytes]] = [[] for _ in range(n_shards)]
-    for d, text, lang, source, _n in rows:
-        shards[d % n_shards].append(
-            _render_response_record(d, text, lang, source)[0]
-        )
-        if d % 5 == 0:
-            shards[(d + 1) % n_shards].append(
-                _render_response_record(
-                    d, text + " rev2", lang, source, date=_WARC_DATE_V2
-                )[0]
+    def build(tmp: str) -> None:
+        shards: list[list[bytes]] = [[] for _ in range(n_shards)]
+        for d, text, lang, source, _n in rows:
+            shards[d % n_shards].append(
+                _render_response_record(d, text, lang, source)[0]
             )
-    for i, recs in enumerate(shards):
-        _write_atomic(
-            os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), write_warc(recs)
-        )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+            if d % 5 == 0:
+                shards[(d + 1) % n_shards].append(
+                    _render_response_record(
+                        d, text + " rev2", lang, source, date=_WARC_DATE_V2
+                    )[0]
+                )
+        for i, recs in enumerate(shards):
+            _write_atomic(
+                os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), write_warc(recs)
+            )
+
+    return _published(src, build), n_shards
 
 
 @register(
@@ -5038,34 +4959,25 @@ def _zipnum_src(sf_dir: str) -> tuple[str, str, int]:
     warc_src, _n = _warc_cdxj_src(sf_dir)
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, "a36_idx")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, warc_src, len(
-            open(os.path.join(src, "cluster.idx"), "rb").read().splitlines()
-        )
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    lines: list[str] = []
-    for entry in sorted(os.scandir(warc_src), key=lambda e: e.name):
-        if entry.name.endswith(".cdxj"):
-            with open(entry.path, encoding="utf-8") as f:
-                lines.extend(ln for ln in f.read().splitlines() if ln)
-    lines.sort()
-    blob, entries = write_zipnum(lines, block_lines=64)
-    _write_atomic(os.path.join(tmp, "index.zipnum.gz"), blob)
-    _write_atomic(
-        os.path.join(tmp, "cluster.idx"),
-        build_cluster_idx(entries, "index.zipnum.gz"),
+    def build(tmp: str) -> None:
+        lines: list[str] = []
+        for entry in sorted(os.scandir(warc_src), key=lambda e: e.name):
+            if entry.name.endswith(".cdxj"):
+                with open(entry.path, encoding="utf-8") as f:
+                    lines.extend(ln for ln in f.read().splitlines() if ln)
+        lines.sort()
+        blob, entries = write_zipnum(lines, block_lines=64)
+        _write_atomic(os.path.join(tmp, "index.zipnum.gz"), blob)
+        _write_atomic(
+            os.path.join(tmp, "cluster.idx"),
+            build_cluster_idx(entries, "index.zipnum.gz"),
+        )
+
+    _published(src, build)
+    return src, warc_src, len(
+        open(os.path.join(src, "cluster.idx"), "rb").read().splitlines()
     )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, warc_src, len(entries)
 
 
 @register(
@@ -5202,17 +5114,16 @@ def a35_zone_map_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tectonic_spark.plans import explain_str
     from tectonic_spark.tables import table
 
-    out = os.path.join(_fixture_dir(sf_dir), "a35_docs_ranged")
-    done = os.path.join(out, "_SPARK_DONE")
-    if not os.path.exists(done):
+    def build(tmp: str) -> None:
         (
             table(spark, sf_dir, "documents")
             .repartitionByRange(16, "doc_id")
             .sortWithinPartitions("doc_id")
             .write.mode("overwrite")
-            .parquet(out)
+            .parquet(tmp)
         )
-        _write_atomic(done, b"ok")
+
+    out = _published(os.path.join(_fixture_dir(sf_dir), "a35_docs_ranged"), build)
     lo, hi = 100, 199
     df = spark.read.parquet(out).filter(
         (F.col("doc_id") >= lo) & (F.col("doc_id") <= hi)
@@ -5280,47 +5191,37 @@ def _warc_robots_src(sf_dir: str) -> tuple[str, int]:
     n_shards = max(4, len(rows) // 15000)
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, f"c05_robots_src_{n_shards}")  # named for its query (r12: was a34_src, a name with no a34 query)
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    shards: list[list[bytes]] = [[] for _ in range(n_shards)]
-    for si, source in enumerate(sorted({r[3] for r in rows})):
-        robots = (
-            "User-agent: *\r\n"
-            "Disallow: /doc/*7$\r\n"
-            "Disallow: /private/\r\n"
-            "\r\n"
-            "User-agent: other-bot\r\n"
-            "Disallow: /\r\n"
-        ).encode()
-        shards[(si * 3 + 1) % n_shards].append(
-            build_warc_record(
-                "resource",
-                robots,
-                uri=f"https://{source}.example/robots.txt",
-                date=_WARC_DATE,
-                content_type="text/plain",
+    def build(tmp: str) -> None:
+        shards: list[list[bytes]] = [[] for _ in range(n_shards)]
+        for si, source in enumerate(sorted({r[3] for r in rows})):
+            robots = (
+                "User-agent: *\r\n"
+                "Disallow: /doc/*7$\r\n"
+                "Disallow: /private/\r\n"
+                "\r\n"
+                "User-agent: other-bot\r\n"
+                "Disallow: /\r\n"
+            ).encode()
+            shards[(si * 3 + 1) % n_shards].append(
+                build_warc_record(
+                    "resource",
+                    robots,
+                    uri=f"https://{source}.example/robots.txt",
+                    date=_WARC_DATE,
+                    content_type="text/plain",
+                )
             )
-        )
-    for d, text, lang, source, _n in rows:
-        shards[d % n_shards].append(
-            _render_response_record(d, text, lang, source)[0]
-        )
-    for i, recs in enumerate(shards):
-        _write_atomic(
-            os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), write_warc(recs)
-        )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+        for d, text, lang, source, _n in rows:
+            shards[d % n_shards].append(
+                _render_response_record(d, text, lang, source)[0]
+            )
+        for i, recs in enumerate(shards):
+            _write_atomic(
+                os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), write_warc(recs)
+            )
+
+    return _published(src, build), n_shards
 
 
 @register(
@@ -5490,60 +5391,50 @@ def _warc_encoding_census_src(sf_dir: str) -> tuple[str, int]:
     # v3: the dict lane decodes; zstd lane censuses (name bump
     # invalidates cached v2 dirs)
     src = os.path.join(base, f"a33_src3_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    zstd_body = b"\x28\xb5\x2f\xfd" + bytes(range(64))  # opaque, magic only
-    for i in range(n_shards):
-        recs = []
-        for d, text, lang, source, _n in rows:
-            if d % n_shards != i:
-                continue
-            if d % 55 == 22:
-                # unimplemented coding: censused, the opaque bytes
-                # never enter the corpus
-                http = (
-                    b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                    b"Content-Encoding: zstd\r\n"
-                    b"Content-Length: " + str(len(zstd_body)).encode()
-                    + b"\r\n\r\n" + zstd_body
-                )
-                recs.append(
-                    build_warc_record(
-                        "response",
-                        http,
-                        uri=f"https://{source}.example/doc/{d}",
-                        date=_WARC_DATE,
-                        content_type="application/http; msgtype=response",
+    def build(tmp: str) -> None:
+        zstd_body = b"\x28\xb5\x2f\xfd" + bytes(range(64))  # opaque, magic only
+        for i in range(n_shards):
+            recs = []
+            for d, text, lang, source, _n in rows:
+                if d % n_shards != i:
+                    continue
+                if d % 55 == 22:
+                    # unimplemented coding: censused, the opaque bytes
+                    # never enter the corpus
+                    http = (
+                        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+                        b"Content-Encoding: zstd\r\n"
+                        b"Content-Length: " + str(len(zstd_body)).encode()
+                        + b"\r\n\r\n" + zstd_body
                     )
-                )
-            elif d % 55 == 0:
-                recs.append(
-                    _render_response_record(
-                        d, text, lang, source, ce="br:dict"
-                    )[0]
-                )
-            elif d % 11 == 0:
-                recs.append(
-                    _render_response_record(
-                        d, text, lang, source,
-                        ce=_BR_MODES[(d // 11) % 3],
-                    )[0]
-                )
-            else:
-                recs.append(_render_response_record(d, text, lang, source)[0])
-        _write_atomic(os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), write_warc(recs))
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+                    recs.append(
+                        build_warc_record(
+                            "response",
+                            http,
+                            uri=f"https://{source}.example/doc/{d}",
+                            date=_WARC_DATE,
+                            content_type="application/http; msgtype=response",
+                        )
+                    )
+                elif d % 55 == 0:
+                    recs.append(
+                        _render_response_record(
+                            d, text, lang, source, ce="br:dict"
+                        )[0]
+                    )
+                elif d % 11 == 0:
+                    recs.append(
+                        _render_response_record(
+                            d, text, lang, source,
+                            ce=_BR_MODES[(d // 11) % 3],
+                        )[0]
+                    )
+                else:
+                    recs.append(_render_response_record(d, text, lang, source)[0])
+            _write_atomic(os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), write_warc(recs))
+
+    return _published(src, build), n_shards
 
 
 @register(
@@ -5787,49 +5678,39 @@ def _webdataset_src(sf_dir: str) -> tuple[str, int]:
     # v2: even doc_ids get >100-char sample keys (deep category dirs),
     # shards alternate pax / GNU longname encodings (r11)
     src = os.path.join(base, f"a29_src2_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    import numpy as np
+    def build(tmp: str) -> None:
+        import numpy as np
 
-    from tectonic_spark.operators.png import encode_png
+        from tectonic_spark.operators.png import encode_png
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    i64 = np.arange(64, dtype=np.int64)
-    for i in range(n_shards):
-        members = []
-        for d, text, lang, source, n in rows:
-            if d % n_shards != i:
-                continue
-            # even doc_ids live under a deep category path whose full
-            # member names exceed ustar's 100-byte limit — the trio then
-            # rides pax 'path' records or GNU 'L' members (by shard)
-            if d % 2 == 0:
-                key = f"corpus/{lang}/{'category-' + source:-<96}/{d:012d}"
-            else:
-                key = f"{d:012d}"
-            img = ((d * 7 + i64 * 13) % 256).astype(np.uint8).reshape(8, 8)
-            members.append(
-                (f"{key}.json", json.dumps(
-                    {"doc_id": d, "lang": lang, "source": source}
-                ).encode())
+        i64 = np.arange(64, dtype=np.int64)
+        for i in range(n_shards):
+            members = []
+            for d, text, lang, source, n in rows:
+                if d % n_shards != i:
+                    continue
+                # even doc_ids live under a deep category path whose full
+                # member names exceed ustar's 100-byte limit — the trio then
+                # rides pax 'path' records or GNU 'L' members (by shard)
+                if d % 2 == 0:
+                    key = f"corpus/{lang}/{'category-' + source:-<96}/{d:012d}"
+                else:
+                    key = f"{d:012d}"
+                img = ((d * 7 + i64 * 13) % 256).astype(np.uint8).reshape(8, 8)
+                members.append(
+                    (f"{key}.json", json.dumps(
+                        {"doc_id": d, "lang": lang, "source": source}
+                    ).encode())
+                )
+                members.append((f"{key}.txt", text.encode("utf-8")))
+                members.append((f"{key}.png", encode_png(img)))
+            _write_atomic(
+                os.path.join(tmp, f"shard-{i:05d}.tar"),
+                build_tar(members, longname_mode="pax" if i % 2 == 0 else "gnu"),
             )
-            members.append((f"{key}.txt", text.encode("utf-8")))
-            members.append((f"{key}.png", encode_png(img)))
-        _write_atomic(
-            os.path.join(tmp, f"shard-{i:05d}.tar"),
-            build_tar(members, longname_mode="pax" if i % 2 == 0 else "gnu"),
-        )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+
+    return _published(src, build), n_shards
 
 
 @register(
@@ -5953,57 +5834,47 @@ def _timeline_index_src(sf_dir: str) -> tuple[str, int]:
     base = _fixture_dir(sf_dir)
     # v2: recapture shard is (d+1)%n — (d+4)%n was a no-op at n=4
     src = os.path.join(base, f"a38_src2_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    shards: list[list[tuple[bytes, dict | None]]] = [
-        [] for _ in range(n_shards)
-    ]
+    def build(tmp: str) -> None:
+        shards: list[list[tuple[bytes, dict | None]]] = [
+            [] for _ in range(n_shards)
+        ]
 
-    def add(shard: int, d: int, text: str, lang: str, source: str, date: str):
-        rec, http = _render_response_record(d, text, lang, source, date=date)
-        shards[shard].append(
-            (
-                rec,
-                {
-                    "url": f"https://{source}.example/doc/{d}",
-                    "ts": warc_timestamp(date),
-                    "digest": payload_digest(http),
-                    "mime": "text/html",
-                    "status": 200,
-                    "filename": f"crawl-{shard:03d}.warc.gz",
-                },
+        def add(shard: int, d: int, text: str, lang: str, source: str, date: str):
+            rec, http = _render_response_record(d, text, lang, source, date=date)
+            shards[shard].append(
+                (
+                    rec,
+                    {
+                        "url": f"https://{source}.example/doc/{d}",
+                        "ts": warc_timestamp(date),
+                        "digest": payload_digest(http),
+                        "mime": "text/html",
+                        "status": 200,
+                        "filename": f"crawl-{shard:03d}.warc.gz",
+                    },
+                )
             )
+
+        for d, text, lang, source, _n in rows:
+            add(d % n_shards, d, text, lang, source, _WARC_DATE)
+            if d % 5 == 0:  # recaptured with CHANGED content, other shard
+                add((d + 1) % n_shards, d, text + " rev2", lang, source,
+                    _WARC_DATE_V2)
+        all_entries: list[dict] = []
+        for i, recs in enumerate(shards):
+            blob, entries = write_warc_indexed(recs)
+            _write_atomic(os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), blob)
+            all_entries.extend(entries)
+        lines = build_cdxj(all_entries).decode("utf-8").splitlines()
+        zblob, zentries = write_zipnum(lines, block_lines=64)
+        _write_atomic(os.path.join(tmp, "index.zipnum.gz"), zblob)
+        _write_atomic(
+            os.path.join(tmp, "cluster.idx"),
+            build_cluster_idx(zentries, "index.zipnum.gz"),
         )
 
-    for d, text, lang, source, _n in rows:
-        add(d % n_shards, d, text, lang, source, _WARC_DATE)
-        if d % 5 == 0:  # recaptured with CHANGED content, other shard
-            add((d + 1) % n_shards, d, text + " rev2", lang, source,
-                _WARC_DATE_V2)
-    all_entries: list[dict] = []
-    for i, recs in enumerate(shards):
-        blob, entries = write_warc_indexed(recs)
-        _write_atomic(os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), blob)
-        all_entries.extend(entries)
-    lines = build_cdxj(all_entries).decode("utf-8").splitlines()
-    zblob, zentries = write_zipnum(lines, block_lines=64)
-    _write_atomic(os.path.join(tmp, "index.zipnum.gz"), zblob)
-    _write_atomic(
-        os.path.join(tmp, "cluster.idx"),
-        build_cluster_idx(zentries, "index.zipnum.gz"),
-    )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+    return _published(src, build), n_shards
 
 
 @register(
@@ -6253,87 +6124,77 @@ def _revisit_index_src(sf_dir: str) -> tuple[str, int]:
     n_shards = max(4, len(rows) // 15000)
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, f"a39_src_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    shards: list[list[tuple[bytes, dict | None]]] = [
-        [] for _ in range(n_shards)
-    ]
-    ts1 = warc_timestamp(_WARC_DATE)
-    ts2 = warc_timestamp(_WARC_DATE_V2)
-    for d, text, lang, source, _n in rows:
-        rec, http = _render_response_record(d, text, lang, source)
-        uri = f"https://{source}.example/doc/{d}"
-        digest = payload_digest(http)
-        shards[d % n_shards].append(
-            (
-                rec,
-                {
-                    "url": uri,
-                    "ts": ts1,
-                    "digest": digest,
-                    "mime": "text/html",
-                    "status": 200,
-                    "filename": f"crawl-{d % n_shards:03d}.warc.gz",
-                },
-            )
-        )
-        if d % 5 == 0:
-            orig_id = "<urn:uuid:%s>" % hashlib.sha256(
-                repr(("response", uri, _WARC_DATE)).encode()
-            ).hexdigest()[:32]
-            revisit = build_warc_record(
-                "revisit",
-                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n",
-                uri=f"https://{source}.example/recrawl/{d}",
-                date=_WARC_DATE_V2,
-                content_type="application/http; msgtype=response",
-                extra={
-                    "WARC-Profile": "http://netpreserve.org/warc/1.1/"
-                    "revisit/identical-payload-digest",
-                    "WARC-Refers-To": orig_id,
-                    "WARC-Refers-To-Target-URI": uri,
-                    "WARC-Payload-Digest": digest,
-                },
-            )
-            shard = (d + 1) % n_shards
-            shards[shard].append(
+    def build(tmp: str) -> None:
+        shards: list[list[tuple[bytes, dict | None]]] = [
+            [] for _ in range(n_shards)
+        ]
+        ts1 = warc_timestamp(_WARC_DATE)
+        ts2 = warc_timestamp(_WARC_DATE_V2)
+        for d, text, lang, source, _n in rows:
+            rec, http = _render_response_record(d, text, lang, source)
+            uri = f"https://{source}.example/doc/{d}"
+            digest = payload_digest(http)
+            shards[d % n_shards].append(
                 (
-                    revisit,
+                    rec,
                     {
-                        "url": f"https://{source}.example/recrawl/{d}",
-                        "ts": ts2,
-                        # pywb writes the ORIGINAL's digest on the line
+                        "url": uri,
+                        "ts": ts1,
                         "digest": digest,
-                        "mime": "warc/revisit",
+                        "mime": "text/html",
                         "status": 200,
-                        "filename": f"crawl-{shard:03d}.warc.gz",
+                        "filename": f"crawl-{d % n_shards:03d}.warc.gz",
                     },
                 )
             )
-    all_entries: list[dict] = []
-    for i, recs in enumerate(shards):
-        blob, entries = write_warc_indexed(recs)
-        _write_atomic(os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), blob)
-        all_entries.extend(entries)
-    lines = build_cdxj(all_entries).decode("utf-8").splitlines()
-    zblob, zentries = write_zipnum(lines, block_lines=64)
-    _write_atomic(os.path.join(tmp, "index.zipnum.gz"), zblob)
-    _write_atomic(
-        os.path.join(tmp, "cluster.idx"),
-        build_cluster_idx(zentries, "index.zipnum.gz"),
-    )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+            if d % 5 == 0:
+                orig_id = "<urn:uuid:%s>" % hashlib.sha256(
+                    repr(("response", uri, _WARC_DATE)).encode()
+                ).hexdigest()[:32]
+                revisit = build_warc_record(
+                    "revisit",
+                    b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n",
+                    uri=f"https://{source}.example/recrawl/{d}",
+                    date=_WARC_DATE_V2,
+                    content_type="application/http; msgtype=response",
+                    extra={
+                        "WARC-Profile": "http://netpreserve.org/warc/1.1/"
+                        "revisit/identical-payload-digest",
+                        "WARC-Refers-To": orig_id,
+                        "WARC-Refers-To-Target-URI": uri,
+                        "WARC-Payload-Digest": digest,
+                    },
+                )
+                shard = (d + 1) % n_shards
+                shards[shard].append(
+                    (
+                        revisit,
+                        {
+                            "url": f"https://{source}.example/recrawl/{d}",
+                            "ts": ts2,
+                            # pywb writes the ORIGINAL's digest on the line
+                            "digest": digest,
+                            "mime": "warc/revisit",
+                            "status": 200,
+                            "filename": f"crawl-{shard:03d}.warc.gz",
+                        },
+                    )
+                )
+        all_entries: list[dict] = []
+        for i, recs in enumerate(shards):
+            blob, entries = write_warc_indexed(recs)
+            _write_atomic(os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), blob)
+            all_entries.extend(entries)
+        lines = build_cdxj(all_entries).decode("utf-8").splitlines()
+        zblob, zentries = write_zipnum(lines, block_lines=64)
+        _write_atomic(os.path.join(tmp, "index.zipnum.gz"), zblob)
+        _write_atomic(
+            os.path.join(tmp, "cluster.idx"),
+            build_cluster_idx(zentries, "index.zipnum.gz"),
+        )
+
+    return _published(src, build), n_shards
 
 
 @register(
@@ -6538,16 +6399,10 @@ def _docs_br_mixed_src(sf_dir: str) -> str:
 
     from tectonic_spark.operators.brotli import compress
 
-    base = _fixture_dir(sf_dir)
     rows = _docs_rows(sf_dir)
     n_shards = max(4, len(rows) // 15000)
-    src = os.path.join(base, f"a40_src_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if not os.path.exists(done):
-        import shutil
 
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src, exist_ok=True)
+    def build(tmp: str) -> None:
         lines = [
             json.dumps(
                 {"doc_id": d, "text": t, "lang": lg, "source": s, "n_chars": n}
@@ -6559,24 +6414,25 @@ def _docs_br_mixed_src(sf_dir: str) -> str:
             body = ("\n".join(lines[i * per : (i + 1) * per]) + "\n").encode()
             form = i % 4
             if form == 0:
-                _write_atomic(os.path.join(src, f"part-{i:03d}.jsonl"), body)
+                _write_atomic(os.path.join(tmp, f"part-{i:03d}.jsonl"), body)
             elif form == 1:
                 _write_atomic(
-                    os.path.join(src, f"part-{i:03d}.jsonl.br"),
+                    os.path.join(tmp, f"part-{i:03d}.jsonl.br"),
                     compress(body, mode="lz"),
                 )
             elif form == 2:
                 _write_atomic(
-                    os.path.join(src, f"part-{i:03d}.jsonl.gz"),
+                    os.path.join(tmp, f"part-{i:03d}.jsonl.gz"),
                     gzip.compress(body, mtime=0),
                 )
             else:
                 _write_atomic(
-                    os.path.join(src, f"part-{i:03d}.jsonl.br"),
+                    os.path.join(tmp, f"part-{i:03d}.jsonl.br"),
                     compress(body, mode="uncompressed"),
                 )
-        _write_atomic(done, b"ok")
-    return src
+
+    src = os.path.join(_fixture_dir(sf_dir), f"a40_src_{n_shards}")
+    return _published(src, build)
 
 
 @register(
@@ -7022,61 +6878,50 @@ def _merged_index_src(sf_dir: str) -> tuple[str, str, str]:
     base = _fixture_dir(sf_dir)
     # v2: rebuilt over the a38_src2 collection (offsets changed)
     src = os.path.join(base, "a43_idx2")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, a_dir, b_dir
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
+    def build(tmp: str) -> None:
+        def tagged_lines(raw_lines, collection):
+            out = []
+            for ln in raw_lines:
+                if not ln:
+                    continue
+                key, ts, blob = ln.split(" ", 2)
+                j = _json.loads(blob)
+                j["source"] = collection
+                out.append(
+                    f"{key} {ts} "
+                    + _json.dumps(j, sort_keys=True, ensure_ascii=False)
+                )
+            return out
 
-    def tagged_lines(raw_lines, collection):
-        out = []
-        for ln in raw_lines:
-            if not ln:
-                continue
+        lines: list[str] = []
+        for entry in sorted(os.scandir(a_dir), key=lambda e: e.name):
+            if entry.name.endswith(".cdxj"):
+                with open(entry.path, encoding="utf-8") as f:
+                    lines.extend(tagged_lines(f.read().splitlines(), "A"))
+        lines.extend(tagged_lines(index_lines(b_dir), "B"))
+        # merge-sort + keep-first dedup on (key, ts, digest): collection A
+        # precedes B, and sorted() is stable, so sorting on the identity
+        # triple while tagging preserves precedence within each group
+        lines.sort(key=lambda ln: (ln.split(" ", 2)[0], ln.split(" ", 2)[1]))
+        merged: list[str] = []
+        seen: set[tuple[str, str, str]] = set()
+        for ln in lines:
             key, ts, blob = ln.split(" ", 2)
-            j = _json.loads(blob)
-            j["source"] = collection
-            out.append(
-                f"{key} {ts} "
-                + _json.dumps(j, sort_keys=True, ensure_ascii=False)
-            )
-        return out
+            ident = (key, ts, _json.loads(blob)["digest"])
+            if ident in seen:
+                continue
+            seen.add(ident)
+            merged.append(ln)
+        merged.sort()
+        zblob, zentries = write_zipnum(merged, block_lines=64)
+        _write_atomic(os.path.join(tmp, "index.zipnum.gz"), zblob)
+        _write_atomic(
+            os.path.join(tmp, "cluster.idx"),
+            build_cluster_idx(zentries, "index.zipnum.gz"),
+        )
 
-    lines: list[str] = []
-    for entry in sorted(os.scandir(a_dir), key=lambda e: e.name):
-        if entry.name.endswith(".cdxj"):
-            with open(entry.path, encoding="utf-8") as f:
-                lines.extend(tagged_lines(f.read().splitlines(), "A"))
-    lines.extend(tagged_lines(index_lines(b_dir), "B"))
-    # merge-sort + keep-first dedup on (key, ts, digest): collection A
-    # precedes B, and sorted() is stable, so sorting on the identity
-    # triple while tagging preserves precedence within each group
-    lines.sort(key=lambda ln: (ln.split(" ", 2)[0], ln.split(" ", 2)[1]))
-    merged: list[str] = []
-    seen: set[tuple[str, str, str]] = set()
-    for ln in lines:
-        key, ts, blob = ln.split(" ", 2)
-        ident = (key, ts, _json.loads(blob)["digest"])
-        if ident in seen:
-            continue
-        seen.add(ident)
-        merged.append(ln)
-    merged.sort()
-    zblob, zentries = write_zipnum(merged, block_lines=64)
-    _write_atomic(os.path.join(tmp, "index.zipnum.gz"), zblob)
-    _write_atomic(
-        os.path.join(tmp, "cluster.idx"),
-        build_cluster_idx(zentries, "index.zipnum.gz"),
-    )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, a_dir, b_dir
+    return _published(src, build), a_dir, b_dir
 
 
 @register(
@@ -7242,6 +7087,7 @@ def _incremental_index_src(sf_dir: str) -> tuple[str, str, str]:
     by the query). Returns (index_dir, a_warc_dir, b_warc_dir)."""
     import hashlib
     import json as _json
+    import shutil
 
     from tectonic_spark.operators.cdxj import (
         incremental_zipnum_update,
@@ -7252,38 +7098,27 @@ def _incremental_index_src(sf_dir: str) -> tuple[str, str, str]:
     b_dir, _nb2 = _timeline_index_src(sf_dir)
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, "a44_idx")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, a_warc_dir, b_dir
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    for fname in ("index.zipnum.gz", "cluster.idx"):
-        shutil.copyfile(
-            os.path.join(a_idx_dir, fname), os.path.join(tmp, fname)
+    def build(tmp: str) -> None:
+        for fname in ("index.zipnum.gz", "cluster.idx"):
+            shutil.copyfile(
+                os.path.join(a_idx_dir, fname), os.path.join(tmp, fname)
+            )
+        with open(os.path.join(tmp, "index.zipnum.gz"), "rb") as f:
+            base_sha = hashlib.sha256(f.read()).hexdigest()
+
+        # the delta export: EVERY line of collection B, dupes included
+        stats = incremental_zipnum_update(tmp, sorted(index_lines(b_dir)))
+        with open(os.path.join(tmp, "index.zipnum.gz"), "rb") as f:
+            after_sha = hashlib.sha256(f.read()).hexdigest()
+        if after_sha != base_sha:
+            raise RuntimeError("a44: incremental update rewrote the base index")
+        _write_atomic(
+            os.path.join(tmp, "update.json"),
+            _json.dumps(dict(stats, base_sha256=base_sha)).encode("utf-8"),
         )
-    with open(os.path.join(tmp, "index.zipnum.gz"), "rb") as f:
-        base_sha = hashlib.sha256(f.read()).hexdigest()
 
-    # the delta export: EVERY line of collection B, dupes included
-    stats = incremental_zipnum_update(tmp, sorted(index_lines(b_dir)))
-    with open(os.path.join(tmp, "index.zipnum.gz"), "rb") as f:
-        after_sha = hashlib.sha256(f.read()).hexdigest()
-    if after_sha != base_sha:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError("a44: incremental update rewrote the base index")
-    _write_atomic(
-        os.path.join(tmp, "update.json"),
-        _json.dumps(dict(stats, base_sha256=base_sha)).encode("utf-8"),
-    )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, a_warc_dir, b_dir
+    return _published(src, build), a_warc_dir, b_dir
 
 
 @register(
@@ -7506,8 +7341,10 @@ def _conflict_index_src(sf_dir: str) -> tuple[str, str, str]:
     keep-first, the conflicts survive into delta-001.zipnum.gz (a
     conflict is NOT a dupe — the digest differs), and the fixture
     asserts both counts. Returns (index_dir, a_warc_dir, c_warc_dir)."""
+    import functools
     import hashlib
     import json as _json
+    import shutil
 
     from tectonic_spark.operators.cdxj import (
         build_cdxj,
@@ -7521,83 +7358,74 @@ def _conflict_index_src(sf_dir: str) -> tuple[str, str, str]:
     rows = _docs_rows(sf_dir)
     n_shards = max(4, len(rows) // 15000)
     base = _fixture_dir(sf_dir)
-    c_dir = os.path.join(base, f"a45_conflict_src_{n_shards}")
-    idx_dir = os.path.join(base, "a45_idx")
-    if os.path.exists(os.path.join(idx_dir, "_DONE")):
-        return idx_dir, a_warc_dir, c_dir
-    import shutil
 
-    # --- collection C: the conflicting re-crawl ---
-    tmp_c = f"{c_dir}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp_c, ignore_errors=True)
-    os.makedirs(tmp_c, exist_ok=True)
-    shards: list[list[tuple[bytes, dict | None]]] = [
-        [] for _ in range(n_shards)
-    ]
-    n_conflicts = n_dupes = 0
-    for d, text, lang, source, _n in rows:
-        if d % 7 != 3:
-            continue
-        if d % 2 == 0:
-            body, n_conflicts = text + " alt", n_conflicts + 1
-        else:
-            body, n_dupes = text, n_dupes + 1
-        rec, http = _render_response_record(d, body, lang, source,
-                                            date=_WARC_DATE)
-        shards[d % n_shards].append(
-            (
-                rec,
-                {
-                    "url": f"https://{source}.example/doc/{d}",
-                    "ts": warc_timestamp(_WARC_DATE),
-                    "digest": payload_digest(http),
-                    "mime": "text/html",
-                    "status": 200,
-                    "filename": f"crawl-{d % n_shards:03d}.warc.gz",
-                },
+    @functools.cache
+    def collection_c() -> tuple[list[bytes], list[str], int, int]:
+        """The conflicting re-crawl: (WARC shard blobs, sorted CDXJ
+        lines, n_conflicts, n_dupes)."""
+        shards: list[list[tuple[bytes, dict | None]]] = [
+            [] for _ in range(n_shards)
+        ]
+        n_conflicts = n_dupes = 0
+        for d, text, lang, source, _n in rows:
+            if d % 7 != 3:
+                continue
+            if d % 2 == 0:
+                body, n_conflicts = text + " alt", n_conflicts + 1
+            else:
+                body, n_dupes = text, n_dupes + 1
+            rec, http = _render_response_record(d, body, lang, source,
+                                                date=_WARC_DATE)
+            shards[d % n_shards].append(
+                (
+                    rec,
+                    {
+                        "url": f"https://{source}.example/doc/{d}",
+                        "ts": warc_timestamp(_WARC_DATE),
+                        "digest": payload_digest(http),
+                        "mime": "text/html",
+                        "status": 200,
+                        "filename": f"crawl-{d % n_shards:03d}.warc.gz",
+                    },
+                )
             )
-        )
-    c_lines: list[str] = []
-    for i, recs in enumerate(shards):
-        blob, entries = write_warc_indexed(recs)
-        _write_atomic(os.path.join(tmp_c, f"crawl-{i:03d}.warc.gz"), blob)
-        c_lines.extend(
-            build_cdxj(entries).decode("utf-8").splitlines()
-        )
-    _write_atomic(os.path.join(tmp_c, "_DONE"), b"ok")
-    try:
-        os.rename(tmp_c, c_dir)
-    except OSError:
-        shutil.rmtree(tmp_c, ignore_errors=True)
+        blobs: list[bytes] = []
+        c_lines: list[str] = []
+        for recs in shards:
+            blob, entries = write_warc_indexed(recs)
+            blobs.append(blob)
+            c_lines.extend(
+                build_cdxj(entries).decode("utf-8").splitlines()
+            )
+        return blobs, sorted(c_lines), n_conflicts, n_dupes
 
-    # --- the updated (now conflicted) index ---
-    tmp = f"{idx_dir}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    for fname in ("index.zipnum.gz", "cluster.idx"):
-        shutil.copyfile(
-            os.path.join(a_idx_dir, fname), os.path.join(tmp, fname)
+    def build_c(tmp: str) -> None:
+        for i, blob in enumerate(collection_c()[0]):
+            _write_atomic(os.path.join(tmp, f"crawl-{i:03d}.warc.gz"), blob)
+
+    def build_idx(tmp: str) -> None:
+        """The updated (now conflicted) index."""
+        _blobs, c_lines, n_conflicts, n_dupes = collection_c()
+        for fname in ("index.zipnum.gz", "cluster.idx"):
+            shutil.copyfile(
+                os.path.join(a_idx_dir, fname), os.path.join(tmp, fname)
+            )
+        with open(os.path.join(tmp, "index.zipnum.gz"), "rb") as f:
+            base_sha = hashlib.sha256(f.read()).hexdigest()
+        stats = incremental_zipnum_update(tmp, c_lines)
+        if stats["n_dropped"] != n_dupes or stats["n_appended"] != n_conflicts:
+            raise RuntimeError(
+                f"a45: update dropped {stats['n_dropped']} (want {n_dupes} "
+                f"dupes), appended {stats['n_appended']} (want {n_conflicts} "
+                "conflicts)"
+            )
+        _write_atomic(
+            os.path.join(tmp, "update.json"),
+            _json.dumps(dict(stats, base_sha256=base_sha)).encode("utf-8"),
         )
-    with open(os.path.join(tmp, "index.zipnum.gz"), "rb") as f:
-        base_sha = hashlib.sha256(f.read()).hexdigest()
-    stats = incremental_zipnum_update(tmp, sorted(c_lines))
-    if stats["n_dropped"] != n_dupes or stats["n_appended"] != n_conflicts:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"a45: update dropped {stats['n_dropped']} (want {n_dupes} "
-            f"dupes), appended {stats['n_appended']} (want {n_conflicts} "
-            "conflicts)"
-        )
-    _write_atomic(
-        os.path.join(tmp, "update.json"),
-        _json.dumps(dict(stats, base_sha256=base_sha)).encode("utf-8"),
-    )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, idx_dir)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return idx_dir, a_warc_dir, c_dir
+
+    c_dir = _published(os.path.join(base, f"a45_conflict_src_{n_shards}"), build_c)
+    return _published(os.path.join(base, "a45_idx"), build_idx), a_warc_dir, c_dir
 
 
 @register(
@@ -7780,27 +7608,22 @@ def _index_export_src(sf_dir: str) -> tuple[str, str, str]:
     b_dir, _nb2 = _timeline_index_src(sf_dir)
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, "s17_exports")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, a_idx_dir, b_dir
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    lines = sorted(index_lines(b_dir))
-    for g in range(3):
-        part = sorted(lines[g::3])
-        _write_atomic(
-            os.path.join(tmp, f"export-{g:03d}.cdxj"),
-            ("\n".join(part) + "\n").encode("utf-8"),
-        )
-    _write_atomic(done.replace(src, tmp), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return src, a_idx_dir, b_dir
+    def build(tmp: str) -> None:
+        import time
+
+        lines = sorted(index_lines(b_dir))
+        # Spark's file stream source takes new files oldest first (by
+        # mtime in ms): stamp export g a second after export g-1 so the
+        # streams number their generations in name order
+        t0 = int(time.time()) - 3
+        for g in range(3):
+            part = sorted(lines[g::3])
+            path = os.path.join(tmp, f"export-{g:03d}.cdxj")
+            _write_atomic(path, ("\n".join(part) + "\n").encode("utf-8"))
+            os.utime(path, (t0 + g, t0 + g))
+
+    return _published(src, build), a_idx_dir, b_dir
 
 
 @register(
@@ -8162,62 +7985,52 @@ def _font_crawl_src(sf_dir: str) -> tuple[str, int]:
     n_shards = max(4, len(rows) // 15000)
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, f"c03_fonts_src_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    shards: list[list[bytes]] = [[] for _ in range(n_shards)]
-    for d, _text, _lang, source, _n in rows:
-        if d % 67 != 21:
-            continue
-        upem = 1000 + (d % 5) * 24
-        ng = 10 + d % 50
-        lf = d % 2
-        head = bytearray(54)
-        head[12:16] = _struct.pack(">I", 0x5F0F3CF5)
-        head[18:20] = _struct.pack(">H", upem)
-        head[50:52] = _struct.pack(">h", lf)
-        tables = [
-            (b"head", bytes(head)),
-            (b"maxp", _struct.pack(">IH", 0x00010000, ng) + b"\x00" * 26),
-            (b"hhea", b"\x00" * 34 + _struct.pack(">H", ng)),
-            (b"hmtx", bytes(4 * ng)),
-            (b"glyf", bytes((d * 7 + j) % 256
-                            for j in range(100 + (d * 11) % 200))),
-            (b"loca", bytes((ng + 1) * (2 + 2 * lf))),
-            (b"name", b"Doc Font %06d" % d),
-            (b"cmap", bytes(20)),
-        ]
-        payload = encode_woff2(
-            tables,
-            br_mode=("lz", "dict", "literals")[d % 3],
-            metadata=(
-                b"<metadata>doc %06d</metadata>" % d if d % 4 == 1 else None
-            ),
-        )
-        shards[d % n_shards].append(
-            build_warc_record(
-                "resource",
-                payload,
-                uri=f"https://{source}.example/font/{d}.woff2",
-                date=_WARC_DATE,
-                content_type="font/woff2",
+    def build(tmp: str) -> None:
+        shards: list[list[bytes]] = [[] for _ in range(n_shards)]
+        for d, _text, _lang, source, _n in rows:
+            if d % 67 != 21:
+                continue
+            upem = 1000 + (d % 5) * 24
+            ng = 10 + d % 50
+            lf = d % 2
+            head = bytearray(54)
+            head[12:16] = _struct.pack(">I", 0x5F0F3CF5)
+            head[18:20] = _struct.pack(">H", upem)
+            head[50:52] = _struct.pack(">h", lf)
+            tables = [
+                (b"head", bytes(head)),
+                (b"maxp", _struct.pack(">IH", 0x00010000, ng) + b"\x00" * 26),
+                (b"hhea", b"\x00" * 34 + _struct.pack(">H", ng)),
+                (b"hmtx", bytes(4 * ng)),
+                (b"glyf", bytes((d * 7 + j) % 256
+                                for j in range(100 + (d * 11) % 200))),
+                (b"loca", bytes((ng + 1) * (2 + 2 * lf))),
+                (b"name", b"Doc Font %06d" % d),
+                (b"cmap", bytes(20)),
+            ]
+            payload = encode_woff2(
+                tables,
+                br_mode=("lz", "dict", "literals")[d % 3],
+                metadata=(
+                    b"<metadata>doc %06d</metadata>" % d if d % 4 == 1 else None
+                ),
             )
-        )
-    for i, recs in enumerate(shards):
-        _write_atomic(
-            os.path.join(tmp, f"fonts-{i:03d}.warc.gz"), write_warc(recs)
-        )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+            shards[d % n_shards].append(
+                build_warc_record(
+                    "resource",
+                    payload,
+                    uri=f"https://{source}.example/font/{d}.woff2",
+                    date=_WARC_DATE,
+                    content_type="font/woff2",
+                )
+            )
+        for i, recs in enumerate(shards):
+            _write_atomic(
+                os.path.join(tmp, f"fonts-{i:03d}.warc.gz"), write_warc(recs)
+            )
+
+    return _published(src, build), n_shards
 
 
 @register(
@@ -8942,102 +8755,91 @@ def _font_formats_src(sf_dir: str) -> tuple[str, int]:
     n_shards = max(4, len(rows) // 15000)
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, f"c03_fontfmt_src_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
+    def build(tmp: str) -> None:
+        def head_tbl(lf: int) -> bytes:
+            head = bytearray(54)
+            head[12:16] = _struct.pack(">I", 0x5F0F3CF5)
+            head[18:20] = _struct.pack(">H", 1000)
+            head[50:52] = _struct.pack(">h", lf)
+            return bytes(head)
 
-    def head_tbl(lf: int) -> bytes:
-        head = bytearray(54)
-        head[12:16] = _struct.pack(">I", 0x5F0F3CF5)
-        head[18:20] = _struct.pack(">H", 1000)
-        head[50:52] = _struct.pack(">h", lf)
-        return bytes(head)
-
-    def truetype_tables(d: int, ng: int, lf: int) -> tuple[list, list]:
-        glyphs = [None] + [
-            glyph_simple(
-                [[(g * 8, 0, True), (g * 8 + 30 + d % 5, 0, True),
-                  (g * 8, 40, True)]]
-            )
-            for g in range(1, ng)
-        ]
-        glyf, loca = build_glyf(glyphs, lf)
-        return glyphs, [
-            (b"head", head_tbl(lf)),
-            (b"maxp", _struct.pack(">IH", 0x00010000, ng) + b"\x00" * 26),
-            (b"hhea", b"\x00" * 34 + _struct.pack(">H", ng)),
-            (b"hmtx", bytes(4 * ng)),
-            (b"glyf", glyf),
-            (b"loca", loca),
-            (b"cmap", bytes(20)),
-        ]
-
-    shards: list[list[bytes]] = [[] for _ in range(n_shards)]
-    for d, _text, _lang, source, _n in rows:
-        if d % 83 != 41:
-            continue
-        ng = 6 + d % 9
-        lf = d % 2
-        fmt = d % 4
-        mode = ("lz", "dict", "literals")[d % 3]
-        if fmt == 0:
-            _g, tables = truetype_tables(d, ng, lf)
-            payload = encode_woff2(tables, br_mode=mode)
-            ext, ctype = "woff2", "font/woff2"
-        elif fmt == 1:
-            glyphs, tables = truetype_tables(d, ng, lf)
-            payload = encode_woff2(
-                tables, br_mode=mode,
-                transformed={b"glyf": transform_glyf(glyphs, lf),
-                             b"loca": b""},
-            )
-            ext, ctype = "woff2", "font/woff2"
-        elif fmt == 2:
-            _g, tables = truetype_tables(d, ng, lf)
-            payload = encode_woff1(tables)
-            ext, ctype = "woff", "font/woff"
-        else:
-            css = [
-                build_charstring(
-                    [("rmoveto", [g, 5]), ("endchar", [])],
-                    width=100 + g,
+        def truetype_tables(d: int, ng: int, lf: int) -> tuple[list, list]:
+            glyphs = [None] + [
+                glyph_simple(
+                    [[(g * 8, 0, True), (g * 8 + 30 + d % 5, 0, True),
+                      (g * 8, 40, True)]]
                 )
-                for g in range(ng)
+                for g in range(1, ng)
             ]
-            cff = build_cff("Doc-CFF-%06d" % d, css,
-                            private_entries=[(20, [0]), (21, [0])])
-            tables = [
-                (b"head", head_tbl(0)),
-                (b"maxp", _struct.pack(">IH", 0x00005000, ng)),
-                (b"CFF ", cff),
+            glyf, loca = build_glyf(glyphs, lf)
+            return glyphs, [
+                (b"head", head_tbl(lf)),
+                (b"maxp", _struct.pack(">IH", 0x00010000, ng) + b"\x00" * 26),
+                (b"hhea", b"\x00" * 34 + _struct.pack(">H", ng)),
+                (b"hmtx", bytes(4 * ng)),
+                (b"glyf", glyf),
+                (b"loca", loca),
                 (b"cmap", bytes(20)),
             ]
-            payload = encode_woff2(tables, flavor=b"OTTO", br_mode=mode)
-            ext, ctype = "woff2", "font/woff2"
-        shards[d % n_shards].append(
-            build_warc_record(
-                "resource",
-                payload,
-                uri=f"https://{source}.example/font/{d}.{ext}",
-                date=_WARC_DATE,
-                content_type=ctype,
+
+        shards: list[list[bytes]] = [[] for _ in range(n_shards)]
+        for d, _text, _lang, source, _n in rows:
+            if d % 83 != 41:
+                continue
+            ng = 6 + d % 9
+            lf = d % 2
+            fmt = d % 4
+            mode = ("lz", "dict", "literals")[d % 3]
+            if fmt == 0:
+                _g, tables = truetype_tables(d, ng, lf)
+                payload = encode_woff2(tables, br_mode=mode)
+                ext, ctype = "woff2", "font/woff2"
+            elif fmt == 1:
+                glyphs, tables = truetype_tables(d, ng, lf)
+                payload = encode_woff2(
+                    tables, br_mode=mode,
+                    transformed={b"glyf": transform_glyf(glyphs, lf),
+                                 b"loca": b""},
+                )
+                ext, ctype = "woff2", "font/woff2"
+            elif fmt == 2:
+                _g, tables = truetype_tables(d, ng, lf)
+                payload = encode_woff1(tables)
+                ext, ctype = "woff", "font/woff"
+            else:
+                css = [
+                    build_charstring(
+                        [("rmoveto", [g, 5]), ("endchar", [])],
+                        width=100 + g,
+                    )
+                    for g in range(ng)
+                ]
+                cff = build_cff("Doc-CFF-%06d" % d, css,
+                                private_entries=[(20, [0]), (21, [0])])
+                tables = [
+                    (b"head", head_tbl(0)),
+                    (b"maxp", _struct.pack(">IH", 0x00005000, ng)),
+                    (b"CFF ", cff),
+                    (b"cmap", bytes(20)),
+                ]
+                payload = encode_woff2(tables, flavor=b"OTTO", br_mode=mode)
+                ext, ctype = "woff2", "font/woff2"
+            shards[d % n_shards].append(
+                build_warc_record(
+                    "resource",
+                    payload,
+                    uri=f"https://{source}.example/font/{d}.{ext}",
+                    date=_WARC_DATE,
+                    content_type=ctype,
+                )
             )
-        )
-    for i, recs in enumerate(shards):
-        _write_atomic(
-            os.path.join(tmp, f"fontfmt-{i:03d}.warc.gz"), write_warc(recs)
-        )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+        for i, recs in enumerate(shards):
+            _write_atomic(
+                os.path.join(tmp, f"fontfmt-{i:03d}.warc.gz"), write_warc(recs)
+            )
+
+    return _published(src, build), n_shards
 
 
 @register(
@@ -9216,88 +9018,77 @@ def _attachment_src(sf_dir: str) -> tuple[str, int]:
     n_shards = max(4, len(rows) // 15000)
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, f"c05_attach_src_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
+    def build(tmp: str) -> None:
+        shards: list[list[bytes]] = [[] for _ in range(n_shards)]
+        for d, text, lang, source, _n in rows:
+            if d % 107 != 63:
+                continue
+            words = text.split(" ")
+            lines = [" ".join(words[i : i + 8]) for i in range(0, len(words), 8)]
+            fmt = d % 4
+            if fmt == 0:
+                np_ = 1 + d % 3
+                per = (len(lines) + np_ - 1) // np_
+                pages = [lines[i : i + per] for i in range(0, len(lines), per)]
+                while len(pages) < np_:
+                    pages.append([])
+                payload = build_pdf(
+                    pages,
+                    compress=(d % 2 == 0),
+                    xref_stream=(d % 3 == 0),
+                    title=f"doc {d}",
+                )
+                ext, ctype = "pdf", "application/pdf"
+            elif fmt == 1:
+                payload = build_docx(
+                    [("Normal", ln) for ln in lines],
+                    title=f"doc {d}",
+                    creator="crawler",
+                    w_prefix="x" if d % 7 == 0 else "w",
+                )
+                ext = "docx"
+                ctype = (
+                    "application/vnd.openxmlformats-officedocument"
+                    ".wordprocessingml.document"
+                )
+            elif fmt == 2:
+                nc = 1 + d % 3
+                per = (len(lines) + nc - 1) // nc
+                groups = [lines[i : i + per] for i in range(0, len(lines), per)]
+                while len(groups) < nc:
+                    groups.append([])
+                payload = build_epub(
+                    [
+                        (f"ch {k} of doc {d}", "\n".join(g))
+                        for k, g in enumerate(groups)
+                    ],
+                    title=f"doc {d}",
+                    author="crawler",
+                    lang=str(lang),
+                    spine_rotate=d % nc,
+                )
+                ext, ctype = "epub", "application/epub+zip"
+            else:
+                payload = build_rtf(
+                    lines, title=f"doc {d}", bold_every=d % 4
+                )
+                ext, ctype = "rtf", "application/rtf"
+            shards[d % n_shards].append(
+                build_warc_record(
+                    "resource",
+                    payload,
+                    uri=f"https://{source}.example/attach/{d}.{ext}",
+                    date=_WARC_DATE,
+                    content_type=ctype,
+                )
+            )
+        for i, recs in enumerate(shards):
+            _write_atomic(
+                os.path.join(tmp, f"attach-{i:03d}.warc.gz"), write_warc(recs)
+            )
 
-    shards: list[list[bytes]] = [[] for _ in range(n_shards)]
-    for d, text, lang, source, _n in rows:
-        if d % 107 != 63:
-            continue
-        words = text.split(" ")
-        lines = [" ".join(words[i : i + 8]) for i in range(0, len(words), 8)]
-        fmt = d % 4
-        if fmt == 0:
-            np_ = 1 + d % 3
-            per = (len(lines) + np_ - 1) // np_
-            pages = [lines[i : i + per] for i in range(0, len(lines), per)]
-            while len(pages) < np_:
-                pages.append([])
-            payload = build_pdf(
-                pages,
-                compress=(d % 2 == 0),
-                xref_stream=(d % 3 == 0),
-                title=f"doc {d}",
-            )
-            ext, ctype = "pdf", "application/pdf"
-        elif fmt == 1:
-            payload = build_docx(
-                [("Normal", ln) for ln in lines],
-                title=f"doc {d}",
-                creator="crawler",
-                w_prefix="x" if d % 7 == 0 else "w",
-            )
-            ext = "docx"
-            ctype = (
-                "application/vnd.openxmlformats-officedocument"
-                ".wordprocessingml.document"
-            )
-        elif fmt == 2:
-            nc = 1 + d % 3
-            per = (len(lines) + nc - 1) // nc
-            groups = [lines[i : i + per] for i in range(0, len(lines), per)]
-            while len(groups) < nc:
-                groups.append([])
-            payload = build_epub(
-                [
-                    (f"ch {k} of doc {d}", "\n".join(g))
-                    for k, g in enumerate(groups)
-                ],
-                title=f"doc {d}",
-                author="crawler",
-                lang=str(lang),
-                spine_rotate=d % nc,
-            )
-            ext, ctype = "epub", "application/epub+zip"
-        else:
-            payload = build_rtf(
-                lines, title=f"doc {d}", bold_every=d % 4
-            )
-            ext, ctype = "rtf", "application/rtf"
-        shards[d % n_shards].append(
-            build_warc_record(
-                "resource",
-                payload,
-                uri=f"https://{source}.example/attach/{d}.{ext}",
-                date=_WARC_DATE,
-                content_type=ctype,
-            )
-        )
-    for i, recs in enumerate(shards):
-        _write_atomic(
-            os.path.join(tmp, f"attach-{i:03d}.warc.gz"), write_warc(recs)
-        )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+    return _published(src, build), n_shards
 
 
 @register(
@@ -9640,118 +9431,107 @@ def _asset_src(sf_dir: str) -> tuple[str, int]:
     n_shards = max(4, len(rows) // 15000)
     base = _fixture_dir(sf_dir)
     src = os.path.join(base, f"c05_asset_src_{n_shards}")
-    done = os.path.join(src, "_DONE")
-    if os.path.exists(done):
-        return src, n_shards
-    import shutil
 
-    tmp = f"{src}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-
-    shards: list[list[bytes]] = [[] for _ in range(n_shards)]
-    for d, text, _lang, source, _n in rows:
-        if d % 139 != 87:
-            continue
-        kind = d % 6
-        if kind == 0:
-            r_n = 2 + d % 5
-            sheet = [
-                [d % 100 + 3 * r, f"w{(d + r) % 7}", r + 1]
-                for r in range(r_n)
-            ]
-            payload = build_xlsx([("data", sheet)])
-            ext = "xlsx"
-            ctype = (
-                "application/vnd.openxmlformats-officedocument"
-                ".spreadsheetml.sheet"
-            )
-        elif kind == 1:
-            words = text.split(" ")
-            lines = [
-                " ".join(words[i : i + 8])
-                for i in range(0, len(words), 8)
-            ]
-            payload = build_odt(
-                [(1 if j == 0 else 0, ln) for j, ln in enumerate(lines)],
-                title=f"odt {d}",
-            )
-            ext, ctype = "odt", "application/vnd.oasis.opendocument.text"
-        elif kind == 2:
-            side = 16 + (d % 4) * 16
-            k = 2 + d % 4
-            coords = " ".join(
-                f"{(d + i) % side} {(d * 3 + i * 7) % side}"
-                for i in range(k)
-            )
-            payload = build_svg(
-                width=side,
-                height=side,
-                rects=[(1, 1, 4, 4)],
-                paths=[f"M0 0 L{coords} Z"],
-            )
-            ext, ctype = "svg", "image/svg+xml"
-        elif kind == 3:
-            words = text.split(" ")
-            lines = [
-                " ".join(words[i : i + 8])
-                for i in range(0, len(words), 8)
-            ]
-            ns = 1 + d % 3
-            per = (len(lines) + ns - 1) // ns
-            groups = [
-                lines[i : i + per] for i in range(0, len(lines), per)
-            ]
-            while len(groups) < ns:
-                groups.append([])
-            payload = build_markdown(
-                [(f"section {s}", g) for s, g in enumerate(groups)],
-                title=f"doc {d}",
-            )
-            ext, ctype = "md", "text/markdown"
-        elif kind == 4:
-            n_img = 1 + d % 2
-            payload = encode_ico(
-                [
-                    {
-                        "w": 16 << k,
-                        "h": 16 << k,
-                        "fmt": "png" if (d + k) % 2 == 0 else "bmp",
-                        "pixels": bytes(
-                            (i * (d % 251 + k + 1) + d) % 256
-                            for i in range((16 << k) ** 2 * 3)
-                        ),
-                    }
-                    for k in range(n_img)
+    def build(tmp: str) -> None:
+        shards: list[list[bytes]] = [[] for _ in range(n_shards)]
+        for d, text, _lang, source, _n in rows:
+            if d % 139 != 87:
+                continue
+            kind = d % 6
+            if kind == 0:
+                r_n = 2 + d % 5
+                sheet = [
+                    [d % 100 + 3 * r, f"w{(d + r) % 7}", r + 1]
+                    for r in range(r_n)
                 ]
+                payload = build_xlsx([("data", sheet)])
+                ext = "xlsx"
+                ctype = (
+                    "application/vnd.openxmlformats-officedocument"
+                    ".spreadsheetml.sheet"
+                )
+            elif kind == 1:
+                words = text.split(" ")
+                lines = [
+                    " ".join(words[i : i + 8])
+                    for i in range(0, len(words), 8)
+                ]
+                payload = build_odt(
+                    [(1 if j == 0 else 0, ln) for j, ln in enumerate(lines)],
+                    title=f"odt {d}",
+                )
+                ext, ctype = "odt", "application/vnd.oasis.opendocument.text"
+            elif kind == 2:
+                side = 16 + (d % 4) * 16
+                k = 2 + d % 4
+                coords = " ".join(
+                    f"{(d + i) % side} {(d * 3 + i * 7) % side}"
+                    for i in range(k)
+                )
+                payload = build_svg(
+                    width=side,
+                    height=side,
+                    rects=[(1, 1, 4, 4)],
+                    paths=[f"M0 0 L{coords} Z"],
+                )
+                ext, ctype = "svg", "image/svg+xml"
+            elif kind == 3:
+                words = text.split(" ")
+                lines = [
+                    " ".join(words[i : i + 8])
+                    for i in range(0, len(words), 8)
+                ]
+                ns = 1 + d % 3
+                per = (len(lines) + ns - 1) // ns
+                groups = [
+                    lines[i : i + per] for i in range(0, len(lines), per)
+                ]
+                while len(groups) < ns:
+                    groups.append([])
+                payload = build_markdown(
+                    [(f"section {s}", g) for s, g in enumerate(groups)],
+                    title=f"doc {d}",
+                )
+                ext, ctype = "md", "text/markdown"
+            elif kind == 4:
+                n_img = 1 + d % 2
+                payload = encode_ico(
+                    [
+                        {
+                            "w": 16 << k,
+                            "h": 16 << k,
+                            "fmt": "png" if (d + k) % 2 == 0 else "bmp",
+                            "pixels": bytes(
+                                (i * (d % 251 + k + 1) + d) % 256
+                                for i in range((16 << k) ** 2 * 3)
+                            ),
+                        }
+                        for k in range(n_img)
+                    ]
+                )
+                ext, ctype = "ico", "image/x-icon"
+            else:
+                r2 = 3 + d % 7
+                body = "k,v,q\r\n" + "".join(
+                    f'{i},"v,{d}",q{i}\r\n' for i in range(r2)
+                )
+                payload = body.encode()
+                ext, ctype = "csv", "text/csv"
+            shards[d % n_shards].append(
+                build_warc_record(
+                    "resource",
+                    payload,
+                    uri=f"https://{source}.example/asset/{d}.{ext}",
+                    date=_WARC_DATE,
+                    content_type=ctype,
+                )
             )
-            ext, ctype = "ico", "image/x-icon"
-        else:
-            r2 = 3 + d % 7
-            body = "k,v,q\r\n" + "".join(
-                f'{i},"v,{d}",q{i}\r\n' for i in range(r2)
+        for i, recs in enumerate(shards):
+            _write_atomic(
+                os.path.join(tmp, f"asset-{i:03d}.warc.gz"), write_warc(recs)
             )
-            payload = body.encode()
-            ext, ctype = "csv", "text/csv"
-        shards[d % n_shards].append(
-            build_warc_record(
-                "resource",
-                payload,
-                uri=f"https://{source}.example/asset/{d}.{ext}",
-                date=_WARC_DATE,
-                content_type=ctype,
-            )
-        )
-    for i, recs in enumerate(shards):
-        _write_atomic(
-            os.path.join(tmp, f"asset-{i:03d}.warc.gz"), write_warc(recs)
-        )
-    _write_atomic(os.path.join(tmp, "_DONE"), b"ok")
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent builder won
-    return src, n_shards
+
+    return _published(src, build), n_shards
 
 
 @register(

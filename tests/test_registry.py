@@ -370,3 +370,103 @@ def test_sessions_start_only_through_get_spark():
         if path != root / "tectonic_spark" / "session.py":
             problems += _session_builders(path.read_text(), str(path.relative_to(root)))
     assert problems == []
+
+
+def _fixture_publish_problems(
+    source: str, filename: str, renames: bool = True
+) -> list[str]:
+    """Lines of ``source`` that hand-code the fixture publish protocol
+    outside ``_published``: a ``"_DONE"`` literal, an f-string naming a
+    ``.tmp-`` directory, or (when ``renames``) an ``os.rename`` whose
+    destination is not a file named inside a directory
+    (``os.path.join(dir, name)``), as publishing a directory is."""
+    import ast
+
+    tree = ast.parse(source, filename)
+    helper = {
+        id(n)
+        for f in ast.walk(tree)
+        if isinstance(f, ast.FunctionDef) and f.name == "_published"
+        for n in ast.walk(f)
+    }
+
+    def is_join(n) -> bool:
+        return (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "join"
+            and isinstance(n.func.value, ast.Attribute)
+            and n.func.value.attr == "path"
+        )
+
+    problems = []
+    for node in ast.walk(tree):
+        if id(node) in helper:
+            continue
+        what = None
+        if isinstance(node, ast.Constant) and node.value == "_DONE":
+            what = '"_DONE" literal'
+        elif isinstance(node, ast.JoinedStr) and any(
+            isinstance(v, ast.Constant) and ".tmp-" in str(v.value) for v in node.values
+        ):
+            what = "f-string .tmp- directory"
+        elif (
+            renames
+            and isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "rename"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id.lstrip("_") == "os"
+            and not (len(node.args) == 2 and is_join(node.args[1]))
+        ):
+            what = "os.rename of a directory"
+        if what:
+            problems.append((node.lineno, f"{filename}:{node.lineno}: {what}"))
+    return [p for _line, p in sorted(problems)]
+
+
+def test_fixture_publish_scan_flags_a_hand_written_protocol():
+    bad = (
+        "def _a_src(sf_dir):\n"
+        "    src = os.path.join(_fixture_dir(sf_dir), 'a_src')\n"
+        "    done = os.path.join(src, '_DONE')\n"
+        "    tmp = f'{src}.tmp-{os.getpid()}'\n"
+        "    _os.rename(tmp, src)\n"
+        "    os.rename(tmp, os.path.join(base, 'a_src') + '/')\n"
+        "    return src\n"
+    )
+    good = (
+        "def _published(src, build):\n"
+        "    done = os.path.join(src, '_DONE')\n"
+        "    tmp = f'{src}.tmp-{os.getpid()}'\n"
+        "    os.rename(tmp, src)\n"
+        "def _a_src(sf_dir):\n"
+        "    def build(tmp):\n"
+        "        os.rename(sidecar, os.path.join(tmp, f'run{n:03d}.gz'))\n"
+        "        os.replace(part, os.path.join(tmp, 'part-0.json'))\n"
+        "    return _published(os.path.join(_fixture_dir(sf_dir), 'a_src'), build)\n"
+    )
+    assert _fixture_publish_problems(bad, "bad.py") == [
+        'bad.py:3: "_DONE" literal',
+        "bad.py:4: f-string .tmp- directory",
+        "bad.py:5: os.rename of a directory",
+        "bad.py:6: os.rename of a directory",
+    ]
+    assert _fixture_publish_problems(good, "good.py") == []
+    # cdxj.py's index writer renames its own files into place
+    cdxj = "os.rename(tmp, delta_path)\n"
+    assert _fixture_publish_problems(cdxj, "cdxj.py", renames=False) == []
+
+
+def test_operators_publish_fixtures_only_through_published():
+    """One fixture publisher: no operator module checks ``_DONE``, names a
+    ``.tmp-`` directory or renames a directory into place by hand; every
+    fixture goes through ``parser_ops._published``."""
+    import pathlib
+
+    problems = []
+    for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
+        problems += _fixture_publish_problems(
+            path.read_text(), path.name, renames=path.name != "cdxj.py"
+        )
+    assert problems == []
