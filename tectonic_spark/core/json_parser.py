@@ -30,6 +30,36 @@ Capabilities (reference parity):
 
 Deliberate deviations (documented for the judge):
 
+* **A Mison structural index decides pushed-down rows** (Li et al.,
+  "Mison", VLDB 2017). When a VALUE_STREAM plate offers an ``IndexPlan``
+  (``Plate.index_plan``; only the pushdown plate does), each absorbed
+  buffer is indexed in windows of at most 4 MiB, in numpy: one
+  ``bytes.translate`` and ``flatnonzero`` find the structural bytes;
+  adjacent quote pairs prove no string holds one (otherwise quote parity
+  comes from a ``cumsum``, a quote escaped by an odd run of backslashes
+  not counting); bracket depth comes from a ``cumsum`` over the brackets,
+  and a row ends where it returns to 0. The key order of the first row is
+  speculated for the rest; each row's keys are checked against it in one
+  gather, as far as the walker would read the row, and up to four orders
+  are learned per window, each from the first row the others miss.
+  Filter columns decode with one ``json.loads`` over the joined value
+  slices and their tests run on the values; failing rows are dropped
+  without being built, and surviving rows' flat columns decode the same
+  way. The index replays exactly what
+  the walker would do with each row: the members it reads and how it
+  validates them (whitespace, separators, the raw skip of an atom), where
+  it stops, and the bytes it reports skipped. Numpy is imported on the
+  first index.
+* **The event walker is the index's fallback.** Every row the index
+  cannot prove (a misplaced, absent or repeated key, a malformed key,
+  separator or value in the part the walker reads, a nested projection, a
+  container or a value ``json.loads`` rejects in a filter column, a
+  non-object row, bytes between rows) is walked alone at its own offset,
+  and so are the window after a backslash outside a string or a closer at
+  depth 0, a buffer's cut tail, and a buffer under 32 KiB, too small to
+  pay for an index. Rows, ``skipped`` counts and every ParseException
+  therefore stay the walker's. ``rows_indexed`` and ``rows_walked`` count
+  the rows each route took.
 * **One suspendable event walker**: ``_emit_value`` is a generator. Where
   a chunk cuts a token it stores the token's start and yields; the
   consumed prefix is dropped (the analog of the reference's 1 MiB sliding
@@ -50,11 +80,14 @@ Deliberate deviations (documented for the judge):
 * ``skipped`` byte counts follow the reference's accounting (map-value
   skips include the trailing separator; array-element skips start at the
   current scan position). Each skipped region is one count, however the
-  input is chunked.
+  input is chunked; the rows the index decides report theirs to the plate
+  as one sum per run of such rows, and ``skipped_bytes_total`` is the
+  same either way.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 from enum import Enum
 from typing import Generic, TypeVar
@@ -125,6 +158,601 @@ class _BreakBatch(Exception):
     """Internal: consumer requested an early batch cut."""
 
 
+# ---------------------------------------------------------- structural index
+
+_INDEX_BLOCK = 4 * 1024 * 1024  # one index window
+# below this many bytes the index's fixed cost (~0.5 ms) exceeds the walk
+_INDEX_MIN_BYTES = 32 * 1024
+_MAX_PATTERNS = 4  # key orders speculated per window; rows of any other are walked
+_WS = b" \t\r\n"
+# every byte but " { } [ ] : , \ maps to 0, so one flatnonzero finds them
+_STRUCT_TABLE = bytes(c if c in b'"{}[]:,\\' else 0 for c in range(256))
+# what the walker's raw skip accepts between a map value's ':' and its
+# separator when the value is neither a string nor a container
+_LAX_ATOM_RE = re.compile(rb"[ \t\r\n]*+[^ \t\r\n]*+[ \t\r\n]*+")
+_SKIP, _KEEP, _TEST, _WALK = range(4)  # what the walker does with a key's value
+_ROW_WALK, _ROW_KEEP, _ROW_DROP = range(3)
+
+
+class IndexPlan:
+    """What a plate lets the structural index decide for it (see
+    ``Plate.index_plan``).
+
+    ``required``: top-level keys a kept row holds (None: all of them, when
+    the row is decoded whole). ``walk``: required keys whose value
+    only the walker may build (nested projections). ``tests``: per filter
+    column, tests called with the value ``json.loads`` gives; a row fails
+    on the first test that returns False. ``early_exit``: with no tests the
+    walker skips the rest of a row at the first unrequired key after every
+    required key was seen. ``keep(rows)`` takes decided rows in input order;
+    ``drop(n)`` counts rows that failed a test."""
+
+    __slots__ = ("required", "walk", "tests", "early_exit", "keep", "drop")
+
+    def __init__(self, required, walk, tests, early_exit, keep, drop):
+        self.required = required
+        self.walk = walk
+        self.tests = tests
+        self.early_exit = early_exit
+        self.keep = keep
+        self.drop = drop
+
+
+@functools.cache
+def _index_tables():
+    """numpy, a whitespace lookup table and a strict decoder, made on the
+    first index (numpy stays out of ``import tectonic_spark``)."""
+    import json as _json
+
+    import numpy as np
+
+    is_ws = np.zeros(256, np.bool_)
+    is_ws[list(_WS)] = True
+    return np, is_ws, _json.JSONDecoder(parse_constant=_reject_constant).decode
+
+
+def _loads_strict(data: bytes):
+    """``json.loads`` after a strict UTF-8 decode: bytes input would pass
+    encoded surrogates, which the walker rejects."""
+    return _index_tables()[2](data.decode("utf-8"))
+
+
+def _regions_ok(np, is_ws, arr, blk: bytes, starts, lens, atom: bool):
+    """Whether each region ``[start, start + len)`` is whitespace only or,
+    with ``atom``, what the walker's raw skip of an atom value accepts:
+    whitespace, one run of other bytes, whitespace."""
+    out = np.ones(len(lens), np.bool_)
+    wide = np.flatnonzero(lens > 64)
+    if len(wide):
+        match = (_LAX_ATOM_RE if atom else _WS_RE).fullmatch
+        out[wide] = [
+            match(blk, s, s + n) is not None
+            for s, n in zip(starts[wide].tolist(), lens[wide].tolist())
+        ]
+    short = np.flatnonzero((lens > 0) & (lens <= 64))
+    if len(short):
+        lens = lens[short]
+        w = int(lens.max())
+        cols = np.arange(w)
+        idx = np.minimum(starts[short][:, None] + cols, len(arr) - 1)
+        solid = ~is_ws[arr[idx]] & (cols < lens[:, None])
+        if atom:
+            count = solid.sum(axis=1)
+            first = solid.argmax(axis=1)
+            last = w - 1 - solid[:, ::-1].argmax(axis=1)
+            out[short] = (count == 0) | (last - first + 1 == count)
+        else:
+            out[short] = ~solid.any(axis=1)
+    return out
+
+
+def _decode(np, blk: bytes, starts, ends):
+    """Values of the slices ``blk[start:end]`` in one ``json.loads``, and
+    the (ascending) numbers of the slices it rejects, or None."""
+    parts = [blk[a:b] for a, b in zip(starts.tolist(), ends.tolist())]
+    try:
+        vals = _loads_strict(b"[" + b",".join(parts) + b"]")
+    except (ValueError, RecursionError):
+        pass
+    else:
+        if len(vals) == len(parts):
+            return vals, None
+    vals, bad = [], []
+    for k, part in enumerate(parts):
+        try:
+            vals.append(_loads_strict(part))
+        except (ValueError, RecursionError):
+            vals.append(None)
+            bad.append(k)
+    return vals, np.array(bad, np.intp)
+
+
+class _Pattern:
+    """One speculated key order, learned from one row's depth-1 keys. A row
+    follows it when its keys equal these, rank for rank, as far as the
+    walker reads the row."""
+
+    def __init__(self, np, keys: list[str], raw: list[bytes], plan: IndexPlan):
+        self.n = n = len(keys)
+        self.keys = keys
+        self.lens = np.array([len(r) for r in raw], np.int64)
+        self.key_at = np.concatenate(([0], np.cumsum(self.lens)))
+        self.bytes = np.frombuffer(b"".join(raw), np.uint8)
+        self.byte_rank = np.repeat(np.arange(n), self.lens)
+        # offset of each key byte from its opening quote
+        self.byte_off = np.arange(len(self.bytes)) - self.key_at[self.byte_rank] + 1
+        req, tests = plan.required, plan.tests
+        roles = []
+        for k in keys:
+            if req is not None and k not in req:
+                roles.append(_SKIP)
+            elif k in tests:
+                roles.append(_TEST)
+            elif k in plan.walk:
+                roles.append(_WALK)
+            else:
+                roles.append(_KEEP)
+        self.roles = np.array(roles, np.int8)
+        kept = [k for k, role in zip(keys, roles) if role != _SKIP]
+        # a repeated kept or tested key changes what the walker builds
+        self.usable = len(set(kept)) == len(kept)
+        self.value_ranks = [r for r, role in enumerate(roles) if role in (_KEEP, _TEST)]
+        self.test_ranks = [r for r, role in enumerate(roles) if role == _TEST]
+        ranks = {k: r for r, k in enumerate(keys)}
+        # a filter column absent from the row is a null cell at finish_row
+        self.absent_fail = any(
+            not all(t(None) for t in ts) for c, ts in tests.items() if c not in ranks
+        )
+        # the key where an early exit stops the walk (only its key is read)
+        self.exit_rank = None
+        if plan.early_exit and all(k in ranks for k in req):
+            last = max((ranks[k] for k in req), default=-1)
+            if last + 1 < n:
+                self.exit_rank = last + 1
+        # the ranks every row is read through; rows that pass every test
+        # then go on to the end
+        if self.exit_rank is not None:
+            self.need = self.exit_rank + 1
+        elif self.test_ranks:
+            self.need = self.test_ranks[-1] + 1
+        else:
+            self.need = n
+
+
+class _Decided:
+    """The index's verdict on the complete rows of one window."""
+
+    __slots__ = ("n", "opens", "ends", "gap_ok", "action", "skip", "kept_rows", "kept")
+
+    def __init__(self, n, opens, ends, gap_ok, action, skip, kept_rows, kept):
+        self.n = n
+        self.opens = opens  # row starts, relative to the window
+        self.ends = ends  # row ends (exclusive), relative to the window
+        self.gap_ok = gap_ok  # only whitespace before the row
+        self.action = action  # _ROW_WALK / _ROW_KEEP / _ROW_DROP
+        self.skip = skip  # bytes the walker would report skipped
+        self.kept_rows = kept_rows  # ascending row numbers of kept rows
+        self.kept = kept  # their values, in the same order
+
+
+class _Members:
+    """Where some ranks of some rows' members lie (rows x ranks arrays),
+    and whether each is well-formed as the walker reads it. ``kind``: 0 an
+    atom, 1 a string, 2 a nested value."""
+
+    __slots__ = ("match", "key_ok", "ok", "colon", "sep", "sep_e", "kind", "qend")
+
+    def take(self, rows) -> "_Members":
+        out = _Members()
+        for name in self.__slots__:
+            setattr(out, name, getattr(self, name)[rows])
+        return out
+
+
+class _Window:
+    """The structural index of one window: every structural byte outside
+    strings (a string keeps just its two quotes), the brackets with their
+    depth, the colons, and the complete rows."""
+
+    def __init__(self, np, is_ws, blk: bytes):
+        self.np, self.is_ws, self.blk = np, is_ws, blk
+        self.arr = np.frombuffer(blk, np.uint8)
+        a = np.frombuffer(blk.translate(_STRUCT_TABLE), np.uint8)
+        P = np.flatnonzero(a.view(np.bool_))
+        C = a[P]
+        del a
+        # the index's view equals the walker's raw scan before this offset
+        self.trust = len(blk)
+        has_bs = b"\\" in blk
+        paired = False
+        if not has_bs:
+            qi = np.flatnonzero(C == 0x22)
+            if len(qi) % 2:  # the window cuts a string
+                self.trust = int(P[qi[-1]])
+                qi = qi[:-1]
+            # no structural byte inside any string: parity is trivial
+            paired = bool((qi[1::2] - qi[::2] == 1).all())
+        if not paired:
+            P, C = self._outside_strings(P, C)
+        self.P, self.C = P, C
+        B = np.flatnonzero(((C | 0x20) & 0xF9) == 0x79)  # { } [ ]
+        dB = (C[B] & 2).astype(np.int8) - 1  # +1 opens, -1 closes
+        depth = np.cumsum(dB, dtype=np.int32)
+        if len(depth) and depth.min() < 0:  # a closer at depth 0
+            self.trust = min(self.trust, int(P[B[(depth < 0).argmax()]]))
+        rc = np.flatnonzero((depth == 0) & (dB == -1))
+        rc = rc[P[B[rc]] < self.trust]
+        self.n = n = len(rc)
+        ro = np.flatnonzero((depth == 1) & (dB == 1))[:n]
+        self.B, self.dB, self.depth = B, dB, depth
+        self.open_e, self.close_e = B[ro], B[rc]
+        # the first bracket after a row's open: its close, if the row is flat
+        self.nest_e = B[ro + 1] if n else ro
+        self.col = np.flatnonzero(C == 0x3A)
+        self.cf = np.searchsorted(self.col, self.open_e)
+        self.cl = np.searchsorted(self.col, self.close_e)
+        self._pairs = None
+
+    def _outside_strings(self, P, C):
+        """Quote parity by cumsum, a quote escaped by an odd run of
+        backslashes not counting (Mison). Keeps the quotes and the bytes
+        outside strings; a backslash outside a string ends the trust."""
+        np = self.np
+        q = C == 0x22
+        bs = C == 0x5C
+        bi = np.flatnonzero(bs)
+        if len(bi):
+            bp = P[bi]
+            last = np.ones(len(bi), np.bool_)
+            last[:-1] = bp[1:] != bp[:-1] + 1
+            first = np.ones(len(bi), np.bool_)
+            first[1:] = last[:-1]
+            odd = (bp[last] - bp[first]) % 2 == 0
+            after = bi[last] + 1
+            hit = (after < len(P)) & odd
+            after, run_end = after[hit], bp[last][hit]
+            q[after[P[after] == run_end + 1]] = False  # escaped: string content
+        outside = (np.cumsum(q, dtype=np.int32) & 1) == 0
+        stray = bs & outside
+        if stray.any():
+            self.trust = min(self.trust, int(P[stray.argmax()]))
+        keep = q | (outside & ~bs)
+        return P[keep], C[keep]
+
+    def row_colons(self, r: int):
+        """The depth-1 colon entries of row ``r``."""
+        E = self.col[self.cf[r] : self.cl[r]]
+        return E[self.depth[self.np.searchsorted(self.B, E) - 1] == 1]
+
+    def closer(self, e):
+        """The entry closing each depth-1 container opened at entry ``e``
+        (-1 where ``e`` opens none)."""
+        np = self.np
+        if self._pairs is None:
+            d, dB = self.depth, self.dB
+            o1 = self.B[(d == 2) & (dB == 1)]
+            c1 = self.B[(d == 1) & (dB == -1)]
+            k = min(len(o1), len(c1))
+            self._pairs = o1[:k], c1[:k]
+        o1, c1 = self._pairs
+        if not len(o1):
+            return np.full(len(e), -1)
+        i = np.minimum(np.searchsorted(o1, e), len(o1) - 1)
+        return np.where(o1[i] == e, c1[i], -1)
+
+    def colons(self, rows, need: int, full: bool):
+        """The first ``need`` depth-1 colons of each row that has them (all
+        of them, exactly ``need``, when ``full``): the rows (ascending
+        indices into ``rows``) and their colon entries."""
+        np, col = self.np, self.col
+        cf = self.cf[rows]
+        cnt = self.cl[rows] - cf
+        enough = cnt >= need
+        last = np.minimum(cf + need - 1, len(col) - 1)
+        flat = enough & (col[last] < self.nest_e[rows])
+        if full:
+            flat &= cnt == need
+        sel = np.flatnonzero(flat)
+        CI = col[cf[sel][:, None] + np.arange(need)]
+        rest = np.flatnonzero(enough & ~flat)
+        if len(rest):
+            # colons inside nested values: keep those at depth 1
+            cnt = cnt[rest]
+            start = np.cumsum(cnt) - cnt
+            owner = np.repeat(np.arange(len(rest)), cnt)
+            E = col[np.arange(int(cnt.sum())) - start[owner] + cf[rest][owner]]
+            top = self.depth[np.searchsorted(self.B, E) - 1] == 1
+            E, owner = E[top], owner[top]
+            count = np.bincount(owner, minlength=len(rest))
+            good = np.flatnonzero(count == need if full else count >= need)
+            if len(good):
+                start = np.cumsum(count) - count
+                sel = np.concatenate((sel, rest[good]))
+                CI = np.concatenate((CI, E[start[good][:, None] + np.arange(need)]))
+                order = np.argsort(sel, kind="stable")
+                sel, CI = sel[order], CI[order]
+        return sel, CI
+
+    def members(self, pat: _Pattern, rows, CI, r0: int, prev) -> _Members:
+        """Read ranks ``r0 ..`` of ``rows`` (colon entries ``CI``, separator
+        before the first at entry ``prev``). ``match``: each row's keys are
+        the pattern's. ``key_ok``: the separator before the member, its key
+        and colon are what the walker accepts; ``ok``: so are its value and
+        the separator after it (an atom value is checked later, by its
+        role)."""
+        np, P, C = self.np, self.P, self.C
+        top = len(C) - 1
+        m, w = CI.shape
+        c1 = C[np.minimum(CI + 1, top)]
+        is_str = c1 == 0x22
+        is_nest = (c1 | 0x20) == 0x7B
+        sep_e = CI + 1 + 2 * is_str
+        nest_ok = np.ones_like(is_nest)
+        if is_nest.any():
+            close = self.closer(CI[is_nest] + 1)
+            nest_ok[is_nest] = close >= 0
+            sep_e[is_nest] = close + 1
+        sep_e = np.minimum(sep_e, top)
+        prevs = np.empty_like(CI)
+        prevs[:, 0] = prev
+        prevs[:, 1:] = sep_e[:, :-1]
+        kq0, kq1 = CI - 2, CI - 1
+        pk0, pk1, pc = P[kq0], P[kq1], P[CI]
+        match = (
+            (C[kq0] == 0x22)
+            & (C[kq1] == 0x22)
+            & (kq0 - 1 == prevs)
+            & (pk1 - pk0 - 1 == pat.lens[r0 : r0 + w])
+        ).all(axis=1)
+        lo, hi = pat.key_at[r0], pat.key_at[r0 + w]
+        ri = np.flatnonzero(match)
+        if hi > lo and len(ri):
+            idx = pk0[ri][:, pat.byte_rank[lo:hi] - r0] + pat.byte_off[lo:hi]
+            match[ri] = (self.arr[idx] == pat.bytes[lo:hi]).all(axis=1)
+        cp, cs = C[prevs], C[sep_e]
+        sep = P[sep_e]
+        wrapped = is_str | is_nest
+        atom = ~wrapped & ((c1 == 0x2C) | (c1 == 0x7D))
+        key_ok = (cp == 0x2C) | (prevs == self.open_e[rows][:, None])
+        ok = (is_str | atom | (is_nest & nest_ok)) & ((cs == 0x2C) | (cs == 0x7D))
+        # whitespace only around keys and colons, and around strings and
+        # nested values
+        vopen = P[np.minimum(CI + 1, top)]
+        vclose = P[np.where(is_str, np.minimum(CI + 2, top), np.maximum(sep_e - 1, 0))]
+        gaps = [
+            (P[prevs] + 1, pk0 - P[prevs] - 1, True, key_ok),
+            (pk1 + 1, pc - pk1 - 1, True, key_ok),
+            (pc + 1, vopen - pc - 1, wrapped, ok),
+            (vclose + 1, sep - vclose - 1, wrapped, ok),
+        ]
+        for start, length, where, into in gaps:
+            check = where & (length > 0)
+            if check.any():
+                i, j = np.nonzero(check)
+                bad = ~_regions_ok(
+                    np, self.is_ws, self.arr, self.blk, start[i, j], length[i, j], False
+                )
+                into[i[bad], j[bad]] = False
+        out = _Members()
+        out.match, out.key_ok, out.ok = match, key_ok, ok & key_ok
+        out.colon, out.sep, out.sep_e = pc, sep, sep_e
+        out.kind = np.where(is_str, 1, np.where(is_nest, 2, 0))
+        out.qend = P[np.minimum(CI + 2, top)] + 1
+        return out
+
+
+def _learn(w: _Window, r: int, plan: IndexPlan) -> _Pattern | None:
+    """The key order of row ``r``; None when one of its keys is no valid
+    string, or a kept or tested key repeats."""
+    E = w.row_colons(r)
+    C, P = w.C, w.P
+    if not len(E) or not ((C[E - 1] == 0x22) & (C[E - 2] == 0x22)).all():
+        return None
+    raw = [w.blk[a + 1 : b] for a, b in zip(P[E - 2].tolist(), P[E - 1].tolist())]
+    try:
+        keys = _loads_strict(b'["' + b'","'.join(raw) + b'"]')
+    except (ValueError, RecursionError):
+        return None
+    if len(keys) != len(raw):
+        return None
+    pat = _Pattern(w.np, keys, raw, plan)
+    return pat if pat.usable else None
+
+
+def _decide(w: _Window, pat: _Pattern, plan: IndexPlan, rows):
+    """Replay, for the rows that follow one key order, what the walker
+    would do with each: the members it walks, where it stops, what it
+    keeps and what it reports skipped. Returns the rows taken (ascending),
+    their actions and skipped bytes, and the kept rows with their values.
+    A taken row whose walked members the index cannot prove is walked."""
+    np, is_ws, arr, blk = w.np, w.is_ws, w.arr, w.blk
+    n, need = pat.n, pat.need
+    full = need == n and pat.exit_rank is None
+    sel, CI = w.colons(rows, need, full)
+    rows = rows[sel]
+    m1 = w.members(pat, rows, CI, 0, w.open_e[rows])
+    rows = rows[m1.match]
+    m1 = m1.take(m1.match)
+    m = len(rows)
+    end = w.P[w.close_e[rows]] + 1
+    stop = np.full(m, n if pat.exit_rank is None else pat.exit_rank)
+    failed = np.zeros(m, np.bool_)
+    walk = np.zeros(m, np.bool_)
+    nxt = np.zeros(m, np.int64)
+    values = {}
+    for r in pat.test_ranks:
+        live = np.flatnonzero(~failed & ~walk)
+        nested = m1.kind[live, r] == 2
+        walk[live[nested]] = True
+        live = live[~nested]
+        if not len(live):
+            break
+        vals, bad = _decode(np, blk, m1.colon[live, r] + 1, m1.sep[live, r])
+        tests = plan.tests[pat.keys[r]]
+        if len(tests) == 1:
+            t = tests[0]
+            fails = np.array([not t(v) for v in vals], np.bool_)
+        else:
+            fails = np.array([not all(t(v) for t in tests) for v in vals], np.bool_)
+        if bad is not None:
+            walk[live[bad]] = True
+            fails[bad] = False
+        values[r] = (live, vals)
+        f = live[fails]
+        failed[f] = True
+        stop[f] = r
+        # the failing value ends at its closing quote, or where its atom
+        # ends, before any whitespace ahead of the separator
+        nxt[f] = np.where(m1.kind[f, r] == 1, m1.qend[f, r], m1.sep[f, r])
+        tail = f[(m1.kind[f, r] == 0) & is_ws[arr[m1.sep[f, r] - 1]]]
+        for k in tail.tolist():
+            s = int(m1.colon[k, r]) + 1
+            nxt[k] = s + len(blk[s : int(nxt[k])].rstrip(_WS))
+    ranks = np.arange(need)
+    walked = ranks < stop[:, None]
+    # the walker reads every walked member whole, the failing value, and
+    # the key and colon where it stops
+    read = walked | (failed[:, None] & (ranks == stop[:, None]))
+    walk |= ~((m1.ok | ~read) & (m1.key_ok | (ranks > stop[:, None]))).all(axis=1)
+    # rows that pass every test are walked to their close: by the walker
+    # when a later key needs it, else checked here (a kept row decoded
+    # whole needs no member checks)
+    go = np.flatnonzero(stop == n)
+    if (pat.roles[need:] == _WALK).any():
+        walk[go] = True
+        go = go[:0]
+    taken = np.ones(m, np.bool_)
+    m2 = None
+    if need < n and len(go) and (plan.required is not None or pat.absent_fail):
+        sel, CI = w.colons(rows[go], n, True)
+        m2 = w.members(pat, rows[go[sel]], CI[:, need:], need, m1.sep_e[go[sel], need - 1])
+        taken[go] = False
+        go = go[sel][m2.match]
+        taken[go] = True  # the others follow another key order later on
+        m2 = m2.take(m2.match)
+        walk[go[~m2.ok.all(axis=1) | (w.C[m2.sep_e[:, -1]] != 0x7D)]] = True
+    elif full and len(go):
+        walk[go[w.C[m1.sep_e[go, n - 1]] != 0x7D]] = True
+    for r in np.flatnonzero(pat.roles == _WALK).tolist():
+        walk |= stop > r
+    dropped = failed | pat.absent_fail
+    if plan.required is None:
+        # with nothing skipped the walker builds a kept row strictly, key
+        # by key, into what json.loads makes of it
+        whole = np.flatnonzero(~dropped & ~walk)
+        if len(whole):
+            vals, bad = _decode(np, blk, w.P[w.open_e[rows[whole]]], end[whole])
+            if bad is not None:
+                walk[whole[bad]] = True
+            # a repeated key, tested twice by the walker, shows as fewer
+            # keys than depth-1 colons
+            flat, _ = w.colons(rows[whole], n, True)
+            size = np.array([len(v) if isinstance(v, dict) else -1 for v in vals])
+            unique = np.zeros(len(whole), np.bool_)
+            unique[flat] = size[flat] == n
+            walk[whole[~unique]] = True
+            values[None] = (whole, vals)
+    # skipped atoms the walker reads: its raw skip must accept them
+    lax = walked & (pat.roles[:need] == _SKIP) & (m1.kind == 0)
+    if m2 is not None:
+        lax2 = (pat.roles[need:] == _SKIP) & (m2.kind == 0)
+    for mm, rr, mask in ((m1, None, lax), (m2, go, lax2 if m2 is not None else None)):
+        if mask is None or not mask.any():
+            continue
+        i, j = np.nonzero(mask)
+        s = mm.colon[i, j] + 1
+        good = _regions_ok(np, is_ws, arr, blk, s, mm.sep[i, j] - s, True)
+        walk[(i if rr is None else rr[i])[~good]] = True
+    for r in np.flatnonzero(pat.roles == _KEEP).tolist():
+        if r < need:
+            mm, at, col = m1, np.flatnonzero(walked[:, r] & ~walk), r
+            who = at
+        elif m2 is not None:
+            mm, at, col = m2, np.flatnonzero(~walk[go]), r - need
+            who = go[at]
+        else:
+            continue
+        if len(at):
+            vals, bad = _decode(np, blk, mm.colon[at, col] + 1, mm.sep[at, col])
+            if bad is not None:
+                walk[who[bad]] = True
+            values[r] = (who, vals)
+    span = np.where(walked & (pat.roles[:need] == _SKIP), m1.sep - m1.colon, 0).sum(axis=1)
+    if m2 is not None:
+        span[go] += np.where(pat.roles[need:] == _SKIP, m2.sep - m2.colon, 0).sum(axis=1)
+    span[failed] += end[failed] - nxt[failed]
+    if pat.exit_rank is not None:
+        span += end - m1.colon[:, pat.exit_rank] - 1
+    act = np.where(walk, _ROW_WALK, np.where(dropped, _ROW_DROP, _ROW_KEEP)).astype(np.int8)
+    keep = np.flatnonzero((act == _ROW_KEEP) & taken)
+    if plan.required is None and len(keep):
+        who, vals = values[None]
+        kept = [vals[k] for k in np.searchsorted(who, keep).tolist()]
+    elif not len(keep) or not pat.value_ranks:
+        kept = [None] * len(keep)
+    else:
+        cols = []
+        for r in pat.value_ranks:
+            who, vals = values[r]
+            cols.append([vals[k] for k in np.searchsorted(who, keep).tolist()])
+        names = [pat.keys[r] for r in pat.value_ranks]
+        kept = [dict(zip(names, t)) for t in zip(*cols)]
+    return rows[taken], act[taken], span[taken], rows[keep], kept
+
+
+def _index_window(buf: bytes, lo: int, hi: int, plan: IndexPlan) -> _Decided | None:
+    """Index ``buf[lo:hi]``, which starts where the walker expects a
+    top-level value, and decide each complete object row the plan lets it
+    prove; None when the window holds no complete row the index trusts.
+    Rows end where bracket depth returns to 0, as in the walker's raw
+    scan, up to the first backslash outside a string or closer at depth
+    0, where the index stops trusting itself."""
+    np, is_ws, _ = _index_tables()
+    w = _Window(np, is_ws, buf[lo:hi])
+    n = w.n
+    if not n:
+        return None
+    opens = w.P[w.open_e]
+    ends = w.P[w.close_e] + 1
+    gap_start = np.zeros(n, np.int64)
+    gap_start[1:] = ends[:-1]
+    gap_ok = opens == gap_start
+    j = np.flatnonzero(~gap_ok)
+    if len(j):
+        gap_ok[j] = _regions_ok(
+            np, is_ws, w.arr, w.blk, gap_start[j], opens[j] - gap_start[j], False
+        )
+    action = np.zeros(n, np.int8)
+    skip = np.zeros(n, np.int64)
+    kept_rows, kept = [], []
+    left = (w.C[w.open_e] == 0x7B) & (w.cl > w.cf)
+    pending = np.flatnonzero(left)
+    tries = 0
+    while len(pending) and tries < _MAX_PATTERNS:
+        tries += 1
+        r0 = int(pending[0])
+        pat = _learn(w, r0, plan)
+        if pat is not None:
+            taken, act, span, krows, kvals = _decide(w, pat, plan, pending)
+            action[taken] = act
+            skip[taken] = span
+            left[taken] = False
+            kept_rows.append(krows)
+            kept.append(kvals)
+        left[r0] = False
+        pending = pending[left[pending]]
+    if len(kept_rows) > 1:
+        rows = np.concatenate(kept_rows)
+        order = np.argsort(rows, kind="stable")
+        flat = [v for vals in kept for v in vals]
+        kept_rows, kept = rows[order], [flat[k] for k in order.tolist()]
+    elif kept_rows:
+        kept_rows, kept = kept_rows[0], kept[0]
+    else:
+        kept_rows = np.zeros(0, np.intp)
+    return _Decided(n, opens, ends, gap_ok, action, skip, kept_rows, kept)
+
+
 class JsonParser(Generic[A]):
     def __init__(
         self,
@@ -169,6 +797,14 @@ class JsonParser(Generic[A]):
             import json as _json
 
             self._decoder = _json.JSONDecoder(parse_constant=_reject_constant)
+        # Structural index: a VALUE_STREAM plate that names its columns lets
+        # whole object rows be decided without events; rows it cannot prove
+        # are walked, one at a time, at their own offsets.
+        plan = getattr(plate, "index_plan", None)
+        self._plan = plan() if plan is not None and mode is Mode.VALUE_STREAM else None
+        self._index_from = 0  # absolute offset before which the index is off
+        self._rows_indexed = 0
+        self._rows_walked = 0
 
     # ------------------------------------------------------------------ API
 
@@ -211,6 +847,17 @@ class JsonParser(Generic[A]):
     def skipped_bytes_total(self) -> int:
         """Total bytes raw-skipped via SKIP signals (metrics, P5 parity)."""
         return self._skipped_bytes_total
+
+    @property
+    def rows_indexed(self) -> int:
+        """Rows the structural index decided (kept or dropped)."""
+        return self._rows_indexed
+
+    @property
+    def rows_walked(self) -> int:
+        """Values the event walker delivered (direct-path values count in
+        neither counter)."""
+        return self._rows_walked
 
     def buffered_len(self) -> int:
         """Bytes currently retained (the analog of unsafeLen)."""
@@ -277,6 +924,7 @@ class JsonParser(Generic[A]):
                 self._direct(v)
                 self._pos = end
                 return
+        self._rows_walked += 1
         self._inflight = self._emit_value(i)
         self._advance()
 
@@ -369,8 +1017,78 @@ class JsonParser(Generic[A]):
             self._pos = i
             if i >= len(self._buf):
                 return
+            if (
+                self._plan is not None
+                and self._base + i >= self._index_from
+                and self._index_run(i)
+            ):
+                continue
             self._deliver(i)
             self._end_row()
+
+    def _index_run(self, i: int) -> bool:
+        """Decide the complete rows of one index window starting at
+        ``buf[i]``, walking the rows and the between-row values the index
+        cannot prove. Returns False, and leaves the window to the walker,
+        when it is too small to pay for an index or the index trusts no
+        complete row there. Compaction waits until the window is done, so
+        its offsets stay valid."""
+        hi = min(len(self._buf), i + _INDEX_BLOCK)
+        if hi - i < _INDEX_MIN_BYTES:
+            return False
+        dec = _index_window(self._buf, i, hi, self._plan)
+        if dec is None:
+            self._index_from = self._base + hi
+            return False
+        n = dec.n
+        todo = ((dec.action == _ROW_WALK) | ~dec.gap_ok).nonzero()[0].tolist()
+        finish_row = self.plate.finish_row
+        prev = 0
+        for k in todo:
+            self._index_flush(dec, prev, k)
+            start = i + int(dec.opens[k])
+            if not dec.gap_ok[k]:
+                # values between rows (scalar rows, stray bytes): the walker's
+                self._pos = i + (int(dec.ends[k - 1]) if k else 0)
+                while True:
+                    j = _WS_RE.match(self._buf, self._pos).end()
+                    self._pos = j
+                    if j >= start:
+                        break
+                    self._deliver(j)
+                    finish_row()
+                if j != start:
+                    return True
+            if dec.action[k] == _ROW_WALK:
+                self._deliver(start)
+                finish_row()
+                if self._pos != i + int(dec.ends[k]):
+                    return True
+                prev = k + 1
+            else:
+                prev = k
+        self._index_flush(dec, prev, n)
+        self._pos = i + int(dec.ends[n - 1])
+        self._maybe_compact()
+        return True
+
+    def _index_flush(self, dec, lo: int, hi: int) -> None:
+        """Hand the index-decided rows ``lo:hi`` of a window to the plan."""
+        if hi <= lo:
+            return
+        plan = self._plan
+        a, b = dec.kept_rows.searchsorted([lo, hi]).tolist()
+        if b > a:
+            plan.keep(dec.kept[a:b])
+        act = dec.action[lo:hi]
+        dropped = int((act == _ROW_DROP).sum())
+        if dropped:
+            plan.drop(dropped)
+        skipped = int(dec.skip[lo:hi].sum())
+        if skipped:
+            self._skipped_bytes_total += skipped
+            self.plate.skipped(skipped)
+        self._rows_indexed += hi - lo
 
     def _churn_unwrap_array(self) -> None:
         if self._inflight is not None:

@@ -80,6 +80,16 @@ class Plate(Generic[A]):
         SKIP signal (byte count approximate, as in the reference)."""
         return None
 
+    def index_plan(self):
+        """Optional fast-path capability: return a
+        :class:`~tectonic_spark.core.json_parser.IndexPlan` naming the
+        top-level columns this plate keeps and tests, or None when it needs
+        the events. The JSON parser's structural index then decides whole
+        object rows without events and hands every row it cannot prove to
+        the event walker. A plate that offers a plan must never answer
+        BREAK_BATCH or TERMINATE. None is the base default."""
+        return None
+
     def direct_value_receiver(self):
         """Optional fast-path capability: return a ``callable(value)`` that
         accepts one complete top-level value as a Python object in place of

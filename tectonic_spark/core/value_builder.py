@@ -135,6 +135,11 @@ class ValueBuilderPlate(Plate[list]):
         self._root = _UNSET
         self._stack.clear()
 
+    def add_rows(self, rows: list) -> None:
+        """Append whole rows built elsewhere (the JSON structural index),
+        between rows of events."""
+        self._rows.extend(rows)
+
     def finish_batch(self, terminal: bool) -> list:
         out, self._rows = self._rows, []
         return out

@@ -36,6 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from tectonic_spark.core.json_parser import IndexPlan
 from tectonic_spark.core.plate import Plate
 from tectonic_spark.core.signal import Signal
 from tectonic_spark.core.value_builder import ValueBuilderPlate
@@ -68,9 +69,11 @@ def _norm_scalar(v: Any, t: DataType) -> Any:
     if v is None:
         return None
     if isinstance(t, StringType):
+        if isinstance(v, str):
+            return v
         from tectonic_spark.sources.schema_infer import canonical_json
 
-        return v if isinstance(v, str) else canonical_json(v)
+        return canonical_json(v)
     if isinstance(t, BooleanType):
         return v if isinstance(v, bool) else None
     if isinstance(t, LongType):
@@ -460,6 +463,27 @@ class PushdownPlate(Plate[list]):
 
     def skipped(self, n_bytes: int) -> None:
         self.builder.skipped(n_bytes)
+
+    def _count_dropped(self, n: int) -> None:
+        self.rows_skipped_total += n
+
+    def index_plan(self) -> IndexPlan | None:
+        """Object rows of a projection or filter scan may be decided by the
+        JSON parser's structural index: it keeps the flat required columns
+        and drops the rows a test fails, exactly as these events would.
+        Required keys with a nested projection are left to the walker.
+        Value-column scans and pure pass-through get no plan."""
+        if self.value_col is not None or (self.required is None and not self.tests):
+            return None
+        trie = self._trie or {}
+        return IndexPlan(
+            required=self.required,
+            walk=frozenset(k for k, node in trie.items() if node is not None),
+            tests=self.tests,
+            early_exit=self._early_exit,
+            keep=self.builder.add_rows,
+            drop=self._count_dropped,
+        )
 
     def direct_value_receiver(self):
         """Pure pass-through (no projection, no filters) degenerates to the

@@ -72,6 +72,8 @@ def test_socket_dir_limit(tmp_path, monkeypatch):
     # "<dir>/.<uuid4>.sock" is the directory plus 43 bytes
     limit = session._SUN_PATH_MAX - session._SOCKET_NAME_BYTES
     assert limit == 64
+    if len(os.fsencode(str(tmp_path))) + 2 > limit:
+        pytest.skip(f"no room for a {limit}-byte directory under {tmp_path}")
     for n, enabled in ((limit, "true"), (limit + 1, "false")):
         path = _dir_of_length(tmp_path, n)
         monkeypatch.setattr(tempfile, "tempdir", path)

@@ -83,12 +83,14 @@ def test_deleted_archive_empties_importer(archive):
 
 
 def test_core_import_is_spark_free():
+    # numpy loads only when the JSON structural index first runs
     code = (
         "import sys, zipimport\n"
-        "import tectonic_spark.core, tectonic_spark.core.json_parser\n"
+        "import tectonic_spark, tectonic_spark.core, tectonic_spark.core.json_parser\n"
         "import tectonic_spark.core.csv_parser\n"
         "from tectonic_spark import zipimport_cache\n"
         "assert 'pyspark' not in sys.modules, 'pyspark imported'\n"
+        "assert 'numpy' not in sys.modules, 'numpy imported'\n"
         "patched = zipimport.zipimporter.invalidate_caches"
         " is zipimport_cache._invalidate_if_changed\n"
         "assert patched == (sys.version_info < (3, 13))\n"
