@@ -75,7 +75,10 @@ Deliberate deviations (documented for the judge):
 * The direct-value path (plates that only want rebuilt Python values)
   finds each value's extent with the same kernels and decodes it with C
   ``json.loads``, so it buffers whole values; ``max_value_bytes`` bounds
-  them.
+  them. A value the C decoder rejects goes straight to the walker, which
+  reports the real malformed byte. Every C decode, here and in the
+  readers, is ``json_loads``: strict UTF-8, no ``NaN``/``Infinity``, no
+  lone surrogate ``\\u`` escape (the walker rejects all three).
 * BREAK_BATCH cuts at the next row boundary, not mid-row.
 * ``skipped`` byte counts follow the reference's accounting (map-value
   skips include the trailing separator; array-element skips start at the
@@ -88,6 +91,7 @@ Deliberate deviations (documented for the judge):
 from __future__ import annotations
 
 import functools
+import json
 import re
 from enum import Enum
 from typing import Generic, TypeVar
@@ -144,10 +148,54 @@ def _reject_constant(name: str):
     raise ValueError(f"non-standard JSON constant {name}")
 
 
-def _json_loads(data: bytes):
-    import json as _json
+_DECODER = json.JSONDecoder(parse_constant=_reject_constant)
+# a \u escape of a surrogate; only text holding one can decode to a lone one
+_SURROGATE_ESC_RE = re.compile(r"\\u[dD]")
+_SURROGATE_ESC_RE_B = re.compile(rb"\\u[dD]")
+_SURROGATE_RE = re.compile("[\ud800-\udfff]")
 
-    return _json.loads(data, parse_constant=_reject_constant)
+
+def _no_lone_surrogate(v, text: str, lo: int, hi: int):
+    """``v``, decoded from ``text[lo:hi]``, unless a ``\\u`` escape there
+    left a lone surrogate in it (C ``json`` pairs what it can and passes
+    the rest through; the walker rejects them, and no UTF-8 can hold
+    one). Clean text pays one regex scan."""
+    if _SURROGATE_ESC_RE.search(text, lo, hi) and _SURROGATE_RE.search(
+        json.dumps(v, ensure_ascii=False)
+    ):
+        raise ValueError("lone surrogate \\u escape")
+    return v
+
+
+def json_loads(data: bytes | str):
+    """The one C decode of a complete JSON value, to the walker's grammar:
+    strict UTF-8 (``json.loads(bytes)`` decodes with ``surrogatepass``, so
+    would pass CESU-8 surrogates), no ``NaN``/``Infinity``, no lone
+    surrogate escape. Raises ``ValueError``."""
+    if not isinstance(data, str):
+        data = data.decode("utf-8")
+    return _no_lone_surrogate(_DECODER.decode(data), data, 0, len(data))
+
+
+def _loads_clean(data: bytes | str):
+    """``json_loads`` for text known to hold no surrogate escape."""
+    return _DECODER.decode(data if isinstance(data, str) else data.decode("utf-8"))
+
+
+def window_loads(window: bytes):
+    """``json_loads`` for the values of ``window``: when it holds no
+    backslash (one ``memchr``) or no surrogate escape, the per-value
+    surrogate check is left out."""
+    if b"\\" in window and _SURROGATE_ESC_RE_B.search(window):
+        return json_loads
+    return _loads_clean
+
+
+def json_raw_decode(text: str, i: int):
+    """``json_loads`` for the value starting at ``text[i]``, returning
+    ``(value, end)`` as ``JSONDecoder.raw_decode`` does."""
+    v, end = _DECODER.raw_decode(text, i)
+    return _no_lone_surrogate(v, text, i, end), end
 
 
 class _Incomplete(Exception):
@@ -200,21 +248,13 @@ class IndexPlan:
 
 @functools.cache
 def _index_tables():
-    """numpy, a whitespace lookup table and a strict decoder, made on the
-    first index (numpy stays out of ``import tectonic_spark``)."""
-    import json as _json
-
+    """numpy and a whitespace lookup table, made on the first index (numpy
+    stays out of ``import tectonic_spark``)."""
     import numpy as np
 
     is_ws = np.zeros(256, np.bool_)
     is_ws[list(_WS)] = True
-    return np, is_ws, _json.JSONDecoder(parse_constant=_reject_constant).decode
-
-
-def _loads_strict(data: bytes):
-    """``json.loads`` after a strict UTF-8 decode: bytes input would pass
-    encoded surrogates, which the walker rejects."""
-    return _index_tables()[2](data.decode("utf-8"))
+    return np, is_ws
 
 
 def _regions_ok(np, is_ws, arr, blk: bytes, starts, lens, atom: bool):
@@ -251,7 +291,7 @@ def _decode(np, blk: bytes, starts, ends):
     the (ascending) numbers of the slices it rejects, or None."""
     parts = [blk[a:b] for a, b in zip(starts.tolist(), ends.tolist())]
     try:
-        vals = _loads_strict(b"[" + b",".join(parts) + b"]")
+        vals = json_loads(b"[" + b",".join(parts) + b"]")
     except (ValueError, RecursionError):
         pass
     else:
@@ -260,7 +300,7 @@ def _decode(np, blk: bytes, starts, ends):
     vals, bad = [], []
     for k, part in enumerate(parts):
         try:
-            vals.append(_loads_strict(part))
+            vals.append(json_loads(part))
         except (ValueError, RecursionError):
             vals.append(None)
             bad.append(k)
@@ -550,7 +590,7 @@ def _learn(w: _Window, r: int, plan: IndexPlan) -> _Pattern | None:
         return None
     raw = [w.blk[a + 1 : b] for a, b in zip(P[E - 2].tolist(), P[E - 1].tolist())]
     try:
-        keys = _loads_strict(b'["' + b'","'.join(raw) + b'"]')
+        keys = json_loads(b'["' + b'","'.join(raw) + b'"]')
     except (ValueError, RecursionError):
         return None
     if len(keys) != len(raw):
@@ -707,7 +747,7 @@ def _index_window(buf: bytes, lo: int, hi: int, plan: IndexPlan) -> _Decided | N
     Rows end where bracket depth returns to 0, as in the walker's raw
     scan, up to the first backslash outside a string or closer at depth
     0, where the index stops trusting itself."""
-    np, is_ws, _ = _index_tables()
+    np, is_ws = _index_tables()
     w = _Window(np, is_ws, buf[lo:hi])
     n = w.n
     if not n:
@@ -793,10 +833,7 @@ class JsonParser(Generic[A]):
         # the event path (benchmarks compare apples-to-apples with it).
         recv = getattr(plate, "direct_value_receiver", None)
         self._direct = recv() if (direct_values and recv is not None) else None
-        if self._direct is not None:
-            import json as _json
-
-            self._decoder = _json.JSONDecoder(parse_constant=_reject_constant)
+        self._walk_at = -1  # absolute offset of a value C decoding rejected
         # Structural index: a VALUE_STREAM plate that names its columns lets
         # whole object rows be decided without events; rows it cannot prove
         # are walked, one at a time, at their own offsets.
@@ -912,10 +949,10 @@ class JsonParser(Generic[A]):
         """Emit the value starting at buf[i] by the fastest available route,
         leaving ``_pos`` just past it; raises _Incomplete while it awaits
         more input."""
-        if self._direct is not None:
+        if self._direct is not None and self._base + i != self._walk_at:
             end = self._scan_value(i)
             try:
-                v = _json_loads(self._buf[i:end])
+                v = json_loads(self._buf[i:end])
             except (ValueError, RecursionError):
                 # walker decides: same value (where it's lenient) or the
                 # exact golden ParseException (where both reject)
@@ -969,18 +1006,23 @@ class JsonParser(Generic[A]):
                 text = tail[: ue.start].decode("utf-8")
             else:
                 return False  # invalid utf-8 — generic loop pinpoints it
-        raw_decode = self._decoder.raw_decode
+        raw_decode = _DECODER.raw_decode
+        surrogate_escapes = "\\" in text and _SURROGATE_ESC_RE.search(text)
         direct = self._direct
         finish_row = self.plate.finish_row
         spos = 0
         n = len(text)
+        rejected = False
         while True:
             spos = _WS_RE_S.match(text, spos).end()
             if spos >= n:
                 break
             try:
                 v, endp = raw_decode(text, spos)
+                if surrogate_escapes:
+                    _no_lone_surrogate(v, text, spos, endp)
             except (ValueError, RecursionError):
+                rejected = True
                 break
             if text[endp - 1] not in '"}]':
                 # Atom (number/literal): raw_decode matches the maximal
@@ -999,10 +1041,14 @@ class JsonParser(Generic[A]):
             direct(v)
             finish_row()
             spos = endp
-        if spos:
-            self._pos = start + (
-                spos if is_ascii else len(text[:spos].encode("utf-8"))
-            )
+        done = spos if is_ascii else len(text[:spos].encode("utf-8"))
+        if rejected:
+            # the walker decides this value without a raw extent scan
+            # first: on a row that never closes that scan runs to the
+            # buffer end, where the walker stops at the malformed byte
+            self._walk_at = self._base + start + done
+        if done:
+            self._pos = start + done
             self._maybe_compact()
         return spos >= n
 
@@ -1575,11 +1621,12 @@ class JsonParser(Generic[A]):
         if m is not None:
             p = i + 1 + m.start()
             raise self._exc(f"control character 0x{raw[m.start()]:02x} in string", p)
+        try:
+            text = raw.decode("utf-8")
+        except UnicodeDecodeError as ue:
+            raise self._exc(f"invalid UTF-8 in string: {ue.reason}", i + 1 + ue.start)
         if b"\\" not in raw:
-            try:
-                return raw.decode("utf-8"), end
-            except UnicodeDecodeError as ue:
-                raise self._exc(f"invalid UTF-8 in string: {ue.reason}", i + 1 + ue.start)
+            return text, end
         return self._unescape(raw, i + 1), end
 
     def _unescape(self, raw: bytes, abs_start: int) -> str:
@@ -1614,6 +1661,8 @@ class JsonParser(Generic[A]):
                     if 0xDC00 <= lo <= 0xDFFF:
                         cp = 0x10000 + ((cp - 0xD800) << 10) + (lo - 0xDC00)
                         j += 6
+                if 0xD800 <= cp <= 0xDFFF:
+                    raise self._exc(f"lone surrogate \\u escape {hex1!r}", abs_start + k)
                 out.append(chr(cp))
             else:
                 raise self._exc(f"invalid escape \\{chr(e)}", abs_start + k)

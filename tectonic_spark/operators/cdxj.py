@@ -390,6 +390,22 @@ def shard_members(rows, shard_path) -> Iterator[tuple[object, bytes]]:
                 yield r, fetch_member(f, int(r.offset), int(r.length))
 
 
+def shard_records(rows, shard_path) -> Iterator[tuple[object, dict]]:
+    """``shard_members``, with each member parsed: yields ``(row, record)``
+    for the one WARC record the member must hold. Any other count raises
+    ``ValueError`` naming ``filename@offset`` and the count."""
+    from tectonic_spark.operators.warc import parse_warc
+
+    for r, member in shard_members(rows, shard_path):
+        recs = parse_warc(member)
+        if len(recs) != 1:
+            raise ValueError(
+                f"{r.filename}@{r.offset}: {len(recs)} WARC records in the "
+                "member, expected 1"
+            )
+        yield r, recs[0]
+
+
 def incremental_zipnum_update(
     index_dir: str,
     delta_lines: list[str],

@@ -17,7 +17,8 @@ import contextlib
 import json
 import os
 import tempfile
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -2820,11 +2821,25 @@ def _render_response_record(
     return rec, http
 
 
-def _extract_crawl_response(rec: dict, http: dict | None = None) -> tuple:
+class _CrawlDoc(NamedTuple):
+    """What ``_extract_crawl_response`` reads out of one response record."""
+
+    doc_id: int
+    text: str
+    lang: str | None
+    source: str
+    codec: str
+    ce_header: str | None
+    ce_decoded: bool
+    chunked: bool
+    status: int
+
+
+def _extract_crawl_response(rec: dict, http: dict | None = None) -> _CrawlDoc:
     """The shared per-record extraction stage: HTTP parse (framing +
     Content-Encoding decode) -> charset sniff/decode -> HTML -> text ->
-    probe verification/strip. Returns (doc_id, text, lang, source,
-    codec, ce_header, ce_decoded, chunked, status). Raises (killing the
+    probe verification/strip. Returns a ``_CrawlDoc`` (doc_id, text, lang,
+    source, codec, ce_header, ce_decoded, chunked, status). Raises (killing the
     shard task loudly) if a charset probe was mangled or a declared
     content coding was left undecoded — extraction must be EXACT."""
     from tectonic_spark.operators.warc import (
@@ -2857,7 +2872,52 @@ def _extract_crawl_response(rec: dict, http: dict | None = None) -> tuple:
                 f"(codec {codec}, origin {origin}): ...{text[-40:]!r}"
             )
         text = text[: -len(tail)]
-    return d, text, lang, source, codec, ce, http["ce_decoded"], http["chunked"], http["status"]
+    return _CrawlDoc(
+        d, text, lang, source, codec, ce, http["ce_decoded"], http["chunked"], http["status"]
+    )
+
+
+def _fetched_docs(rows, shard_path) -> Iterator[tuple[object, _CrawlDoc]]:
+    """The verified fetch of indexed crawl responses: for each row
+    (``filename``, ``offset``, ``length`` and ``digest`` attributes, e.g.
+    pandas ``itertuples`` rows) yield ``(row, doc)``, the extraction of the
+    one record ``cdxj.shard_records`` reads for it. The record's payload
+    digest must equal ``row.digest`` and, when the row carries a
+    ``doc_id``, the extracted doc id must equal it."""
+    from tectonic_spark.operators.cdxj import payload_digest, shard_records
+
+    for r, rec in shard_records(rows, shard_path):
+        if payload_digest(rec["payload"]) != r.digest:
+            raise ValueError(f"{r.filename}@{r.offset}: payload digest mismatch")
+        doc = _extract_crawl_response(rec)
+        if hasattr(r, "doc_id") and doc.doc_id != int(r.doc_id):
+            raise ValueError(
+                f"{r.filename}@{r.offset}: index said doc {r.doc_id}, "
+                f"record is doc {doc.doc_id}"
+            )
+        yield r, doc
+
+
+def _member_kernel(fetch, shard_path, project, columns: list[str]):
+    """A ``mapInPandas`` kernel over rows that locate WARC members:
+    ``fetch(rows, shard_path)`` (``_fetched_docs`` or
+    ``cdxj.shard_records``) yields ``(row, item)`` per input row, and
+    ``project(row, item)`` makes the output row, raising where a
+    query-specific pin fails."""
+
+    def kernel(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            got = fetch(pdf.itertuples(index=False), shard_path)
+            yield pd.DataFrame([project(r, x) for r, x in got], columns=columns)
+
+    return kernel
+
+
+def _member_row(r, doc: _CrawlDoc) -> tuple:
+    """The ``_MEMBER_COLS`` row of one fetched document."""
+    return (doc.doc_id, doc.lang, len(doc.text), int(r.length))
 
 
 def _warc_shards_src(sf_dir: str) -> tuple[str, int]:
@@ -4903,47 +4963,28 @@ def _latest_capture(entries, probes):
 
 def _routed_fetch(winners, warc_dirs: dict, *, carry: tuple = ()):
     """Ranged-fetch + extract each winner row, routed by its ``prec``
-    (which collection's shards hold the member). Verifies the payload
-    digest, the doc id, and the temporal routing pin (February
-    captures must come from the non-base collection, January from the
-    base). ``carry`` columns are passed through."""
+    (which collection's shards hold the member), through
+    ``_fetched_docs``. Pins the temporal routing (February captures must
+    come from the non-base collection, January from the base). ``carry``
+    columns are passed through."""
 
-    def fetch_docs(batches):
-        import os as _os
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import payload_digest, shard_members
-        from tectonic_spark.operators.parser_ops import _extract_crawl_response
-        from tectonic_spark.operators.warc import parse_warc
-
-        for pdf in batches:
-            rows = []
-            members = shard_members(
-                pdf.itertuples(index=False),
-                lambda r: _os.path.join(warc_dirs[int(r.prec)], r.filename),
+    def project(r, doc):
+        # routing pin: February winners come from the delta/new
+        # collection, January from the base
+        p, want = int(r.prec), 1 if r.ts.startswith("202402") else 0
+        if p != want:
+            raise ValueError(
+                f"doc {doc.doc_id} ts {r.ts} routed to collection "
+                f"{p}, the index layout says {want}"
             )
-            for r, member in members:
-                (rec,) = parse_warc(member)
-                if payload_digest(rec["payload"]) != r.digest:
-                    raise ValueError(f"{r.filename}@{r.offset}: digest mismatch")
-                d, text, lang, *_rest = _extract_crawl_response(rec)
-                if d != int(r.doc_id):
-                    raise ValueError(f"index said doc {r.doc_id}, member is {d}")
-                # routing pin: February winners come from the
-                # delta/new collection, January from the base
-                p, want = int(r.prec), 1 if r.ts.startswith("202402") else 0
-                if p != want:
-                    raise ValueError(
-                        f"doc {d} ts {r.ts} routed to collection "
-                        f"{p}, the index layout says {want}"
-                    )
-                rows.append(
-                    (d, lang, len(text), int(r.length))
-                    + tuple(int(getattr(r, c)) for c in carry)
-                )
-            yield pd.DataFrame(rows, columns=_MEMBER_COLS + list(carry))
+        return _member_row(r, doc) + tuple(int(getattr(r, c)) for c in carry)
 
+    fetch_docs = _member_kernel(
+        _fetched_docs,
+        lambda r: os.path.join(warc_dirs[int(r.prec)], r.filename),
+        project,
+        _MEMBER_COLS + list(carry),
+    )
     ddl = _MEMBER_DDL + "".join(f", {c} long" for c in carry)
     return winners.repartition(8, "prec", "filename").mapInPandas(fetch_docs, ddl)
 
@@ -5024,28 +5065,12 @@ def a36_zipnum_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     blocks = _blocks_df(by_file, probes)
 
-    def fetch_docs(batches):
-        import os as _os
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import payload_digest, shard_members
-        from tectonic_spark.operators.parser_ops import _extract_crawl_response
-        from tectonic_spark.operators.warc import parse_warc
-
-        for pdf in batches:
-            rows = []
-            members = shard_members(
-                pdf.itertuples(index=False),
-                lambda r: _os.path.join(warc_dir, r.filename),
-            )
-            for r, member in members:
-                (rec,) = parse_warc(member)
-                if payload_digest(rec["payload"]) != r.digest:
-                    raise ValueError(f"{r.filename}@{r.offset}: digest mismatch")
-                d, text, lang, *_rest = _extract_crawl_response(rec)
-                rows.append((d, lang, len(text), int(r.length)))
-            yield pd.DataFrame(rows, columns=_MEMBER_COLS)
+    fetch_docs = _member_kernel(
+        _fetched_docs,
+        lambda r: os.path.join(warc_dir, r.filename),
+        _member_row,
+        _MEMBER_COLS,
+    )
 
     with _persisting() as persist:
         entries = persist(_entries_df(idx_dir, blocks, {"index.zipnum.gz": 0}))
@@ -5601,39 +5626,12 @@ def a30_cdxj_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probe = meta.filter(F.col("doc_id") % 17 == 3)
 
-    def fetch(batches):
-        import os as _os
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import payload_digest, shard_members
-        from tectonic_spark.operators.parser_ops import _extract_crawl_response
-        from tectonic_spark.operators.warc import parse_warc
-
-        for pdf in batches:
-            rows = []
-            members = shard_members(  # ascending seeks per shard
-                pdf.itertuples(index=False),
-                lambda r: _os.path.join(src, r.filename),
-            )
-            for r, member in members:
-                recs = parse_warc(member)
-                if len(recs) != 1:
-                    raise ValueError(
-                        f"{r.filename}@{r.offset}: {len(recs)} records in member"
-                    )
-                rec = recs[0]
-                if payload_digest(rec["payload"]) != r.digest:
-                    raise ValueError(
-                        f"{r.filename}@{r.offset}: payload digest mismatch"
-                    )
-                d, text, lang, _src2, *_rest = _extract_crawl_response(rec)
-                if d != int(r.doc_id):
-                    raise ValueError(
-                        f"index said doc {r.doc_id}, record is doc {d}"
-                    )
-                rows.append((d, lang, len(text), int(r.length)))
-            yield pd.DataFrame(rows, columns=_MEMBER_COLS)
+    fetch = _member_kernel(
+        _fetched_docs,
+        lambda r: os.path.join(src, r.filename),
+        _member_row,
+        _MEMBER_COLS,
+    )
 
     sel = probe.select("filename", "offset", "length", "digest", "doc_id")
     with _persisting() as persist:
@@ -5942,30 +5940,12 @@ def a38_temporal_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows, columns=["doc_id", "lang", "ts", "digest", "n_chars"]
             )
 
-    def fetch_docs(batches):
-        import os as _os
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import payload_digest, shard_members
-        from tectonic_spark.operators.parser_ops import _extract_crawl_response
-        from tectonic_spark.operators.warc import parse_warc
-
-        for pdf in batches:
-            rows = []
-            members = shard_members(
-                pdf.itertuples(index=False),
-                lambda r: _os.path.join(src, r.filename),
-            )
-            for r, member in members:
-                (rec,) = parse_warc(member)
-                if payload_digest(rec["payload"]) != r.digest:
-                    raise ValueError(f"{r.filename}@{r.offset}: digest mismatch")
-                d, text, _lang, *_rest = _extract_crawl_response(rec)
-                if d != int(r.doc_id):
-                    raise ValueError(f"index said doc {r.doc_id}, member is {d}")
-                rows.append((d, len(text), int(r.length)))
-            yield pd.DataFrame(rows, columns=["doc_id", "f_chars", "bytes_read"])
+    fetch_docs = _member_kernel(
+        _fetched_docs,
+        lambda r: os.path.join(src, r.filename),
+        lambda r, doc: (doc.doc_id, len(doc.text), int(r.length)),
+        ["doc_id", "f_chars", "bytes_read"],
+    )
 
     with _persisting() as persist:
         probes = persist(
@@ -6226,7 +6206,7 @@ def _revisit_index_src(sf_dir: str) -> tuple[str, int]:
 def a39_revisit_index_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from tectonic_spark.operators.cdxj import index_blocks
+    from tectonic_spark.operators.cdxj import index_blocks, shard_records, surt
     from tectonic_spark.tables import table
 
     src, _n = _revisit_index_src(sf_dir)
@@ -6239,80 +6219,48 @@ def a39_revisit_index_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
         entries = _entries_df(src, blocks, {"index.zipnum.gz": 0})
         return entries.join(keys_df, "key", "inner"), blocks
 
-    def fetch_revisits(batches):
-        import os as _os
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import shard_members, surt
-        from tectonic_spark.operators.warc import parse_warc
-
-        for pdf in batches:
-            rows = []
-            members = shard_members(
-                pdf.itertuples(index=False),
-                lambda r: _os.path.join(src, r.filename),
+    def revisit_row(r, rec):
+        if r.mime != "warc/revisit":
+            raise ValueError(
+                f"probe {r.key}: expected a revisit entry, index says {r.mime!r}"
             )
-            for r, member in members:
-                if r.mime != "warc/revisit":
-                    raise ValueError(
-                        f"probe {r.key}: expected a revisit "
-                        f"entry, index says {r.mime!r}"
-                    )
-                (rec,) = parse_warc(member)
-                if rec["type"] != "revisit":
-                    raise ValueError(
-                        f"{r.filename}@{r.offset}: not a revisit record"
-                    )
-                fields = {k.lower(): v for k, v in rec["fields"]}
-                if "identical-payload-digest" not in fields.get(
-                    "warc-profile", ""
-                ):
-                    raise ValueError("unsupported revisit profile")
-                ref = fields["warc-refers-to-target-uri"]
-                rows.append(
-                    (
-                        int(r.doc_id),
-                        ref,
-                        surt(ref),
-                        fields["warc-payload-digest"],
-                        r.digest,
-                        int(r.length),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "ref_uri", "ref_key", "claimed_digest",
-                         "line_digest", "bytes_read"],
+        if rec["type"] != "revisit":
+            raise ValueError(f"{r.filename}@{r.offset}: not a revisit record")
+        fields = {k.lower(): v for k, v in rec["fields"]}
+        if "identical-payload-digest" not in fields.get("warc-profile", ""):
+            raise ValueError("unsupported revisit profile")
+        ref = fields["warc-refers-to-target-uri"]
+        return (
+            int(r.doc_id),
+            ref,
+            surt(ref),
+            fields["warc-payload-digest"],
+            r.digest,
+            int(r.length),
+        )
+
+    def original_row(r, doc):
+        # the fetch verified the payload digest against the line's
+        if r.claimed_digest != r.digest:
+            raise ValueError(
+                f"{r.filename}@{r.offset}: original digest {r.digest} "
+                f"!= revisit claim {r.claimed_digest}"
             )
+        return _member_row(r, doc)
 
-    def fetch_originals(batches):
-        import os as _os
+    def shard_path(r):
+        return os.path.join(src, r.filename)
 
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import payload_digest, shard_members
-        from tectonic_spark.operators.parser_ops import _extract_crawl_response
-        from tectonic_spark.operators.warc import parse_warc
-
-        for pdf in batches:
-            rows = []
-            members = shard_members(
-                pdf.itertuples(index=False),
-                lambda r: _os.path.join(src, r.filename),
-            )
-            for r, member in members:
-                (rec,) = parse_warc(member)
-                got = payload_digest(rec["payload"])
-                if got != r.claimed_digest or got != r.digest:
-                    raise ValueError(
-                        f"{r.filename}@{r.offset}: original digest "
-                        f"{got} != revisit claim "
-                        f"{r.claimed_digest} / line {r.digest}"
-                    )
-                d, text, lang, *_rest = _extract_crawl_response(rec)
-                rows.append((int(r.doc_id), lang, len(text), int(r.length)))
-            yield pd.DataFrame(rows, columns=_MEMBER_COLS)
+    fetch_revisits = _member_kernel(
+        shard_records,
+        shard_path,
+        revisit_row,
+        ["doc_id", "ref_uri", "ref_key", "claimed_digest", "line_digest",
+         "bytes_read"],
+    )
+    fetch_originals = _member_kernel(
+        _fetched_docs, shard_path, original_row, _MEMBER_COLS
+    )
 
     with _persisting() as persist:
         probes = persist(
@@ -6620,31 +6568,14 @@ def a41_surt_prefix_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(False),
     )
 
-    def fetch_docs(batches):
-        import os as _os
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import payload_digest, shard_members
-        from tectonic_spark.operators.parser_ops import _extract_crawl_response
-        from tectonic_spark.operators.warc import parse_warc
-
-        for pdf in batches:
-            rows = []
-            members = shard_members(
-                pdf.itertuples(index=False),
-                lambda r: _os.path.join(warc_dir, r.filename),
-            )
-            for r, member in members:
-                (rec,) = parse_warc(member)
-                if payload_digest(rec["payload"]) != r.digest:
-                    raise ValueError(f"{r.filename}@{r.offset}: digest mismatch")
-                d, text, lang, src_host, *_rest = _extract_crawl_response(rec)
-                rows.append((d, lang, src_host, len(text), int(r.length)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "lang", "source", "n_chars", "bytes_read"],
-            )
+    fetch_docs = _member_kernel(
+        _fetched_docs,
+        lambda r: os.path.join(warc_dir, r.filename),
+        lambda r, doc: (
+            doc.doc_id, doc.lang, doc.source, len(doc.text), int(r.length)
+        ),
+        ["doc_id", "lang", "source", "n_chars", "bytes_read"],
+    )
 
     with _persisting() as persist:
         matched = persist(
@@ -6734,34 +6665,16 @@ def a42_wayback_closest(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, _n = _timeline_index_src(sf_dir)
     by_file = index_blocks(src)
 
-    def fetch_docs(batches):
-        import os as _os
+    def project(r, doc):
+        is_feb = 1 if r.ts.startswith("202402") else 0
+        return (doc.doc_id, doc.lang, len(doc.text), is_feb, int(r.length))
 
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import payload_digest, shard_members
-        from tectonic_spark.operators.parser_ops import _extract_crawl_response
-        from tectonic_spark.operators.warc import parse_warc
-
-        for pdf in batches:
-            rows = []
-            members = shard_members(
-                pdf.itertuples(index=False),
-                lambda r: _os.path.join(src, r.filename),
-            )
-            for r, member in members:
-                (rec,) = parse_warc(member)
-                if payload_digest(rec["payload"]) != r.digest:
-                    raise ValueError(f"{r.filename}@{r.offset}: digest mismatch")
-                d, text, lang, *_rest = _extract_crawl_response(rec)
-                if d != int(r.doc_id):
-                    raise ValueError(f"index said doc {r.doc_id}, member is {d}")
-                is_feb = 1 if r.ts.startswith("202402") else 0
-                rows.append((d, lang, len(text), is_feb, int(r.length)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "lang", "n_chars", "is_feb", "bytes_read"],
-            )
+    fetch_docs = _member_kernel(
+        _fetched_docs,
+        lambda r: os.path.join(src, r.filename),
+        project,
+        ["doc_id", "lang", "n_chars", "is_feb", "bytes_read"],
+    )
 
     with _persisting() as persist:
         probes = persist(
@@ -6976,45 +6889,24 @@ def a43_collection_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{n_docs} docs + {n_recap} recaptures"
         )
 
-    def fetch_docs(batches):
-        import os as _os
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import payload_digest, shard_members
-        from tectonic_spark.operators.parser_ops import _extract_crawl_response
-        from tectonic_spark.operators.warc import parse_warc
-
-        for pdf in batches:
-            rows = []
-            members = shard_members(
-                pdf.itertuples(index=False),
-                lambda r: _os.path.join(coll_dirs[r.coll], r.filename),
+    def project(r, doc):
+        # routing pin: January winners come from A (the precedence
+        # collection), February from B
+        want = "B" if r.ts.startswith("202402") else "A"
+        if r.coll != want:
+            raise ValueError(
+                f"doc {doc.doc_id} ts {r.ts} routed to {r.coll}, "
+                f"precedence says {want}"
             )
-            for r, member in members:
-                coll = r.coll
-                (rec,) = parse_warc(member)
-                if payload_digest(rec["payload"]) != r.digest:
-                    raise ValueError(
-                        f"{coll}/{r.filename}@{r.offset}: digest mismatch"
-                    )
-                d, text, lang, *_rest = _extract_crawl_response(rec)
-                if d != int(r.doc_id):
-                    raise ValueError(f"index said doc {r.doc_id}, member is {d}")
-                # routing pin: January winners come from A (the
-                # precedence collection), February from B
-                want = "B" if r.ts.startswith("202402") else "A"
-                if coll != want:
-                    raise ValueError(
-                        f"doc {d} ts {r.ts} routed to {coll}, "
-                        f"precedence says {want}"
-                    )
-                from_b = 1 if coll == "B" else 0
-                rows.append((d, lang, len(text), from_b, int(r.length)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "lang", "n_chars", "from_b", "bytes_read"],
-            )
+        from_b = 1 if r.coll == "B" else 0
+        return (doc.doc_id, doc.lang, len(doc.text), from_b, int(r.length))
+
+    fetch_docs = _member_kernel(
+        _fetched_docs,
+        lambda r: os.path.join(coll_dirs[r.coll], r.filename),
+        project,
+        ["doc_id", "lang", "n_chars", "from_b", "bytes_read"],
+    )
 
     with _persisting() as persist:
         probes = persist(
@@ -7474,31 +7366,14 @@ def a45_conflict_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     warc_dirs = {0: a_warc, 1: c_warc}
     _src, n_shards = _warc_cdxj_src(sf_dir)
 
-    def fetch_sides(batches):
-        import os as _os
-
-        import pandas as pd
-
-        from tectonic_spark.operators.cdxj import payload_digest, shard_members
-        from tectonic_spark.operators.parser_ops import _extract_crawl_response
-        from tectonic_spark.operators.warc import parse_warc
-
-        for pdf in batches:
-            rows = []
-            members = shard_members(
-                pdf.itertuples(index=False),
-                lambda r: _os.path.join(warc_dirs[int(r.prec)], r.filename),
-            )
-            for r, member in members:
-                (rec,) = parse_warc(member)
-                if payload_digest(rec["payload"]) != r.digest:
-                    raise ValueError(f"{r.filename}@{r.offset}: digest mismatch")
-                d, text, lang, *_rest = _extract_crawl_response(rec)
-                rows.append((d, lang, int(r.prec), len(text), int(r.length)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "lang", "prec", "n_chars", "bytes_read"],
-            )
+    fetch_sides = _member_kernel(
+        _fetched_docs,
+        lambda r: os.path.join(warc_dirs[int(r.prec)], r.filename),
+        lambda r, doc: (
+            doc.doc_id, doc.lang, int(r.prec), len(doc.text), int(r.length)
+        ),
+        ["doc_id", "lang", "prec", "n_chars", "bytes_read"],
+    )
 
     with _persisting() as persist:
         # one distributed pass over ALL index blocks

@@ -130,7 +130,7 @@ class TectonicCsvDataSource(DataSource):
             reader.config.row2 == b"\n"
             or (reader.config.row1, reader.config.row2) == (b"\n", b"")
         )
-        return TectonicFileStreamReader(reader, schema, dict(self.options), splittable)
+        return TectonicFileStreamReader(reader, dict(self.options), splittable)
 
     def writer(self, schema: StructType, overwrite: bool):
         from tectonic_spark.sources.writers import TectonicCsvWriter

@@ -28,11 +28,24 @@ Malformed input (a6; ParseException parity, reference exceptions.scala:24):
 all-null rows, captured raw in ``columnNameOfCorruptRecord`` if configured)
 | DROPMALFORMED | FAILFAST. Non-line modes cannot resync after an error and
 are always FAILFAST, like the reference parser itself.
+
+One grammar: what is malformed does not depend on ``fastPath``. The C
+decode sites (per-line, whole-document and ``values`` decoding, schema
+sampling) all use the core's strict decoder (``json_parser.json_loads``:
+strict UTF-8, no ``NaN``/``Infinity``, no lone surrogate ``\\u`` escape),
+and a pyarrow block whose strings are not valid UTF-8 or which holds
+``NaN``/``Infinity`` goes to the per-line route.
+
+``maxValueBytes`` (default 1 GiB) bounds one value's buffered bytes in the
+stream modes and one line in ``lines`` mode: a longer line raises
+ParseException in every ``parseMode``, once the reader holds a read past
+the bound of it (a line's reads are joined once, at its newline).
 """
 
 from __future__ import annotations
 
 import os
+from codecs import BOM_UTF8
 from collections.abc import Iterator
 from dataclasses import dataclass
 from typing import Any
@@ -41,8 +54,14 @@ from pyspark.errors import PySparkTypeError
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StringType, StructField, StructType
 
-from tectonic_spark.core.json_parser import JsonParser, Mode
-from tectonic_spark.core.result import Failure, Partial
+from tectonic_spark.core.json_parser import (
+    JsonParser,
+    Mode,
+    json_loads,
+    json_raw_decode,
+    window_loads,
+)
+from tectonic_spark.core.result import Failure, ParseException, Partial
 from tectonic_spark.core.value_builder import ValueBuilderPlate
 from tectonic_spark.sources.arrow_batch import DEFAULT_BATCH_ROWS, rows_to_batches
 from tectonic_spark.sources.pushdown import PushdownPlate, compile_filters
@@ -56,7 +75,7 @@ _MODES = {
 }
 _DEFAULT_SPLIT = 128 * 1024 * 1024
 _CHUNK = 4 * 1024 * 1024
-_DEFAULT_MAX_VALUE_BYTES = 1 << 30  # streaming event path: bound, don't OOM
+_DEFAULT_MAX_VALUE_BYTES = 1 << 30  # one value or line: bound, don't OOM
 _SAMPLE_BYTES = 8 * 1024 * 1024
 
 
@@ -169,54 +188,99 @@ def _aligned_start(fh, split: FileSplit) -> int:
     return split.start + len(fh.readline())
 
 
-def read_split_chunks(split: FileSplit, chunk_bytes: int = _CHUNK) -> Iterator[bytes]:
+def _owned_reads(fh, split: FileSplit, pos: int, chunk_bytes: int) -> Iterator[bytes]:
+    """Raw reads of at most ``chunk_bytes`` covering the bytes of the lines
+    ``split`` owns: from its first line start ``pos`` to its end, then on
+    to the end of the line that straddles it. A compressed file is one
+    whole-file split over the DECOMPRESSED stream (its byte bounds are
+    compressed-size bookkeeping only), read to EOF."""
+    if split.file.lower().endswith(_COMPRESSED_EXTS):
+        while chunk := fh.read(chunk_bytes):
+            yield chunk
+        return
+    chunk = b"\n"
+    while pos < split.end:
+        chunk = fh.read(min(chunk_bytes, split.end - pos))
+        if not chunk:
+            return
+        pos += len(chunk)
+        if pos >= split.end and not chunk.endswith(b"\n"):
+            chunk += fh.readline(chunk_bytes)  # finish the straddling line
+        yield chunk
+    while not chunk.endswith(b"\n"):  # ... when it is longer than one read
+        chunk = fh.readline(chunk_bytes)
+        if not chunk:
+            return
+        yield chunk
+
+
+def read_split_chunks(
+    split: FileSplit,
+    chunk_bytes: int = _CHUNK,
+    max_line_bytes: int | None = None,
+) -> Iterator[bytes]:
     """Yield ~chunk_bytes **newline-aligned** blocks covering exactly the
     lines this split owns (the bulk-absorb fast path — one absorb per block,
     not per line). Alignment means every block is a run of complete lines,
     so a parse failure's blast radius is one block and the parser holds no
-    cross-block state."""
-    if split.file.lower().endswith(_COMPRESSED_EXTS):
-        # whole-file split over the DECOMPRESSED stream: the split's byte
-        # bounds are compressed-size bookkeeping only, so read to EOF
-        with open_input(split.file) as fh:
-            carry = b""
-            while True:
-                chunk = fh.read(chunk_bytes)
-                if not chunk:
-                    break
-                chunk = carry + chunk
-                cut = chunk.rfind(b"\n")
-                if cut < 0:
-                    carry = chunk
-                    continue
-                carry = chunk[cut + 1 :]
-                yield chunk[: cut + 1]
-            if carry:
-                yield carry
-        return
-    with open(split.file, "rb") as fh:
-        pos = _aligned_start(fh, split)
-        carry = b""
-        while pos < split.end:
-            take = min(chunk_bytes, split.end - pos)
-            chunk = fh.read(take)
-            if not chunk:
-                break
-            pos += len(chunk)
-            if pos >= split.end and not chunk.endswith(b"\n"):
-                tail = fh.readline()  # finish the straddling line
-                if tail:
-                    chunk += tail
-                    pos += len(tail)
-            chunk = carry + chunk
-            cut = chunk.rfind(b"\n")
-            if cut < 0:
-                carry = chunk
-                continue
-            carry = chunk[cut + 1 :]
-            yield chunk[: cut + 1]
-        if carry:
-            yield carry  # final line without trailing newline
+    cross-block state. A line longer than ``max_line_bytes`` raises
+    ParseException, at most one read after its held bytes pass the bound;
+    the reads of a line in progress are joined once, at its newline."""
+    with open_input(split.file) as fh:
+        compressed = split.file.lower().endswith(_COMPRESSED_EXTS)
+        at = 0 if compressed else _aligned_start(fh, split)  # held line's offset
+        held: list[bytes] = []  # reads of the line in progress
+        n_held = 0
+        for chunk in _owned_reads(fh, split, at, chunk_bytes):
+            cut = chunk.rfind(b"\n") + 1
+            if cut:
+                block = b"".join(held + [chunk[:cut]]) if held else chunk[:cut]
+                if max_line_bytes is not None:
+                    _check_lines(split, block, at, max_line_bytes)
+                yield block
+                at += len(block)
+                held, n_held = [], 0
+            if cut < len(chunk):
+                held.append(chunk[cut:])
+                n_held += len(chunk) - cut
+                if max_line_bytes is not None and n_held > max_line_bytes:
+                    raise _line_too_long(split, at, n_held, max_line_bytes)
+        tail = b"".join(held)
+        if tail:
+            if max_line_bytes is not None:
+                _check_lines(split, tail, at, max_line_bytes)
+            yield tail  # final line without trailing newline
+
+
+def _check_lines(split: FileSplit, block: bytes, at: int, max_line_bytes: int) -> None:
+    """Raise if a line of ``block`` (at byte ``at`` of the file) is longer
+    than ``max_line_bytes``: one ``rfind`` per ``max_line_bytes`` of
+    input, each to the last newline in reach."""
+    pos, n = 0, len(block)
+    while n - pos > max_line_bytes:
+        nl = block.rfind(b"\n", pos, pos + max_line_bytes + 1)
+        if nl < 0:
+            end = block.find(b"\n", pos)
+            n_line = (n if end < 0 else end) - pos
+            raise _line_too_long(split, at + pos, n_line, max_line_bytes)
+        pos = nl + 1
+
+
+def _line_too_long(split: FileSplit, at: int, n: int, max_line_bytes: int) -> ParseException:
+    """The error for a line of at least ``n`` bytes at byte ``at`` of the
+    (decompressed) file; its line number is counted from the file start."""
+    line, left = 1, at
+    with open_input(split.file) as fh:
+        while left > 0 and (chunk := fh.read(min(_CHUNK, left))):
+            line += chunk.count(b"\n")
+            left -= len(chunk)
+    return ParseException(
+        f"line of {n}+ bytes exceeds maxValueBytes={max_line_bytes}; "
+        "raise the option or split the input",
+        at,
+        line,
+        1,
+    )
 
 
 class TectonicJsonDataSource(DataSource):
@@ -309,8 +373,6 @@ def _parse_file_prefix(
     if mode == "lines":
         # per-line sampling via the C json parser: malformed lines don't
         # abort inference
-        import json as _json
-
         rows: list[Any] = []
         with open_input(path) as fh:
             read = 0
@@ -318,7 +380,7 @@ def _parse_file_prefix(
                 read += len(line)
                 if line.strip():
                     try:
-                        rows.append(_json.loads(line))
+                        rows.append(json_loads(line.removeprefix(BOM_UTF8)))
                     except ValueError:
                         pass
                 if len(rows) >= max_rows or read >= max_bytes:
@@ -442,6 +504,26 @@ def _schema_paths(
     return paths
 
 
+def _nonfinite_floats(table) -> bool:
+    """Whether a float cell of ``table``, at any depth, is NaN or infinite.
+    From ``pyarrow.json`` that means a ``NaN`` or ``Infinity`` literal: it
+    rejects numbers outside the double range."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def walk(arr) -> bool:
+        t = arr.type
+        if pa.types.is_floating(t):
+            return bool(pc.any(pc.invert(pc.is_finite(arr))).as_py())
+        if pa.types.is_struct(t):
+            return any(walk(pc.struct_field(arr, [i])) for i in range(t.num_fields))
+        if pa.types.is_list(t):
+            return walk(pc.list_flatten(arr))
+        return False
+
+    return any(walk(col) for col in table.columns)
+
+
 class TectonicJsonReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict, mode: str) -> None:
         self.schema = schema
@@ -457,7 +539,7 @@ class TectonicJsonReader(DataSourceReader):
         # with fastPath=false
         self.fast_path = str(options.get("fastpath", "true")).lower() != "false"
         mvb = options.get("maxvaluebytes")
-        self.max_value_bytes = int(mvb) if mvb is not None else None
+        self.max_value_bytes = int(mvb) if mvb is not None else _DEFAULT_MAX_VALUE_BYTES
         self._tests: dict | None = None
         self._raw_filters: list | None = None
         # data schema = scan schema minus the corrupt-record column
@@ -523,9 +605,6 @@ class TectonicJsonReader(DataSourceReader):
             and split.file_size <= self._FAST_WHOLE_DOC_MAX
         ):
             # whitespace-separated documents via C-backed raw_decode loop
-            import json as _json
-
-            decoder = _json.JSONDecoder()
             with open_input(split.file) as fh:
                 text = fh.read().decode("utf-8").lstrip("\ufeff")
             rows: list[Any] = []
@@ -535,7 +614,7 @@ class TectonicJsonReader(DataSourceReader):
                     i += 1
                 if i >= n_len:
                     break
-                doc, i = decoder.raw_decode(text, i)  # ValueError on malformed
+                doc, i = json_raw_decode(text, i)  # ValueError on malformed
                 if self._row_passes(doc):
                     rows.append(self._maybe_prune(doc))
                 if len(rows) >= self.batch_rows:
@@ -548,11 +627,9 @@ class TectonicJsonReader(DataSourceReader):
             and self.mode in ("array", "single")
             and split.file_size <= self._FAST_WHOLE_DOC_MAX
         ):
-            import json as _json
-
             with open_input(split.file) as fh:
                 try:
-                    doc = _json.loads(fh.read())
+                    doc = json_loads(fh.read().removeprefix(BOM_UTF8))
                 except ValueError as e:
                     raise ValueError(
                         f"failed to parse JSON document {split.file!r}: {e}"
@@ -576,11 +653,7 @@ class TectonicJsonReader(DataSourceReader):
         parser = JsonParser(
             self._new_plate(),
             _MODES[self.mode],
-            max_value_bytes=(
-                self.max_value_bytes
-                if self.max_value_bytes is not None
-                else _DEFAULT_MAX_VALUE_BYTES
-            ),
+            max_value_bytes=self.max_value_bytes,
         )
         with open_input(split.file) as fh:
             while True:
@@ -609,7 +682,7 @@ class TectonicJsonReader(DataSourceReader):
         if self.fast_path:
             yield from self._read_lines_fast(split)
             return
-        for block in read_split_chunks(split):
+        for block in read_split_chunks(split, max_line_bytes=self.max_value_bytes):
             corrupt: list[str | None] | None = None
             rows, error = self._parse_block(block)
             if error is not None:
@@ -809,7 +882,7 @@ class TectonicJsonReader(DataSourceReader):
             # threads would oversubscribe
             read_opts = paj.ReadOptions(use_threads=False)
 
-        for block in read_split_chunks(split):
+        for block in read_split_chunks(split, max_line_bytes=self.max_value_bytes):
             if arrow_schema is not None and block.strip():
                 # NO probe here: C++ whole-block parse (~250 MB/s/core)
                 # beats Python line-splitting + probe even at high filter
@@ -821,9 +894,14 @@ class TectonicJsonReader(DataSourceReader):
                         parse_options=parse_opts,
                         read_options=read_opts,
                     )
+                    # one grammar: pyarrow leaves string bytes unchecked and
+                    # reads NaN and Infinity, which the event parser rejects
+                    if not block.isascii():
+                        table.validate(full=True)
+                    took = not _nonfinite_floats(table)
                 except pa.ArrowInvalid:
-                    pass  # malformed / type surprise → per-line semantics
-                else:
+                    took = False  # malformed / type surprise → per-line semantics
+                if took:
                     for lo in range(0, table.num_rows, self.batch_rows):
                         chunk = table.slice(lo, self.batch_rows).combine_chunks()
                         yield from chunk.to_batches()
@@ -833,8 +911,7 @@ class TectonicJsonReader(DataSourceReader):
     def _python_lines_block(self, block: bytes, probe, has_corrupt: bool):
         """Per-line parse of one block: full malformed-row semantics and
         pre-Arrow pushdown test application."""
-        import json as _json
-
+        loads = window_loads(block)
         rows: list[Any] = []
         corrupt: list[str | None] = []
         for line in block.split(b"\n"):
@@ -843,7 +920,8 @@ class TectonicJsonReader(DataSourceReader):
             if probe is not None and not probe(line):
                 continue
             try:
-                row = _json.loads(line)
+                # a BOM opens a line, as the event path's per-line reparse allows
+                row = loads(line.removeprefix(BOM_UTF8))
             except ValueError as e:
                 if self.parse_mode == "FAILFAST":
                     raise ValueError(
@@ -861,7 +939,9 @@ class TectonicJsonReader(DataSourceReader):
     def _parse_block(self, block: bytes):
         """Parse one self-contained block: absorb + finish, draining any
         BREAK_BATCH partials. Returns (rows, None) or (None, error)."""
-        parser = JsonParser(self._new_plate(), Mode.VALUE_STREAM)
+        parser = JsonParser(
+            self._new_plate(), Mode.VALUE_STREAM, max_value_bytes=self.max_value_bytes
+        )
         rows: list[Any] = []
 
         def phases():
@@ -887,7 +967,9 @@ class TectonicJsonReader(DataSourceReader):
         for line in block.split(b"\n"):
             if not line.strip():
                 continue
-            parser = JsonParser(self._new_plate(), Mode.VALUE_STREAM)
+            parser = JsonParser(
+                self._new_plate(), Mode.VALUE_STREAM, max_value_bytes=self.max_value_bytes
+            )
             line_rows: list[Any] = []
             res = parser.parse_complete(line)
             while not isinstance(res, Failure):

@@ -12,7 +12,7 @@ the Spark-idiomatic equivalent is a micro-batch file source:
   fans out across executors — parsing never serializes onto the driver.
 * **read(partition)** runs on executors and reuses the batch reader's
   block parser (projection pushdown included via the scan schema), emitting
-  tuples in schema order.
+  its Arrow record batches as they are.
 
 One generic reader serves both formats: the JSON and CSV DataSources pass
 their batch reader (which owns format config and the ``read(FileSplit)``
@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
 from pyspark.sql.datasource import DataSourceStreamReader
 from pyspark.sql.types import StructType
@@ -34,15 +35,17 @@ from tectonic_spark.sources.json_source import (
     plan_splits,
 )
 
+if TYPE_CHECKING:
+    from pyarrow import RecordBatch
+
 
 class TectonicFileStreamReader(DataSourceStreamReader):
     """Micro-batch tail of a directory through any tectonic batch reader."""
 
-    def __init__(self, batch_reader, schema: StructType, options: dict, splittable: bool) -> None:
+    def __init__(self, batch_reader, options: dict, splittable: bool) -> None:
         self._batch_reader = batch_reader
         self.options = options
         self.splittable = splittable
-        self._names = schema.fieldNames()
         # maxFilesPerTrigger: rate-limit each micro-batch to N new files
         # (Spark file-source parity). latestOffset advances by at most N
         # files per call, so a directory of M files drains over ⌈M/N⌉
@@ -142,12 +145,10 @@ class TectonicFileStreamReader(DataSourceStreamReader):
 
     # ------------------------------------------------------------------ read
 
-    def read(self, partition: FileSplit) -> Iterator[tuple]:
+    def read(self, partition: FileSplit) -> Iterator[RecordBatch]:
         if not partition.file:
             return
-        for batch in self._batch_reader.read(partition):
-            for row in batch.to_pylist():
-                yield tuple(row[n] for n in self._names)
+        yield from self._batch_reader.read(partition)
 
     def commit(self, end: dict) -> None:
         return None
@@ -158,7 +159,6 @@ def TectonicJsonStreamReader(schema: StructType, options: dict, mode: str) -> Te
 
     return TectonicFileStreamReader(
         TectonicJsonReader(schema, options, mode),
-        schema,
         options,
         splittable=(mode == "lines"),
     )

@@ -4,6 +4,7 @@ convention, sorted-file contract, error taxonomy."""
 
 import io
 import zlib
+from collections import namedtuple
 
 import pytest
 
@@ -12,11 +13,12 @@ from tectonic_spark.operators.cdxj import (
     fetch_member,
     parse_cdxj,
     payload_digest,
+    shard_records,
     surt,
     warc_timestamp,
     write_warc_indexed,
 )
-from tectonic_spark.operators.warc import build_warc_record, parse_warc
+from tectonic_spark.operators.warc import build_warc_record, parse_warc, write_warc
 
 
 class TestSurt:
@@ -128,6 +130,89 @@ class TestIndexedWrite:
         blob, entries = write_warc_indexed(_entries())
         with pytest.raises(ValueError, match="bad gzip member"):
             fetch_member(io.BytesIO(blob), entries[1]["offset"] + 1, 50)
+
+
+_Loc = namedtuple("_Loc", "filename offset length digest")
+_DocLoc = namedtuple("_DocLoc", "filename offset length digest doc_id")
+
+
+def _shard_file(tmp_path, blob: bytes) -> str:
+    path = tmp_path / "shard.warc.gz"
+    path.write_bytes(blob)
+    return str(path)
+
+
+class TestShardRecords:
+    """``shard_records``: the one ranged-read-and-parse of indexed members
+    every WARC member fetch goes through."""
+
+    def test_one_record_per_row_in_input_order(self, tmp_path):
+        blob, entries = write_warc_indexed(_entries())
+        path = _shard_file(tmp_path, blob)
+        rows = [
+            _Loc(e["filename"], e["offset"], e["length"], e["digest"])
+            for e in reversed(entries)
+        ]
+        got = list(shard_records(rows, lambda r: path))
+        # one shard is read in ascending offset order
+        assert [r.offset for r, _rec in got] == [e["offset"] for e in entries]
+        assert [rec["uri"] for _r, rec in got] == [e["url"] for e in entries]
+
+    @pytest.mark.parametrize("n", [0, 2])
+    def test_record_count_other_than_one_raises(self, tmp_path, n):
+        recs = [rec for rec, _meta in _entries(n)]
+        co = zlib.compressobj(6, zlib.DEFLATED, 31)
+        member = co.compress(write_warc(recs, gzip_per_record=False)) + co.flush()
+        path = _shard_file(tmp_path, b"\0" * 7 + member)
+        row = _Loc("shard.warc.gz", 7, len(member), "x")
+        with pytest.raises(
+            ValueError,
+            match=rf"^shard.warc.gz@7: {n} WARC records in the member, expected 1$",
+        ):
+            list(shard_records([row], lambda r: path))
+
+
+class TestFetchedDocs:
+    """``parser_ops._fetched_docs``: the verified document fetch on top of
+    ``shard_records`` (payload digest, extraction, doc id)."""
+
+    @staticmethod
+    def _shard(tmp_path, d=5):
+        from tectonic_spark.operators.parser_ops import _render_response_record
+
+        rec, http = _render_response_record(d, f"text of doc {d}", "en", "src1")
+        blob, (e,) = write_warc_indexed([(rec, {"digest": payload_digest(http)})])
+        return _shard_file(tmp_path, blob), e
+
+    def test_verified_doc(self, tmp_path):
+        from tectonic_spark.operators.parser_ops import _fetched_docs
+
+        path, e = self._shard(tmp_path)
+        for row in (
+            _Loc("shard.warc.gz", e["offset"], e["length"], e["digest"]),
+            _DocLoc("shard.warc.gz", e["offset"], e["length"], e["digest"], 5),
+        ):
+            ((r, doc),) = _fetched_docs([row], lambda r: path)
+            assert r is row
+            assert (doc.doc_id, doc.text, doc.lang, doc.source) == (
+                5, "text of doc 5", "en", "src1"
+            )
+
+    def test_digest_mismatch_raises(self, tmp_path):
+        from tectonic_spark.operators.parser_ops import _fetched_docs
+
+        path, e = self._shard(tmp_path)
+        row = _Loc("shard.warc.gz", e["offset"], e["length"], "SHA1:WRONG")
+        with pytest.raises(ValueError, match=r"shard.warc.gz@0: payload digest mismatch"):
+            list(_fetched_docs([row], lambda r: path))
+
+    def test_doc_id_mismatch_raises(self, tmp_path):
+        from tectonic_spark.operators.parser_ops import _fetched_docs
+
+        path, e = self._shard(tmp_path)
+        row = _DocLoc("shard.warc.gz", e["offset"], e["length"], e["digest"], 6)
+        with pytest.raises(ValueError, match=r"index said doc 6, record is doc 5"):
+            list(_fetched_docs([row], lambda r: path))
 
 
 class TestCdxjLines:

@@ -14,7 +14,7 @@ from hypothesis import strategies as st
 
 from tectonic_spark.core import DelegatingPlate, ReifiedPlate, Signal
 from tectonic_spark.core.json_parser import JsonParser, Mode
-from tectonic_spark.core.result import Complete, Failure
+from tectonic_spark.core.result import Complete, Failure, ParseException
 
 
 def parse(data: str | bytes, mode: Mode = Mode.VALUE_STREAM, chunks=None, plate=None):
@@ -652,6 +652,63 @@ class TestMaxValueBytes:
                 pass
 
 
+    @pytest.mark.parametrize("fast", ["true", "false"])
+    @pytest.mark.parametrize("parse_mode", ["PERMISSIVE", "DROPMALFORMED", "FAILFAST"])
+    def test_reader_option_bounds_lines_mode(self, tmp_path, parse_mode, fast):
+        from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+        from tectonic_spark.sources.json_source import FileSplit, TectonicJsonReader
+
+        schema = StructType([StructField("a", LongType()), StructField("k", StringType())])
+        # a 3 MB line between short ones: it is an error in every parse
+        # mode, not a malformed row, and the short lines read as usual
+        big = tmp_path / "big.json"
+        big.write_bytes(
+            b'{"a": 1}\n{"k": "' + b"x" * (3 << 20) + b'"}\n{"a": 2}\n'
+        )
+        size = big.stat().st_size
+        opts = {"path": str(big), "fastpath": fast, "parsemode": parse_mode}
+        whole = TectonicJsonReader(schema, opts, "lines")
+        assert len([r for b in whole.read(FileSplit(str(big), 0, size, size)) for r in b.to_pylist()]) == 3
+        for split_end in (size, 10):  # the long line inside, or straddling the split's end
+            r = TectonicJsonReader(schema, {**opts, "maxvaluebytes": "1024"}, "lines")
+            with pytest.raises(ParseException, match="maxValueBytes=1024") as ei:
+                for _ in r.read(FileSplit(str(big), 0, split_end, size)):
+                    pass
+            assert (ei.value.index, ei.value.line, ei.value.col) == (9, 2, 1)
+
+    def test_line_bound_stops_reading_early(self, tmp_path):
+        from tectonic_spark.sources.json_source import FileSplit, read_split_chunks
+
+        # no newline for 64 reads: the error comes once the held bytes pass
+        # the bound, not at the line's end
+        p = tmp_path / "long.json"
+        p.write_bytes(b'{"a": 1}\n' + b"y" * (64 << 10) + b"\n")
+        size = p.stat().st_size
+        reads = []
+        with pytest.raises(ParseException, match="maxValueBytes=3000"):
+            for block in read_split_chunks(
+                FileSplit(str(p), 0, size, size), chunk_bytes=1024, max_line_bytes=3000
+            ):
+                reads.append(block)
+        assert reads == [b'{"a": 1}\n']
+
+    def test_split_blocks_cover_lines_exactly_once(self, tmp_path):
+        from tectonic_spark.sources.json_source import plan_splits, read_split_chunks
+
+        lines = [b"%d" % i + b" " * (i * 37 % 300) for i in range(200)]
+        p = tmp_path / "lines.json"
+        p.write_bytes(b"\n".join(lines))  # the last line has no newline
+        size = p.stat().st_size
+        for split_bytes in (size, 997, 64):
+            got = b"".join(
+                block
+                for split in plan_splits([str(p)], split_bytes, splittable=True)
+                for block in read_split_chunks(split, chunk_bytes=100, max_line_bytes=400)
+            )
+            assert got == p.read_bytes(), split_bytes
+
+
 class TestDirectValuePath:
     """The direct fast path (extent → C json.loads / raw_decode) must be
     observationally identical to the event walker for value-building
@@ -714,6 +771,12 @@ class TestDirectValuePath:
             b'"unterminated',
             b'"bad \x01 ctrl"',
             b"tru",
+            b'{"a":1}\n{"b":2, BROKEN\n{"c":3}\n{"d":4}\n',  # row never closes
+            b'["\\ud800"]',       # lone surrogate escapes
+            b'{"k": "\\uDC00"}',
+            b'"\\ud800\\u0041"',
+            b'"\xed\xa0\x80"',    # CESU-8 surrogate bytes
+            b'"a\\n\xff"',         # invalid UTF-8 beside an escape
         ],
     )
     def test_error_parity_with_walker(self, bad):
@@ -721,6 +784,26 @@ class TestDirectValuePath:
         assert e1 is not None and e2 is not None
         assert (e1.index, e1.line, e1.col) == (e2.index, e2.line, e2.col)
         assert e1.args[0] == e2.args[0]
+
+    def test_unclosed_row_reports_the_malformed_byte(self):
+        # the C decoder rejects row 2; the walker takes it at once and stops
+        # at the B, where a raw extent scan would run to the input's end
+        data = b'{"a":1}\n{"b":2, BROKEN\n' + b'{"c":3}\n' * 1000
+        (_b1, e1), _walked = self._both(data)
+        assert (e1.args[0], e1.line, e1.col) == ('expected " got B (line 2, column 9)', 2, 9)
+
+    @pytest.mark.parametrize("mode", [Mode.VALUE_STREAM, Mode.SINGLE_VALUE])
+    def test_surrogate_pair_escapes_decode(self, mode):
+        data = b'{"k": ["\\ud83d\\ude00", "\\uD83D\\uDE00x"]}'
+        (b1, e1), (b2, e2) = self._both(data, mode=mode)
+        assert e1 is None and e2 is None
+        assert [v for batch in b1 for v in batch] == [{"k": ["\U0001f600", "\U0001f600x"]}]
+        assert b1 == b2
+
+    def test_lone_surrogate_is_a_parse_error(self):
+        (_b1, e1), (_b2, e2) = self._both(b'{"k": "ab\\ud800"}')
+        assert isinstance(e1, ParseException) and isinstance(e2, ParseException)
+        assert (e1.args[0], e1.col) == ("lone surrogate \\u escape b'd800' (line 1, column 10)", 10)
 
     def test_non_ascii_positions(self):
         # multibyte chars before a malformed value: byte positions agree

@@ -10,8 +10,11 @@ import json
 import os
 import tempfile
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+
+from tectonic_spark.core.result import ParseException
 
 from tectonic_spark.sources.json_source import FileSplit, TectonicJsonReader
 from tectonic_spark.sources.schema_infer import infer_spark_schema
@@ -91,3 +94,113 @@ def test_fast_path_equals_event_path(rows):
         assert len(out["true"]) == len(rows)
     finally:
         os.unlink(p)
+
+
+# ---------------------------------------------------------------- one grammar
+# Lines the event parser rejects; the fast routes (pyarrow whole-block and
+# per-line C decode) must reject them too: NaN/Infinity literals, raw
+# invalid UTF-8 (in a top-level and in a nested string), CESU-8 surrogate
+# bytes, and \u escapes that leave a lone surrogate.
+_MALFORMED_LINES = [
+    b'{"a": NaN, "s": "x"}',
+    b'{"a": Infinity}',
+    b'{"t": {"u": "k", "f": -Infinity}}',
+    b'{"s": "\xff"}',
+    b'{"t": {"u": "a\xffb"}}',
+    b'{"s": "\xed\xa0\x80"}',
+    b'{"s": "\\ud800"}',
+    b'{"t": {"u": "a\\uDC00"}}',
+    b'{"s": "\\ud800\\u0041"}',
+]
+_GOOD_LINES = [
+    b'{"a": 1.5, "s": "ok", "t": {"u": "\\ud83d\\ude00", "f": 2.0}}',
+    b'{"a": 2.5, "s": "\xc3\xa9\\uD83D\\uDE00"}',
+]
+
+
+def _grammar_schema(corrupt: bool):
+    from pyspark.sql.types import (
+        DoubleType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    fields = [
+        StructField("a", DoubleType()),
+        StructField("s", StringType()),
+        StructField(
+            "t",
+            StructType([StructField("u", StringType()), StructField("f", DoubleType())]),
+        ),
+    ]
+    if corrupt:
+        fields.append(StructField("_corrupt", StringType()))
+    return StructType(fields)
+
+
+def _read_lines(tmp_path, data: bytes, schema, **opts):
+    p = tmp_path / "in.json"
+    p.write_bytes(data)
+    r = TectonicJsonReader(schema, {"path": str(p), **opts}, "lines")
+    batches = list(r.read(FileSplit(str(p), 0, len(data), len(data))))
+    for b in batches:
+        b.validate(full=True)
+    return [row for b in batches for row in b.to_pylist()]
+
+
+
+
+@pytest.mark.parametrize("corrupt", [True, False])
+@pytest.mark.parametrize("bad", _MALFORMED_LINES)
+def test_fast_routes_share_the_event_grammar(tmp_path, bad, corrupt):
+    """PERMISSIVE: with a corrupt column the fast path takes the per-line
+    C route, without one the pyarrow route; either way the malformed line
+    is the same all-null row (and raw cell) as on the event path, and every
+    batch validates."""
+    data = b"\n".join([_GOOD_LINES[0], bad, _GOOD_LINES[1]]) + b"\n"
+    schema = _grammar_schema(corrupt)
+    opts = {"columnnameofcorruptrecord": "_corrupt"} if corrupt else {}
+    out = {
+        fp: _read_lines(tmp_path, data, schema, fastpath=fp, **opts)
+        for fp in ("true", "false")
+    }
+    assert out["true"] == out["false"]
+    rows = out["true"]
+    assert len(rows) == 3
+    assert rows[0]["t"]["u"] == "\U0001f600"
+    assert rows[2]["s"] == "\xe9\U0001f600"
+    assert (rows[1]["a"], rows[1]["s"], rows[1]["t"]) == (None, None, None)
+    if corrupt:
+        assert rows[1]["_corrupt"] == bad.decode("utf-8", errors="replace")
+
+
+@pytest.mark.parametrize("bad", _MALFORMED_LINES)
+def test_fast_routes_drop_and_fail_like_the_event_path(tmp_path, bad):
+    data = b"\n".join([_GOOD_LINES[0], bad, _GOOD_LINES[1]]) + b"\n"
+    schema = _grammar_schema(False)
+    for fp in ("true", "false"):
+        rows = _read_lines(tmp_path, data, schema, fastpath=fp, parsemode="DROPMALFORMED")
+        assert len(rows) == 2, fp
+        with pytest.raises((ValueError, ParseException)):
+            _read_lines(tmp_path, data, schema, fastpath=fp, parsemode="FAILFAST")
+
+
+@pytest.mark.parametrize("mode", ["values", "array", "single"])
+def test_whole_document_fast_path_rejects_what_the_parser_rejects(tmp_path, mode):
+    from tectonic_spark.sources.json_source import TectonicJsonReader as R
+
+    docs = {
+        "values": b'{"a": 1.0}\n{"s": "\\ud800"}\n',
+        "array": b'[{"a": 1.0}, {"a": NaN}]',
+        "single": b'{"s": "\xed\xa0\x80"}',
+    }
+    data = docs[mode]
+    p = tmp_path / "in.json"
+    p.write_bytes(data)
+    for fp in ("true", "false"):
+        r = R(_grammar_schema(False), {"path": str(p), "fastpath": fp}, mode)
+        with pytest.raises((ValueError, ParseException)) as ei:
+            list(r.read(FileSplit(str(p), 0, len(data), len(data))))
+        # rejected at decode, not crashing at the Arrow conversion
+        assert not isinstance(ei.value, UnicodeEncodeError), fp

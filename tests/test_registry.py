@@ -247,7 +247,7 @@ def test_operators_read_tables_only_through_table():
 
 # the ranged-read primitives of the zipnum format; operators read an index
 # or its members through cdxj.py's helpers (read_blocks, index_lines,
-# candidate_blocks, shard_members), never by calling these directly
+# candidate_blocks, shard_records), never by calling these directly
 _ZIPNUM_PRIMITIVES = {"fetch_member", "zipnum_block_range", "multi_zipnum_blocks"}
 
 
@@ -303,6 +303,72 @@ def test_operators_read_zipnum_only_through_cdxj():
     for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
         if path.name != "cdxj.py":
             problems += _zipnum_primitive_calls(path.read_text(), path.name)
+    assert problems == []
+
+
+# the one WARC member fetch: only cdxj.shard_records ranged-reads members
+# (through shard_members) and parses them; every member fetch goes through
+# it or through parser_ops._fetched_docs, which verifies what it returns
+_MEMBER_FETCH_HELPERS = {"shard_records"}
+
+
+def _shard_member_calls(source: str, filename: str) -> list[str]:
+    """Lines of ``source`` that call ``shard_members`` outside the
+    record-level fetch helper, by bare name or as an attribute, at any
+    nesting depth (closures included)."""
+    import ast
+
+    tree = ast.parse(source, filename)
+    inside = {
+        id(n)
+        for f in ast.walk(tree)
+        if isinstance(f, ast.FunctionDef) and f.name in _MEMBER_FETCH_HELPERS
+        for n in ast.walk(f)
+    }
+    problems = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call) or id(node) in inside:
+            continue
+        fn = node.func
+        name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+        if name == "shard_members":
+            problems.append((node.lineno, f"{filename}:{node.lineno}: shard_members"))
+    return [p for _line, p in sorted(problems)]
+
+
+def test_member_fetch_scan_flags_a_copy():
+    bad = (
+        "def q(spark, src):\n"
+        "    def fetch_docs(batches):\n"
+        "        from tectonic_spark.operators.cdxj import shard_members\n"
+        "        for pdf in batches:\n"
+        "            for r, member in shard_members(pdf.itertuples(), path):\n"
+        "                (rec,) = parse_warc(member)\n"
+        "    return cdxj.shard_members(rows, path)\n"
+    )
+    good = (
+        "def shard_records(rows, shard_path):\n"
+        "    for r, member in shard_members(rows, shard_path):\n"
+        "        yield r, parse_warc(member)[0]\n"
+        "def q(spark, src):\n"
+        "    fetch_docs = _member_kernel(_fetched_docs, path, _member_row, cols)\n"
+        "    return 'shard_members'\n"
+    )
+    assert _shard_member_calls(bad, "bad.py") == [
+        "bad.py:5: shard_members",
+        "bad.py:7: shard_members",
+    ]
+    assert _shard_member_calls(good, "good.py") == []
+
+
+def test_operators_fetch_members_only_through_shard_records():
+    """One WARC member fetch: no operator module ranged-reads a member and
+    parses it by hand; every fetch goes through ``cdxj.shard_records``."""
+    import pathlib
+
+    problems = []
+    for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
+        problems += _shard_member_calls(path.read_text(), path.name)
     assert problems == []
 
 

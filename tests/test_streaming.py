@@ -102,8 +102,6 @@ class TestJsonStreamSource:
 
     def test_max_files_per_trigger_rate_limits_offsets(self, tmp_path):
         # unit: latestOffset advances by ≤N new files per call, monotonic
-        from pyspark.sql.types import StructType
-
         from tectonic_spark.streaming.json_stream import TectonicFileStreamReader
 
         data = tmp_path / "in"
@@ -112,7 +110,6 @@ class TestJsonStreamSource:
             (data / f"f{i}.jsonl").write_text('{"a": %d}\n' % i)
         reader = TectonicFileStreamReader(
             batch_reader=None,
-            schema=StructType([]),
             options={"path": str(data), "maxfilespertrigger": "2"},
             splittable=True,
         )
@@ -126,6 +123,26 @@ class TestJsonStreamSource:
             prev = cur
         assert seen == [2, 2, 1, 0]
         assert len(prev["files"]) == 5
+
+    def test_read_yields_the_batch_readers_arrow_batches(self, tmp_path):
+        import pyarrow as pa
+        from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+        from tectonic_spark.sources.json_source import FileSplit, TectonicJsonReader
+        from tectonic_spark.streaming.json_stream import TectonicJsonStreamReader
+
+        p = tmp_path / "f.jsonl"
+        p.write_bytes(b'{"a": 1, "s": "x"}\n{"a": 2}\n{"s": "y", "z": 0}\n')
+        size = p.stat().st_size
+        schema = StructType([StructField("a", LongType()), StructField("s", StringType())])
+        split = FileSplit(str(p), 0, size, size)
+        opts = {"path": str(tmp_path)}
+        got = list(TectonicJsonStreamReader(schema, opts, "lines").read(split))
+        want = list(TectonicJsonReader(schema, opts, "lines").read(split))
+        assert got and all(isinstance(b, pa.RecordBatch) for b in got)
+        assert [b.to_pylist() for b in got] == [b.to_pylist() for b in want]
+        assert got[0].schema.names == ["a", "s"]
+        assert list(TectonicJsonStreamReader(schema, opts, "lines").read(FileSplit("", 0, 0, 0))) == []
 
     def test_max_files_per_trigger_multibatch_end_to_end(self, spark, tmp_path):
         data = tmp_path / "in"
@@ -373,8 +390,6 @@ class TestStreamFaults:
     ``commits/N`` must replay N without duplicating sink rows."""
 
     def test_max_bytes_per_trigger_rate_limits_offsets(self, tmp_path):
-        from pyspark.sql.types import StructType
-
         from tectonic_spark.streaming.json_stream import TectonicFileStreamReader
 
         data = tmp_path / "in"
@@ -387,7 +402,6 @@ class TestStreamFaults:
         size = (data / "f0.jsonl").stat().st_size
         reader = TectonicFileStreamReader(
             batch_reader=None,
-            schema=StructType([]),
             options={"path": str(data), "maxbytespertrigger": str(2 * size)},
             splittable=True,
         )
@@ -401,8 +415,6 @@ class TestStreamFaults:
         assert seen == [2, 2, 1, 0]
 
     def test_max_bytes_always_admits_one_oversized_file(self, tmp_path):
-        from pyspark.sql.types import StructType
-
         from tectonic_spark.streaming.json_stream import TectonicFileStreamReader
 
         data = tmp_path / "in"
@@ -410,7 +422,6 @@ class TestStreamFaults:
         (data / "big.jsonl").write_text('{"a": 1, "pad": "%s"}\n' % ("y" * 4096))
         reader = TectonicFileStreamReader(
             batch_reader=None,
-            schema=StructType([]),
             options={"path": str(data), "maxbytespertrigger": "10"},
             splittable=True,
         )
