@@ -191,6 +191,16 @@ def window_loads(window: bytes):
     return _loads_clean
 
 
+def _cut_by_end(e: Exception, n: int) -> bool:
+    """Whether ``raw_decode``'s error ``e`` on a text of ``n`` characters
+    may only mean that the text ends inside the value: an unterminated
+    string, or an error in the last partial token (``\\uXXX`` is the
+    longest)."""
+    return isinstance(e, json.JSONDecodeError) and (
+        e.msg.startswith("Unterminated string") or e.pos >= n - 5
+    )
+
+
 def json_raw_decode(text: str, i: int):
     """``json_loads`` for the value starting at ``text[i]``, returning
     ``(value, end)`` as ``JSONDecoder.raw_decode`` does."""
@@ -1021,8 +1031,8 @@ class JsonParser(Generic[A]):
                 v, endp = raw_decode(text, spos)
                 if surrogate_escapes:
                     _no_lone_surrogate(v, text, spos, endp)
-            except (ValueError, RecursionError):
-                rejected = True
+            except (ValueError, RecursionError) as e:
+                rejected = self._done or not _cut_by_end(e, n)
                 break
             if text[endp - 1] not in '"}]':
                 # Atom (number/literal): raw_decode matches the maximal
@@ -1045,7 +1055,8 @@ class JsonParser(Generic[A]):
         if rejected:
             # the walker decides this value without a raw extent scan
             # first: on a row that never closes that scan runs to the
-            # buffer end, where the walker stops at the malformed byte
+            # buffer end, where the walker stops at the malformed byte.
+            # A value the buffer end merely cuts waits for input instead.
             self._walk_at = self._base + start + done
         if done:
             self._pos = start + done

@@ -34,7 +34,10 @@ decode sites (per-line, whole-document and ``values`` decoding, schema
 sampling) all use the core's strict decoder (``json_parser.json_loads``:
 strict UTF-8, no ``NaN``/``Infinity``, no lone surrogate ``\\u`` escape),
 and a pyarrow block whose strings are not valid UTF-8 or which holds
-``NaN``/``Infinity`` goes to the per-line route.
+``NaN``/``Infinity`` goes to the per-line route. A line or document that
+C decoding rejects is then decided by the event parser, which skips
+values outside the read schema unchecked: ``{"a": 1.0, "zz": NaN}`` read
+with schema ``a`` is a good row on both routes.
 
 ``maxValueBytes`` (default 1 GiB) bounds one value's buffered bytes in the
 stream modes and one line in ``lines`` mode: a longer line raises
@@ -48,6 +51,7 @@ import os
 from codecs import BOM_UTF8
 from collections.abc import Iterator
 from dataclasses import dataclass
+from itertools import chain
 from typing import Any
 
 from pyspark.errors import PySparkTypeError
@@ -177,15 +181,20 @@ def plan_splits(
     return out
 
 
-def _aligned_start(fh, split: FileSplit) -> int:
-    """Seek ``fh`` to this split's first owned byte (start of a line)."""
+def _aligned_start(fh, split: FileSplit, chunk_bytes: int) -> int:
+    """Seek ``fh`` to this split's first owned byte (start of a line). The
+    rest of a line that straddles the split's start is skipped in reads of
+    at most ``chunk_bytes``: the split that owns it reads (and bounds) it."""
     if split.start == 0:
         fh.seek(0)
         return 0
     fh.seek(split.start - 1)
-    if fh.read(1) == b"\n":
-        return split.start
-    return split.start + len(fh.readline())
+    pos = split.start
+    piece = fh.read(1)
+    while piece and not piece.endswith(b"\n"):
+        piece = fh.readline(chunk_bytes)
+        pos += len(piece)
+    return pos
 
 
 def _owned_reads(fh, split: FileSplit, pos: int, chunk_bytes: int) -> Iterator[bytes]:
@@ -228,7 +237,8 @@ def read_split_chunks(
     the reads of a line in progress are joined once, at its newline."""
     with open_input(split.file) as fh:
         compressed = split.file.lower().endswith(_COMPRESSED_EXTS)
-        at = 0 if compressed else _aligned_start(fh, split)  # held line's offset
+        # the held line's offset
+        at = 0 if compressed else _aligned_start(fh, split, chunk_bytes)
         held: list[bytes] = []  # reads of the line in progress
         n_held = 0
         for chunk in _owned_reads(fh, split, at, chunk_bytes):
@@ -280,6 +290,22 @@ def _line_too_long(split: FileSplit, at: int, n: int, max_line_bytes: int) -> Pa
         at,
         line,
         1,
+    )
+
+
+def _pieces(data: bytes, at: int) -> Iterator[bytes]:
+    """``data[at:]`` in pieces of at most ``_CHUNK`` bytes."""
+    return (data[k : k + _CHUNK] for k in range(at, len(data), _CHUNK))
+
+
+def _shifted(e: ParseException, data: bytes, at: int) -> ParseException:
+    """``e``, raised by a parser fed ``data[at:]``, placed in ``data``."""
+    line_start = data.rfind(b"\n", 0, at) + 1
+    return ParseException(
+        e.message,
+        e.index + at,
+        e.line + data.count(b"\n", 0, at),
+        e.col + (at - line_start if e.line == 1 else 0),
     )
 
 
@@ -596,80 +622,103 @@ class TectonicJsonReader(DataSourceReader):
         """values/array/single: incremental absorb of the whole file,
         batches streaming out per chunk (constant memory — the parser's
         sliding-window buffer compaction keeps the live buffer bounded).
-        array/single fast path: files under 256 MB parse as one C
-        json.loads call (the event parser keeps huge files, the values
-        mode's multi-document framing, and fastPath=false)."""
-        if (
-            self.fast_path
-            and self.mode == "values"
-            and split.file_size <= self._FAST_WHOLE_DOC_MAX
-        ):
-            # whitespace-separated documents via C-backed raw_decode loop
+        Fast path, for files under 256 MB: C decoding of the whole document
+        (array/single) or of each document (values). What C decoding
+        rejects, from that document on, goes to the event parser, which
+        decides it (it skips values outside the read schema unchecked);
+        the event parser keeps huge files and fastPath=false."""
+        if not self.fast_path or split.file_size > self._FAST_WHOLE_DOC_MAX:
             with open_input(split.file) as fh:
-                text = fh.read().decode("utf-8").lstrip("\ufeff")
-            rows: list[Any] = []
-            i, n_len = 0, len(text)
-            while i < n_len:
-                while i < n_len and text[i] in " \t\r\n":
-                    i += 1
-                if i >= n_len:
-                    break
-                doc, i = json_raw_decode(text, i)  # ValueError on malformed
-                if self._row_passes(doc):
-                    rows.append(self._maybe_prune(doc))
-                if len(rows) >= self.batch_rows:
-                    yield from self._to_batches(rows)
-                    rows = []
-            yield from self._to_batches(rows)
+                yield from self._stream_batches(iter(lambda: fh.read(_CHUNK), b""))
             return
-        if (
-            self.fast_path
-            and self.mode in ("array", "single")
-            and split.file_size <= self._FAST_WHOLE_DOC_MAX
-        ):
+        if self.mode == "values":
+            yield from self._read_values_fast(split)
+            return
+        with open_input(split.file) as fh:
+            data = fh.read()
+        try:
+            doc = json_loads(data.removeprefix(BOM_UTF8))
+        except (ValueError, RecursionError):
+            yield from self._stream_batches(_pieces(data, 0))
+            return
+        del data  # held only for the event parser
+        if self.mode == "array":
+            if not isinstance(doc, list):
+                raise ValueError(
+                    f"array mode expects a top-level JSON array in {split.file!r}"
+                )
+            rows = doc
+        else:
+            rows = [doc]
+        yield from self._to_batches(
+            [self._maybe_prune(r) for r in rows if self._row_passes(r)]
+        )
+
+    def _read_values_fast(self, split: FileSplit):
+        """values mode: a C ``raw_decode`` per whitespace-separated
+        document of the whole file, then the event parser from the first
+        document C decoding rejects (or from the start, when the file is
+        not valid UTF-8)."""
+        with open_input(split.file) as fh:
+            data = fh.read()
+        bom = len(BOM_UTF8) if data.startswith(BOM_UTF8) else 0
+        try:
+            text = data[bom:].decode("utf-8")
+        except UnicodeDecodeError:
+            yield from self._stream_batches(_pieces(data, 0))
+            return
+        del data  # only the text is held while documents decode
+        rows: list[Any] = []
+        i, n_len = 0, len(text)
+        while True:
+            while i < n_len and text[i] in " \t\r\n":
+                i += 1
+            if i >= n_len:
+                break
+            try:
+                doc, end = json_raw_decode(text, i)
+            except (ValueError, RecursionError):
+                break
+            i = end
+            if self._row_passes(doc):
+                rows.append(self._maybe_prune(doc))
+            if len(rows) >= self.batch_rows:
+                yield from self._to_batches(rows)
+                rows = []
+        yield from self._to_batches(rows)
+        if i < n_len:
+            at = bom + (i if text.isascii() else len(text[:i].encode("utf-8")))
+            del text
             with open_input(split.file) as fh:
-                try:
-                    doc = json_loads(fh.read().removeprefix(BOM_UTF8))
-                except ValueError as e:
-                    raise ValueError(
-                        f"failed to parse JSON document {split.file!r}: {e}"
-                    ) from e
-            if self.mode == "array":
-                if not isinstance(doc, list):
-                    raise ValueError(
-                        f"array mode expects a top-level JSON array in {split.file!r}"
-                    )
-                rows = doc
-            else:
-                rows = [doc]
-            yield from self._to_batches(
-                [self._maybe_prune(r) for r in rows if self._row_passes(r)]
-            )
-            return
-        # incremental absorb keeps memory ~one pending value on the direct
-        # path and ~one token on the event path; a pending value or token
-        # larger than maxValueBytes (default 1 GiB — executor-memory scale)
-        # fails with a clean ParseException instead of growing until OOM
+                data = fh.read()
+            try:
+                yield from self._stream_batches(_pieces(data, at))
+            except ParseException as e:
+                raise _shifted(e, data, at) from None
+
+    def _stream_batches(self, chunks: Iterator[bytes]):
+        """Event-parse one whole input, absorbed chunk by chunk, into
+        batches per chunk. Incremental absorb keeps memory ~one pending
+        value on the direct path and ~one token on the event path; a
+        pending value or token larger than maxValueBytes (default 1 GiB —
+        executor-memory scale) fails with a clean ParseException instead
+        of growing until OOM."""
         parser = JsonParser(
             self._new_plate(),
             _MODES[self.mode],
             max_value_bytes=self.max_value_bytes,
         )
-        with open_input(split.file) as fh:
-            while True:
-                chunk = fh.read(_CHUNK)
-                res = parser.finish() if not chunk else parser.absorb(chunk)
-                rows: list[Any] = []
-                while not isinstance(res, Failure):
-                    rows.extend(res.value)
-                    if not isinstance(res, Partial):
-                        break
-                    res = parser.resume()
-                if isinstance(res, Failure):
-                    raise res.error
-                yield from self._to_batches(rows)
-                if not chunk:
+        for chunk in chain(chunks, [b""]):  # b"": finish
+            res = parser.absorb(chunk) if chunk else parser.finish()
+            rows: list[Any] = []
+            while not isinstance(res, Failure):
+                rows.extend(res.value)
+                if not isinstance(res, Partial):
                     break
+                res = parser.resume()
+            if isinstance(res, Failure):
+                raise res.error
+            yield from self._to_batches(rows)
 
     def _read_lines(self, split: FileSplit):
         """lines mode: each newline-aligned block (a run of complete lines,
@@ -923,6 +972,13 @@ class TectonicJsonReader(DataSourceReader):
                 # a BOM opens a line, as the event path's per-line reparse allows
                 row = loads(line.removeprefix(BOM_UTF8))
             except ValueError as e:
+                # one grammar: C decoding checks the whole line, the event
+                # parser skips values outside the read schema unchecked
+                line_rows = self._parse_line(line)
+                if line_rows is not None:
+                    rows.extend(line_rows)
+                    corrupt.extend([None] * len(line_rows))
+                    continue
                 if self.parse_mode == "FAILFAST":
                     raise ValueError(
                         f"failed to parse JSON line ({e}): {line[:120]!r}"
@@ -939,9 +995,7 @@ class TectonicJsonReader(DataSourceReader):
     def _parse_block(self, block: bytes):
         """Parse one self-contained block: absorb + finish, draining any
         BREAK_BATCH partials. Returns (rows, None) or (None, error)."""
-        parser = JsonParser(
-            self._new_plate(), Mode.VALUE_STREAM, max_value_bytes=self.max_value_bytes
-        )
+        parser = JsonParser(self._new_plate(), Mode.VALUE_STREAM)
         rows: list[Any] = []
 
         def phases():
@@ -967,17 +1021,8 @@ class TectonicJsonReader(DataSourceReader):
         for line in block.split(b"\n"):
             if not line.strip():
                 continue
-            parser = JsonParser(
-                self._new_plate(), Mode.VALUE_STREAM, max_value_bytes=self.max_value_bytes
-            )
-            line_rows: list[Any] = []
-            res = parser.parse_complete(line)
-            while not isinstance(res, Failure):
-                line_rows.extend(res.value)
-                if not isinstance(res, Partial):
-                    break
-                res = parser.resume()
-            if not isinstance(res, Failure):
+            line_rows = self._parse_line(line)
+            if line_rows is not None:
                 rows.extend(line_rows)
                 corrupt.extend([None] * len(line_rows))
             elif self.parse_mode == "PERMISSIVE":
@@ -985,6 +1030,18 @@ class TectonicJsonReader(DataSourceReader):
                 corrupt.append(line.decode("utf-8", errors="replace"))
             # DROPMALFORMED: swallow the line
         return rows, corrupt
+
+    def _parse_line(self, line: bytes) -> list[Any] | None:
+        """The event parser's rows for one line, or None if it is malformed."""
+        parser = JsonParser(self._new_plate(), Mode.VALUE_STREAM)
+        rows: list[Any] = []
+        res = parser.parse_complete(line)
+        while not isinstance(res, Failure):
+            rows.extend(res.value)
+            if not isinstance(res, Partial):
+                return rows
+            res = parser.resume()
+        return None
 
     def _to_batches(self, rows: list[Any], corrupt_raw: list[str | None] | None = None):
         data_schema = self.data_schema

@@ -693,6 +693,45 @@ class TestMaxValueBytes:
                 reads.append(block)
         assert reads == [b'{"a": 1}\n']
 
+    def test_split_inside_a_long_line_skips_it_in_bounded_reads(self, tmp_path, monkeypatch):
+        from tectonic_spark.sources import json_source
+        from tectonic_spark.sources.json_source import FileSplit, read_split_chunks
+
+        # the split starts inside a line longer than the bound: it skips
+        # the rest of that line (its owning split raises) one read at a time
+        p = tmp_path / "long.json"
+        p.write_bytes(b'{"a": 1}\n' + b"y" * (64 << 10) + b'\n{"a": 2}\n')
+        size = p.stat().st_size
+        reads = []
+        real_open = json_source.open_input
+
+        class Recording:
+            def __init__(self, fh):
+                self._fh = fh
+
+            def __enter__(self):
+                return self
+
+            def __exit__(self, *exc):
+                self._fh.close()
+
+            def seek(self, pos):
+                return self._fh.seek(pos)
+
+            def read(self, n=-1):
+                reads.append(b := self._fh.read(n))
+                return b
+
+            def readline(self, n=-1):
+                reads.append(b := self._fh.readline(n))
+                return b
+
+        monkeypatch.setattr(json_source, "open_input", lambda path: Recording(real_open(path)))
+        split = FileSplit(str(p), 100, size, size)
+        blocks = list(read_split_chunks(split, chunk_bytes=1024, max_line_bytes=3000))
+        assert blocks == [b'{"a": 2}\n']
+        assert max(map(len, reads)) <= 1024
+
     def test_split_blocks_cover_lines_exactly_once(self, tmp_path):
         from tectonic_spark.sources.json_source import plan_splits, read_split_chunks
 
@@ -791,6 +830,24 @@ class TestDirectValuePath:
         data = b'{"a":1}\n{"b":2, BROKEN\n' + b'{"c":3}\n' * 1000
         (_b1, e1), _walked = self._both(data)
         assert (e1.args[0], e1.line, e1.col) == ('expected " got B (line 2, column 9)', 2, 9)
+
+    def test_values_cut_by_a_chunk_end_are_not_walked(self):
+        from tectonic_spark.core.value_builder import ValueBuilderPlate
+
+        # values cut inside strings, escapes, numbers and literals wait for
+        # the rest of their input and then decode in C; none is walked
+        docs = [
+            {"s": "x" * 40, "e": "\u00e9\U0001f600", "n": -12.5e3, "b": [True, False, None]}
+        ] * 20
+        data = "\n".join(json.dumps(d) for d in docs).encode()
+        for step in (7, 13, 64):
+            p = JsonParser(ValueBuilderPlate(), Mode.VALUE_STREAM)
+            out = []
+            for k in range(0, len(data), step):
+                out.extend(p.absorb(data[k : k + step]).value)
+            out.extend(p.finish().value)
+            assert out == docs, step
+            assert p.rows_walked == 0, step
 
     @pytest.mark.parametrize("mode", [Mode.VALUE_STREAM, Mode.SINGLE_VALUE])
     def test_surrogate_pair_escapes_decode(self, mode):

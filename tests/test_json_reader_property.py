@@ -204,3 +204,96 @@ def test_whole_document_fast_path_rejects_what_the_parser_rejects(tmp_path, mode
             list(r.read(FileSplit(str(p), 0, len(data), len(data))))
         # rejected at decode, not crashing at the Arrow conversion
         assert not isinstance(ei.value, UnicodeEncodeError), fp
+
+
+# Values outside the read schema: the event parser skips them unchecked, so
+# a line or document C decoding rejects only there is a good row on both
+# routes, in every parse mode.
+_UNREAD_BAD_LINES = [
+    b'{"a": 1.0, "zz": NaN}',
+    b'{"a": 1.0, "zz": "\\ud800"}',
+    b'{"a": 1.0, "zz": "\xed\xa0\x80"}',
+    b'{"a": 1.0, "zz": "\xff"}',
+    b'{"a": 1.0, "zz": [1,,2]}',
+    b'{"a": 1.0, "t": {"u": "k", "g": -Infinity}}',
+]
+
+
+def _narrow_schema(corrupt: bool):
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+    fields = [
+        StructField("a", DoubleType()),
+        StructField("t", StructType([StructField("u", StringType())])),
+    ]
+    if corrupt:
+        fields.append(StructField("_corrupt", StringType()))
+    return StructType(fields)
+
+
+@pytest.mark.parametrize("parse_mode", ["PERMISSIVE", "FAILFAST"])
+@pytest.mark.parametrize("corrupt", [True, False])
+@pytest.mark.parametrize("line", _UNREAD_BAD_LINES)
+def test_fast_routes_skip_unread_values_like_the_event_path(
+    tmp_path, line, corrupt, parse_mode
+):
+    data = b"\n".join([b'{"a": 0.5}', line]) + b"\n"
+    opts = {"columnnameofcorruptrecord": "_corrupt"} if corrupt else {}
+    out = {
+        fp: _read_lines(
+            tmp_path, data, _narrow_schema(corrupt), fastpath=fp, parsemode=parse_mode, **opts
+        )
+        for fp in ("true", "false")
+    }
+    assert out["true"] == out["false"]
+    assert [r["a"] for r in out["true"]] == [0.5, 1.0]
+    if corrupt:
+        assert [r["_corrupt"] for r in out["true"]] == [None, None]
+
+
+@pytest.mark.parametrize(
+    "mode,data,want",
+    [
+        ("values", b'{"a": 0.5}\n{"a": 1.0, "zz": NaN}\n{"a": 2.0}\n', [0.5, 1.0, 2.0]),
+        ("values", b'{"a": 0.5}\n{"a": 1.0, "zz": "\xff"}\n', [0.5, 1.0]),
+        ("array", b'[{"a": 0.5}, {"a": 1.0, "zz": "\\udc00"}]', [0.5, 1.0]),
+        ("single", b'{"a": 1.0, "zz": "\xed\xa0\x80"}', [1.0]),
+    ],
+)
+def test_whole_document_fast_path_skips_unread_values(tmp_path, mode, data, want):
+    from tectonic_spark.sources.json_source import TectonicJsonReader as R
+
+    p = tmp_path / "in.json"
+    p.write_bytes(data)
+    out = {}
+    for fp in ("true", "false"):
+        r = R(_narrow_schema(False), {"path": str(p), "fastpath": fp}, mode)
+        out[fp] = [
+            row for b in r.read(FileSplit(str(p), 0, len(data), len(data))) for row in b.to_pylist()
+        ]
+    assert out["true"] == out["false"]
+    assert [r["a"] for r in out["true"]] == want
+
+
+@pytest.mark.parametrize(
+    "data,line_col",
+    [
+        (b'\xef\xbb\xbf{"a": 0.5}\n{"a": 1.0, "zz": "\xc3\xa9"}\n  {"a": NaN}\n', (3, 9)),
+        (b'\xef\xbb\xbf{"a": 0.5} {"zz": "\xc3\xa9"}  {"a": NaN}', (1, 35)),
+    ],
+)
+def test_values_fast_path_reports_the_event_parser_position(tmp_path, data, line_col):
+    from tectonic_spark.sources.json_source import TectonicJsonReader as R
+
+    # C decoding takes the first documents, the event parser the rest: its
+    # error is placed in the whole file (BOM and multi-byte text before it)
+    p = tmp_path / "in.json"
+    p.write_bytes(data)
+    errs = {}
+    for fp in ("true", "false"):
+        r = R(_narrow_schema(False), {"path": str(p), "fastpath": fp}, "values")
+        with pytest.raises(ParseException) as ei:
+            list(r.read(FileSplit(str(p), 0, len(data), len(data))))
+        errs[fp] = (ei.value.message, ei.value.index, ei.value.line, ei.value.col)
+    assert errs["true"] == errs["false"]
+    assert errs["true"][1:] == (data.index(b"NaN"), *line_col)
