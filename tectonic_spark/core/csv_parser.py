@@ -139,6 +139,14 @@ class CsvParser(Generic[A]):
 
     _BOM = b"\xef\xbb\xbf"
 
+    @property
+    def header_names(self) -> list[str] | None:
+        """The header row's cells once that row is complete; None while it
+        is pending, and for a headerless config."""
+        if self._in_header or not self.config.header:
+            return None
+        return list(self._headers)
+
     def absorb(self, data: bytes | str) -> Complete[A] | Partial[A] | Failure:
         if self._failed is not None:
             return Failure(self._failed)

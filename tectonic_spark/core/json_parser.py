@@ -844,6 +844,9 @@ class JsonParser(Generic[A]):
         recv = getattr(plate, "direct_value_receiver", None)
         self._direct = recv() if (direct_values and recv is not None) else None
         self._walk_at = -1  # absolute offset of a value C decoding rejected
+        # (value start, scan position, depth) of a container the buffer end
+        # cut on the direct route, all offsets absolute
+        self._cut_scan: tuple[int, int, int] | None = None
         # Structural index: a VALUE_STREAM plate that names its columns lets
         # whole object rows be decided without events; rows it cannot prove
         # are walked, one at a time, at their own offsets.
@@ -960,7 +963,7 @@ class JsonParser(Generic[A]):
         leaving ``_pos`` just past it; raises _Incomplete while it awaits
         more input."""
         if self._direct is not None and self._base + i != self._walk_at:
-            end = self._scan_value(i)
+            end = self._direct_extent(i)
             try:
                 v = json_loads(self._buf[i:end])
             except (ValueError, RecursionError):
@@ -1228,6 +1231,34 @@ class JsonParser(Generic[A]):
                 return len(buf)
             raise _Incomplete
         return m.start()
+
+    def _direct_extent(self, i: int) -> int:
+        """``_scan_value`` for the direct route, resumable: a container the
+        buffer end cuts keeps its scan position and depth across absorbs,
+        so a value that stays open for many absorbs is scanned once, not
+        once per absorb."""
+        buf = self._buf
+        at = self._base + i
+        if self._cut_scan is not None and self._cut_scan[0] == at:
+            _, j, depth = self._cut_scan
+            j -= self._base
+        elif buf[i] in (0x7B, 0x5B):  # { [
+            j, depth = i + 1, 1
+        else:
+            return self._scan_value(i)
+        n = len(buf)
+        run = _RUN_RE.match
+        while depth:
+            j = run(buf, j).end()
+            # as in _scan_close: the run stops at a bracket, at the buffer
+            # end, or at a '"' whose string the buffer end cuts
+            if j >= n or buf[j] == 0x22:
+                self._cut_scan = (at, self._base + j, depth)
+                raise _Incomplete
+            depth += 1 if buf[j] in (0x7B, 0x5B) else -1
+            j += 1
+        self._cut_scan = None
+        return j
 
     def _scan_close(self, j: int, depth: int) -> int:
         """Scan forward until ``depth`` open containers have closed; returns

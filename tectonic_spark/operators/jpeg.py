@@ -144,10 +144,6 @@ def _fdct(block: np.ndarray) -> np.ndarray:
     return _A @ block @ _AT
 
 
-def _idct(coef: np.ndarray) -> np.ndarray:
-    return _AT @ coef @ _A
-
-
 def _iround(x: np.ndarray) -> np.ndarray:
     """Round half away from zero (the conventional JPEG sample rounding;
     np.round would round half-to-even and diverge from the contract)."""
@@ -798,10 +794,6 @@ def _entropy_segments(data: bytes, pos: int) -> tuple[list[bytes], int]:
     raw = data[pos:end]
     segments = [seg.replace(b"\xff\x00", b"\xff") for seg in _RST_SPLIT.split(raw)]
     return segments, end
-
-
-def _extend(v: int, size: int) -> int:
-    return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
 
 
 class _Component:

@@ -11,6 +11,11 @@ Design for 100 TB:
   ``mapInPandas``** stages: one Python worker per partition-batch, payload
   bytes never pass through the driver, batch size bounded by
   ``spark.sql.execution.arrow.maxRecordsPerBatch``.
+* The per-document decoders and census queries (m09-m40) share one
+  kernel, :func:`tectonic_spark.tables.map_documents`: it selects the
+  documents with ``doc_id % m == r``, spreads the scan and maps each Arrow
+  batch. A query keeps only its oracle, its payload builder and a per-row
+  (or, for the batch decoders, per-batch) function.
 * Six REAL formats decode natively: uncompressed **BMP**, PCM **WAV**,
   **Y4M** video (r4, :mod:`tectonic_spark.operators.codecs`), compressed
   baseline **JPEG** (r5, :mod:`tectonic_spark.operators.jpeg`: huffman
@@ -337,7 +342,7 @@ def sample_frames(with_media: DataFrame, every_nth: int = 30, fake: bool = True)
 
 from tectonic_spark.operators.registry import REGISTRY as _REG  # noqa: E402
 from tectonic_spark.operators.registry import register  # noqa: E402
-from tectonic_spark.tables import spread_small_scan, table  # noqa: E402
+from tectonic_spark.tables import map_documents, spread_small_scan, table  # noqa: E402
 
 
 @register(
@@ -403,42 +408,6 @@ def m02_frame_sampling(spark, sf_dir: str) -> DataFrame:
     return frames.select(
         "doc_id", "frame_idx", F.length("frame").cast("long").alias("frame_bytes")
     )
-
-
-def resize_media(with_media: DataFrame, max_side: int = 128, fake: bool = True) -> DataFrame:
-    """Resize stage: clamp the longer side to ``max_side`` preserving
-    aspect (integer floor). STUBBED decode — the fake path rewrites the
-    TMM1 header dims and truncates the body proportionally, so the
-    resize arithmetic and the mapInPandas plumbing are real and
-    oracle-checkable; a production build decodes + rescales here."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("media", BinaryType(), True),
-        ]
-    )
-
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None or payload[:4] != _MAGIC:
-                    out.append((doc_id, None, None, None))
-                    continue
-                if not fake:
-                    _decode_image_real(payload)
-                w, h, nf = struct.unpack("<III", payload[5:17])
-                scale_num, scale_den = (max_side, max(w, h)) if max(w, h) > max_side else (1, 1)
-                nw, nh = w * scale_num // scale_den, h * scale_num // scale_den
-                body = payload[17:]
-                keep = len(body) * scale_num // scale_den
-                new_payload = payload[:5] + struct.pack("<III", nw, nh, nf) + body[:keep]
-                out.append((doc_id, nw, nh, new_payload))
-            yield pd.DataFrame(out, columns=["doc_id", "width", "height", "media"])
-
-    return with_media.select("doc_id", "media").mapInPandas(rs, schema)
 
 
 def extract_features(with_media: DataFrame, dim: int = 8, fake: bool = True) -> DataFrame:
@@ -988,18 +957,6 @@ def _jpeg16_block_value(doc_id: int, bi: int) -> int:
 def m09_jpeg_resize_reencode(spark, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    from tectonic_spark.operators.jpeg import encode_jpeg
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 3 == 0)
-    )
-    # CPU-heavy per-payload kernel downstream of a tiny scan:
-    # spread across cores when the input arrives in fewer splits
-    # than parallelism (no-op at real scale — tables.py doctrine)
-    docs = spread_small_scan(docs, spark, "doc_id")
-
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -1009,42 +966,33 @@ def m09_jpeg_resize_reencode(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def pipeline(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pipeline(ids: list[int]) -> list[tuple]:
+        from tectonic_spark.operators.jpeg import encode_jpeg
         from tectonic_spark.operators.jpeg_lockstep import decode_jpeg_batch
 
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = _jpeg16_params(doc_id)
-                bw = w // 16
-                vals = np.array(
-                    [
-                        _jpeg16_block_value(doc_id, bi)
-                        for bi in range((h // 16) * bw)
-                    ],
-                    dtype=np.uint8,
-                ).reshape(h // 16, bw)
-                plane = np.kron(vals, np.ones((16, 16), dtype=np.uint8))
-                rgb = np.repeat(plane[:, :, None], 3, axis=2)
-                ids.append(doc_id)
-                payloads.append(encode_jpeg(rgb, subsampling="444"))
-            # decode -> nearest half-resize -> re-encode -> decode, each
-            # hop batched across the whole Arrow batch (r7 lockstep)
-            smalls = [px[::2, ::2, :] for px in decode_jpeg_batch(payloads)]
-            outs = decode_jpeg_batch(
-                [encode_jpeg(s, subsampling="444") for s in smalls]
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "out_w": [o.shape[1] for o in outs],
-                    "out_h": [o.shape[0] for o in outs],
-                    "px_sum": [int(o.astype(np.int64).sum()) for o in outs],
-                }
-            )
+        payloads = []
+        for d in ids:
+            w, h = _jpeg16_params(d)
+            bw = w // 16
+            vals = np.array(
+                [_jpeg16_block_value(d, bi) for bi in range((h // 16) * bw)],
+                dtype=np.uint8,
+            ).reshape(h // 16, bw)
+            plane = np.kron(vals, np.ones((16, 16), dtype=np.uint8))
+            rgb = np.repeat(plane[:, :, None], 3, axis=2)
+            payloads.append(encode_jpeg(rgb, subsampling="444"))
+        # decode -> nearest half-resize -> re-encode -> decode, each
+        # hop batched across the whole Arrow batch (r7 lockstep)
+        smalls = [px[::2, ::2, :] for px in decode_jpeg_batch(payloads)]
+        outs = decode_jpeg_batch(
+            [encode_jpeg(s, subsampling="444") for s in smalls]
+        )
+        return [
+            (d, o.shape[1], o.shape[0], int(o.astype(np.int64).sum()))
+            for d, o in zip(ids, outs)
+        ]
 
-    return docs.mapInPandas(pipeline, schema)
+    return map_documents(spark, sf_dir, 3, 0, schema, pipeline, batch=True)
 
 
 # --- m10: MP3 frame walk (compressed-audio metadata/integrity census) -----
@@ -1087,17 +1035,6 @@ def m09_jpeg_resize_reencode(spark, sf_dir: str) -> DataFrame:
     "payload bytes never leave executors.",
 )
 def m10_mp3_decode(spark, sf_dir: str) -> DataFrame:
-    from tectonic_spark.operators import codecs
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 3 == 2)
-    )
-    # CPU-heavy per-payload kernel downstream of a tiny scan:
-    # spread across cores when the input arrives in fewer splits
-    # than parallelism (no-op at real scale — tables.py doctrine)
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -1110,43 +1047,24 @@ def m10_mp3_decode(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = codecs.encode_mp3_frames(
-                    2 + d % 6,
-                    9 + d % 5,
-                    pad_fn=lambda f, d=d: (d + f) % 2,
-                    fill=d % 199,
-                )
-                info = codecs.parse_mp3(payload)
-                rows.append(
-                    (
-                        d,
-                        info["n_frames"],
-                        info["samplerate"],
-                        info["bitrate_kbps"],
-                        info["total_samples"],
-                        info["duration_ms"],
-                        info["bytes_walked"],
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id",
-                "n_frames",
-                "samplerate",
-                "bitrate_kbps",
-                "total_samples",
-                "duration_ms",
-                "payload_bytes",
-            ],
+    def walk(d: int) -> tuple:
+        from tectonic_spark.operators import codecs
+
+        payload = codecs.encode_mp3_frames(
+            2 + d % 6, 9 + d % 5, pad_fn=lambda f: (d + f) % 2, fill=d % 199
+        )
+        info = codecs.parse_mp3(payload)
+        return (
+            d,
+            info["n_frames"],
+            info["samplerate"],
+            info["bitrate_kbps"],
+            info["total_samples"],
+            info["duration_ms"],
+            info["bytes_walked"],
         )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 3, 2, schema, walk)
 
 
 # --- m12: FLAC decode (REAL compressed-audio PCM decode, lossless) --------
@@ -1207,19 +1125,6 @@ def _flac_pcm(doc_id: int):
     "never leave executors.",
 )
 def m12_flac_decode(spark, sf_dir: str) -> DataFrame:
-    import numpy as np  # noqa: F401 — kernels below use it via closures
-
-    from tectonic_spark.operators.flac import encode_flac
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 4 == 2)
-    )
-    # CPU-heavy per-payload kernel downstream of a tiny scan:
-    # spread across cores when the input arrives in fewer splits
-    # than parallelism (no-op at real scale — tables.py doctrine)
-    docs = spread_small_scan(docs, spark, "doc_id")
     from pyspark.sql.types import BooleanType
 
     schema = StructType(
@@ -1233,41 +1138,39 @@ def m12_flac_decode(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def roundtrip(ids: list[int]) -> list[tuple]:
         from tectonic_spark.operators.flac import (
             decode_flac_batch,
+            encode_flac,
             first_subframe_is_lpc,
         )
 
-        for pdf in batches:
-            # whole-Arrow-batch decode (r7): real-world-blocksize corpora
-            # ride the lockstep lane engine; these 64-sample-block fixtures
-            # route to the scalar path inside the same call, bit-identically
-            ids = [int(d) for d in pdf["doc_id"]]
-            payloads = [
-                encode_flac(
-                    _flac_pcm(d),
-                    sample_rate=8000,
-                    block_size=64,
-                    lpc_order=(0, 2, 8, 12)[(d // 4) % 4],
-                )
-                for d in ids
-            ]
-            decoded = decode_flac_batch(payloads)  # CRC + MD5 verified inside
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_samples": [pcm.shape[0] for _, pcm in decoded],
-                    "channels": [pcm.shape[1] for _, pcm in decoded],
-                    "sample_rate": [rate for rate, _ in decoded],
-                    "pcm_sum": [int(pcm.sum()) for _, pcm in decoded],
-                    "first_subframe_lpc": [
-                        first_subframe_is_lpc(p) for p in payloads
-                    ],
-                }
+        # whole-Arrow-batch decode (r7): real-world-blocksize corpora
+        # ride the lockstep lane engine; these 64-sample-block fixtures
+        # route to the scalar path inside the same call, bit-identically
+        payloads = [
+            encode_flac(
+                _flac_pcm(d),
+                sample_rate=8000,
+                block_size=64,
+                lpc_order=(0, 2, 8, 12)[(d // 4) % 4],
             )
+            for d in ids
+        ]
+        decoded = decode_flac_batch(payloads)  # CRC + MD5 verified inside
+        return [
+            (
+                d,
+                pcm.shape[0],
+                pcm.shape[1],
+                rate,
+                int(pcm.sum()),
+                first_subframe_is_lpc(p),
+            )
+            for d, (rate, pcm), p in zip(ids, decoded, payloads)
+        ]
 
-    return docs.mapInPandas(roundtrip, schema)
+    return map_documents(spark, sf_dir, 4, 2, schema, roundtrip, batch=True)
 
 
 # --- m13: H.264 Annex-B frame census (compressed-video structural decode) --
@@ -1316,17 +1219,6 @@ def m12_flac_decode(spark, sf_dir: str) -> DataFrame:
 def m13_h264_census(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import BooleanType
 
-    from tectonic_spark.operators.h264 import encode_h264_annexb, parse_h264
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 3 == 1)
-    )
-    # CPU-heavy per-payload kernel downstream of a tiny scan:
-    # spread across cores when the input arrives in fewer splits
-    # than parallelism (no-op at real scale — tables.py doctrine)
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -1341,54 +1233,36 @@ def m13_h264_census(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = encode_h264_annexb(
-                    2 + d % 6,
-                    2 + d % 4,
-                    2 + d % 3,
-                    profile_idc=66 if d % 2 == 0 else 77,
-                    level_idc=30 + d % 3,
-                    crop_right=d % 2,
-                    crop_bottom=(d // 2) % 2,
-                    extra_slice_every=2 if d % 4 == 0 else 0,
-                    fill_fn=lambda i, d=d: bytes(
-                        (d * 31 + i * 37 + j) % 256 for j in range(3 + (d + i) % 7)
-                    ),
-                )
-                info = parse_h264(payload)
-                rows.append(
-                    (
-                        d,
-                        info["n_frames"],
-                        info["n_slices"],
-                        info["n_idr"],
-                        info["width"],
-                        info["height"],
-                        info["profile_idc"],
-                        info["level_idc"],
-                        info["bytes_walked"] == len(payload),
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id",
-                "n_frames",
-                "n_slices",
-                "n_idr",
-                "width",
-                "height",
-                "profile_idc",
-                "level_idc",
-                "extent_ok",
-            ],
+    def walk(d: int) -> tuple:
+        from tectonic_spark.operators.h264 import encode_h264_annexb, parse_h264
+
+        payload = encode_h264_annexb(
+            2 + d % 6,
+            2 + d % 4,
+            2 + d % 3,
+            profile_idc=66 if d % 2 == 0 else 77,
+            level_idc=30 + d % 3,
+            crop_right=d % 2,
+            crop_bottom=(d // 2) % 2,
+            extra_slice_every=2 if d % 4 == 0 else 0,
+            fill_fn=lambda i: bytes(
+                (d * 31 + i * 37 + j) % 256 for j in range(3 + (d + i) % 7)
+            ),
+        )
+        info = parse_h264(payload)
+        return (
+            d,
+            info["n_frames"],
+            info["n_slices"],
+            info["n_idr"],
+            info["width"],
+            info["height"],
+            info["profile_idc"],
+            info["level_idc"],
+            info["bytes_walked"] == len(payload),
         )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 3, 1, schema, walk)
 
 
 # --- m14: dense JPEG decode THROUGH the lockstep lane engine ---------------
@@ -1424,17 +1298,6 @@ def m14_jpeg_dense_decode(spark, sf_dir: str) -> DataFrame:
     import numpy as np
     from pyspark.sql.types import BooleanType
 
-    from tectonic_spark.operators.jpeg import encode_jpeg
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 29 == 3)
-    )
-    # CPU-heavy per-payload kernel downstream of a tiny scan:
-    # spread across cores when the input arrives in fewer splits
-    # than parallelism (no-op at real scale — tables.py doctrine)
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -1446,12 +1309,14 @@ def m14_jpeg_dense_decode(spark, sf_dir: str) -> DataFrame:
     )
 
     def dense_payload(d: int) -> bytes:
+        from tectonic_spark.operators.jpeg import encode_jpeg
+
         bi = np.arange(4096, dtype=np.int64)
         vals = (2 * ((d * 7 + bi * 13) % 128)).astype(np.uint8).reshape(64, 64)
         plane = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
         return encode_jpeg(plane, restart_interval=16)
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(all_ids: list[int]) -> list[tuple]:
         from tectonic_spark.operators.jpeg_lockstep import (
             decode_jpeg_batch,
             payload_rides_engine,
@@ -1464,29 +1329,24 @@ def m14_jpeg_dense_decode(spark, sf_dir: str) -> DataFrame:
         # above the lockstep engine gate, and engine routing is
         # per-payload deterministic (payload_rides_engine)
         CHUNK = 32
-        for pdf in batches:
-            all_ids = [int(d) for d in pdf["doc_id"]]
-            rows: list[tuple] = []
-            for off in range(0, len(all_ids), CHUNK):
-                ids = all_ids[off : off + CHUNK]
-                payloads = [dense_payload(d) for d in ids]
-                pxs = decode_jpeg_batch(payloads)
-                rows.extend(
-                    (
-                        d,
-                        px.shape[1],
-                        px.shape[0],
-                        int(np.sum(px, dtype=np.int64)),
-                        payload_rides_engine(p),
-                    )
-                    for d, px, p in zip(ids, pxs, payloads)
+        rows: list[tuple] = []
+        for off in range(0, len(all_ids), CHUNK):
+            ids = all_ids[off : off + CHUNK]
+            payloads = [dense_payload(d) for d in ids]
+            pxs = decode_jpeg_batch(payloads)
+            rows.extend(
+                (
+                    d,
+                    px.shape[1],
+                    px.shape[0],
+                    int(np.sum(px, dtype=np.int64)),
+                    payload_rides_engine(p),
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "px_sum", "rode_engine"],
+                for d, px, p in zip(ids, pxs, payloads)
             )
+        return rows
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 29, 3, schema, walk, batch=True)
 
 
 # --- m15: dense PROGRESSIVE decode THROUGH the progressive lane engine -----
@@ -1526,17 +1386,6 @@ def m15_jpeg_progressive_dense(spark, sf_dir: str) -> DataFrame:
     import numpy as np
     from pyspark.sql.types import BooleanType
 
-    from tectonic_spark.operators.jpeg import encode_jpeg_progressive
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 31 == 7)
-    )
-    # CPU-heavy per-payload kernel downstream of a tiny scan:
-    # spread across cores when the input arrives in fewer splits
-    # than parallelism (no-op at real scale — tables.py doctrine)
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -1548,6 +1397,8 @@ def m15_jpeg_progressive_dense(spark, sf_dir: str) -> DataFrame:
     )
 
     def dense_payload(d: int) -> bytes:
+        from tectonic_spark.operators.jpeg import encode_jpeg_progressive
+
         bi = np.arange(4096, dtype=np.int64)
         vals = (2 * ((d * 11 + bi * 17) % 128)).astype(np.uint8).reshape(64, 64)
         plane = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
@@ -1555,7 +1406,7 @@ def m15_jpeg_progressive_dense(spark, sf_dir: str) -> DataFrame:
             plane, bands=((1, 63),), successive=1, restart_interval=16
         )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(all_ids: list[int]) -> list[tuple]:
         from tectonic_spark.operators.jpeg_lockstep import decode_jpeg_batch
         from tectonic_spark.operators.jpeg_prog_lockstep import (
             payload_rides_prog_engine,
@@ -1563,29 +1414,24 @@ def m15_jpeg_progressive_dense(spark, sf_dir: str) -> DataFrame:
 
         # bounded sub-batches (the r10 m17 pattern — see m14)
         CHUNK = 32
-        for pdf in batches:
-            all_ids = [int(d) for d in pdf["doc_id"]]
-            rows: list[tuple] = []
-            for off in range(0, len(all_ids), CHUNK):
-                ids = all_ids[off : off + CHUNK]
-                payloads = [dense_payload(d) for d in ids]
-                pxs = decode_jpeg_batch(payloads)
-                rows.extend(
-                    (
-                        d,
-                        px.shape[1],
-                        px.shape[0],
-                        int(np.sum(px, dtype=np.int64)),
-                        payload_rides_prog_engine(p),
-                    )
-                    for d, px, p in zip(ids, pxs, payloads)
+        rows: list[tuple] = []
+        for off in range(0, len(all_ids), CHUNK):
+            ids = all_ids[off : off + CHUNK]
+            payloads = [dense_payload(d) for d in ids]
+            pxs = decode_jpeg_batch(payloads)
+            rows.extend(
+                (
+                    d,
+                    px.shape[1],
+                    px.shape[0],
+                    int(np.sum(px, dtype=np.int64)),
+                    payload_rides_prog_engine(p),
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "px_sum", "rode_engine"],
+                for d, px, p in zip(ids, pxs, payloads)
             )
+        return rows
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 31, 7, schema, walk, batch=True)
 
 
 # --- m17: PNG decode through the wavefront unfilter engine -----------------
@@ -1631,15 +1477,6 @@ def m17_png_decode(spark, sf_dir: str) -> DataFrame:
     import numpy as np
     from pyspark.sql.types import BooleanType
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 41 == 9)
-    )
-    # CPU-heavy per-payload kernel downstream of a tiny scan:
-    # spread across cores when the input arrives in fewer splits
-    # than parallelism (no-op at real scale — tables.py doctrine)
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -1660,7 +1497,7 @@ def m17_png_decode(spark, sf_dir: str) -> DataFrame:
         plane = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
         return encode_png(plane, filters=None)  # cycle 0..4 per row
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(all_ids: list[int]) -> list[tuple]:
         from tectonic_spark.operators.png import (
             decode_png_batch,
             payload_rides_png_pool,
@@ -1673,40 +1510,27 @@ def m17_png_decode(spark, sf_dir: str) -> DataFrame:
         # ensure_flat_malloc() buys (the r10 m17 sf10 fix — buffers of
         # one sub-batch are reused verbatim by the next)
         CHUNK = 8
-        for pdf in batches:
-            all_ids = [int(d) for d in pdf["doc_id"]]
-            rows: list[tuple] = []
-            for off in range(0, len(all_ids), CHUNK):
-                ids = all_ids[off : off + CHUNK]
-                payloads = [png_payload(d) for d in ids]
-                stats: list = []
-                pxs = decode_png_batch(payloads, stats_out=stats)
-                rows.extend(
-                    (
-                        d,
-                        px.shape[1],
-                        px.shape[0],
-                        int(np.sum(px, dtype=np.int64)),
-                        st["filter_rows"][4],
-                        st["wavefront"],
-                        payload_rides_png_pool(p),
-                    )
-                    for d, px, st, p in zip(ids, pxs, stats, payloads)
+        rows: list[tuple] = []
+        for off in range(0, len(all_ids), CHUNK):
+            ids = all_ids[off : off + CHUNK]
+            payloads = [png_payload(d) for d in ids]
+            stats: list = []
+            pxs = decode_png_batch(payloads, stats_out=stats)
+            rows.extend(
+                (
+                    d,
+                    px.shape[1],
+                    px.shape[0],
+                    int(np.sum(px, dtype=np.int64)),
+                    st["filter_rows"][4],
+                    st["wavefront"],
+                    payload_rides_png_pool(p),
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "px_sum",
-                    "paeth_rows",
-                    "wavefront",
-                    "rode_pool",
-                ],
+                for d, px, st, p in zip(ids, pxs, stats, payloads)
             )
+        return rows
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 41, 9, schema, walk, batch=True)
 
 
 def mixed_media_kernel(docs: DataFrame) -> DataFrame:
@@ -1849,15 +1673,6 @@ def m18_gif_decode(spark, sf_dir: str) -> DataFrame:
     import numpy as np
     from pyspark.sql.types import BooleanType
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 43 == 12)
-    )
-    # CPU-heavy per-payload kernel downstream of a tiny scan:
-    # spread across cores when the input arrives in fewer splits
-    # than parallelism (no-op at real scale — tables.py doctrine)
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -1894,47 +1709,25 @@ def m18_gif_decode(spark, sf_dir: str) -> DataFrame:
             interlace=[False, True, False],  # frame 1 interlaced
         )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int) -> tuple:
         from tectonic_spark.operators.gif import decode_gif, parse_gif
 
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = gif_payload(d)
-                got = decode_gif(payload)
-                meta = parse_gif(payload)
-                rgb = sum(
-                    int(fr["rgb"].astype(np.int64).sum())
-                    for fr in got["frames"]
-                )
-                rows.append(
-                    (
-                        d,
-                        got["width"],
-                        got["height"],
-                        len(got["frames"]),
-                        rgb,
-                        meta["n_interlaced"],
-                        got["loop"],
-                        meta["bytes_walked"] == len(payload),
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id",
-                "width",
-                "height",
-                "n_frames",
-                "rgb_sum",
-                "interlaced_frames",
-                "loop_count",
-                "extent_ok",
-            ],
+        payload = gif_payload(d)
+        got = decode_gif(payload)
+        meta = parse_gif(payload)
+        rgb = sum(int(fr["rgb"].astype(np.int64).sum()) for fr in got["frames"])
+        return (
+            d,
+            got["width"],
+            got["height"],
+            len(got["frames"]),
+            rgb,
+            meta["n_interlaced"],
+            got["loop"],
+            meta["bytes_walked"] == len(payload),
         )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 43, 12, schema, walk)
 
 
 # --- m19: baseline TIFF decode (LZW/PackBits/predictor, strips) ------------
@@ -1971,15 +1764,6 @@ def m18_gif_decode(spark, sf_dir: str) -> DataFrame:
 def m19_tiff_decode(spark, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 47 == 17)
-    )
-    # CPU-heavy per-payload kernel downstream of a tiny scan:
-    # spread across cores when the input arrives in fewer splits
-    # than parallelism (no-op at real scale — tables.py doctrine)
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -2005,41 +1789,23 @@ def m19_tiff_decode(spark, sf_dir: str) -> DataFrame:
             rows_per_strip=16,
         )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int) -> tuple:
         from tectonic_spark.operators.tiff import decode_tiff, parse_tiff
 
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = tiff_payload(d)
-                px = decode_tiff(payload)
-                meta = parse_tiff(payload)
-                rows.append(
-                    (
-                        d,
-                        px.shape[1],
-                        px.shape[0],
-                        int(px.astype(np.int64).sum()),
-                        meta["compression"],
-                        meta["n_strips"],
-                        meta["n_pages"],
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id",
-                "width",
-                "height",
-                "px_sum",
-                "compression",
-                "n_strips",
-                "n_pages",
-            ],
+        payload = tiff_payload(d)
+        px = decode_tiff(payload)
+        meta = parse_tiff(payload)
+        return (
+            d,
+            px.shape[1],
+            px.shape[0],
+            int(px.astype(np.int64).sum()),
+            meta["compression"],
+            meta["n_strips"],
+            meta["n_pages"],
         )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 47, 17, schema, walk)
 
 
 @register(
@@ -2089,15 +1855,6 @@ def m19_tiff_decode(spark, sf_dir: str) -> DataFrame:
 def m20_webp_decode(spark, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 43 == 21)
-    )
-    # CPU-heavy per-payload kernel downstream of a tiny scan:
-    # spread across cores when the input arrives in fewer splits
-    # than parallelism (no-op at real scale — tables.py doctrine)
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -2138,38 +1895,21 @@ def m20_webp_decode(spark, sf_dir: str) -> DataFrame:
             img, subtract_green=True, color=(17, -9, 5), color_bits=4
         )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int) -> tuple:
         from tectonic_spark.operators.webp import decode_webp
 
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                stats: dict = {}
-                px = decode_webp(webp_payload(d), stats=stats)
-                rows.append(
-                    (
-                        d,
-                        px.shape[1],
-                        px.shape[0],
-                        int(px.astype(np.int64).sum()),
-                        (d // 2) % 4,
-                        len(stats["transforms"]),
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id",
-                "width",
-                "height",
-                "px_sum",
-                "variant",
-                "n_transforms",
-            ],
+        stats: dict = {}
+        px = decode_webp(webp_payload(d), stats=stats)
+        return (
+            d,
+            px.shape[1],
+            px.shape[0],
+            int(px.astype(np.int64).sum()),
+            (d // 2) % 4,
+            len(stats["transforms"]),
         )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 43, 21, schema, walk)
 
 
 @register(
@@ -2212,12 +1952,6 @@ def m20_webp_decode(spark, sf_dir: str) -> DataFrame:
 def m21_exif_extract(spark, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 37 == 5)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -2282,58 +2016,36 @@ def m21_exif_extract(spark, sf_dir: str) -> DataFrame:
         img = ((d * 13 + i * 19) % 256).astype(np.uint8).reshape(16, 16)
         return insert_exif_jpeg(encode_jpeg(img), ex)
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int) -> tuple:
         from tectonic_spark.operators.exif import exif_from_jpeg, parse_exif
         from tectonic_spark.operators.webp import exif_payload
 
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = payload_of(d)
-                # carrier from the payload MAGIC, not fixture arithmetic
-                if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-                    carrier = "webp"
-                    raw = exif_payload(payload)
-                elif payload[:2] == b"\xff\xd8":
-                    carrier = "jpeg"
-                    raw = exif_from_jpeg(payload)
-                else:
-                    raise ValueError("unroutable m21 payload")
-                meta = parse_exif(raw)
-                rows.append(
-                    (
-                        d,
-                        carrier,
-                        meta["orientation"],
-                        meta["datetime"],
-                        meta["make"],
-                        meta["model"],
-                        meta["iso"],
-                        meta["gps_lat_ref"],
-                        meta["gps_lat_mas"],
-                        meta["gps_lon_ref"],
-                        meta["gps_lon_mas"],
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id",
-                "carrier",
-                "orientation",
-                "dt",
-                "make",
-                "model",
-                "iso",
-                "lat_ref",
-                "lat_mas",
-                "lon_ref",
-                "lon_mas",
-            ],
+        payload = payload_of(d)
+        # carrier from the payload MAGIC, not fixture arithmetic
+        if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
+            carrier = "webp"
+            raw = exif_payload(payload)
+        elif payload[:2] == b"\xff\xd8":
+            carrier = "jpeg"
+            raw = exif_from_jpeg(payload)
+        else:
+            raise ValueError("unroutable m21 payload")
+        meta = parse_exif(raw)
+        return (
+            d,
+            carrier,
+            meta["orientation"],
+            meta["datetime"],
+            meta["make"],
+            meta["model"],
+            meta["iso"],
+            meta["gps_lat_ref"],
+            meta["gps_lat_mas"],
+            meta["gps_lon_ref"],
+            meta["gps_lon_mas"],
         )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 37, 5, schema, walk)
 
 
 @register(
@@ -2373,12 +2085,6 @@ def m21_exif_extract(spark, sf_dir: str) -> DataFrame:
 def m22_ogg_census(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import BooleanType
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 53 == 11)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -2412,48 +2118,27 @@ def m22_ogg_census(spark, sf_dir: str) -> DataFrame:
             max_segments_per_page=2,
         )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int) -> tuple:
         from tectonic_spark.operators.ogg import parse_ogg
 
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                info = parse_ogg(ogg_payload(d))
-                if info["n_streams"] != 1:
-                    raise ValueError("m22 fixture must be single-stream")
-                s = info["streams"][0]
-                rows.append(
-                    (
-                        d,
-                        info["n_pages"],
-                        s["n_packets"],
-                        s["codec"],
-                        s["channels"],
-                        s["pre_skip"],
-                        s["duration_samples"],
-                        s["toc_duration_samples"],
-                        s["spanned_packets"],
-                        s["eos"],
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id",
-                "n_pages",
-                "n_packets",
-                "codec",
-                "channels",
-                "pre_skip",
-                "duration_samples",
-                "toc_duration_samples",
-                "spanned_packets",
-                "eos",
-            ],
+        info = parse_ogg(ogg_payload(d))
+        if info["n_streams"] != 1:
+            raise ValueError("m22 fixture must be single-stream")
+        s = info["streams"][0]
+        return (
+            d,
+            info["n_pages"],
+            s["n_packets"],
+            s["codec"],
+            s["channels"],
+            s["pre_skip"],
+            s["duration_samples"],
+            s["toc_duration_samples"],
+            s["spanned_packets"],
+            s["eos"],
         )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 53, 11, schema, walk)
 
 
 # --- m11: progressive JPEG decode (SOF2 spectral selection) ---------------
@@ -2478,17 +2163,6 @@ def m22_ogg_census(spark, sf_dir: str) -> DataFrame:
 def m11_jpeg_progressive(spark, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    from tectonic_spark.operators.jpeg import decode_jpeg, encode_jpeg_progressive
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 3 == 0)
-    )
-    # CPU-heavy per-payload kernel downstream of a tiny scan:
-    # spread across cores when the input arrives in fewer splits
-    # than parallelism (no-op at real scale — tables.py doctrine)
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -2498,30 +2172,28 @@ def m11_jpeg_progressive(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def attach_and_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, mode, _ri = _jpeg_fixture_params(d)
-                bw = w // 8
-                vals = np.array(
-                    [_jpeg_block_value(d, bi) for bi in range((h // 8) * bw)],
-                    dtype=np.uint8,
-                ).reshape(h // 8, bw)
-                plane = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-                if mode == "gray":
-                    payload = encode_jpeg_progressive(plane)
-                else:
-                    rgb = np.repeat(plane[:, :, None], 3, axis=2)
-                    payload = encode_jpeg_progressive(rgb, subsampling=mode)
-                px = decode_jpeg(payload)
-                rows.append(
-                    (d, px.shape[1], px.shape[0], int(px.astype(np.int64).sum()))
-                )
-        yield pd.DataFrame(rows, columns=["doc_id", "width", "height", "px_sum"])
+    def attach_and_decode(d: int) -> tuple:
+        from tectonic_spark.operators.jpeg import (
+            decode_jpeg,
+            encode_jpeg_progressive,
+        )
 
-    return docs.mapInPandas(attach_and_decode, schema)
+        w, h, mode, _ri = _jpeg_fixture_params(d)
+        bw = w // 8
+        vals = np.array(
+            [_jpeg_block_value(d, bi) for bi in range((h // 8) * bw)],
+            dtype=np.uint8,
+        ).reshape(h // 8, bw)
+        plane = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
+        if mode == "gray":
+            payload = encode_jpeg_progressive(plane)
+        else:
+            rgb = np.repeat(plane[:, :, None], 3, axis=2)
+            payload = encode_jpeg_progressive(rgb, subsampling=mode)
+        px = decode_jpeg(payload)
+        return (d, px.shape[1], px.shape[0], int(px.astype(np.int64).sum()))
+
+    return map_documents(spark, sf_dir, 3, 0, schema, attach_and_decode)
 
 
 # --- m16: MP4/AVCC container census (the dominant real-video container) ----
@@ -2572,17 +2244,6 @@ def m11_jpeg_progressive(spark, sf_dir: str) -> DataFrame:
 def m16_mp4_census(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import BooleanType
 
-    from tectonic_spark.operators.h264 import encode_mp4_avcc, parse_mp4
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 37 == 4)
-    )
-    # CPU-heavy per-payload kernel downstream of a tiny scan:
-    # spread across cores when the input arrives in fewer splits
-    # than parallelism (no-op at real scale — tables.py doctrine)
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -2598,56 +2259,37 @@ def m16_mp4_census(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = encode_mp4_avcc(
-                    2 + d % 6,
-                    2 + d % 4,
-                    2 + d % 3,
-                    profile_idc=66 if d % 2 == 0 else 77,
-                    level_idc=30 + d % 3,
-                    crop_right=d % 2,
-                    crop_bottom=(d // 2) % 2,
-                    extra_slice_every=2 if d % 4 == 0 else 0,
-                    fill_fn=lambda i, d=d: bytes(
-                        (d * 31 + i * 37 + j) % 256 for j in range(3 + (d + i) % 7)
-                    ),
-                )
-                info = parse_mp4(payload)
-                rows.append(
-                    (
-                        d,
-                        info["n_frames"],
-                        info["n_slices"],
-                        info["n_idr"],
-                        info["width"],
-                        info["height"],
-                        info["profile_idc"],
-                        info["level_idc"],
-                        info["length_size"],
-                        info["bytes_walked"] == len(payload),
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id",
-                "n_frames",
-                "n_slices",
-                "n_idr",
-                "width",
-                "height",
-                "profile_idc",
-                "level_idc",
-                "length_size",
-                "extent_ok",
-            ],
+    def walk(d: int) -> tuple:
+        from tectonic_spark.operators.h264 import encode_mp4_avcc, parse_mp4
+
+        payload = encode_mp4_avcc(
+            2 + d % 6,
+            2 + d % 4,
+            2 + d % 3,
+            profile_idc=66 if d % 2 == 0 else 77,
+            level_idc=30 + d % 3,
+            crop_right=d % 2,
+            crop_bottom=(d // 2) % 2,
+            extra_slice_every=2 if d % 4 == 0 else 0,
+            fill_fn=lambda i: bytes(
+                (d * 31 + i * 37 + j) % 256 for j in range(3 + (d + i) % 7)
+            ),
+        )
+        info = parse_mp4(payload)
+        return (
+            d,
+            info["n_frames"],
+            info["n_slices"],
+            info["n_idr"],
+            info["width"],
+            info["height"],
+            info["profile_idc"],
+            info["level_idc"],
+            info["length_size"],
+            info["bytes_walked"] == len(payload),
         )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 37, 4, schema, walk)
 
 
 @register(
@@ -2720,12 +2362,6 @@ def m25_webm_census(spark, sf_dir: str) -> DataFrame:
 
     from tectonic_spark.operators.ebml import encode_mkv, parse_mkv
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 41 == 7)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -2750,8 +2386,6 @@ def m25_webm_census(spark, sf_dir: str) -> DataFrame:
     )
 
     def build(d: int, doc_type: str, unknown: str | None = None):
-        from tectonic_spark.operators.ebml import encode_mkv as _enc
-
         n_video = 2 + d % 6
         n_audio = 1 + d % 5
         n_clusters = 1 + d % 2
@@ -2818,7 +2452,7 @@ def m25_webm_census(spark, sf_dir: str) -> DataFrame:
                 clusters[-1]["blocks"].append(
                     {"track": 2, "frame": fr, "offset": 20 * k}
                 )
-        return _enc(
+        return encode_mkv(
             tracks,
             clusters,
             doc_type=doc_type,
@@ -2826,80 +2460,51 @@ def m25_webm_census(spark, sf_dir: str) -> DataFrame:
             unknown_size=unknown,
         )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = build(d, "webm")
-                info = parse_mkv(payload)
-                # both-container agreement pin: the identical streams
-                # wrapped as matroska must census identically
-                agree_keys = (
-                    "tracks", "n_clusters", "n_blocks", "n_block_groups",
-                    "n_keyframes", "n_frames", "n_laced_blocks",
-                    "media_bytes", "duration_ms", "timestamp_scale",
-                )
-                info2 = parse_mkv(build(d, "matroska"))
-                agree = info2["doc_type"] == "matroska" and all(
-                    info[k] == info2[k] for k in agree_keys
-                )
-                # unknown-size pin (r12): the live-stream wrapping of
-                # the SAME stream censuses identically, full coverage
-                form = "segment" if d % 2 == 0 else "segment+clusters"
-                ublob = build(d, "webm", unknown=form)
-                info3 = parse_mkv(ublob)
-                unknown_ok = info3["bytes_walked"] == len(ublob) and all(
-                    info[k] == info3[k] for k in agree_keys
-                )
-                v, a = info["tracks"]
-                rows.append(
-                    (
-                        d,
-                        info["doc_type"],
-                        v["codec_id"],
-                        a["codec_id"],
-                        v["width"],
-                        v["height"],
-                        a["channels"],
-                        info["n_clusters"],
-                        info["n_blocks"],
-                        info["n_block_groups"],
-                        info["n_keyframes"],
-                        info["n_frames"],
-                        info["n_laced_blocks"],
-                        info["media_bytes"],
-                        info["duration_ms"],
-                        agree,
-                        unknown_ok,
-                        info["bytes_walked"] == len(payload),
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id",
-                "doc_type",
-                "video_codec",
-                "audio_codec",
-                "width",
-                "height",
-                "channels",
-                "n_clusters",
-                "n_blocks",
-                "n_block_groups",
-                "n_keyframes",
-                "n_frames",
-                "n_laced",
-                "media_bytes",
-                "duration_ms",
-                "mkv_agree",
-                "unknown_ok",
-                "extent_ok",
-            ],
+    def walk(d: int) -> tuple:
+        payload = build(d, "webm")
+        info = parse_mkv(payload)
+        # both-container agreement pin: the identical streams
+        # wrapped as matroska must census identically
+        agree_keys = (
+            "tracks", "n_clusters", "n_blocks", "n_block_groups",
+            "n_keyframes", "n_frames", "n_laced_blocks",
+            "media_bytes", "duration_ms", "timestamp_scale",
+        )
+        info2 = parse_mkv(build(d, "matroska"))
+        agree = info2["doc_type"] == "matroska" and all(
+            info[k] == info2[k] for k in agree_keys
+        )
+        # unknown-size pin (r12): the live-stream wrapping of
+        # the SAME stream censuses identically, full coverage
+        form = "segment" if d % 2 == 0 else "segment+clusters"
+        ublob = build(d, "webm", unknown=form)
+        info3 = parse_mkv(ublob)
+        unknown_ok = info3["bytes_walked"] == len(ublob) and all(
+            info[k] == info3[k] for k in agree_keys
+        )
+        v, a = info["tracks"]
+        return (
+            d,
+            info["doc_type"],
+            v["codec_id"],
+            a["codec_id"],
+            v["width"],
+            v["height"],
+            a["channels"],
+            info["n_clusters"],
+            info["n_blocks"],
+            info["n_block_groups"],
+            info["n_keyframes"],
+            info["n_frames"],
+            info["n_laced_blocks"],
+            info["media_bytes"],
+            info["duration_ms"],
+            agree,
+            unknown_ok,
+            info["bytes_walked"] == len(payload),
         )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 41, 7, schema, walk)
 
 
 @register(
@@ -2953,12 +2558,6 @@ def m27_avif_census(spark, sf_dir: str) -> DataFrame:
 
     from tectonic_spark.operators.heif import encode_avif, parse_avif
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 53 == 17)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -2982,77 +2581,51 @@ def m27_avif_census(spark, sf_dir: str) -> DataFrame:
         ("v2-file", dict(iloc_version=2), 0),
     ]
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                prim = bytes(
-                    (d * 31 + j) % 256 for j in range(100 + (d * 13) % 300)
-                )
-                alph = (
-                    bytes((d * 17 + j) % 256 for j in range(50 + (d * 7) % 100))
-                    if d % 3 == 0
-                    else None
-                )
-                form, kwargs, want_method = lanes[d % 4]
-                span = None
-                if d % 7 == 2 and d % 4 in (1, 3):
-                    span = (10 + d % 20, 30 + d % 40)
-                payload = encode_avif(
-                    width=64 + 16 * (d % 5),
-                    height=48 + 16 * (d % 4),
-                    primary_payload=prim,
-                    alpha_payload=alph,
-                    bit_depth=8 + 2 * (d % 2),
-                    derived_span=span,
-                    **kwargs,
-                )
-                info = parse_avif(payload)
-                lane_ok = info["iloc_version"] == kwargs.get(
-                    "iloc_version", 0
-                ) and all(
-                    m == (2 if iid == 3 else want_method)
-                    for iid, m in info["methods"].items()
-                )
-                n_m2 = sum(1 for m in info["methods"].values() if m == 2)
-                if span is not None:
-                    lane_ok = lane_ok and info["extents"][3] == [span]
-                rows.append(
-                    (
-                        d,
-                        info["brand"],
-                        form,
-                        info["width"],
-                        info["height"],
-                        info["n_items"],
-                        info["has_alpha"],
-                        info["bit_depth"],
-                        info["total_item_bytes"],
-                        n_m2,
-                        info["extents_ok"]
-                        and lane_ok
-                        and info["bytes_walked"] == len(payload),
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id",
-                "brand",
-                "iloc_form",
-                "width",
-                "height",
-                "n_items",
-                "has_alpha",
-                "bit_depth",
-                "total_item_bytes",
-                "n_method2",
-                "extents_ok",
-            ],
+    def walk(d: int) -> tuple:
+        prim = bytes((d * 31 + j) % 256 for j in range(100 + (d * 13) % 300))
+        alph = (
+            bytes((d * 17 + j) % 256 for j in range(50 + (d * 7) % 100))
+            if d % 3 == 0
+            else None
+        )
+        form, kwargs, want_method = lanes[d % 4]
+        span = None
+        if d % 7 == 2 and d % 4 in (1, 3):
+            span = (10 + d % 20, 30 + d % 40)
+        payload = encode_avif(
+            width=64 + 16 * (d % 5),
+            height=48 + 16 * (d % 4),
+            primary_payload=prim,
+            alpha_payload=alph,
+            bit_depth=8 + 2 * (d % 2),
+            derived_span=span,
+            **kwargs,
+        )
+        info = parse_avif(payload)
+        lane_ok = info["iloc_version"] == kwargs.get("iloc_version", 0) and all(
+            m == (2 if iid == 3 else want_method)
+            for iid, m in info["methods"].items()
+        )
+        n_m2 = sum(1 for m in info["methods"].values() if m == 2)
+        if span is not None:
+            lane_ok = lane_ok and info["extents"][3] == [span]
+        return (
+            d,
+            info["brand"],
+            form,
+            info["width"],
+            info["height"],
+            info["n_items"],
+            info["has_alpha"],
+            info["bit_depth"],
+            info["total_item_bytes"],
+            n_m2,
+            info["extents_ok"]
+            and lane_ok
+            and info["bytes_walked"] == len(payload),
         )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 53, 17, schema, walk)
 
 
 @register(
@@ -3097,12 +2670,6 @@ def m26_opus_dual_container(spark, sf_dir: str) -> DataFrame:
         parse_ogg,
     )
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 43 == 11)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -3125,89 +2692,67 @@ def m26_opus_dual_container(spark, sf_dir: str) -> DataFrame:
             out.append(bytes([toc]) + bytes((d * 7 + j) % 256 for j in range(size - 1)))
         return out
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                packets = packets_for(d)
-                channels = 1 + d % 2
-                pre_skip = 312 + d % 100
-                ogg_blob = encode_ogg_opus(
-                    packets, channels=channels, pre_skip=pre_skip
-                )
-                o = parse_ogg(ogg_blob)["streams"][0]
-                # clusters hold CONTIGUOUS time ranges (how real muxers
-                # cut them) — packets stay in stream order across them
-                n_clusters = 1 + d % 2
-                half = (len(packets) + n_clusters - 1) // n_clusters
-                clusters = []
-                for ci in range(n_clusters):
-                    chunk = packets[ci * half : (ci + 1) * half]
-                    clusters.append(
-                        {
-                            "timestamp": ci * half * 20,
-                            "blocks": [
-                                {"track": 1, "frame": p, "offset": 20 * k,
-                                 "keyframe": True}
-                                for k, p in enumerate(chunk)
-                            ],
-                        }
-                    )
-                mkv_blob = encode_mkv(
-                    [
-                        {
-                            "number": 1,
-                            "type": "audio",
-                            "codec_id": "A_OPUS",
-                            "sampling": 48000.0,
-                            "channels": channels,
-                        }
+    def walk(d: int) -> tuple:
+        packets = packets_for(d)
+        channels = 1 + d % 2
+        pre_skip = 312 + d % 100
+        ogg_blob = encode_ogg_opus(packets, channels=channels, pre_skip=pre_skip)
+        o = parse_ogg(ogg_blob)["streams"][0]
+        # clusters hold CONTIGUOUS time ranges (how real muxers
+        # cut them) — packets stay in stream order across them
+        n_clusters = 1 + d % 2
+        half = (len(packets) + n_clusters - 1) // n_clusters
+        clusters = []
+        for ci in range(n_clusters):
+            chunk = packets[ci * half : (ci + 1) * half]
+            clusters.append(
+                {
+                    "timestamp": ci * half * 20,
+                    "blocks": [
+                        {"track": 1, "frame": p, "offset": 20 * k,
+                         "keyframe": True}
+                        for k, p in enumerate(chunk)
                     ],
-                    clusters,
-                )
-                m = parse_mkv(mkv_blob, keep_frames=True)
-                frames = [fr for tr, fr in m["frames"] if tr == 1]
-                toc_mkv = sum(opus_packet_samples(fr) for fr in frames)
-                # the Ogg stream carries OpusHead + OpusTags as its two
-                # header packets (RFC 7845); Matroska moves them into
-                # CodecPrivate, so the audio packet count is n - 2
-                n_audio_ogg = o["n_packets"] - 2
-                agree = (
-                    n_audio_ogg == m["n_frames"]
-                    and o["toc_duration_samples"] == toc_mkv
-                    and m["media_bytes"] == sum(len(p) for p in packets)
-                    and b"".join(frames) == b"".join(packets)
-                )
-                rows.append(
-                    (
-                        d,
-                        n_audio_ogg,
-                        m["n_frames"],
-                        o["toc_duration_samples"],
-                        toc_mkv,
-                        m["media_bytes"],
-                        o["channels"],
-                        o["pre_skip"],
-                        agree,
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id",
-                "n_packets",
-                "n_frames",
-                "toc_ogg",
-                "toc_mkv",
-                "media_bytes",
-                "channels",
-                "pre_skip",
-                "containers_agree",
+                }
+            )
+        mkv_blob = encode_mkv(
+            [
+                {
+                    "number": 1,
+                    "type": "audio",
+                    "codec_id": "A_OPUS",
+                    "sampling": 48000.0,
+                    "channels": channels,
+                }
             ],
+            clusters,
+        )
+        m = parse_mkv(mkv_blob, keep_frames=True)
+        frames = [fr for tr, fr in m["frames"] if tr == 1]
+        toc_mkv = sum(opus_packet_samples(fr) for fr in frames)
+        # the Ogg stream carries OpusHead + OpusTags as its two
+        # header packets (RFC 7845); Matroska moves them into
+        # CodecPrivate, so the audio packet count is n - 2
+        n_audio_ogg = o["n_packets"] - 2
+        agree = (
+            n_audio_ogg == m["n_frames"]
+            and o["toc_duration_samples"] == toc_mkv
+            and m["media_bytes"] == sum(len(p) for p in packets)
+            and b"".join(frames) == b"".join(packets)
+        )
+        return (
+            d,
+            n_audio_ogg,
+            m["n_frames"],
+            o["toc_duration_samples"],
+            toc_mkv,
+            m["media_bytes"],
+            o["channels"],
+            o["pre_skip"],
+            agree,
         )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 43, 11, schema, walk)
 
 
 @register(
@@ -3248,12 +2793,6 @@ def m26_opus_dual_container(spark, sf_dir: str) -> DataFrame:
 def m23_id3_extract(spark, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 47 == 13)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -3308,61 +2847,38 @@ def m23_id3_extract(spark, sf_dir: str) -> DataFrame:
         )
         return tag + audio + v1
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int) -> tuple:
         from tectonic_spark.operators.codecs import parse_mp3
         from tectonic_spark.operators.id3 import parse_id3v1, parse_id3v2
         from tectonic_spark.operators.png import decode_png
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = payload_of(d)
-                tag = parse_id3v2(payload)
-                v1 = parse_id3v1(payload)
-                if v1 is None:
-                    raise ValueError(f"doc {d}: missing ID3v1 trailer")
-                audio = parse_mp3(payload)  # skips both tags itself
-                (pic,) = tag["pictures"]
-                if pic["mime"] != "image/png":
-                    raise ValueError(f"doc {d}: unexpected APIC mime")
-                art = decode_png(pic["image"])
-                year_txt = tag["text"].get("TDRC") or tag["text"]["TYER"]
-                rows.append(
-                    (
-                        d,
-                        tag["text"]["TIT2"],
-                        tag["text"]["TPE1"],
-                        tag["text"]["TALB"],
-                        int(tag["text"]["TRCK"].split("/")[0]),
-                        int(year_txt[:4]),
-                        tag["version"],
-                        audio["n_frames"],
-                        art.shape[1],
-                        int(np.sum(art, dtype=np.int64)),
-                        v1["genre"],
-                        v1["track"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "title",
-                    "artist",
-                    "album",
-                    "track",
-                    "yr",
-                    "tag_version",
-                    "n_frames",
-                    "apic_w",
-                    "apic_px_sum",
-                    "genre",
-                    "v1_track",
-                ],
-            )
+        payload = payload_of(d)
+        tag = parse_id3v2(payload)
+        v1 = parse_id3v1(payload)
+        if v1 is None:
+            raise ValueError(f"doc {d}: missing ID3v1 trailer")
+        audio = parse_mp3(payload)  # skips both tags itself
+        (pic,) = tag["pictures"]
+        if pic["mime"] != "image/png":
+            raise ValueError(f"doc {d}: unexpected APIC mime")
+        art = decode_png(pic["image"])
+        year_txt = tag["text"].get("TDRC") or tag["text"]["TYER"]
+        return (
+            d,
+            tag["text"]["TIT2"],
+            tag["text"]["TPE1"],
+            tag["text"]["TALB"],
+            int(tag["text"]["TRCK"].split("/")[0]),
+            int(year_txt[:4]),
+            tag["version"],
+            audio["n_frames"],
+            art.shape[1],
+            int(np.sum(art, dtype=np.int64)),
+            v1["genre"],
+            v1["track"],
+        )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 47, 13, schema, walk)
 
 
 @register(
@@ -3403,12 +2919,6 @@ def m23_id3_extract(spark, sf_dir: str) -> DataFrame:
 def m24_pdf_extract(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import BooleanType
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .where(F.col("doc_id") % 59 == 17)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -3440,45 +2950,25 @@ def m24_pdf_extract(spark, sf_dir: str) -> DataFrame:
             title=f"doc {d}",
         )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int, text: str) -> tuple:
         from tectonic_spark.operators.pdf import analyze_pdf
 
-        for pdf_batch in batches:
-            rows = []
-            for doc_id, text in zip(pdf_batch["doc_id"], pdf_batch["text"]):
-                d = int(doc_id)
-                payload = pdf_of(d, text)
-                info, pages = analyze_pdf(payload)  # one parse, both surfaces
-                rejoined = " ".join(
-                    ln for pg in pages for ln in pg.split("\n") if ln
-                )
-                if rejoined != text:
-                    raise ValueError(f"doc {d}: extraction drift")
-                rows.append(
-                    (
-                        d,
-                        info["n_pages"],
-                        len(rejoined),
-                        info["title"],
-                        info["uses_xref_stream"],
-                        info["n_compressed_objects"],
-                        info["filters"].get("/FlateDecode", 0),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_pages",
-                    "chars",
-                    "title",
-                    "xref_stream",
-                    "n_compressed",
-                    "n_flate",
-                ],
-            )
+        payload = pdf_of(d, text)
+        info, pages = analyze_pdf(payload)  # one parse, both surfaces
+        rejoined = " ".join(ln for pg in pages for ln in pg.split("\n") if ln)
+        if rejoined != text:
+            raise ValueError(f"doc {d}: extraction drift")
+        return (
+            d,
+            info["n_pages"],
+            len(rejoined),
+            info["title"],
+            info["uses_xref_stream"],
+            info["n_compressed_objects"],
+            info["filters"].get("/FlateDecode", 0),
+        )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 59, 17, schema, walk, "text")
 
 
 @register(
@@ -3527,12 +3017,6 @@ def m28_woff2_census(spark, sf_dir: str) -> DataFrame:
 
     from tectonic_spark.operators.woff2 import encode_woff2, parse_woff2
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 61 == 19)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -3550,74 +3034,47 @@ def m28_woff2_census(spark, sf_dir: str) -> DataFrame:
     want_tags = ["cmap", "glyf", "head", "hhea", "hmtx", "loca", "maxp",
                  "name"]
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                upem = 1000 + (d % 5) * 24
-                ng = 10 + d % 50
-                lf = d % 2
-                head = bytearray(54)
-                head[12:16] = struct.pack(">I", 0x5F0F3CF5)
-                head[18:20] = struct.pack(">H", upem)
-                head[50:52] = struct.pack(">h", lf)
-                glyf = bytes((d * 7 + j) % 256
-                             for j in range(100 + (d * 11) % 200))
-                tables = [
-                    (b"head", bytes(head)),
-                    (b"maxp", struct.pack(">IH", 0x00010000, ng)
-                     + b"\x00" * 26),
-                    (b"hhea", b"\x00" * 34 + struct.pack(">H", ng)),
-                    (b"hmtx", bytes(4 * ng)),
-                    (b"glyf", glyf),
-                    (b"loca", bytes((ng + 1) * (2 + 2 * lf))),
-                    (b"name", b"Doc Font %06d" % d),
-                    (b"cmap", bytes(20)),
-                ]
-                mode = ("lz", "dict", "literals")[d % 3]
-                meta = (
-                    b"<metadata>doc %06d</metadata>" % d
-                    if d % 4 == 1
-                    else None
-                )
-                payload = encode_woff2(tables, br_mode=mode, metadata=meta)
-                info = parse_woff2(payload)
-                rows.append(
-                    (
-                        d,
-                        info["flavor"],
-                        info["n_tables"],
-                        info["units_per_em"],
-                        info["num_glyphs"],
-                        info["loca_format"],
-                        info["total_orig_bytes"],
-                        mode,
-                        info["meta_orig_len"],
-                        info["sfnt_size_ok"]
-                        and info["stream_ok"]
-                        and info["bytes_walked"] == len(payload)
-                        and info["num_hmetrics"] == info["num_glyphs"]
-                        and info["tags"] == want_tags,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "flavor",
-                    "n_tables",
-                    "units_per_em",
-                    "num_glyphs",
-                    "loca_format",
-                    "total_orig_bytes",
-                    "br_mode",
-                    "meta_orig_len",
-                    "census_ok",
-                ],
-            )
+    def walk(d: int) -> tuple:
+        upem = 1000 + (d % 5) * 24
+        ng = 10 + d % 50
+        lf = d % 2
+        head = bytearray(54)
+        head[12:16] = struct.pack(">I", 0x5F0F3CF5)
+        head[18:20] = struct.pack(">H", upem)
+        head[50:52] = struct.pack(">h", lf)
+        glyf = bytes((d * 7 + j) % 256 for j in range(100 + (d * 11) % 200))
+        tables = [
+            (b"head", bytes(head)),
+            (b"maxp", struct.pack(">IH", 0x00010000, ng) + b"\x00" * 26),
+            (b"hhea", b"\x00" * 34 + struct.pack(">H", ng)),
+            (b"hmtx", bytes(4 * ng)),
+            (b"glyf", glyf),
+            (b"loca", bytes((ng + 1) * (2 + 2 * lf))),
+            (b"name", b"Doc Font %06d" % d),
+            (b"cmap", bytes(20)),
+        ]
+        mode = ("lz", "dict", "literals")[d % 3]
+        meta = b"<metadata>doc %06d</metadata>" % d if d % 4 == 1 else None
+        payload = encode_woff2(tables, br_mode=mode, metadata=meta)
+        info = parse_woff2(payload)
+        return (
+            d,
+            info["flavor"],
+            info["n_tables"],
+            info["units_per_em"],
+            info["num_glyphs"],
+            info["loca_format"],
+            info["total_orig_bytes"],
+            mode,
+            info["meta_orig_len"],
+            info["sfnt_size_ok"]
+            and info["stream_ok"]
+            and info["bytes_walked"] == len(payload)
+            and info["num_hmetrics"] == info["num_glyphs"]
+            and info["tags"] == want_tags,
+        )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 61, 19, schema, walk)
 
 
 @register(
@@ -3681,12 +3138,6 @@ def m29_font_reconstruct(spark, sf_dir: str) -> DataFrame:
         verify_sfnt,
     )
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 63 == 23)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -3741,77 +3192,56 @@ def m29_font_reconstruct(spark, sf_dir: str) -> DataFrame:
                 ))
         return out
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                glyphs = glyphs_of(d)
-                ng = len(glyphs)
-                lf = d % 2
-                mode = ("lz", "dict", "literals")[d % 3]
-                explicit = (
-                    {g for g in range(ng) if g % 4 == 0}
-                    if d % 2 == 0
-                    else set()
-                )
-                glyf, loca = build_glyf(glyphs, lf)
-                head = bytearray(54)
-                head[12:16] = struct.pack(">I", 0x5F0F3CF5)
-                head[18:20] = struct.pack(">H", 1000 + (d % 5) * 24)
-                head[50:52] = struct.pack(">h", lf)
-                tables = [
-                    (b"head", bytes(head)),
-                    (b"maxp", struct.pack(">IH", 0x00010000, ng)
-                     + b"\x00" * 26),
-                    (b"hhea", b"\x00" * 34 + struct.pack(">H", ng)),
-                    (b"hmtx", bytes(4 * ng)),
-                    (b"glyf", glyf),
-                    (b"loca", loca),
-                    (b"cmap", bytes(20)),
-                ]
-                payload = encode_woff2(
-                    tables,
-                    br_mode=mode,
-                    transformed={
-                        b"glyf": transform_glyf(
-                            glyphs, lf, explicit_bbox=explicit
-                        ),
-                        b"loca": b"",
-                    },
-                )
-                info = parse_woff2(payload, keep_tables=True)
-                got = dict(info["table_bytes"])
-                sfnt = reconstruct_sfnt(info["table_bytes"])
-                v = verify_sfnt(sfnt)
-                ok = (
-                    info["glyf_transformed"]
-                    and info["sfnt_size_ok"]
-                    and info["stream_ok"]
-                    and info["bytes_walked"] == len(payload)
-                    and got[b"glyf"] == glyf
-                    and got[b"loca"] == loca
-                    and v["search_ok"]
-                    and v["checksums_ok"]
-                    and bool(v["adjustment_ok"])
-                    and _table_checksum(sfnt) == 0xB1B0AFBA
-                )
-                rows.append(
-                    (d, info["num_glyphs"], info["n_points"],
-                     info["n_contours"], info["n_composites"],
-                     info["n_empty_glyphs"], info["n_overlap"],
-                     info["n_explicit_bbox"], info["loca_format"],
-                     mode, ok)
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "num_glyphs", "n_points", "n_contours",
-                     "n_composites", "n_empty_glyphs", "n_overlap",
-                     "n_explicit_bbox", "loca_format", "br_mode",
-                     "reconstruct_ok"],
+    def walk(d: int) -> tuple:
+        glyphs = glyphs_of(d)
+        ng = len(glyphs)
+        lf = d % 2
+        mode = ("lz", "dict", "literals")[d % 3]
+        explicit = {g for g in range(ng) if g % 4 == 0} if d % 2 == 0 else set()
+        glyf, loca = build_glyf(glyphs, lf)
+        head = bytearray(54)
+        head[12:16] = struct.pack(">I", 0x5F0F3CF5)
+        head[18:20] = struct.pack(">H", 1000 + (d % 5) * 24)
+        head[50:52] = struct.pack(">h", lf)
+        tables = [
+            (b"head", bytes(head)),
+            (b"maxp", struct.pack(">IH", 0x00010000, ng) + b"\x00" * 26),
+            (b"hhea", b"\x00" * 34 + struct.pack(">H", ng)),
+            (b"hmtx", bytes(4 * ng)),
+            (b"glyf", glyf),
+            (b"loca", loca),
+            (b"cmap", bytes(20)),
+        ]
+        payload = encode_woff2(
+            tables,
+            br_mode=mode,
+            transformed={
+                b"glyf": transform_glyf(glyphs, lf, explicit_bbox=explicit),
+                b"loca": b"",
+            },
         )
+        info = parse_woff2(payload, keep_tables=True)
+        got = dict(info["table_bytes"])
+        sfnt = reconstruct_sfnt(info["table_bytes"])
+        v = verify_sfnt(sfnt)
+        ok = (
+            info["glyf_transformed"]
+            and info["sfnt_size_ok"]
+            and info["stream_ok"]
+            and info["bytes_walked"] == len(payload)
+            and got[b"glyf"] == glyf
+            and got[b"loca"] == loca
+            and v["search_ok"]
+            and v["checksums_ok"]
+            and bool(v["adjustment_ok"])
+            and _table_checksum(sfnt) == 0xB1B0AFBA
+        )
+        return (d, info["num_glyphs"], info["n_points"],
+                info["n_contours"], info["n_composites"],
+                info["n_empty_glyphs"], info["n_overlap"],
+                info["n_explicit_bbox"], info["loca_format"], mode, ok)
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 63, 23, schema, walk)
 
 
 @register(
@@ -3857,12 +3287,6 @@ def m30_woff1_census(spark, sf_dir: str) -> DataFrame:
         verify_sfnt,
     )
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 71 == 29)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -3880,72 +3304,53 @@ def m30_woff1_census(spark, sf_dir: str) -> DataFrame:
     want_tags = ["cmap", "glyf", "head", "hhea", "hmtx", "loca", "maxp",
                  "name"]
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                upem = 1000 + (d % 5) * 24
-                ng = 10 + d % 50
-                lf = d % 2
-                head = bytearray(54)
-                head[12:16] = struct.pack(">I", 0x5F0F3CF5)
-                head[18:20] = struct.pack(">H", upem)
-                head[50:52] = struct.pack(">h", lf)
-                # every table compressible (repetitive motifs) so the
-                # stored count is the forced lane, exactly
-                glyf = struct.pack(">I", d & 0xFFFFFFFF) * (25 + d % 50)
-                tables = [
-                    (b"head", bytes(head)),
-                    (b"maxp", struct.pack(">IH", 0x00010000, ng)
-                     + b"\x00" * 26),
-                    (b"hhea", b"\x00" * 34 + struct.pack(">H", ng)),
-                    (b"hmtx", bytes(4 * ng)),
-                    (b"glyf", glyf),
-                    (b"loca", bytes((ng + 1) * (2 + 2 * lf))),
-                    (b"name", (b"Doc Font %06d " % d) * 3),
-                    (b"cmap", bytes(20)),
-                ]
-                meta = (
-                    b"<metadata>doc %06d</metadata>" % d
-                    if d % 4 == 1
-                    else None
-                )
-                store = frozenset({b"glyf"}) if d % 3 == 1 else frozenset()
-                payload = encode_woff1(
-                    tables, metadata=meta, store_tags=store
-                )
-                info = parse_woff1(payload, keep_tables=True)
-                v = verify_sfnt(reconstruct_sfnt(info["table_bytes"]))
-                rows.append(
-                    (
-                        d,
-                        info["flavor"],
-                        info["n_tables"],
-                        info["units_per_em"],
-                        info["num_glyphs"],
-                        info["loca_format"],
-                        info["total_orig_bytes"],
-                        info["n_stored"],
-                        info["meta_orig_len"],
-                        info["sfnt_size_ok"]
-                        and info["checksums_ok"]
-                        and info["bytes_walked"] == len(payload)
-                        and info["num_hmetrics"] == info["num_glyphs"]
-                        and info["tags"] == want_tags
-                        and v["search_ok"]
-                        and v["checksums_ok"]
-                        and bool(v["adjustment_ok"]),
-                    )
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "flavor", "n_tables", "units_per_em",
-                     "num_glyphs", "loca_format", "total_orig_bytes",
-                     "n_stored", "meta_orig_len", "census_ok"],
+    def walk(d: int) -> tuple:
+        upem = 1000 + (d % 5) * 24
+        ng = 10 + d % 50
+        lf = d % 2
+        head = bytearray(54)
+        head[12:16] = struct.pack(">I", 0x5F0F3CF5)
+        head[18:20] = struct.pack(">H", upem)
+        head[50:52] = struct.pack(">h", lf)
+        # every table compressible (repetitive motifs) so the
+        # stored count is the forced lane, exactly
+        glyf = struct.pack(">I", d & 0xFFFFFFFF) * (25 + d % 50)
+        tables = [
+            (b"head", bytes(head)),
+            (b"maxp", struct.pack(">IH", 0x00010000, ng) + b"\x00" * 26),
+            (b"hhea", b"\x00" * 34 + struct.pack(">H", ng)),
+            (b"hmtx", bytes(4 * ng)),
+            (b"glyf", glyf),
+            (b"loca", bytes((ng + 1) * (2 + 2 * lf))),
+            (b"name", (b"Doc Font %06d " % d) * 3),
+            (b"cmap", bytes(20)),
+        ]
+        meta = b"<metadata>doc %06d</metadata>" % d if d % 4 == 1 else None
+        store = frozenset({b"glyf"}) if d % 3 == 1 else frozenset()
+        payload = encode_woff1(tables, metadata=meta, store_tags=store)
+        info = parse_woff1(payload, keep_tables=True)
+        v = verify_sfnt(reconstruct_sfnt(info["table_bytes"]))
+        return (
+            d,
+            info["flavor"],
+            info["n_tables"],
+            info["units_per_em"],
+            info["num_glyphs"],
+            info["loca_format"],
+            info["total_orig_bytes"],
+            info["n_stored"],
+            info["meta_orig_len"],
+            info["sfnt_size_ok"]
+            and info["checksums_ok"]
+            and info["bytes_walked"] == len(payload)
+            and info["num_hmetrics"] == info["num_glyphs"]
+            and info["tags"] == want_tags
+            and v["search_ok"]
+            and v["checksums_ok"]
+            and bool(v["adjustment_ok"]),
         )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 71, 29, schema, walk)
 
 
 @register(
@@ -4004,12 +3409,6 @@ def m31_font_metrics(spark, sf_dir: str) -> DataFrame:
         verify_sfnt,
     )
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 73 == 31)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -4024,85 +3423,66 @@ def m31_font_metrics(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ng = 8 + d % 12
-                nh = ng - d % 3
-                a0 = 400 + d % 80
-                k = 3 + d % 4
-                lf = d % 2
-                glyphs = [None] + [
-                    glyph_simple(
-                        [[(g * 10, 0, True), (g * 10 + 30 + d % 5, 0, True),
-                          (g * 10, 40, True)]]
-                    )
-                    for g in range(1, ng)
-                ]
-                adv = [a0 + 3 * g for g in range(nh)]
-                adv += [a0 + 3 * (nh - 1)] * (ng - nh)
-                lsb = [-20 + g for g in range(ng)]
-                mapping = {65 + i: i + 1 for i in range(ng)}
-                mapping.update(
-                    {0x100 + i: ng - 1 - i for i in range(k)}
-                )
-                glyf, loca = build_glyf(glyphs, lf)
-                head = bytearray(54)
-                head[12:16] = struct.pack(">I", 0x5F0F3CF5)
-                head[18:20] = struct.pack(">H", 1000)
-                head[50:52] = struct.pack(">h", lf)
-                tables = [
-                    (b"head", bytes(head)),
-                    (b"maxp", struct.pack(">IH", 0x00010000, ng)
-                     + b"\x00" * 26),
-                    (b"hhea", b"\x00" * 34 + struct.pack(">H", nh)),
-                    (b"hmtx", build_hmtx(adv, lsb, nh)),
-                    (b"glyf", glyf),
-                    (b"loca", loca),
-                    (b"cmap", build_cmap4(mapping)),
-                ]
-                payload = encode_woff2(
-                    tables,
-                    br_mode=("lz", "dict", "literals")[d % 3],
-                    transformed={
-                        b"glyf": transform_glyf(glyphs, lf),
-                        b"loca": b"",
-                    },
-                )
-                info = parse_woff2(payload, keep_tables=True)
-                got = dict(info["table_bytes"])
-                v = verify_sfnt(reconstruct_sfnt(info["table_bytes"]))
-                cm = parse_cmap4(got[b"cmap"])
-                hm = parse_hmtx(got[b"hmtx"], nh, ng)
-                ok = (
-                    info["glyf_transformed"]
-                    and info["sfnt_size_ok"]
-                    and info["stream_ok"]
-                    and info["bytes_walked"] == len(payload)
-                    and got[b"glyf"] == glyf
-                    and v["checksums_ok"]
-                    and bool(v["adjustment_ok"])
-                    and v["search_ok"]
-                    and cm["mapping"] == mapping
-                    and cm["search_ok"]
-                    and hm["advances"] == adv
-                    and hm["lsbs"] == lsb
-                )
-                rows.append(
-                    (d, ng, nh, d % 3, hm["sum_advance"],
-                     cm["n_segments"], len(cm["mapping"]),
-                     cm["n_glyph_id_array"], ok)
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "num_glyphs", "n_hmetrics", "n_short",
-                     "sum_advance", "n_segments", "n_mapped", "n_gia",
-                     "metrics_ok"],
+    def walk(d: int) -> tuple:
+        ng = 8 + d % 12
+        nh = ng - d % 3
+        a0 = 400 + d % 80
+        k = 3 + d % 4
+        lf = d % 2
+        glyphs = [None] + [
+            glyph_simple(
+                [[(g * 10, 0, True), (g * 10 + 30 + d % 5, 0, True),
+                  (g * 10, 40, True)]]
+            )
+            for g in range(1, ng)
+        ]
+        adv = [a0 + 3 * g for g in range(nh)]
+        adv += [a0 + 3 * (nh - 1)] * (ng - nh)
+        lsb = [-20 + g for g in range(ng)]
+        mapping = {65 + i: i + 1 for i in range(ng)}
+        mapping.update({0x100 + i: ng - 1 - i for i in range(k)})
+        glyf, loca = build_glyf(glyphs, lf)
+        head = bytearray(54)
+        head[12:16] = struct.pack(">I", 0x5F0F3CF5)
+        head[18:20] = struct.pack(">H", 1000)
+        head[50:52] = struct.pack(">h", lf)
+        tables = [
+            (b"head", bytes(head)),
+            (b"maxp", struct.pack(">IH", 0x00010000, ng) + b"\x00" * 26),
+            (b"hhea", b"\x00" * 34 + struct.pack(">H", nh)),
+            (b"hmtx", build_hmtx(adv, lsb, nh)),
+            (b"glyf", glyf),
+            (b"loca", loca),
+            (b"cmap", build_cmap4(mapping)),
+        ]
+        payload = encode_woff2(
+            tables,
+            br_mode=("lz", "dict", "literals")[d % 3],
+            transformed={b"glyf": transform_glyf(glyphs, lf), b"loca": b""},
         )
+        info = parse_woff2(payload, keep_tables=True)
+        got = dict(info["table_bytes"])
+        v = verify_sfnt(reconstruct_sfnt(info["table_bytes"]))
+        cm = parse_cmap4(got[b"cmap"])
+        hm = parse_hmtx(got[b"hmtx"], nh, ng)
+        ok = (
+            info["glyf_transformed"]
+            and info["sfnt_size_ok"]
+            and info["stream_ok"]
+            and info["bytes_walked"] == len(payload)
+            and got[b"glyf"] == glyf
+            and v["checksums_ok"]
+            and bool(v["adjustment_ok"])
+            and v["search_ok"]
+            and cm["mapping"] == mapping
+            and cm["search_ok"]
+            and hm["advances"] == adv
+            and hm["lsbs"] == lsb
+        )
+        return (d, ng, nh, d % 3, hm["sum_advance"], cm["n_segments"],
+                len(cm["mapping"]), cm["n_glyph_id_array"], ok)
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 73, 31, schema, walk)
 
 
 @register(
@@ -4163,12 +3543,6 @@ def m32_cff_census(spark, sf_dir: str) -> DataFrame:
         verify_sfnt,
     )
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 79 == 37)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -4182,93 +3556,73 @@ def m32_cff_census(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ng = 5 + d % 10
-                w0 = 100 + d % 50
-                wd = 77 + d % 20
-                mode = ("lz", "dict", "literals")[d % 3]
-                css = []
-                want_glyphs = []
-                for g in range(ng):
-                    ops = []
-                    if g % 2 == 0:
-                        ops.append(("hstem", [10, 20 + g]))
-                    ops.append(("rmoveto", [10 * g + d % 7, 5]))
-                    pairs = [(4 + j, 4 - j) for j in range(1 + g % 3)]
-                    ops.append(
-                        ("rlineto", [c for p in pairs for c in p])
-                    )
-                    ops.append(("endchar", []))
-                    width = None if g % 4 == 3 else w0 + g
-                    css.append(build_charstring(ops, width=width))
-                    want_glyphs.append(
-                        {
-                            "width": wd if g % 4 == 3 else w0 + g,
-                            "n_points": 2 + g % 3,
-                            "n_stems": 1 if g % 2 == 0 else 0,
-                            "x": 10 * g + d % 7
-                            + sum(p[0] for p in pairs),
-                            "y": 5 + sum(p[1] for p in pairs),
-                        }
-                    )
-                cff = build_cff(
-                    "Doc-CFF-%06d" % d, css,
-                    private_entries=[(20, [wd]), (21, [0])],
-                )
-                head = bytearray(54)
-                head[12:16] = struct.pack(">I", 0x5F0F3CF5)
-                head[18:20] = struct.pack(">H", 1000)
-                tables = [
-                    (b"head", bytes(head)),
-                    (b"maxp", struct.pack(">IH", 0x00005000, ng)),
-                    (b"CFF ", cff),
-                    (b"cmap", bytes(20)),
-                ]
-                payload = encode_woff2(
-                    tables, flavor=b"OTTO", br_mode=mode
-                )
-                info = parse_woff2(payload, keep_tables=True)
-                got = dict(info["table_bytes"])
-                v = verify_sfnt(
-                    reconstruct_sfnt(info["table_bytes"], flavor=b"OTTO")
-                )
-                census = parse_cff(got[b"CFF "])
-                per_glyph_ok = all(
-                    gl["width"] == w["width"]
-                    and gl["n_points"] == w["n_points"]
-                    and gl["n_stems"] == w["n_stems"]
-                    and gl["x"] == w["x"]
-                    and gl["y"] == w["y"]
-                    for gl, w in zip(census["glyphs"], want_glyphs)
-                )
-                ok = (
-                    info["flavor"] == "otto"
-                    and info["sfnt_size_ok"]
-                    and info["stream_ok"]
-                    and info["bytes_walked"] == len(payload)
-                    and info["num_glyphs"] == census["n_glyphs"]
-                    and census["name"] == "Doc-CFF-%06d" % d
-                    and v["checksums_ok"]
-                    and bool(v["adjustment_ok"])
-                    and v["flavor"] == "otto"
-                    and per_glyph_ok
-                )
-                rows.append(
-                    (d, census["n_glyphs"], census["n_points"],
-                     census["n_stems"], census["sum_width"],
-                     info["flavor"], mode, ok)
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "n_glyphs", "n_points", "n_stems",
-                     "sum_width", "flavor", "br_mode", "cff_ok"],
+    def walk(d: int) -> tuple:
+        ng = 5 + d % 10
+        w0 = 100 + d % 50
+        wd = 77 + d % 20
+        mode = ("lz", "dict", "literals")[d % 3]
+        css = []
+        want_glyphs = []
+        for g in range(ng):
+            ops = []
+            if g % 2 == 0:
+                ops.append(("hstem", [10, 20 + g]))
+            ops.append(("rmoveto", [10 * g + d % 7, 5]))
+            pairs = [(4 + j, 4 - j) for j in range(1 + g % 3)]
+            ops.append(("rlineto", [c for p in pairs for c in p]))
+            ops.append(("endchar", []))
+            width = None if g % 4 == 3 else w0 + g
+            css.append(build_charstring(ops, width=width))
+            want_glyphs.append(
+                {
+                    "width": wd if g % 4 == 3 else w0 + g,
+                    "n_points": 2 + g % 3,
+                    "n_stems": 1 if g % 2 == 0 else 0,
+                    "x": 10 * g + d % 7 + sum(p[0] for p in pairs),
+                    "y": 5 + sum(p[1] for p in pairs),
+                }
+            )
+        cff = build_cff(
+            "Doc-CFF-%06d" % d, css, private_entries=[(20, [wd]), (21, [0])]
         )
+        head = bytearray(54)
+        head[12:16] = struct.pack(">I", 0x5F0F3CF5)
+        head[18:20] = struct.pack(">H", 1000)
+        tables = [
+            (b"head", bytes(head)),
+            (b"maxp", struct.pack(">IH", 0x00005000, ng)),
+            (b"CFF ", cff),
+            (b"cmap", bytes(20)),
+        ]
+        payload = encode_woff2(tables, flavor=b"OTTO", br_mode=mode)
+        info = parse_woff2(payload, keep_tables=True)
+        got = dict(info["table_bytes"])
+        v = verify_sfnt(reconstruct_sfnt(info["table_bytes"], flavor=b"OTTO"))
+        census = parse_cff(got[b"CFF "])
+        per_glyph_ok = all(
+            gl["width"] == w["width"]
+            and gl["n_points"] == w["n_points"]
+            and gl["n_stems"] == w["n_stems"]
+            and gl["x"] == w["x"]
+            and gl["y"] == w["y"]
+            for gl, w in zip(census["glyphs"], want_glyphs)
+        )
+        ok = (
+            info["flavor"] == "otto"
+            and info["sfnt_size_ok"]
+            and info["stream_ok"]
+            and info["bytes_walked"] == len(payload)
+            and info["num_glyphs"] == census["n_glyphs"]
+            and census["name"] == "Doc-CFF-%06d" % d
+            and v["checksums_ok"]
+            and bool(v["adjustment_ok"])
+            and v["flavor"] == "otto"
+            and per_glyph_ok
+        )
+        return (d, census["n_glyphs"], census["n_points"], census["n_stems"],
+                census["sum_width"], info["flavor"], mode, ok)
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 79, 37, schema, walk)
 
 
 @register(
@@ -4313,12 +3667,6 @@ def m32_cff_census(spark, sf_dir: str) -> DataFrame:
 def m33_docx_extract(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import BooleanType
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .where(F.col("doc_id") % 89 == 47)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -4333,92 +3681,59 @@ def m33_docx_extract(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int, text: str) -> tuple:
         from tectonic_spark.operators.ooxml import build_docx, extract_docx
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                words = text.split(" ")
-                lines = [
-                    " ".join(words[i : i + 8])
-                    for i in range(0, len(words), 8)
-                ]
-                paras = []
-                for j, ln in enumerate(lines):
-                    style = "Normal"
-                    if j == 0:
-                        style = "Heading1"
-                    elif j == 2 and len(lines) > 2 and d % 2 == 0:
-                        style = "Heading2"
-                    paras.append((style, ln))
-                tbl = (
-                    [
-                        [f"r0c0 doc {d}", f"r0c1 doc {d}"],
-                        [f"r1c0 doc {d}", f"r1c1 doc {d}"],
-                    ]
-                    if d % 3 == 0
-                    else None
-                )
-                prefix = "x" if d % 7 == 0 else "w"
-                payload = build_docx(
-                    paras,
-                    title=f"doc {d}",
-                    creator=f"crawler {d % 7}",
-                    table_rows=tbl,
-                    w_prefix=prefix,
-                )
-                out = extract_docx(payload)
-                rejoined = " ".join(t for _, t in out["paragraphs"])
-                if rejoined != text:
-                    raise ValueError(f"doc {d}: docx extraction drift")
-                if tbl is not None and out["tables"] != [tbl]:
-                    raise ValueError(f"doc {d}: docx table drift")
-                ok = (
-                    out["title"] == f"doc {d}"
-                    and out["creator"] == f"crawler {d % 7}"
-                    and [s for s, _ in out["paragraphs"]]
-                    == [s for s, _ in paras]
-                )
-                rows.append(
-                    (
-                        d,
-                        len(out["paragraphs"]),
-                        sum(
-                            1
-                            for s, _ in out["paragraphs"]
-                            if s.startswith("Heading")
-                        ),
-                        len(rejoined),
-                        out["title"],
-                        bool(out["tables"]),
-                        sum(
-                            len(c)
-                            for t in out["tables"]
-                            for r in t
-                            for c in r
-                        ),
-                        prefix,
-                        ok,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_paragraphs",
-                    "n_headings",
-                    "chars",
-                    "title",
-                    "has_table",
-                    "n_table_chars",
-                    "ns_prefix",
-                    "extract_ok",
-                ],
-            )
+        words = text.split(" ")
+        lines = [" ".join(words[i : i + 8]) for i in range(0, len(words), 8)]
+        paras = []
+        for j, ln in enumerate(lines):
+            style = "Normal"
+            if j == 0:
+                style = "Heading1"
+            elif j == 2 and len(lines) > 2 and d % 2 == 0:
+                style = "Heading2"
+            paras.append((style, ln))
+        tbl = (
+            [
+                [f"r0c0 doc {d}", f"r0c1 doc {d}"],
+                [f"r1c0 doc {d}", f"r1c1 doc {d}"],
+            ]
+            if d % 3 == 0
+            else None
+        )
+        prefix = "x" if d % 7 == 0 else "w"
+        payload = build_docx(
+            paras,
+            title=f"doc {d}",
+            creator=f"crawler {d % 7}",
+            table_rows=tbl,
+            w_prefix=prefix,
+        )
+        out = extract_docx(payload)
+        rejoined = " ".join(t for _, t in out["paragraphs"])
+        if rejoined != text:
+            raise ValueError(f"doc {d}: docx extraction drift")
+        if tbl is not None and out["tables"] != [tbl]:
+            raise ValueError(f"doc {d}: docx table drift")
+        ok = (
+            out["title"] == f"doc {d}"
+            and out["creator"] == f"crawler {d % 7}"
+            and [s for s, _ in out["paragraphs"]] == [s for s, _ in paras]
+        )
+        return (
+            d,
+            len(out["paragraphs"]),
+            sum(1 for s, _ in out["paragraphs"] if s.startswith("Heading")),
+            len(rejoined),
+            out["title"],
+            bool(out["tables"]),
+            sum(len(c) for t in out["tables"] for r in t for c in r),
+            prefix,
+            ok,
+        )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 89, 47, schema, walk, "text")
 
 
 @register(
@@ -4450,12 +3765,6 @@ def m33_docx_extract(spark, sf_dir: str) -> DataFrame:
 def m34_epub_extract(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import BooleanType
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text", "lang")
-        .where(F.col("doc_id") % 97 == 53)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -4468,80 +3777,50 @@ def m34_epub_extract(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int, text: str, lang) -> tuple:
         from tectonic_spark.operators.epub import build_epub, extract_epub
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text, lang in zip(
-                pdf["doc_id"], pdf["text"], pdf["lang"]
-            ):
-                d = int(doc_id)
-                words = text.split(" ")
-                lines = [
-                    " ".join(words[i : i + 8])
-                    for i in range(0, len(words), 8)
-                ]
-                nc = 1 + d % 3
-                per = (len(lines) + nc - 1) // nc
-                groups = [
-                    lines[i : i + per] for i in range(0, len(lines), per)
-                ]
-                while len(groups) < nc:
-                    groups.append([])
-                chaps = [
-                    (f"ch {k} of doc {d}", "\n".join(g))
-                    for k, g in enumerate(groups)
-                ]
-                payload = build_epub(
-                    chaps,
-                    title=f"book {d}",
-                    author="crawler",
-                    lang=str(lang),
-                    spine_rotate=d % nc,
-                )
-                out = extract_epub(payload)
-                rejoined = " ".join(
-                    ln
-                    for _, body in out["chapters"]
-                    for ln in body.split("\n")
-                    if ln
-                )
-                if rejoined != text:
-                    raise ValueError(f"doc {d}: epub extraction drift")
-                ok = (
-                    out["title"] == f"book {d}"
-                    and out["author"] == "crawler"
-                    and out["lang"] == str(lang)
-                    and [t for t, _ in out["chapters"]]
-                    == [t for t, _ in chaps]
-                    and out["n_manifest"] == nc
-                )
-                rows.append(
-                    (
-                        d,
-                        len(out["chapters"]),
-                        len(rejoined),
-                        out["title"],
-                        out["lang"],
-                        out["spine_ids"][0],
-                        ok,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_chapters",
-                    "chars",
-                    "book_title",
-                    "lang",
-                    "spine_first",
-                    "extract_ok",
-                ],
-            )
+        words = text.split(" ")
+        lines = [" ".join(words[i : i + 8]) for i in range(0, len(words), 8)]
+        nc = 1 + d % 3
+        per = (len(lines) + nc - 1) // nc
+        groups = [lines[i : i + per] for i in range(0, len(lines), per)]
+        while len(groups) < nc:
+            groups.append([])
+        chaps = [
+            (f"ch {k} of doc {d}", "\n".join(g)) for k, g in enumerate(groups)
+        ]
+        payload = build_epub(
+            chaps,
+            title=f"book {d}",
+            author="crawler",
+            lang=str(lang),
+            spine_rotate=d % nc,
+        )
+        out = extract_epub(payload)
+        rejoined = " ".join(
+            ln for _, body in out["chapters"] for ln in body.split("\n") if ln
+        )
+        if rejoined != text:
+            raise ValueError(f"doc {d}: epub extraction drift")
+        ok = (
+            out["title"] == f"book {d}"
+            and out["author"] == "crawler"
+            and out["lang"] == str(lang)
+            and [t for t, _ in out["chapters"]] == [t for t, _ in chaps]
+            and out["n_manifest"] == nc
+        )
+        return (
+            d,
+            len(out["chapters"]),
+            len(rejoined),
+            out["title"],
+            out["lang"],
+            out["spine_ids"][0],
+            ok,
+        )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 97, 53, schema, walk, "text", "lang")
 
 
 @register(
@@ -4580,12 +3859,6 @@ def m34_epub_extract(spark, sf_dir: str) -> DataFrame:
 def m35_rtf_extract(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import BooleanType
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .where(F.col("doc_id") % 101 == 59)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -4598,52 +3871,29 @@ def m35_rtf_extract(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int, text: str) -> tuple:
         from tectonic_spark.operators.rtf import build_rtf, extract_rtf
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                words = text.split(" ")
-                paras = [
-                    " ".join(words[i : i + 8])
-                    for i in range(0, len(words), 8)
-                ]
-                suffix = " é€" if d % 2 == 0 else " 中"
-                paras[-1] += suffix
-                payload = build_rtf(
-                    paras, title=f"doc {d} rtf", bold_every=d % 4
-                )
-                out = extract_rtf(payload)
-                want = "\n".join(paras)
-                if out["text"] != want:
-                    raise ValueError(f"doc {d}: rtf extraction drift")
-                rows.append(
-                    (
-                        d,
-                        len(paras),
-                        len(want),
-                        out["title"],
-                        "latin" if d % 2 == 0 else "cjk",
-                        d % 4,
-                        out["title"] == f"doc {d} rtf",
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_paragraphs",
-                    "chars",
-                    "title",
-                    "uni_lane",
-                    "bold_every",
-                    "extract_ok",
-                ],
-            )
+        words = text.split(" ")
+        paras = [" ".join(words[i : i + 8]) for i in range(0, len(words), 8)]
+        suffix = " é€" if d % 2 == 0 else " 中"
+        paras[-1] += suffix
+        payload = build_rtf(paras, title=f"doc {d} rtf", bold_every=d % 4)
+        out = extract_rtf(payload)
+        want = "\n".join(paras)
+        if out["text"] != want:
+            raise ValueError(f"doc {d}: rtf extraction drift")
+        return (
+            d,
+            len(paras),
+            len(want),
+            out["title"],
+            "latin" if d % 2 == 0 else "cjk",
+            d % 4,
+            out["title"] == f"doc {d} rtf",
+        )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 101, 59, schema, walk, "text")
 
 
 @register(
@@ -4684,12 +3934,6 @@ def m35_rtf_extract(spark, sf_dir: str) -> DataFrame:
 def m36_ico_census(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import BooleanType
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 103 == 61)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -4701,57 +3945,40 @@ def m36_ico_census(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int) -> tuple:
         from tectonic_spark.operators.codecs import encode_ico, parse_ico
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 1 + d % 3
-                imgs = []
-                for k in range(n):
-                    s = 16 << k
-                    imgs.append(
-                        {
-                            "w": s,
-                            "h": s,
-                            "fmt": "png" if (d + k) % 2 == 0 else "bmp",
-                            "pixels": bytes(
-                                (i * (d % 251 + k + 1) + d) % 256
-                                for i in range(s * s * 3)
-                            ),
-                        }
-                    )
-                back = parse_ico(encode_ico(imgs))
-                ok = len(back) == n and all(
-                    (a["w"], a["h"], a["fmt"], a["pixels"])
-                    == (b["w"], b["h"], b["fmt"], b["pixels"])
-                    for a, b in zip(imgs, back)
-                )
-                rows.append(
-                    (
-                        d,
-                        len(back),
-                        sum(b["w"] for b in back),
-                        sum(1 for b in back if b["fmt"] == "png"),
-                        sum(1 for b in back if b["fmt"] == "bmp"),
-                        ok,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_images",
-                    "sum_width",
-                    "n_png",
-                    "n_bmp",
-                    "census_ok",
-                ],
+        n = 1 + d % 3
+        imgs = []
+        for k in range(n):
+            s = 16 << k
+            imgs.append(
+                {
+                    "w": s,
+                    "h": s,
+                    "fmt": "png" if (d + k) % 2 == 0 else "bmp",
+                    "pixels": bytes(
+                        (i * (d % 251 + k + 1) + d) % 256
+                        for i in range(s * s * 3)
+                    ),
+                }
             )
+        back = parse_ico(encode_ico(imgs))
+        ok = len(back) == n and all(
+            (a["w"], a["h"], a["fmt"], a["pixels"])
+            == (b["w"], b["h"], b["fmt"], b["pixels"])
+            for a, b in zip(imgs, back)
+        )
+        return (
+            d,
+            len(back),
+            sum(b["w"] for b in back),
+            sum(1 for b in back if b["fmt"] == "png"),
+            sum(1 for b in back if b["fmt"] == "bmp"),
+            ok,
+        )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 103, 61, schema, walk)
 
 
 @register(
@@ -4795,12 +4022,6 @@ def m36_ico_census(spark, sf_dir: str) -> DataFrame:
 def m37_xlsx_extract(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import BooleanType
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 109 == 67)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -4814,63 +4035,39 @@ def m37_xlsx_extract(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int) -> tuple:
         from tectonic_spark.operators.ooxml import build_xlsx, extract_xlsx
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                r_n = 2 + d % 5
-                data_rows = [
-                    [d % 100 + 3 * r, f"w{(d + r) % 7}", r + 1]
-                    for r in range(r_n)
-                ]
-                sheets = [("data", data_rows)]
-                if d % 2 == 1:
-                    sheets.append(
-                        ("extra", [[d % 50 + r] for r in range(2)])
-                    )
-                inline = d % 3 == 0
-                payload = build_xlsx(sheets, inline_lane=inline)
-                out = extract_xlsx(payload)
-                if out["sheets"] != sheets:
-                    raise ValueError(f"doc {d}: xlsx extraction drift")
-                total_rows = sum(len(rws) for _, rws in out["sheets"])
-                sum_numeric = sum(
-                    v
-                    for _, rws in out["sheets"]
-                    for row in rws
-                    for v in row
-                    if not isinstance(v, str)
-                )
-                rows.append(
-                    (
-                        d,
-                        len(out["sheets"]),
-                        total_rows,
-                        out["n_string_cells"],
-                        out["n_shared_unique"],
-                        int(sum_numeric),
-                        out["inline"],
-                        out["inline"] == inline,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_sheets",
-                    "n_rows",
-                    "n_string_cells",
-                    "n_shared_unique",
-                    "sum_numeric",
-                    "inline",
-                    "extract_ok",
-                ],
-            )
+        r_n = 2 + d % 5
+        data_rows = [[d % 100 + 3 * r, f"w{(d + r) % 7}", r + 1] for r in range(r_n)]
+        sheets = [("data", data_rows)]
+        if d % 2 == 1:
+            sheets.append(("extra", [[d % 50 + r] for r in range(2)]))
+        inline = d % 3 == 0
+        payload = build_xlsx(sheets, inline_lane=inline)
+        out = extract_xlsx(payload)
+        if out["sheets"] != sheets:
+            raise ValueError(f"doc {d}: xlsx extraction drift")
+        total_rows = sum(len(rws) for _, rws in out["sheets"])
+        sum_numeric = sum(
+            v
+            for _, rws in out["sheets"]
+            for row in rws
+            for v in row
+            if not isinstance(v, str)
+        )
+        return (
+            d,
+            len(out["sheets"]),
+            total_rows,
+            out["n_string_cells"],
+            out["n_shared_unique"],
+            int(sum_numeric),
+            out["inline"],
+            out["inline"] == inline,
+        )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 109, 67, schema, walk)
 
 
 @register(
@@ -4909,12 +4106,6 @@ def m37_xlsx_extract(spark, sf_dir: str) -> DataFrame:
 def m38_odt_extract(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import BooleanType
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .where(F.col("doc_id") % 127 == 73)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -4926,59 +4117,38 @@ def m38_odt_extract(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int, text: str) -> tuple:
         from tectonic_spark.operators.odf import build_odt, extract_odt
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                words = text.split(" ")
-                lines = [
-                    " ".join(words[i : i + 8])
-                    for i in range(0, len(words), 8)
-                ]
-                paras = []
-                for j, ln in enumerate(lines):
-                    level = 0
-                    if j == 0:
-                        level = 1
-                    elif j == 2 and len(lines) > 2 and d % 2 == 0:
-                        level = 2
-                    paras.append((level, ln))
-                # the whitespace-rule lane: "  ab " is 5 chars with a
-                # double-space AND a trailing space — both must ride
-                # text:s elements to survive
-                lvl, last = paras[-1]
-                paras[-1] = (lvl, last + "  ab ")
-                payload = build_odt(paras, title=f"odt {d}")
-                out = extract_odt(payload)
-                if out["paragraphs"] != paras:
-                    raise ValueError(f"doc {d}: odt extraction drift")
-                rows.append(
-                    (
-                        d,
-                        len(out["paragraphs"]),
-                        sum(1 for lv, _ in out["paragraphs"] if lv > 0),
-                        sum(len(t) for _, t in out["paragraphs"])
-                        + (len(paras) - 1),
-                        out["title"],
-                        out["title"] == f"odt {d}",
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_paragraphs",
-                    "n_headings",
-                    "chars",
-                    "title",
-                    "extract_ok",
-                ],
-            )
+        words = text.split(" ")
+        lines = [" ".join(words[i : i + 8]) for i in range(0, len(words), 8)]
+        paras = []
+        for j, ln in enumerate(lines):
+            level = 0
+            if j == 0:
+                level = 1
+            elif j == 2 and len(lines) > 2 and d % 2 == 0:
+                level = 2
+            paras.append((level, ln))
+        # the whitespace-rule lane: "  ab " is 5 chars with a
+        # double-space AND a trailing space — both must ride
+        # text:s elements to survive
+        lvl, last = paras[-1]
+        paras[-1] = (lvl, last + "  ab ")
+        payload = build_odt(paras, title=f"odt {d}")
+        out = extract_odt(payload)
+        if out["paragraphs"] != paras:
+            raise ValueError(f"doc {d}: odt extraction drift")
+        return (
+            d,
+            len(out["paragraphs"]),
+            sum(1 for lv, _ in out["paragraphs"] if lv > 0),
+            sum(len(t) for _, t in out["paragraphs"]) + (len(paras) - 1),
+            out["title"],
+            out["title"] == f"odt {d}",
+        )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 127, 73, schema, walk, "text")
 
 
 @register(
@@ -5014,12 +4184,6 @@ def m38_odt_extract(spark, sf_dir: str) -> DataFrame:
 def m39_svg_census(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import BooleanType
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 131 == 79)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -5033,69 +4197,45 @@ def m39_svg_census(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int) -> tuple:
         from tectonic_spark.operators.svg import build_svg, census_svg
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                side = 16 + (d % 4) * 16
-                k = 2 + d % 4  # line segments in the main path
-                coords = " ".join(
-                    f"{(d + i) % side} {(d * 3 + i * 7) % side}"
-                    for i in range(k)
-                )
-                paths = [f"M0 0 L{coords} Z"]
-                if d % 3 == 0:
-                    paths.append(f"m1 1h{1 + d % 5}v{1 + d % 7}z")
-                payload = build_svg(
-                    width=side,
-                    height=side,
-                    rects=[
-                        (i, i, 2 + i, 2 + i) for i in range(1 + d % 3)
-                    ],
-                    circles=(
-                        [(side // 2, side // 2, 3)] if d % 2 else []
-                    ),
-                    paths=paths,
-                    grouped=(d % 2 == 0),
-                )
-                out = census_svg(payload)
-                ok = (
-                    out["width"] == side
-                    and out["height"] == side
-                    and out["endpoints"][0] == (0, 0)
-                    and out["path_subpaths"] == len(paths)
-                    and out["counts"]["g"] == (1 if d % 2 == 0 else 0)
-                )
-                rows.append(
-                    (
-                        d,
-                        out["width"],
-                        out["counts"]["rect"],
-                        out["counts"]["circle"],
-                        out["counts"]["path"],
-                        out["path_commands"],
-                        out["path_implicit"],
-                        ok,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "n_rects",
-                    "n_circles",
-                    "n_paths",
-                    "path_commands",
-                    "n_implicit",
-                    "census_ok",
-                ],
-            )
+        side = 16 + (d % 4) * 16
+        k = 2 + d % 4  # line segments in the main path
+        coords = " ".join(
+            f"{(d + i) % side} {(d * 3 + i * 7) % side}" for i in range(k)
+        )
+        paths = [f"M0 0 L{coords} Z"]
+        if d % 3 == 0:
+            paths.append(f"m1 1h{1 + d % 5}v{1 + d % 7}z")
+        payload = build_svg(
+            width=side,
+            height=side,
+            rects=[(i, i, 2 + i, 2 + i) for i in range(1 + d % 3)],
+            circles=[(side // 2, side // 2, 3)] if d % 2 else [],
+            paths=paths,
+            grouped=(d % 2 == 0),
+        )
+        out = census_svg(payload)
+        ok = (
+            out["width"] == side
+            and out["height"] == side
+            and out["endpoints"][0] == (0, 0)
+            and out["path_subpaths"] == len(paths)
+            and out["counts"]["g"] == (1 if d % 2 == 0 else 0)
+        )
+        return (
+            d,
+            out["width"],
+            out["counts"]["rect"],
+            out["counts"]["circle"],
+            out["counts"]["path"],
+            out["path_commands"],
+            out["path_implicit"],
+            ok,
+        )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 131, 79, schema, walk)
 
 
 @register(
@@ -5132,12 +4272,6 @@ def m39_svg_census(spark, sf_dir: str) -> DataFrame:
 def m40_ods_extract(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import BooleanType
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 149 == 91)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -5150,58 +4284,28 @@ def m40_ods_extract(spark, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int) -> tuple:
         from tectonic_spark.operators.odf import build_ods, extract_ods
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                r_n = 2 + d % 5
-                data_rows = [
-                    [d % 7 + r] * 3 + [100 + r] for r in range(r_n)
-                ]
-                sheets = [("data", data_rows)]
-                if d % 2 == 1:
-                    sheets.append(("tags", [["t", "t"]]))
-                payload = build_ods(sheets)
-                out = extract_ods(payload)
-                if out["sheets"] != sheets:
-                    raise ValueError(f"doc {d}: ods extraction drift")
-                total_rows = sum(len(rws) for _, rws in out["sheets"])
-                total_cells = sum(
-                    len(row) for _, rws in out["sheets"] for row in rws
-                )
-                sum_numeric = sum(
-                    v
-                    for _, rws in out["sheets"]
-                    for row in rws
-                    for v in row
-                    if not isinstance(v, str)
-                )
-                rows.append(
-                    (
-                        d,
-                        len(out["sheets"]),
-                        total_rows,
-                        total_cells,
-                        out["n_repeated_cells"],
-                        int(sum_numeric),
-                        out["n_repeated_cells"]
-                        == 3 * r_n + 2 * (d % 2),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_sheets",
-                    "n_rows",
-                    "n_cells",
-                    "n_repeated",
-                    "sum_numeric",
-                    "extract_ok",
-                ],
-            )
+        r_n = 2 + d % 5
+        data_rows = [[d % 7 + r] * 3 + [100 + r] for r in range(r_n)]
+        sheets = [("data", data_rows)]
+        if d % 2 == 1:
+            sheets.append(("tags", [["t", "t"]]))
+        payload = build_ods(sheets)
+        out = extract_ods(payload)
+        if out["sheets"] != sheets:
+            raise ValueError(f"doc {d}: ods extraction drift")
+        rows = [row for _, rws in out["sheets"] for row in rws]
+        sum_numeric = sum(v for row in rows for v in row if not isinstance(v, str))
+        return (
+            d,
+            len(out["sheets"]),
+            len(rows),
+            sum(len(row) for row in rows),
+            out["n_repeated_cells"],
+            int(sum_numeric),
+            out["n_repeated_cells"] == 3 * r_n + 2 * (d % 2),
+        )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 149, 91, schema, walk)

@@ -5,7 +5,10 @@ quality scoring, document fingerprinting).
 All hot-path computation is JVM-side ``pyspark.sql.functions`` higher-order
 array functions (split/transform/aggregate/filter) — no Python UDFs — so at
 100 TB these run inside whole-stage codegen with the parquet scan pruned to
-(doc_id, text).
+(doc_id, text). The exceptions are the two page census queries
+(``c03_structured_data``, ``c03_markdown_census``), which build and parse a
+page per document in the shared per-document kernel,
+:func:`tectonic_spark.tables.map_documents`.
 """
 
 from __future__ import annotations
@@ -14,7 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tectonic_spark.operators.registry import bounded_key, register
-from tectonic_spark.tables import table
+from tectonic_spark.tables import map_documents, table
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Consistency (Spark result == oracle result) is what the
@@ -929,9 +932,6 @@ def c03_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "build+parse in Arrow-batched mapInPandas, no shuffle.",
 )
 def c03_structured_data(spark, sf_dir: str):
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType,
         LongType,
@@ -940,14 +940,6 @@ def c03_structured_data(spark, sf_dir: str):
         StructType,
     )
 
-    from tectonic_spark.tables import spread_small_scan
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .where(F.col("doc_id") % 113 == 71)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -960,52 +952,33 @@ def c03_structured_data(spark, sf_dir: str):
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int, text: str) -> tuple:
         from tectonic_spark.operators.structured_data import (
             build_page,
             extract_structured,
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                lane = ("jsonld", "microdata", "og")[d % 3]
-                wc = len(text.split(" "))
-                page = build_page(
-                    syntax=lane,
-                    headline=f"doc {d}",
-                    author=f"crawler {d % 5}",
-                    word_count=wc,
-                    body_words=text,
-                )
-                out = extract_structured(page)
-                rows.append(
-                    (
-                        d,
-                        out["syntax"],
-                        out["sd_type"],
-                        out["headline"],
-                        out["author"],
-                        out["word_count"],
-                        out["syntax"] == lane
-                        and out["word_count"] == wc,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "syntax",
-                    "sd_type",
-                    "headline",
-                    "author",
-                    "word_count",
-                    "sd_ok",
-                ],
-            )
+        lane = ("jsonld", "microdata", "og")[d % 3]
+        wc = len(text.split(" "))
+        page = build_page(
+            syntax=lane,
+            headline=f"doc {d}",
+            author=f"crawler {d % 5}",
+            word_count=wc,
+            body_words=text,
+        )
+        out = extract_structured(page)
+        return (
+            d,
+            out["syntax"],
+            out["sd_type"],
+            out["headline"],
+            out["author"],
+            out["word_count"],
+            out["syntax"] == lane and out["word_count"] == wc,
+        )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 113, 71, schema, walk, "text")
 
 
 @register(
@@ -1046,9 +1019,6 @@ def c03_structured_data(spark, sf_dir: str):
     "Arrow-batched mapInPandas, no shuffle.",
 )
 def c03_markdown_census(spark, sf_dir: str):
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType,
         LongType,
@@ -1056,14 +1026,6 @@ def c03_markdown_census(spark, sf_dir: str):
         StructType,
     )
 
-    from tectonic_spark.tables import spread_small_scan
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .where(F.col("doc_id") % 137 == 83)
-    )
-    docs = spread_small_scan(docs, spark, "doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -1077,78 +1039,45 @@ def c03_markdown_census(spark, sf_dir: str):
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(d: int, text: str) -> tuple:
         from tectonic_spark.operators.markdown import (
             build_markdown,
             parse_markdown,
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                words = text.split(" ")
-                lines = [
-                    " ".join(words[i : i + 8])
-                    for i in range(0, len(words), 8)
-                ]
-                ns = 1 + d % 3
-                per = (len(lines) + ns - 1) // ns
-                groups = [
-                    lines[i : i + per] for i in range(0, len(lines), per)
-                ]
-                while len(groups) < ns:
-                    groups.append([])
-                sections = [
-                    (f"section {s}", g) for s, g in enumerate(groups)
-                ]
-                links = [
-                    (f"link{j}", f"https://x{d}.example/p{j}")
-                    for j in range(1 + d % 4)
-                ]
-                payload = build_markdown(
-                    sections,
-                    title=f"doc {d}",
-                    links=links,
-                    code_lines=(
-                        ["x = 1", "y = 2"] if d % 2 == 0 else None
-                    ),
-                    list_items=(
-                        ["item a", "item b", "item c"]
-                        if d % 3 == 0
-                        else None
-                    ),
-                )
-                out = parse_markdown(payload)
-                ok = (
-                    out["heading_levels"] == [1] + [2] * ns
-                    and out["n_images"] == 0
-                    and out["n_quotes"] == 0
-                )
-                rows.append(
-                    (
-                        d,
-                        out["n_headings"],
-                        out["n_links"],
-                        out["n_fences"],
-                        out["n_code_lines"],
-                        out["n_list_items"],
-                        out["n_prose_words"],
-                        ok,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_headings",
-                    "n_links",
-                    "n_fences",
-                    "n_code_lines",
-                    "n_list_items",
-                    "n_prose_words",
-                    "census_ok",
-                ],
-            )
+        words = text.split(" ")
+        lines = [" ".join(words[i : i + 8]) for i in range(0, len(words), 8)]
+        ns = 1 + d % 3
+        per = (len(lines) + ns - 1) // ns
+        groups = [lines[i : i + per] for i in range(0, len(lines), per)]
+        while len(groups) < ns:
+            groups.append([])
+        sections = [(f"section {s}", g) for s, g in enumerate(groups)]
+        links = [
+            (f"link{j}", f"https://x{d}.example/p{j}") for j in range(1 + d % 4)
+        ]
+        payload = build_markdown(
+            sections,
+            title=f"doc {d}",
+            links=links,
+            code_lines=["x = 1", "y = 2"] if d % 2 == 0 else None,
+            list_items=["item a", "item b", "item c"] if d % 3 == 0 else None,
+        )
+        out = parse_markdown(payload)
+        ok = (
+            out["heading_levels"] == [1] + [2] * ns
+            and out["n_images"] == 0
+            and out["n_quotes"] == 0
+        )
+        return (
+            d,
+            out["n_headings"],
+            out["n_links"],
+            out["n_fences"],
+            out["n_code_lines"],
+            out["n_list_items"],
+            out["n_prose_words"],
+            ok,
+        )
 
-    return docs.mapInPandas(walk, schema)
+    return map_documents(spark, sf_dir, 137, 83, schema, walk, "text")

@@ -23,6 +23,7 @@ cells are strings, so string predicates act; others stay Spark-side).
 
 from __future__ import annotations
 
+import sys
 from typing import Any
 
 from pyspark.sql.datasource import DataSource, DataSourceReader
@@ -76,26 +77,25 @@ def csv_config_from_options(options: dict) -> CsvConfig:
 
 
 def read_csv_header(path: str, config: CsvConfig) -> list[str]:
-    """Driver-side: parse just the header row (or infer Excel names from
-    the first row's cell count when header=false)."""
+    """Driver-side: the header row's cells (or Excel names for the first
+    row's cell count when header=false). Reads only until that row is
+    complete: the first data row of a header file is never parsed here."""
     from tectonic_spark.core.value_builder import ValueBuilderPlate
 
-    plate = ValueBuilderPlate()
-    parser = CsvParser(plate, config)
-    rows: list[Any] = []
+    parser = CsvParser(ValueBuilderPlate(), config)
     with open_input(path) as fh:
-        while not rows:
+        while True:
             chunk = fh.read(64 * 1024)
             res = parser.finish() if not chunk else parser.absorb(chunk)
             if isinstance(res, Failure):
                 raise res.error
-            rows.extend(res.value)
+            if parser.header_names is not None:
+                return parser.header_names
+            if res.value:
+                first = res.value[0]
+                return list(first.keys()) if isinstance(first, dict) else []
             if not chunk:
-                break
-    if not rows:
-        return []
-    first = rows[0]
-    return list(first.keys()) if isinstance(first, dict) else []
+                return []
 
 
 class TectonicCsvDataSource(DataSource):
@@ -386,7 +386,13 @@ class TectonicCsvReader(DataSourceReader):
                         return
                 elif skip:
                     return  # header-only block
-            rows = list(_csv.reader(_io.StringIO(block.decode("utf-8")), **dialect))
+            # the event path reads a cell of any size: lift the stdlib
+            # reader's 128 KiB field limit for this block
+            limit = _csv.field_size_limit(sys.maxsize)
+            try:
+                rows = list(_csv.reader(_io.StringIO(block.decode("utf-8")), **dialect))
+            finally:
+                _csv.field_size_limit(limit)
             if skip:
                 rows = rows[1:]
             yield from finish_rows([r for r in rows if r], last_block=last)

@@ -235,6 +235,17 @@ def read_split_chunks(
     cross-block state. A line longer than ``max_line_bytes`` raises
     ParseException, at most one read after its held bytes pass the bound;
     the reads of a line in progress are joined once, at its newline."""
+    for _at, block in read_split_blocks(split, chunk_bytes, max_line_bytes):
+        yield block
+
+
+def read_split_blocks(
+    split: FileSplit,
+    chunk_bytes: int = _CHUNK,
+    max_line_bytes: int | None = None,
+) -> Iterator[tuple[int, bytes]]:
+    """:func:`read_split_chunks`, each block with its byte offset in the
+    (decompressed) file."""
     with open_input(split.file) as fh:
         compressed = split.file.lower().endswith(_COMPRESSED_EXTS)
         # the held line's offset
@@ -247,7 +258,7 @@ def read_split_chunks(
                 block = b"".join(held + [chunk[:cut]]) if held else chunk[:cut]
                 if max_line_bytes is not None:
                     _check_lines(split, block, at, max_line_bytes)
-                yield block
+                yield at, block
                 at += len(block)
                 held, n_held = [], 0
             if cut < len(chunk):
@@ -259,7 +270,7 @@ def read_split_chunks(
         if tail:
             if max_line_bytes is not None:
                 _check_lines(split, tail, at, max_line_bytes)
-            yield tail  # final line without trailing newline
+            yield at, tail  # final line without trailing newline
 
 
 def _check_lines(split: FileSplit, block: bytes, at: int, max_line_bytes: int) -> None:
@@ -276,20 +287,37 @@ def _check_lines(split: FileSplit, block: bytes, at: int, max_line_bytes: int) -
         pos = nl + 1
 
 
-def _line_too_long(split: FileSplit, at: int, n: int, max_line_bytes: int) -> ParseException:
-    """The error for a line of at least ``n`` bytes at byte ``at`` of the
-    (decompressed) file; its line number is counted from the file start."""
+def _file_line(path: str, at: int) -> int:
+    """The line number of byte ``at`` of the (decompressed) file, counted
+    from the file start: error paths only, it reads the file again."""
     line, left = 1, at
-    with open_input(split.file) as fh:
+    with open_input(path) as fh:
         while left > 0 and (chunk := fh.read(min(_CHUNK, left))):
             line += chunk.count(b"\n")
             left -= len(chunk)
+    return line
+
+
+def _line_too_long(split: FileSplit, at: int, n: int, max_line_bytes: int) -> ParseException:
+    """The error for a line of at least ``n`` bytes at byte ``at`` of the
+    (decompressed) file."""
     return ParseException(
         f"line of {n}+ bytes exceeds maxValueBytes={max_line_bytes}; "
         "raise the option or split the input",
         at,
-        line,
+        _file_line(split.file, at),
         1,
+    )
+
+
+def _in_file(split: FileSplit, e: ParseException, at: int) -> ParseException:
+    """``e``, raised by a parser fed the lines from byte ``at`` of the
+    split's file, naming the file and placed in it."""
+    return ParseException(
+        f"failed to parse {split.file}: {e.message}",
+        at + e.index,
+        _file_line(split.file, at) + e.line - 1,
+        e.col,
     )
 
 
@@ -731,12 +759,12 @@ class TectonicJsonReader(DataSourceReader):
         if self.fast_path:
             yield from self._read_lines_fast(split)
             return
-        for block in read_split_chunks(split, max_line_bytes=self.max_value_bytes):
+        for at, block in read_split_blocks(split, max_line_bytes=self.max_value_bytes):
             corrupt: list[str | None] | None = None
             rows, error = self._parse_block(block)
             if error is not None:
                 if self.parse_mode == "FAILFAST":
-                    raise error
+                    raise _in_file(split, error, at)
                 rows, corrupt = self._reparse_block(block)
             yield from self._to_batches(rows, corrupt)
 
@@ -931,7 +959,7 @@ class TectonicJsonReader(DataSourceReader):
             # threads would oversubscribe
             read_opts = paj.ReadOptions(use_threads=False)
 
-        for block in read_split_chunks(split, max_line_bytes=self.max_value_bytes):
+        for at, block in read_split_blocks(split, max_line_bytes=self.max_value_bytes):
             if arrow_schema is not None and block.strip():
                 # NO probe here: C++ whole-block parse (~250 MB/s/core)
                 # beats Python line-splitting + probe even at high filter
@@ -955,15 +983,19 @@ class TectonicJsonReader(DataSourceReader):
                         chunk = table.slice(lo, self.batch_rows).combine_chunks()
                         yield from chunk.to_batches()
                     continue
-            yield from self._python_lines_block(block, probe, has_corrupt)
+            yield from self._python_lines_block(split, at, block, probe, has_corrupt)
 
-    def _python_lines_block(self, block: bytes, probe, has_corrupt: bool):
-        """Per-line parse of one block: full malformed-row semantics and
-        pre-Arrow pushdown test application."""
+    def _python_lines_block(
+        self, split: FileSplit, at: int, block: bytes, probe, has_corrupt: bool
+    ):
+        """Per-line parse of the block at byte ``at`` of the split's file:
+        full malformed-row semantics and pre-Arrow pushdown test
+        application."""
         loads = window_loads(block)
         rows: list[Any] = []
         corrupt: list[str | None] = []
-        for line in block.split(b"\n"):
+        lines = block.split(b"\n")
+        for k, line in enumerate(lines):
             if not line.strip():
                 continue
             if probe is not None and not probe(line):
@@ -971,18 +1003,17 @@ class TectonicJsonReader(DataSourceReader):
             try:
                 # a BOM opens a line, as the event path's per-line reparse allows
                 row = loads(line.removeprefix(BOM_UTF8))
-            except ValueError as e:
+            except ValueError:
                 # one grammar: C decoding checks the whole line, the event
                 # parser skips values outside the read schema unchecked
-                line_rows = self._parse_line(line)
+                line_rows, error = self._parse_line(line)
                 if line_rows is not None:
                     rows.extend(line_rows)
                     corrupt.extend([None] * len(line_rows))
                     continue
                 if self.parse_mode == "FAILFAST":
-                    raise ValueError(
-                        f"failed to parse JSON line ({e}): {line[:120]!r}"
-                    ) from e
+                    start = sum(map(len, lines[:k])) + k
+                    raise _in_file(split, error, at + start) from None
                 if self.parse_mode == "PERMISSIVE":
                     rows.append(None)
                     corrupt.append(line.decode("utf-8", errors="replace"))
@@ -1021,7 +1052,7 @@ class TectonicJsonReader(DataSourceReader):
         for line in block.split(b"\n"):
             if not line.strip():
                 continue
-            line_rows = self._parse_line(line)
+            line_rows, _error = self._parse_line(line)
             if line_rows is not None:
                 rows.extend(line_rows)
                 corrupt.extend([None] * len(line_rows))
@@ -1031,17 +1062,18 @@ class TectonicJsonReader(DataSourceReader):
             # DROPMALFORMED: swallow the line
         return rows, corrupt
 
-    def _parse_line(self, line: bytes) -> list[Any] | None:
-        """The event parser's rows for one line, or None if it is malformed."""
+    def _parse_line(self, line: bytes) -> tuple[list[Any] | None, ParseException | None]:
+        """The event parser's rows for one line, or its error if the line
+        is malformed."""
         parser = JsonParser(self._new_plate(), Mode.VALUE_STREAM)
         rows: list[Any] = []
         res = parser.parse_complete(line)
         while not isinstance(res, Failure):
             rows.extend(res.value)
             if not isinstance(res, Partial):
-                return rows
+                return rows, None
             res = parser.resume()
-        return None
+        return None, res.error
 
     def _to_batches(self, rows: list[Any], corrupt_raw: list[str | None] | None = None):
         data_schema = self.data_schema

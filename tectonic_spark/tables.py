@@ -150,6 +150,48 @@ def spread_small_scan(
     return df.repartition(parallelism, *key)
 
 
+def map_documents(
+    spark: SparkSession,
+    sf_dir: str,
+    m: int,
+    r: int,
+    schema: StructType,
+    fn,
+    *cols: str,
+    batch: bool = False,
+) -> DataFrame:
+    """The one per-document kernel of the decode and census queries.
+
+    Selects ``doc_id`` and ``cols`` from ``documents`` where
+    ``doc_id % m == r``, spreads the scan with :func:`spread_small_scan`
+    (the kernels are CPU-heavy and the scan is tiny at small scale), and
+    maps each Arrow batch in ``mapInPandas``. ``fn(doc_id, *values)``
+    returns one output row per document; with ``batch=True``,
+    ``fn(doc_ids, *value_lists)`` returns the rows of the whole batch, for
+    decoders that work on many payloads at once. ``doc_id`` arrives as a
+    Python int, rows are tuples in the field order of ``schema``.
+    """
+    from pyspark.sql import functions as F
+
+    docs = (
+        table(spark, sf_dir, "documents")
+        .select("doc_id", *cols)
+        .where(F.col("doc_id") % m == r)
+    )
+    docs = spread_small_scan(docs, spark, "doc_id")
+    names = schema.fieldNames()
+
+    def kernel(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            args = [[int(d) for d in pdf["doc_id"]], *(list(pdf[c]) for c in cols)]
+            rows = fn(*args) if batch else [fn(*a) for a in zip(*args)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return docs.mapInPandas(kernel, schema)
+
+
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
 

@@ -490,6 +490,43 @@ def test_single_value_rejects_second():
     assert isinstance(r, Failure)
 
 
+@pytest.mark.parametrize(
+    "mode, head, close",
+    [
+        (Mode.UNWRAP_ARRAY, b'[{"a": 1},\n{"b": 2, BROKEN\n', b"]\n"),
+        (Mode.SINGLE_VALUE, b'{"b": 2, BROKEN\n', b"}\n"),
+    ],
+)
+def test_direct_value_scan_resumes_across_absorbs(monkeypatch, mode, head, close):
+    """A value that stays open for many absorbs is raw-scanned once on the
+    direct-value route, not once per absorb from its start."""
+    from tectonic_spark.core import json_parser
+    from tectonic_spark.core.value_builder import ValueBuilderPlate
+
+    class CountingRun:
+        def __init__(self, rx):
+            self.rx, self.visited = rx, 0
+
+        def match(self, buf, pos):
+            m = self.rx.match(buf, pos)
+            self.visited += m.end() - pos + 1
+            return m
+
+    run = CountingRun(json_parser._RUN_RE)
+    monkeypatch.setattr(json_parser, "_RUN_RE", run)
+    body = b"".join(b'{"k": %d, "v": "abcdefghij"},\n' % i for i in range(36000))
+    data = head + body + b'{"z": 0}' + close
+    p = JsonParser(ValueBuilderPlate(), mode)
+    for off in range(0, len(data), 64 << 10):
+        r = p.absorb(data[off : off + (64 << 10)])
+        if isinstance(r, Failure):
+            break
+    assert off + (64 << 10) >= len(data)  # the value closes in the last block
+    assert isinstance(r, Failure)
+    assert str(r.error).startswith('expected " got B')
+    assert run.visited <= 2 * len(data)
+
+
 # --- malformed inputs (A8) --------------------------------------------------
 
 

@@ -26,6 +26,11 @@ FAST_SUBSET = [
     "c03_lang_id",
     "c03_chunking",
     "c03_redaction",
+    "c03_markdown_census",
+    # per-document decoders and census queries on tables.map_documents
+    "m12_flac_decode",
+    "m19_tiff_decode",
+    "m24_pdf_extract",
     # the CDXJ / ZipNum web-archive index family
     "a30_cdxj_fetch",
     "a36_zipnum_lookup",

@@ -372,6 +372,107 @@ def test_operators_fetch_members_only_through_shard_records():
     assert problems == []
 
 
+_DOC_KERNEL_HELPERS = {"map_documents"}
+
+
+def _doc_kernel_copies(source: str, filename: str) -> list[str]:
+    """Functions of ``source`` that copy the per-document kernel by hand:
+    each selects ``documents`` by ``doc_id %``, spreads the scan with
+    ``spread_small_scan`` and runs ``mapInPandas`` itself, instead of
+    calling ``tables.map_documents``. One line per outermost such function,
+    at any nesting depth."""
+    import ast
+
+    def calls(node: ast.AST, name: str) -> bool:
+        fn = getattr(node, "func", None)
+        got = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+        return isinstance(node, ast.Call) and got == name
+
+    def doc_id_mod(node: ast.AST) -> bool:
+        return (
+            isinstance(node, ast.BinOp)
+            and isinstance(node.op, ast.Mod)
+            and any(
+                isinstance(c, ast.Constant) and c.value == "doc_id"
+                for c in ast.walk(node.left)
+            )
+        )
+
+    tree = ast.parse(source, filename)
+    inside: set[int] = set()
+    problems = []
+    for f in ast.walk(tree):
+        if not isinstance(f, ast.FunctionDef) or id(f) in inside:
+            continue
+        if f.name in _DOC_KERNEL_HELPERS:
+            continue
+        nodes = list(ast.walk(f))
+        if (
+            any(doc_id_mod(n) for n in nodes)
+            and any(calls(n, "spread_small_scan") for n in nodes)
+            and any(calls(n, "mapInPandas") for n in nodes)
+        ):
+            inside.update(id(n) for n in nodes)
+            problems.append((f.lineno, f"{filename}:{f.lineno}: {f.name}"))
+    return [p for _line, p in sorted(problems)]
+
+
+def test_doc_kernel_scan_flags_a_copy():
+    # m19_tiff_decode as it was before map_documents, fixture builder elided
+    bad = (
+        "def m19_tiff_decode(spark, sf_dir: str) -> DataFrame:\n"
+        "    import numpy as np\n"
+        "\n"
+        "    docs = (\n"
+        "        table(spark, sf_dir, 'documents')\n"
+        "        .select('doc_id')\n"
+        "        .where(F.col('doc_id') % 47 == 17)\n"
+        "    )\n"
+        "    docs = spread_small_scan(docs, spark, 'doc_id')\n"
+        "    schema = StructType([StructField('doc_id', LongType(), True)])\n"
+        "\n"
+        "    def walk(batches):\n"
+        "        from tectonic_spark.operators.tiff import decode_tiff\n"
+        "\n"
+        "        rows = []\n"
+        "        for pdf in batches:\n"
+        "            for doc_id in pdf['doc_id']:\n"
+        "                d = int(doc_id)\n"
+        "                px = decode_tiff(tiff_payload(d))\n"
+        "                rows.append((d,))\n"
+        "        yield pd.DataFrame(rows, columns=['doc_id'])\n"
+        "\n"
+        "    return docs.mapInPandas(walk, schema)\n"
+    )
+    good = (
+        "def map_documents(spark, sf_dir, m, r, schema, fn, *cols):\n"
+        "    docs = table(spark, sf_dir, 'documents').where(F.col('doc_id') % m == r)\n"
+        "    docs = spread_small_scan(docs, spark, 'doc_id')\n"
+        "    return docs.mapInPandas(kernel, schema)\n"
+        "def m19_tiff_decode(spark, sf_dir):\n"
+        "    def walk(d):\n"
+        "        return (d,)\n"
+        "    return map_documents(spark, sf_dir, 47, 17, schema, walk)\n"
+        "def m08_jpeg_decode(spark, sf_dir):\n"
+        "    docs = table(spark, sf_dir, 'documents').where(F.col('doc_id') % 3 == 0)\n"
+        "    return m08_decode_kernel(spread_small_scan(docs, spark, 'doc_id'))\n"
+    )
+    assert _doc_kernel_copies(bad, "bad.py") == ["bad.py:1: m19_tiff_decode"]
+    assert _doc_kernel_copies(good, "good.py") == []
+
+
+def test_per_document_kernels_go_through_map_documents():
+    """One per-document kernel: no operator selects ``documents`` by
+    ``doc_id %`` and spreads and maps the scan by hand; every such query
+    calls ``tables.map_documents``."""
+    import pathlib
+
+    problems = []
+    for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
+        problems += _doc_kernel_copies(path.read_text(), path.name)
+    assert problems == []
+
+
 def _session_builders(source: str, filename: str) -> list[str]:
     """Lines of ``source`` that reach ``SparkSession.builder``, directly, as
     ``pyspark.sql.SparkSession.builder`` or through an imported alias."""

@@ -470,6 +470,30 @@ class TestJsonDataSource:
         with pytest.raises(Exception, match="(?i)expected|parse"):
             df.collect()
 
+    @pytest.mark.parametrize("fast_path", ["true", "false"])
+    def test_failfast_names_the_file_and_its_line(self, tmp_path, fast_path):
+        from tectonic_spark.core.result import ParseException
+        from tectonic_spark.sources.json_source import FileSplit, TectonicJsonDataSource
+
+        lines = [b'{"a": %d, "b": "x%d"}' % (i, i) for i in range(1, 101)]
+        lines[70] = b'{"a": BROKEN}'
+        p = tmp_path / "bad.json"
+        p.write_bytes(b"\n".join(lines) + b"\n")
+        ds = TectonicJsonDataSource(
+            options={"path": str(p), "parsemode": "FAILFAST", "fastpath": fast_path}
+        )
+        reader = ds.reader(ds.schema())
+        size = p.stat().st_size
+        splits = [FileSplit(str(p), 0, size // 2, size), FileSplit(str(p), size // 2, size, size)]
+        with pytest.raises(ParseException, match="(?i)expected|parse") as err:
+            for split in splits:
+                for _ in reader.read(split):
+                    pass
+        e = err.value
+        assert str(p) in e.message
+        assert (e.line, e.col) == (71, 7)
+        assert e.index == len(b"\n".join(lines[:70])) + 1 + 6
+
 
 class TestCsvDataSource:
     def test_roundtrip_unix(self, spark, tmp_path):
@@ -499,6 +523,51 @@ class TestCsvDataSource:
         df = spark.read.format("tectonic-csv").option("lineSep", "\n").load(str(p))
         r = df.collect()[0]
         assert (r.x, r.y) == ("a,b", 'c"d')
+
+    @pytest.mark.parametrize("fast_path", ["true", "false"])
+    def test_cell_over_stdlib_field_limit(self, spark, tmp_path, fast_path):
+        # pyarrow rejects the block; the stdlib fallback must read the
+        # 3 MB cell as the event path does (csv's default limit is 128 KiB)
+        p = tmp_path / "t.csv"
+        p.write_text("a,b\n1,x\n2," + "y" * 3_000_000 + "\n3,z\n")
+        df = (
+            spark.read.format("tectonic-csv")
+            .option("lineSep", "\n")
+            .option("fastPath", fast_path)
+            .load(str(p))
+        )
+        rows = sorted((r.a, len(r.b)) for r in df.collect())
+        assert rows == [("1", 1), ("2", 3_000_000), ("3", 1)]
+
+    def test_header_read_stops_at_the_header_row(self, tmp_path, monkeypatch):
+        from tectonic_spark.core.csv_parser import CsvConfig
+        from tectonic_spark.sources import csv_source
+
+        p = tmp_path / "t.csv"
+        p.write_bytes(b"a,b\n1," + b"y" * (8 << 20) + b"\n")
+        reads = []
+        real_open = csv_source.open_input
+
+        class Counting:
+            def __init__(self, fh):
+                self._fh = fh
+
+            def __enter__(self):
+                return self
+
+            def __exit__(self, *exc):
+                self._fh.close()
+
+            def read(self, n=-1):
+                reads.append(len(b := self._fh.read(n)))
+                return b
+
+        monkeypatch.setattr(csv_source, "open_input", lambda path: Counting(real_open(path)))
+        assert csv_source.read_csv_header(str(p), CsvConfig.unix()) == ["a", "b"]
+        assert reads == [64 * 1024]
+        reads.clear()
+        names = csv_source.read_csv_header(str(p), CsvConfig.unix(header=False))
+        assert names == ["A", "B"]
 
     def test_split_invariance_with_header(self, spark, tmp_path):
         p = tmp_path / "big.csv"
