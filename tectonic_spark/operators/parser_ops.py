@@ -32,14 +32,17 @@ _DOC_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
 
 def _run_stream(q) -> list[dict]:
     """Run a started streaming query to completion, stop it, and return
-    its ``recentProgress`` (one dict per micro-batch, oldest first).
+    its ``recentProgress`` (one dict per micro-batch, oldest first; a
+    watermarked query's trailing no-data batch is one of them, with
+    ``numInputRows == 0``). Registered queries reach it through
+    ``_stream_into``.
 
     ``processAllAvailable()`` blocks until every offset the sources
     report has been processed and committed, including the trailing
     no-data batch that advances the watermark, and re-raises the
     stream's own ``StreamingQueryException`` as soon as it dies. It
-    serves processingTime and availableNow triggers alike. Do not swap
-    a rate-limited tectonic source to availableNow: a Python
+    serves processingTime and availableNow triggers alike, but a
+    rate-limited tectonic source needs processingTime: a Python
     ``DataSourceStreamReader`` has no admission-control hook, so
     availableNow stops at the first capped ``latestOffset``.
 
@@ -65,6 +68,51 @@ def _run_stream(q) -> list[dict]:
         )
     return q.recentProgress
 
+
+def _stream_into(
+    stream: DataFrame,
+    sf_dir: str,
+    name: str,
+    *,
+    foreach: Callable[[DataFrame, int], None] | None = None,
+    min_batches: int = 1,
+) -> tuple[DataFrame | None, int]:
+    """Run ``stream`` to completion and return ``(sink, n_batches)``.
+
+    Each call is a fresh run: the checkpoint ``<name>_ck`` under the
+    fixture directory is removed first. Without ``foreach`` the rows go
+    to a fresh append-mode parquet sink ``<name>_sink``, and ``sink`` is
+    that directory read back; with ``foreach`` each micro-batch goes to
+    ``foreach(batch_df, batch_id)`` and ``sink`` is None. Every stream
+    uses one 50 ms processingTime trigger (see ``_run_stream``).
+
+    ``n_batches`` counts the micro-batches that read rows: a watermark's
+    trailing no-data batch is not one. Raises unless it is at least
+    ``min_batches``."""
+    import shutil
+
+    base = _fixture_dir(sf_dir)
+    ck = os.path.join(base, f"{name}_ck")
+    out = None if foreach else os.path.join(base, f"{name}_sink")
+    for d in (ck, out):
+        if d:
+            shutil.rmtree(d, ignore_errors=True)
+    writer = stream.writeStream.option("checkpointLocation", ck).trigger(
+        processingTime="50 milliseconds"
+    )
+    if foreach:
+        writer = writer.foreachBatch(foreach)
+    else:
+        writer = writer.format("parquet").option("path", out).outputMode("append")
+    progress = _run_stream(writer.start())
+    n_batches = sum(1 for p in progress if p["numInputRows"] > 0)
+    if n_batches < min_batches:
+        raise RuntimeError(
+            f"{name}: only {n_batches} micro-batches read rows, "
+            f"the query needs {min_batches}"
+        )
+    sink = None if foreach else stream.sparkSession.read.parquet(out)
+    return sink, n_batches
 
 
 def _fixture_dir(sf_dir: str) -> str:
@@ -612,39 +660,23 @@ def a09_json_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "DataSourceStreamReader (directory-snapshot offsets, executor-side "
     "byte-range splits) into a checkpointed parquet sink, and the sink is "
     "aggregated — so the streaming source's output sits under the same "
-    "DuckDB oracle as a batch scan. Python sources fall back to a single "
-    "micro-batch under availableNow; offset continuation is covered by "
-    "tests/test_streaming.py.",
+    "DuckDB oracle as a batch scan. With no rate limit the source offers "
+    "every file in one micro-batch; offset continuation is covered by "
+    "s03 and tests/test_streaming.py.",
 )
 def s01_stream_jsonl_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     path = documents_jsonl(sf_dir)
     register_tectonic_sources(spark)
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s01_sink")
-    ck = os.path.join(base, "s01_ck")
-    for d in (out, ck):  # deterministic fresh run per invocation
-        shutil.rmtree(d, ignore_errors=True)
     stream = (
         spark.readStream.format("tectonic-json")
         .schema("doc_id long, text string, lang string, source string, n_chars long")
         .load(path)
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _run_stream(q)
+    sink, _ = _stream_into(stream, sf_dir, "s01")
     return (
-        spark.read.parquet(out)
-        .groupBy("lang")
+        sink.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("n_chars").alias("chars"),
@@ -666,17 +698,10 @@ def s01_stream_jsonl_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming row.",
 )
 def s02_stream_csv_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     path = documents_csv(sf_dir)
     register_tectonic_sources(spark)
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s02_sink")
-    ck = os.path.join(base, "s02_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
     stream = (
         spark.readStream.format("tectonic-csv")
         .option("lineSep", "\n")
@@ -685,18 +710,9 @@ def s02_stream_csv_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .load(path)
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _run_stream(q)
+    sink, _ = _stream_into(stream, sf_dir, "s02")
     return (
-        spark.read.parquet(out)
-        .groupBy("lang")
+        sink.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("n_chars").cast("long")).alias("chars"),
@@ -715,13 +731,11 @@ def s02_stream_csv_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with maxFilesPerTrigger=2, so the query must commit ≥2 micro-batches "
     "— offset continuation (directory high-water mark advancing across "
     "triggers) produces the sink, and the builder raises unless the "
-    "checkpoint recorded ≥2 batches AND the sink holds every row. "
+    "query read rows in ≥2 micro-batches AND the sink holds every row. "
     "Reference analog: the fs2 pull loop re-entering absorb/churn per "
     "chunk (fs2/StreamParser.scala:52-68).",
 )
 def s03_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     register_tectonic_sources(spark)
@@ -738,11 +752,6 @@ def s03_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _published(os.path.join(base, "s03_src"), build)
 
-    out = os.path.join(base, "s03_sink")
-    ck = os.path.join(base, "s03_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
     expected = sum(1 for line in open(documents_jsonl(sf_dir), "rb") if line.strip())
     stream = (
         spark.readStream.format("tectonic-json")
@@ -750,29 +759,15 @@ def s03_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "2")
         .load(src)
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
-    n_commits = len(_run_stream(q))
-    sink_rows = spark.read.parquet(out).count()
+    sink, n_batches = _stream_into(stream, sf_dir, "s03", min_batches=2)
+    sink_rows = sink.count()
     if sink_rows < expected:
         raise RuntimeError(
             f"s03: sink has {sink_rows} rows, expected {expected} "
-            f"after {n_commits} micro-batches"
-        )
-    if n_commits < 2:
-        raise RuntimeError(
-            f"s03: only {n_commits} committed micro-batches — "
-            "maxFilesPerTrigger continuation did not engage"
+            f"after {n_batches} micro-batches"
         )
     return (
-        spark.read.parquet(out)
-        .groupBy("lang")
+        sink.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("n_chars").alias("chars"),
@@ -829,6 +824,24 @@ def _events_stream_src(sf_dir: str) -> tuple[str, int]:
     return _published(os.path.join(base, "s04_src2"), build), expected
 
 
+def _events_session_count(sf_dir: str) -> int:
+    """Sessions in ``events`` with a 30-minute gap (gaps and islands per
+    user): the count s05 and s09 must each emit."""
+    import duckdb
+
+    path = os.path.join(sf_dir, "events.parquet")
+    return duckdb.sql(
+        f"""
+        WITH lagged AS (
+          SELECT user_id, ts,
+                 LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+          FROM '{path}')
+        SELECT COUNT(*) FROM lagged
+        WHERE prev_ts IS NULL OR ts - prev_ts >= INTERVAL 30 MINUTE
+        """
+    ).fetchone()[0]
+
+
 @register(
     "s04_stream_watermark",
     oracle="""
@@ -847,23 +860,15 @@ def _events_stream_src(sf_dir: str) -> tuple[str, int]:
     "file pushes the watermark past every real window so append mode "
     "finalizes and emits them (the sentinel's own window stays open and is "
     "never emitted — exactly the late-data contract). The builder raises "
-    "unless ≥2 micro-batches committed and every expected group reached "
+    "unless ≥2 micro-batches read rows and every expected group reached "
     "the sink. Reference analog: the fs2 incremental pipeline; Spark-side "
     "this is Structured Streaming state store + event-time watermark.",
 )
 def s04_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     register_tectonic_sources(spark)
     src, expected = _events_stream_src(sf_dir)
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s04_sink")
-    ck = os.path.join(base, "s04_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
     stream = (
         spark.readStream.format("tectonic-json")
         .schema("event_id long, ts_us long, event_type string, value double")
@@ -887,27 +892,14 @@ def s04_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
-    n_commits = len(_run_stream(q))
-    sink_rows = spark.read.parquet(out).count()
+    sink, _ = _stream_into(agg, sf_dir, "s04", min_batches=2)
+    sink_rows = sink.count()
     if sink_rows < expected:
         raise RuntimeError(
             f"s04: sink has {sink_rows} finalized groups, expected {expected} — "
             "watermark did not close every real window"
         )
-    if n_commits < 2:
-        raise RuntimeError(
-            f"s04: only {n_commits} committed micro-batches — rate-limited "
-            "continuation did not engage"
-        )
-    return spark.read.parquet(out).where(F.col("event_type") != "__flush__")
+    return sink.where(F.col("event_type") != "__flush__")
 
 
 @register(
@@ -948,31 +940,11 @@ def s04_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semantics (not processing-time timeouts) decide emission.",
 )
 def s05_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    import duckdb
-
     from pyspark.sql import functions as F
 
     register_tectonic_sources(spark)
     src, _ = _events_stream_src(sf_dir)
-    path = os.path.join(sf_dir, "events.parquet")
-    expected = duckdb.sql(
-        f"""
-        WITH lagged AS (
-          SELECT user_id, ts,
-                 LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-          FROM '{path}')
-        SELECT COUNT(*) FROM lagged
-        WHERE prev_ts IS NULL OR ts - prev_ts >= INTERVAL 30 MINUTE
-        """
-    ).fetchone()[0]
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s05_sink")
-    ck = os.path.join(base, "s05_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
+    expected = _events_session_count(sf_dir)
     stream = (
         spark.readStream.format("tectonic-json")
         .schema("event_id long, ts_us long, user_id long, event_type string, value double")
@@ -988,22 +960,14 @@ def s05_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", F.col("w.start").alias("session_start"), "n_events"
         )
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
-    _run_stream(q)
-    sink_rows = spark.read.parquet(out).count()
+    sink, _ = _stream_into(agg, sf_dir, "s05")
+    sink_rows = sink.count()
     if sink_rows < expected:
         raise RuntimeError(
             f"s05: sink has {sink_rows} finalized sessions, expected "
             f"{expected} — watermark did not close every real session"
         )
-    return spark.read.parquet(out).where(F.col("user_id") >= 0)
+    return sink.where(F.col("user_id") >= 0)
 
 
 _DUP_CARRIED = 50  # a quarter's last lines, repeated at the head of the next
@@ -1087,27 +1051,19 @@ def _events_dup_stream_src(sf_dir: str) -> tuple[str, int, int]:
     "dropDuplicatesWithinWatermark(event_id) behind a 2-day watermark "
     "must drop every one across batch boundaries via the streaming state "
     "store. The builder raises unless >0 dups were injected, >=2 "
-    "micro-batches committed, and the sink holds EXACTLY the distinct "
+    "micro-batches read rows, and the sink holds EXACTLY the distinct "
     "count — then aggregates the sink under the batch oracle. 100 TB "
     "shape: state is keyed by event_id and evicted at ts+delay < "
     "watermark, so state size is bounded by key arrival rate x delay, "
     "not stream length.",
 )
 def s06_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     register_tectonic_sources(spark)
     src, n_distinct, n_dups = _events_dup_stream_src(sf_dir)
     if n_dups <= 0:
         raise RuntimeError("s06: fixture injected no duplicates")
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s06_sink")
-    ck = os.path.join(base, "s06_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
     stream = (
         spark.readStream.format("tectonic-json")
         .schema(
@@ -1126,16 +1082,8 @@ def s06_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "2 days")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
-    n_commits = len(_run_stream(q))
-    sink_rows = spark.read.parquet(out).count()
+    sink, _ = _stream_into(deduped, sf_dir, "s06", min_batches=2)
+    sink_rows = sink.count()
     if sink_rows < n_distinct:
         raise RuntimeError(
             f"s06: sink has {sink_rows} rows, expected {n_distinct}"
@@ -1145,14 +1093,8 @@ def s06_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"s06: sink has {sink_rows} rows > {n_distinct} distinct — "
             f"streaming dedup let duplicates through ({n_dups} injected)"
         )
-    if n_commits < 2:
-        raise RuntimeError(
-            f"s06: only {n_commits} committed micro-batches — duplicates "
-            "never crossed a batch boundary"
-        )
     return (
-        spark.read.parquet(out)
-        .groupBy("event_type")
+        sink.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(27,6)"))
@@ -1180,24 +1122,16 @@ def s06_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffled), lands enriched rows in a checkpointed parquet sink, and "
     "the sink aggregates per nation under the batch oracle. The flush "
     "sentinel (user_id = -1) falls out of the inner join by design. The "
-    "builder raises unless >=2 micro-batches committed and every "
+    "builder raises unless >=2 micro-batches read rows and every "
     "enriched row arrived.",
 )
 def s07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     from tectonic_spark.tables import table
 
     register_tectonic_sources(spark)
     src, _ = _events_stream_src(sf_dir)
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s07_sink")
-    ck = os.path.join(base, "s07_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
     expected = table(spark, sf_dir, "events").count()  # sentinel excluded
     dim = (
         table(spark, sf_dir, "customer")
@@ -1219,28 +1153,14 @@ def s07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = stream.join(F.broadcast(dim), "user_id").select(
         "event_id", "nation", "value"
     )
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
-    n_commits = len(_run_stream(q))
-    sink_rows = spark.read.parquet(out).count()
+    sink, _ = _stream_into(enriched, sf_dir, "s07", min_batches=2)
+    sink_rows = sink.count()
     if sink_rows < expected:
         raise RuntimeError(
             f"s07: sink has {sink_rows} enriched rows, expected {expected}"
         )
-    if n_commits < 2:
-        raise RuntimeError(
-            f"s07: only {n_commits} committed micro-batches — rate-limited "
-            "continuation did not engage"
-        )
     return (
-        spark.read.parquet(out)
-        .groupBy("nation")
+        sink.groupBy("nation")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(27,6)"))
@@ -1270,27 +1190,19 @@ def s07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "watermark + range bound state eviction; because events arrive in ts "
     "order, no match can be evicted before its partner arrives, so the "
     "emitted pair-set equals the batch self-join exactly. The builder "
-    "raises unless >=2 micro-batches committed and the sink holds "
+    "raises unless >=2 micro-batches read rows and the sink holds "
     "EXACTLY the batch pair count; the sink then aggregates per user "
     "under the batch oracle. This completes the streaming matrix: "
     "source/sink, multi-batch, watermark agg, session store, dedup "
     "state, stream-static join, stream-stream join.",
 )
 def s08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     from tectonic_spark.tables import table
 
     register_tectonic_sources(spark)
     src, _ = _events_stream_src(sf_dir)
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s08_sink")
-    ck = os.path.join(base, "s08_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
     ev = table(spark, sf_dir, "events")
     ba = ev.where(F.col("event_type") == "click").select(
         F.col("user_id").alias("a_uid"), F.col("ts").alias("a_ts")
@@ -1336,28 +1248,14 @@ def s08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("b_ts") >= F.col("a_ts"))
         & (F.col("b_ts") <= F.col("a_ts") + F.expr("INTERVAL 30 MINUTES")),
     ).select("user_id", "a_ts", "b_ts", "purchase_value")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
-    n_commits = len(_run_stream(q))
-    sink_rows = spark.read.parquet(out).count()
+    sink, _ = _stream_into(joined, sf_dir, "s08", min_batches=2)
+    sink_rows = sink.count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s08: sink has {sink_rows} pairs, batch join says {expected}"
         )
-    if n_commits < 2:
-        raise RuntimeError(
-            f"s08: only {n_commits} committed micro-batches — rate-limited "
-            "continuation did not engage"
-        )
     return (
-        spark.read.parquet(out)
-        .groupBy("user_id")
+        sink.groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
             F.sum(F.col("purchase_value").cast("decimal(27,6)"))
@@ -1449,32 +1347,12 @@ def _s09_sessionize(key, pdfs, state):
     "Arrow-batched both directions.",
 )
 def s09_custom_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    import duckdb
-
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     register_tectonic_sources(spark)
     src, _ = _events_stream_src(sf_dir)
-    path = os.path.join(sf_dir, "events.parquet")
-    expected = duckdb.sql(
-        f"""
-        WITH lagged AS (
-          SELECT user_id, ts,
-                 LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-          FROM '{path}')
-        SELECT COUNT(*) FROM lagged
-        WHERE prev_ts IS NULL OR ts - prev_ts >= INTERVAL 30 MINUTE
-        """
-    ).fetchone()[0]
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s09_sink")
-    ck = os.path.join(base, "s09_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
+    expected = _events_session_count(sf_dir)
     stream = (
         spark.readStream.format("tectonic-json")
         .schema(
@@ -1500,25 +1378,16 @@ def s09_custom_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    q = (
-        sessions.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
-    _run_stream(q)
-    sink_rows = spark.read.parquet(out).where(F.col("user_id") >= 0).count()
+    sink, _ = _stream_into(sessions, sf_dir, "s09")
+    closed = sink.where(F.col("user_id") >= 0)
+    sink_rows = closed.count()
     if sink_rows < expected:
         raise RuntimeError(
             f"s09: sink has {sink_rows} closed sessions, expected {expected} "
             "— event-time timeouts did not flush every session"
         )
     return (
-        spark.read.parquet(out)
-        .where(F.col("user_id") >= 0)
-        .select(
+        closed.select(
             "user_id",
             F.timestamp_micros("start_us").alias("session_start"),
             "n_events",
@@ -1848,20 +1717,12 @@ def _docs_dup_stream_src(sf_dir: str) -> tuple[str, int, int]:
     "row-local codegen; the sink is append-only parquet.",
 )
 def s10_stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     register_tectonic_sources(spark)
     src, n_docs, n_dups = _docs_dup_stream_src(sf_dir)
     if n_dups <= 0:
         raise RuntimeError("s10: fixture injected no duplicates")
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s10_sink")
-    ck = os.path.join(base, "s10_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
     w = F.split("text", " ")
     dr = F.size(F.array_distinct(w)).cast("double") / F.size(w)
     stream = (
@@ -1903,29 +1764,15 @@ def s10_stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.countDistinct(F.when(dr >= S10_QUALITY_MIN, F.col("doc_id"))))
         .first()[0]
     )
-    q = (
-        curated.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
-    n_commits = len(_run_stream(q))
-    sink_rows = spark.read.parquet(out).count()
+    sink, _ = _stream_into(curated, sf_dir, "s10", min_batches=2)
+    sink_rows = sink.count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s10: sink has {sink_rows} rows, expected exactly {expected} "
             f"(dedup state or quality filter failed; {n_dups} dups injected)"
         )
-    if n_commits < 2:
-        raise RuntimeError(
-            f"s10: only {n_commits} committed micro-batches — duplicates "
-            "never crossed a batch boundary"
-        )
     return (
-        spark.read.parquet(out)
-        .groupBy("lang")
+        sink.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tokens").alias("total_tokens"),
@@ -2301,27 +2148,19 @@ def a24_parquet_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "its batch engine (JPEG lane pools, PNG segment-lane wavefront "
     "pool, LZW) inside the same streaming plan, exactly what a real "
     "crawl pipeline sees: payloads are not sorted by format at the "
-    "source. Append-mode parquet sink, >=2 committed micro-batches "
+    "source. Append-mode parquet sink, two or more micro-batches with rows "
     "enforced, then a per-format aggregate under three closed-form "
     "pixel-sum oracles at once — a wrong route (e.g. a PNG through the "
     "JPEG path) cannot produce all three sums. Decode is stateless per "
     "payload: no state store, scales with arrival rate.",
 )
 def s13_stream_mixed_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     from tectonic_spark.operators.multimodal import mixed_media_kernel
 
     register_tectonic_sources(spark)
     src, _n_docs = _docs_parts_stream_src(sf_dir)
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s13_sink")
-    ck = os.path.join(base, "s13_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
     stream = (
         spark.readStream.format("tectonic-json")
         .schema("doc_id long")
@@ -2336,28 +2175,14 @@ def s13_stream_mixed_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") % 4 == 2)
         .count()
     )
-    q = (
-        decoded.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
-    n_commits = len(_run_stream(q))
-    sink_rows = spark.read.parquet(out).count()
+    sink, _ = _stream_into(decoded, sf_dir, "s13", min_batches=2)
+    sink_rows = sink.count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s13: sink has {sink_rows} decoded rows, expected {expected}"
         )
-    if n_commits < 2:
-        raise RuntimeError(
-            f"s13: only {n_commits} committed micro-batches — decode never "
-            "spanned a batch boundary"
-        )
     return (
-        spark.read.parquet(out)
-        .groupBy("fmt")
+        sink.groupBy("fmt")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("px_sum").alias("total_px"),
@@ -2378,50 +2203,31 @@ def s13_stream_mixed_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with maxFilesPerTrigger=2, each compressed shard inflating "
     "JVM-side in its micro-batch task (zstd via the bundled "
     "aircompressor codec), into an append-mode parquet sink; >=2 "
-    "committed micro-batches enforced, then the aggregate must equal "
+    "micro-batches with rows enforced, then the aggregate must equal "
     "the uncompressed table exactly. The arrival pattern of a real "
     "corpus drop: shards land compressed, the pipeline never "
     "re-materializes them.",
 )
 def s14_stream_zstd_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     src = _docs_zst_mixed_src(spark, sf_dir)
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s14_sink")
-    ck = os.path.join(base, "s14_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
     schema = "doc_id long, text string, lang string, source string, n_chars long"
     expected = spark.read.schema(schema).json(os.path.join(src, "part-*")).count()
-    q = (
+    stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "2")
         .json(os.path.join(src, "part-*"))
         .select("doc_id", "lang", "n_chars")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
     )
-    n_commits = len(_run_stream(q))
-    sink_rows = spark.read.parquet(out).count()
+    sink, _ = _stream_into(stream, sf_dir, "s14", min_batches=2)
+    sink_rows = sink.count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s14: sink has {sink_rows} rows, expected {expected}"
         )
-    if n_commits < 2:
-        raise RuntimeError(
-            f"s14: only {n_commits} committed micro-batches — ingestion "
-            "never spanned a batch boundary"
-        )
     return (
-        spark.read.parquet(out)
-        .groupBy("lang")
+        sink.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("chars"),
@@ -2520,8 +2326,8 @@ def rollup_merger(state: str, n_merges: dict | None = None):
     "it into a maintained parquet rollup (old state ∪ delta → "
     "re-aggregate → atomic directory swap), never re-reading the source. "
     "Sums travel as DECIMAL(27,6) so merge order cannot flip a bit. The "
-    "builder raises unless >=2 micro-batches committed and the number of "
-    "merge invocations matches the commit count (state was built "
+    "builder raises unless >=2 micro-batches read rows and the number of "
+    "merge invocations matches the batch count (state was built "
     "incrementally, not in one gulp). The maintained state — not a "
     "re-aggregation of the sink — is what the oracle checks. 100 TB "
     "shape: state is group-cardinality-sized; each merge shuffles one "
@@ -2535,12 +2341,9 @@ def s11_stream_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
 
     register_tectonic_sources(spark)
     src, _ = _events_stream_src(sf_dir)
-    base = _fixture_dir(sf_dir)
-    state = os.path.join(base, "s11_state")
-    ck = os.path.join(base, "s11_ck")
-    for d in (state, ck):
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(state, exist_ok=True)
+    state = os.path.join(_fixture_dir(sf_dir), "s11_state")
+    shutil.rmtree(state, ignore_errors=True)
+    os.makedirs(state)
     n_merges = {"n": 0}
     merge = rollup_merger(state, n_merges)
 
@@ -2562,30 +2365,24 @@ def s11_stream_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
         .where(F.col("event_id") >= 0)
         .count()
     )
-    q = (
-        stream.where(F.col("event_id") >= 0)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ck)
-        .trigger(processingTime="50 milliseconds")
-        .start()
+    _, n_batches = _stream_into(
+        stream.where(F.col("event_id") >= 0),
+        sf_dir,
+        "s11",
+        foreach=merge,
+        min_batches=2,
     )
-    n_commits = len(_run_stream(q))
     cur = rollup_state_path(state)
     total = spark.read.parquet(cur).agg(F.sum("n_events")).first()[0] if cur else 0
     if total != expected:
         raise RuntimeError(
             f"s11: maintained rollup holds {total} events, expected {expected}"
         )
-    if n_commits < 2:
+    if n_merges["n"] != n_batches:
         raise RuntimeError(
-            f"s11: only {n_commits} committed micro-batches — the rollup "
-            "was not maintained incrementally"
+            f"s11: {n_merges['n']} merge invocations vs {n_batches} batches"
         )
-    if n_merges["n"] != n_commits:
-        raise RuntimeError(
-            f"s11: {n_merges['n']} merge invocations vs {n_commits} commits"
-        )
-    return spark.read.parquet(rollup_state_path(state)).select(
+    return spark.read.parquet(cur).select(
         "event_type",
         "n_events",
         F.col("sum_value").cast("double").alias("sum_value"),
@@ -2691,26 +2488,18 @@ def _docs_parts_stream_src(sf_dir: str) -> tuple[str, int]:
     "bytes, full entropy decode, pixel-sum extraction — into an "
     "append-mode parquet sink; the maintained sink is then aggregated "
     "per image geometry under the m08 closed-form oracle. Builder "
-    "raises unless >=2 micro-batches committed and the sink holds "
+    "raises unless >=2 micro-batches read rows and the sink holds "
     "exactly one row per image. The pattern a multimodal corpus "
     "pipeline runs continuously: decode is stateless per payload, so "
     "the stream needs no state store and scales with arrival rate.",
 )
 def s12_stream_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     from tectonic_spark.operators.multimodal import m08_decode_kernel
 
     register_tectonic_sources(spark)
     src, _n_docs = _docs_parts_stream_src(sf_dir)
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s12_sink")
-    ck = os.path.join(base, "s12_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
     stream = (
         spark.readStream.format("tectonic-json")
         .schema("doc_id long")
@@ -2725,28 +2514,14 @@ def s12_stream_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") % 3 == 0)
         .count()
     )
-    q = (
-        decoded.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
-    n_commits = len(_run_stream(q))
-    sink_rows = spark.read.parquet(out).count()
+    sink, _ = _stream_into(decoded, sf_dir, "s12", min_batches=2)
+    sink_rows = sink.count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s12: sink has {sink_rows} decoded rows, expected {expected}"
         )
-    if n_commits < 2:
-        raise RuntimeError(
-            f"s12: only {n_commits} committed micro-batches — decode never "
-            "spanned a batch boundary"
-        )
     return (
-        spark.read.parquet(out)
-        .groupBy("width", "height")
+        sink.groupBy("width", "height")
         .agg(
             F.count(F.lit(1)).alias("n_images"),
             F.sum("px_sum").alias("total_px"),
@@ -3206,21 +2981,13 @@ def warc_extract_kernel(files: DataFrame) -> DataFrame:
     "per shard, so the stream needs no state store and scales with "
     "crawl arrival rate — the shape of a live crawl-ingestion tier "
     "feeding the batch curation downstream. Builder raises unless >=2 "
-    "micro-batches committed and the sink holds exactly one row per "
+    "micro-batches read rows and the sink holds exactly one row per "
     "document.",
 )
 def s15_warc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     src, n_shards = _warc_shards_src(sf_dir)
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s15_sink")
-    ck = os.path.join(base, "s15_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
     # files-per-trigger scales with the shard count: each file is one
     # extraction task, so a fixed "2" would leave 30 cores idle per
     # micro-batch at large SF; n_shards//4 keeps >=4 micro-batches (the
@@ -3236,29 +3003,15 @@ def s15_warc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(src)
     )
     docs = warc_extract_kernel(stream)
-    q = (
-        docs.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
     expected = len(_docs_rows(sf_dir))
-    n_commits = len(_run_stream(q))
-    sink_rows = spark.read.parquet(out).count()
+    sink, _ = _stream_into(docs, sf_dir, "s15", min_batches=2)
+    sink_rows = sink.count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s15: sink has {sink_rows} extracted docs, expected {expected}"
         )
-    if n_commits < 2:
-        raise RuntimeError(
-            f"s15: only {n_commits} committed micro-batches — ingestion never "
-            "spanned a batch boundary"
-        )
     return (
-        spark.read.parquet(out)
-        .groupBy("lang")
+        sink.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("chars"),
@@ -6455,35 +6208,19 @@ def a40_brotli_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shard count (scaling with the corpus, the a40 layout doctrine).",
 )
 def s16_stream_brotli_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     register_tectonic_sources(spark)
     src = _docs_br_mixed_src(sf_dir)
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s16_sink")
-    ck = os.path.join(base, "s16_ck")
-    for d in (out, ck):  # deterministic fresh run per invocation
-        shutil.rmtree(d, ignore_errors=True)
     stream = (
         spark.readStream.format("tectonic-json")
         .schema("doc_id long, text string, lang string, source string, n_chars long")
         .load(src)
+        .select("doc_id", "lang", "n_chars")
     )
-    q = (
-        stream.select("doc_id", "lang", "n_chars")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _run_stream(q)
+    sink, _ = _stream_into(stream, sf_dir, "s16")
     return (
-        spark.read.parquet(out)
-        .groupBy("lang")
+        sink.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("chars"),
@@ -7513,7 +7250,7 @@ def _index_export_src(sf_dir: str) -> tuple[str, str, str]:
     """,
     doc="STREAMING index maintenance (r13 — the continuous form of "
     "a44): per-crawl CDXJ export files ARRIVE as a stream "
-    "(maxFilesPerTrigger=1, Trigger.AvailableNow) and each micro-batch "
+    "(maxFilesPerTrigger=1) and each micro-batch "
     "is appended to the live archive index through "
     "incremental_zipnum_update as its own GENERATION — new member "
     "blocks in delta-00N.zipnum.gz, only cluster.idx rewritten, the "
@@ -7547,12 +7284,9 @@ def s17_stream_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     exports_dir, a_idx_dir, b_dir = _index_export_src(sf_dir)
     a_warc, _n = _warc_cdxj_src(sf_dir)
-    base = _fixture_dir(sf_dir)
-    live = os.path.join(base, "s17_live")
-    ck = os.path.join(base, "s17_ck")
-    for d in (live, ck):
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(live, exist_ok=True)
+    live = os.path.join(_fixture_dir(sf_dir), "s17_live")
+    shutil.rmtree(live, ignore_errors=True)
+    os.makedirs(live)
     for fname in ("index.zipnum.gz", "cluster.idx"):
         shutil.copyfile(
             os.path.join(a_idx_dir, fname), os.path.join(live, fname)
@@ -7581,13 +7315,7 @@ def s17_stream_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "*.cdxj")
         .load(exports_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _run_stream(q)
+    _stream_into(stream, sf_dir, "s17", foreach=apply_batch)
 
     docs = table(spark, sf_dir, "documents")
     n_docs, n_recap = docs.agg(
@@ -8433,12 +8161,9 @@ def s18_stream_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     exports_dir, a_idx_dir, b_dir = _index_export_src(sf_dir)
     a_warc, _n = _warc_cdxj_src(sf_dir)
-    base = _fixture_dir(sf_dir)
-    live = os.path.join(base, "s18_live")
-    ck = os.path.join(base, "s18_ck")
-    for d in (live, ck):
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(live, exist_ok=True)
+    live = os.path.join(_fixture_dir(sf_dir), "s18_live")
+    shutil.rmtree(live, ignore_errors=True)
+    os.makedirs(live)
     for fname in ("index.zipnum.gz", "cluster.idx"):
         shutil.copyfile(
             os.path.join(a_idx_dir, fname), os.path.join(live, fname)
@@ -8503,13 +8228,7 @@ def s18_stream_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "*.cdxj")
         .load(exports_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _run_stream(q)
+    _stream_into(stream, sf_dir, "s18", foreach=apply_batch)
     run_retention(mid_stream=False)  # drain: catch the straggler tail
 
     docs = table(spark, sf_dir, "documents")
@@ -9215,23 +8934,15 @@ def attachment_text_kernel(files: DataFrame) -> DataFrame:
     "every extracted text pinned equal to n_chars before the "
     "per-lang rollup. Extraction is stateless per shard — no state "
     "store, scales with arrival rate. Builder raises unless >=2 "
-    "micro-batches committed, the sink holds exactly one row per "
+    "micro-batches read rows, the sink holds exactly one row per "
     "attachment, and zero extractions drifted.",
 )
 def s19_stream_attachments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from pyspark.sql import functions as F
 
     from tectonic_spark.tables import table
 
     src, n_shards = _attachment_src(sf_dir)
-    base = _fixture_dir(sf_dir)
-    out = os.path.join(base, "s19_sink")
-    ck = os.path.join(base, "s19_ck")
-    for d in (out, ck):
-        shutil.rmtree(d, ignore_errors=True)
-
     per_trigger = max(2, n_shards // 4)
     stream = (
         spark.readStream.format("binaryFile")
@@ -9244,27 +8955,13 @@ def s19_stream_attachments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(src)
     )
     attachments = attachment_extract_kernel(stream)
-    q = (
-        attachments.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(processingTime="50 milliseconds")
-        .start()
-    )
     expected = sum(1 for d, *_ in _docs_rows(sf_dir) if d % 107 == 63)
-    n_commits = len(_run_stream(q))
-    sink_rows = spark.read.parquet(out).count()
+    sunk, _ = _stream_into(attachments, sf_dir, "s19", min_batches=2)
+    sink_rows = sunk.count()
     if sink_rows != expected:
         raise RuntimeError(
             f"s19: sink has {sink_rows} attachments, expected {expected}"
         )
-    if n_commits < 2:
-        raise RuntimeError(
-            f"s19: only {n_commits} committed micro-batches — ingestion"
-            " never spanned a batch boundary"
-        )
-    sunk = spark.read.parquet(out)
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )

@@ -24,6 +24,19 @@ from pyspark.sql import SparkSession
 # at most 107 bytes
 _SOCKET_NAME_BYTES = len("/.") + 36 + len(".sock")
 _SUN_PATH_MAX = 107
+# Spark rejects a spark.python.unix.domain.socket.dir longer than 61 Java
+# chars (UTF-16 code units), and then every Python task fails
+_SOCKET_DIR_CHARS_MAX = 61
+
+
+def _socket_dir_fits(sock_dir: str) -> bool:
+    """Whether Spark accepts ``sock_dir`` for its Python worker sockets
+    and the socket path fits AF_UNIX's ``sun_path``."""
+    return (
+        len(sock_dir.encode("utf-16-le", "surrogatepass")) // 2
+        <= _SOCKET_DIR_CHARS_MAX
+        and len(os.fsencode(sock_dir)) + _SOCKET_NAME_BYTES <= _SUN_PATH_MAX
+    )
 
 
 def python_worker_conf() -> dict[str, str]:
@@ -32,16 +45,17 @@ def python_worker_conf() -> dict[str, str]:
 
     Spark sets no ``TCP_NODELAY`` on its Python sockets, so over TCP a
     task's first Arrow read can wait out the 40 ms delayed-ACK minimum; a
-    Unix socket has no such wait. Unix sockets are turned on only when the
-    temp directory is short enough for the socket path; otherwise workers
-    use TCP as before.
+    Unix socket has no such wait. Unix sockets are turned on only when
+    Spark accepts the temp directory and it is short enough for the socket
+    path (``_socket_dir_fits``); otherwise workers use TCP as before.
     """
     sock_dir = tempfile.gettempdir()
-    fits = len(os.fsencode(sock_dir)) + _SOCKET_NAME_BYTES <= _SUN_PATH_MAX
     return {
         "spark.python.daemon.module": "tectonic_spark.worker_daemon",
         "spark.python.unix.domain.socket.dir": sock_dir,
-        "spark.python.unix.domain.socket.enabled": str(fits).lower(),
+        "spark.python.unix.domain.socket.enabled": str(
+            _socket_dir_fits(sock_dir)
+        ).lower(),
     }
 
 

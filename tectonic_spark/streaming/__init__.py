@@ -15,13 +15,11 @@ to Spark Structured Streaming:
 from tectonic_spark.streaming.ops import (
     sessionize_with_state,
     stream_dedup,
-    stream_session_windows,
     stream_tumbling_counts,
 )
 
 __all__ = [
     "sessionize_with_state",
     "stream_dedup",
-    "stream_session_windows",
     "stream_tumbling_counts",
 ]

@@ -46,25 +46,6 @@ def stream_tumbling_counts(
     )
 
 
-def stream_session_windows(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Session windows (gap-based) per user; watermark bounds session state."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "user_id",
-            "n",
-        )
-    )
-
-
 def stream_dedup(
     events: DataFrame,
     keys: list[str],

@@ -134,6 +134,63 @@ def test_operators_run_streams_only_through_run_stream():
     assert problems == []
 
 
+def _stream_sink_problems(source: str, filename: str) -> list[str]:
+    """Lines of ``source`` that set up a stream's sink, by ``writeStream``
+    or a ``"checkpointLocation"`` option, outside ``_stream_into``."""
+    import ast
+
+    problems = []
+
+    def visit(node, inside: bool) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, inside or child.name == "_stream_into")
+                continue
+            if not inside and (
+                (isinstance(child, ast.Attribute) and child.attr == "writeStream")
+                or (isinstance(child, ast.Constant) and child.value == "checkpointLocation")
+            ):
+                problems.append(f"{filename}:{child.lineno}: stream sink outside _stream_into")
+            visit(child, inside)
+
+    visit(ast.parse(source, filename), False)
+    return problems
+
+
+def test_stream_sink_scan_flags_a_copy():
+    bad = (
+        "def s(stream, ck):\n"
+        "    q = (stream.writeStream.format('parquet')\n"
+        "         .option('checkpointLocation', ck).start())\n"
+        "    _run_stream(q)\n"
+    )
+    good = (
+        "def _stream_into(stream, sf_dir, name):\n"
+        "    def fresh(d):\n"
+        "        return d\n"
+        "    w = stream.writeStream.option('checkpointLocation', fresh(name))\n"
+        "    return _run_stream(w.start())\n"
+        "def s(spark, sf_dir):\n"
+        "    return _stream_into(spark.readStream.load(sf_dir), sf_dir, 's')\n"
+    )
+    assert _stream_sink_problems(bad, "bad.py") == [
+        "bad.py:2: stream sink outside _stream_into",
+        "bad.py:3: stream sink outside _stream_into",
+    ]
+    assert _stream_sink_problems(good, "good.py") == []
+
+
+def test_operators_sink_streams_only_through_stream_into():
+    """Every streaming builder gets its checkpoint, trigger and sink from
+    the one helper."""
+    import pathlib
+
+    problems = []
+    for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
+        problems += _stream_sink_problems(path.read_text(), path.name)
+    assert problems == []
+
+
 # calls that only build a path from their arguments; any other call (such
 # as parser_ops' ``_fixture_dir(sf_dir)``) names a directory of its own
 _PATH_BUILDERS = {"join", "format", "str", "fspath", "abspath", "Path"}

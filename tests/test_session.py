@@ -1,7 +1,8 @@
 """``session.get_spark``'s Python-worker confs: Unix domain sockets are on
-only when Spark's socket path under ``tempfile.gettempdir()`` fits AF_UNIX's
-107 bytes, and a session whose temp directory is too long still runs Python
-tasks, over TCP.
+only when Spark accepts ``tempfile.gettempdir()`` as the socket directory (at
+most 61 Java chars) and the socket path under it fits AF_UNIX's 107 bytes,
+and a session whose temp directory is too long still runs Python tasks, over
+TCP.
 
 The session confs are static, so each case starts its own SparkSession in
 a SUBPROCESS with its own ``TMPDIR``.
@@ -68,19 +69,38 @@ def _dir_of_length(base, n: int) -> str:
     return path
 
 
-def test_socket_dir_limit(tmp_path, monkeypatch):
-    # "<dir>/.<uuid4>.sock" is the directory plus 43 bytes
-    limit = session._SUN_PATH_MAX - session._SOCKET_NAME_BYTES
-    assert limit == 64
-    if len(os.fsencode(str(tmp_path))) + 2 > limit:
-        pytest.skip(f"no room for a {limit}-byte directory under {tmp_path}")
-    for n, enabled in ((limit, "true"), (limit + 1, "false")):
-        path = _dir_of_length(tmp_path, n)
+def test_socket_dir_limit(monkeypatch):
+    # Spark checks the directory's String.length() <= 61; the socket path
+    # "<dir>/.<uuid4>.sock" is the directory's bytes plus 43, at most 107
+    cases = {
+        "/" + "d" * 60: "true",
+        "/" + "d" * 61: "false",
+        # 61 code points but 62 UTF-16 code units; 107 socket-path bytes
+        "/" + "d" * 59 + "\U0001d11e": "false",
+        # an undecodable byte (a lone surrogate after fsdecode) is one unit
+        "/" + "d" * 59 + "\udcff": "true",
+        # 22 chars: 64 bytes fit the socket path, 67 bytes do not
+        "/" + "\u20ac" * 21: "true",
+        "/" + "\u20ac" * 22: "false",
+    }
+    for path, enabled in cases.items():
         monkeypatch.setattr(tempfile, "tempdir", path)
         conf = session.python_worker_conf()
-        assert conf["spark.python.unix.domain.socket.enabled"] == enabled
+        assert conf["spark.python.unix.domain.socket.enabled"] == enabled, path
         assert conf["spark.python.unix.domain.socket.dir"] == path
         assert conf["spark.python.daemon.module"] == "tectonic_spark.worker_daemon"
+
+
+@pytest.mark.parametrize("n, enabled", [(61, "true"), (62, "false")])
+def test_tmpdir_at_spark_socket_dir_bound_runs_python_tasks(
+    tmp_path_factory, n, enabled
+):
+    base = tmp_path_factory.mktemp("s")
+    if len(str(base)) + 2 > n:
+        pytest.skip(f"no room for a {n}-character directory under {base}")
+    path = _dir_of_length(base, n)
+    got = _run_child(path)
+    assert got == {"enabled": enabled, "dir": path, "ids": [0, 2, 4, 6, 8, 10]}
 
 
 def test_long_tmpdir_runs_python_tasks_over_tcp(tmp_path):
@@ -89,9 +109,9 @@ def test_long_tmpdir_runs_python_tasks_over_tcp(tmp_path):
     assert got == {"enabled": "false", "dir": long_dir, "ids": [0, 2, 4, 6, 8, 10]}
 
 
-def test_short_tmpdir_turns_unix_sockets_on(tmp_path):
-    short_dir = str(tmp_path)
-    if len(os.fsencode(short_dir)) + session._SOCKET_NAME_BYTES > session._SUN_PATH_MAX:
+def test_short_tmpdir_turns_unix_sockets_on(tmp_path_factory):
+    short_dir = str(tmp_path_factory.mktemp("s"))
+    if not session._socket_dir_fits(short_dir):
         pytest.skip(f"no temp directory short enough for a socket path: {short_dir}")
     got = _run_child(short_dir)
     assert got == {"enabled": "true", "dir": short_dir, "ids": [0, 2, 4, 6, 8, 10]}
