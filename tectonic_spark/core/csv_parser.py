@@ -76,6 +76,8 @@ class _Incomplete(Exception):
 _RECORD = 0  # awaiting a cell (column = index of that cell)
 _END = 1  # awaiting a delimiter after a completed cell
 
+_NO_SPLIT = (-1, [], 0, -1)
+
 
 class CsvParser(Generic[A]):
     def __init__(
@@ -104,7 +106,9 @@ class CsvParser(Generic[A]):
         self.max_value_bytes = max_value_bytes
         self._skipped_bytes_total = 0
         c = self.config
-        self._buf = b""
+        # grows in place: an absorb copies only its own bytes, not the
+        # pending row it extends
+        self._buf = bytearray()
         self._pos = 0
         self._base = 0
         self._nl_before = 0
@@ -130,10 +134,15 @@ class CsvParser(Generic[A]):
         )
         self._row_delim = c.row1 + c.row2
         # bulk fast path control: retry after each slow-path row, but stop
-        # attempting after 3 consecutive zero-consumption tries so a file
-        # of all-dirty rows costs O(n), not O(n²) region re-splits
+        # attempting after 3 consecutive zero-consumption tries, so a file
+        # of all-dirty rows does not pay a retry per row
         self._try_fast = False
         self._fast_misses = 0
+        # so that each absorb scans only what it adds: the pending cell's
+        # scan state (see _hold), and the fast path's last split as
+        # (absolute offset of rows[i], rows, i, absolute end)
+        self._split = _NO_SPLIT
+        self._held: tuple | None = None
 
     # ------------------------------------------------------------------ API
 
@@ -159,7 +168,7 @@ class CsvParser(Generic[A]):
             if len(self._buf) < 3 and self._buf == self._BOM[: len(self._buf)]:
                 return Complete(self.plate.finish_batch(False))
             if self._buf.startswith(self._BOM):
-                self._buf = self._buf[3:]
+                del self._buf[:3]
             self._bom_done = True
         return self._churn_result(False)
 
@@ -174,7 +183,7 @@ class CsvParser(Generic[A]):
             data = data.encode("utf-8")
         self._buf += data
         if not self._bom_done and self._buf.startswith(self._BOM):
-            self._buf = self._buf[3:]
+            del self._buf[:3]
         self._bom_done = True
         self._done = True
         return self._churn_result(True)
@@ -232,12 +241,23 @@ class CsvParser(Generic[A]):
             return
         buf = self._buf
         pos = self._pos
+        if self._held is not None and self._held[0] == self._base + pos:
+            return  # the event loop resumes this row's pending first cell
         rd = self._row_delim
         rd_len = len(rd)
-        end = buf.rfind(rd)
-        if end < pos:
+        end = buf.rfind(rd, pos)
+        if end < 0:
             return
-        region = buf[pos : end + rd_len]
+        # split once per absorb, not once per slow row: skip the rows the
+        # event loop took since the last split
+        stop = self._base + end + rd_len
+        at, rows, i, until = self._split
+        while until == stop and at < self._base + pos and i < len(rows) - 1:
+            at += len(rows[i]) + rd_len
+            i += 1
+        if at != self._base + pos or until != stop:
+            rows, i = bytes(memoryview(buf)[pos : end + rd_len]).split(rd), 0
+        last = len(rows) - 1  # the piece after the final delimiter
         cfg = self.config
         oq, cq, rec, esc = cfg.open_quote, cfg.close_quote, cfg.record, cfg.escape
         sep = cq + rec + oq
@@ -249,7 +269,8 @@ class CsvParser(Generic[A]):
         # more. One C-level count replaces a per-cell scan.
         simple = oq == cq == esc
         consumed = 0
-        for row in region.split(rd)[:-1]:
+        while i < last:
+            row = rows[i]
             if row[:1] == oq and row[-1:] == cq and len(row) >= 2:
                 interior = row[1:-1]
                 cells = interior.split(sep)
@@ -260,16 +281,19 @@ class CsvParser(Generic[A]):
                 ):
                     self._emit_fast_row(cells)
                     consumed += len(row) + rd_len
+                    i += 1
                     continue
             elif oq not in row:
                 cells = row.split(rec)
                 if inferring or len(cells) == width:
                     self._emit_fast_row(cells)
                     consumed += len(row) + rd_len
+                    i += 1
                     continue
             break  # this row needs the event machinery
         self._fast_misses = self._fast_misses + 1 if consumed == 0 else 0
         self._pos = pos + consumed
+        self._split = (self._base + self._pos, rows, i, stop) if i < last else _NO_SPLIT
 
     def _emit_fast_row(self, cells: list[bytes]) -> None:
         """Per-cell events exactly as _emit_cell + _end_row produce them."""
@@ -337,7 +361,7 @@ class CsvParser(Generic[A]):
                 self._state = _END
                 continue
             # unquoted cell: scan for record sep or row delimiter
-            j = pos
+            j = self._resume(pos, pos, pos, None)[0]
             while True:
                 m = self._cell_stop.search(buf, j)
                 if m is None:
@@ -347,6 +371,7 @@ class CsvParser(Generic[A]):
                         self._pos = n
                         self._state = _END
                         raise _Incomplete  # defer to EOF handling
+                    self._hold(pos, n, pos, None)
                     raise _Incomplete
                 k = m.start()
                 c = buf[k]
@@ -365,6 +390,7 @@ class CsvParser(Generic[A]):
                         self._pos = n
                         self._state = _END
                         raise _Incomplete
+                    self._hold(pos, k, pos, None)
                     raise _Incomplete
                 if buf[k : k + rd_len] == row_delim:
                     self._emit_cell(buf[pos:k].decode("utf-8"), pos)
@@ -381,9 +407,7 @@ class CsvParser(Generic[A]):
         cq = self.config.close_quote[0]
         esc = self.config.escape[0]
         n = len(buf)
-        out: list[str] = []
-        j = pos + 1
-        seg = j
+        j, seg, out = self._resume(pos, pos + 1, pos + 1, [])
         while True:
             k = buf.find(self.config.close_quote, j)
             if k < 0:
@@ -391,6 +415,7 @@ class CsvParser(Generic[A]):
                     raise self._exc(
                         "unexpected end of file: unclosed quoted record", pos
                     )
+                self._hold(pos, n, seg, out)
                 raise _Incomplete
             if esc != cq and k > seg - 1 and buf[k - 1] == esc:
                 # escape precedes close quote → literal quote
@@ -407,9 +432,24 @@ class CsvParser(Generic[A]):
                     seg = j
                     continue
                 if k + 1 >= n and not self._done:
+                    self._hold(pos, k, seg, out)
                     raise _Incomplete  # can't tell close vs escaped yet
             out.append(buf[seg:k].decode("utf-8"))
             return "".join(out), k + 1
+
+    def _hold(self, pos: int, j: int, seg: int, out: list[str] | None) -> None:
+        """Keep the scan state of the pending cell at ``pos`` for the next
+        absorb: where to search next (``j``), where the undecoded part
+        starts (``seg``) and the parts decoded so far (``out``)."""
+        self._held = (self._base + pos, j - pos, seg - pos, out)
+
+    def _resume(self, pos: int, j: int, seg: int, out: list[str] | None) -> tuple:
+        """The held scan state of the cell at ``pos`` as ``(j, seg, out)``,
+        or the given start state when that cell was not held."""
+        held, self._held = self._held, None
+        if held is not None and held[0] == self._base + pos:
+            return pos + held[1], pos + held[2], held[3]
+        return j, seg, out
 
     # ------------------------------------------------------------ rows/cells
 
@@ -499,7 +539,7 @@ class CsvParser(Generic[A]):
             self._nl_before += nl
             self._last_nl_abs = self._base + buf.rfind(b"\n", 0, pos)
         self._base += pos
-        self._buf = buf[pos:]
+        del buf[:pos]
         self._pos = 0
 
     def _exc(self, message: str, i: int) -> ParseException:

@@ -93,9 +93,6 @@ def resize_bmp_nearest(data: bytes, new_w: int, new_h: int) -> bytes:
 
 # ---------------------------------------------------------------------- WAV
 
-_WAV_HEADER_BYTES = 44
-
-
 def encode_wav(samples: bytes, sample_rate: int = 8000) -> bytes:
     """8-bit unsigned mono PCM RIFF/WAVE."""
     n = len(samples)

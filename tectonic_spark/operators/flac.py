@@ -366,10 +366,6 @@ _BLOCKSIZE_CODE = {
     1: 192, 2: 576, 3: 1152, 4: 2304, 5: 4608,
     8: 256, 9: 512, 10: 1024, 11: 2048, 12: 4096, 13: 8192, 14: 16384, 15: 32768,
 }
-_RATE_CODE = {
-    1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000, 6: 22050, 7: 24000,
-    8: 32000, 9: 44100, 10: 48000, 11: 96000,
-}
 
 
 def _rice_scalar(

@@ -273,9 +273,6 @@ def parse_id3v2(data: bytes) -> dict:
     }
 
 
-_V1_GENRES_PINNED = 80  # genres 0..79 are the stable ID3v1 core list
-
-
 def parse_id3v1(data: bytes) -> dict | None:
     """Parse the trailing 128-byte ID3v1 block, or None if absent."""
     if len(data) < 128 or data[-128:-125] != b"TAG":

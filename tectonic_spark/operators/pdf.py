@@ -502,10 +502,6 @@ def _walk_pages(doc: _Doc, node_ref, out: list) -> None:
         raise ValueError(f"unexpected page tree node type {t}")
 
 
-_TEXT_OPS = frozenset(
-    ["Tj", "TJ", "'", '"', "Td", "TD", "Tm", "T*", "BT", "ET", "Tf", "TL"]
-)
-
 
 _CS_TOK = re.compile(
     rb"[\x00\t\n\f\r ]+"

@@ -33,10 +33,6 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
-# Dimension tables small enough to broadcast at ANY scale factor (they grow
-# sub-linearly or are fixed-size in TPC-H-style data).
-BROADCASTABLE = {"region", "nation"}
-
 # the confs whose values change the schema Spark infers from the same files
 _INFERENCE_CONFS = (
     "spark.sql.parquet.binaryAsString",

@@ -30,7 +30,10 @@ def test_driver_contract_shape():
 
 @pytest.mark.parametrize("name", sorted(ops.REGISTRY))
 def test_query_analyzes(spark, sf_dir, name):
-    """Schema resolution (no execution) — catches analysis errors fast."""
+    """Each builder returns a DataFrame with a resolved, non-empty schema.
+    Building is not free: many builders generate their fixtures first, and
+    the 19 streaming builders (s01-s19) run their whole stream at sf0.001
+    before they return the sink."""
     df = ops.REGISTRY[name].builder(spark, sf_dir)
     assert len(df.schema.fields) > 0
 
@@ -40,6 +43,94 @@ def test_entry_runs(spark):
 
     rows = entrymod.entry(spark).collect()
     assert len(rows) >= 0
+
+
+def _window_tool():
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "tools" / "oracle_window.py"
+    spec = importlib.util.spec_from_file_location("oracle_window", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    return tool, tool.Package(), tool.builders(ops.REGISTRY)
+
+
+def test_priority_is_the_head_of_the_registry():
+    from tectonic_spark.operators.registry import PRIORITY
+
+    assert list(ops.REGISTRY)[: len(PRIORITY)] == list(PRIORITY)
+    assert len(set(PRIORITY)) == len(PRIORITY) <= 50
+    assert set(PRIORITY) <= set(ops.REGISTRY)
+
+
+def test_window_tool_reads_the_registration_order():
+    """``registered()`` in a fresh interpreter lists every query, and the
+    driver's registry (a fresh import) keeps that order after PRIORITY."""
+    import json
+    import pathlib
+    import subprocess
+    import sys
+
+    from tectonic_spark.operators.registry import PRIORITY
+
+    tools = pathlib.Path(__file__).resolve().parents[1] / "tools"
+    codes = [
+        f"import sys; sys.path.insert(0, {str(tools)!r}); import json, oracle_window as w; "
+        "print(json.dumps(list(w.registered())))",
+        "import json, tectonic_spark.operators as o; print(json.dumps(list(o.REGISTRY)))",
+    ]
+    order, driver = (
+        json.loads(subprocess.check_output([sys.executable, "-c", c], text=True, cwd=tools.parent))
+        for c in codes
+    )
+    assert sorted(order) == sorted(driver) == sorted(ops.REGISTRY)
+    assert [n for n in order if n not in PRIORITY] == driver[len(PRIORITY) :]
+
+
+def test_window_leads_with_the_queries_a_change_reaches():
+    tool, pkg, builders = _window_tool()
+    order = list(builders)
+    green = {n: 14 for n in order}
+
+    streams = {n for n in order if n[0] == "s" and n[1:3].isdigit()}
+    touched = pkg.touched(builders, {("tectonic_spark.operators.parser_ops", "_stream_into")})
+    assert len(streams) == 19 and touched == streams
+    assert set(tool.window(order, touched, green)[:19]) == streams
+
+    per_doc = pkg.touched(builders, {("tectonic_spark.tables", "map_documents")})
+    assert len(per_doc) == 34 and {n[:3] for n in per_doc} >= {"m09", "m40", "c03"}
+    assert set(tool.window(order, per_doc, green)[:34]) == per_doc
+
+    assert pkg.touched(builders, {("tectonic_spark.operators.registry", "PRIORITY")}) == set()
+
+
+def test_window_ranks_a_query_with_no_green_row_oldest():
+    tool, _, builders = _window_tool()
+    order = list(builders)
+    a, b, c = order[0], order[1], order[-1]
+    green = {n: 14 for n in order if n != c} | {b: 3}
+    assert tool.window(order, {a, b, c}, green)[:3] == [c, b, a]
+    assert tool.window(order, {a}, green, size=3) == [a, c, b]
+    assert tool.window(order, set(), green, size=3) == [c, b, a]
+    rows = tool.last_green()
+    assert rows and all(isinstance(r, int) and r >= 1 for r in rows.values())
+
+
+def test_window_tool_maps_diff_hunks_to_top_level_names():
+    _, pkg, _ = _window_tool()
+    ops_mod, reg_mod = "tectonic_spark.operators.parser_ops", "tectonic_spark.operators.registry"
+    (stream_into,) = pkg.defs[ops_mod]["_stream_into"]
+    (priority,) = pkg.defs[reg_mod]["PRIORITY"]
+    diff = (
+        "+++ b/tectonic_spark/operators/parser_ops.py\n"
+        f"@@ -1,0 +{stream_into.lineno + 2},1 @@\n"
+        "+++ b/tectonic_spark/operators/registry.py\n"
+        f"@@ -5,3 +{priority.end_lineno},0 @@\n"
+        "+++ b/README.md\n"
+        "@@ -1 +1 @@\n"
+    )
+    assert pkg.changed(diff) == {(ops_mod, "_stream_into"), (reg_mod, "PRIORITY")}
 
 
 def _poll_loop_problems(source: str, filename: str) -> list[str]:
